@@ -9,11 +9,10 @@ package graft
  *  suite had grown to 311 queries × 3 passes plus a 310 s sequential
  *  build pass. Two cuts restore the independent gate without losing
  *  coverage:
- *   - the one-time harness builds run on a thread pool (default 4,
- *     SPARK_GRAFT_BUILD_POOL to override — the measured sweet spot at
- *     sf0.01: 242 s sequential, 176 s 4-way, 380 s 8-way, where
- *     contention collapses). Each registry exposes independent
- *     `warmBuildTasks`; the driver-heavy streamed replays additionally
+ *   - the one-time harness builds run on a 4-way thread pool (the
+ *     measured sweet spot at sf0.01: 242 s sequential, 176 s 4-way,
+ *     380 s 8-way, where contention collapses). Each registry exposes
+ *     independent `warmBuildTasks`; the driver-heavy streamed replays additionally
  *     share a 2-slot semaphore (OracleCommon.ReplayGate) so at most two
  *     full-table driver collects coexist whatever the pool size;
  *   - the timed section runs 2 interleaved passes and records the MIN of
@@ -38,6 +37,13 @@ package graft
  *  The full per-query JSON line is also written to BENCH_LOCAL.json so a
  *  truncated stdout capture never loses per-query numbers. */
 object Bench {
+  private val BuildPool = 4
+
+  /** A JSON string literal: paths may carry quotes or backslashes. */
+  private def str(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
+      .quoteAsString(s)) + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.builder().getOrCreate()
@@ -73,8 +79,7 @@ object Bench {
         graft.queries.PipelineQueries.warmBuildTasks(spark, sfDir) ++
         graft.queries.EventsQueries.warmBuildTasks(spark, sfDir) ++
         graft.queries.RollupQueries.warmBuildTasks(spark, sfDir)
-      val poolSize = sys.env.get("SPARK_GRAFT_BUILD_POOL").map(_.toInt).getOrElse(4)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(BuildPool)
       try {
         val futs = tasks.map { case (name, run) =>
           name -> pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -95,12 +100,9 @@ object Bench {
       } finally pool.shutdown()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(
-        f"[bench] one-time lake/stream builds (untimed, $poolSize%d-way pool): $sec%.1f s")
+        f"[bench] one-time lake/stream builds (untimed, $BuildPool%d-way pool): $sec%.1f s")
       sec
     }
-    // builds-only mode for pool-size A/B experiments (not used by the driver)
-    if (sys.env.get("SPARK_GRAFT_BUILDS_ONLY").contains("1")) { spark.stop(); return }
-
     // optional name filter for local iteration on specific queries
     val names = (if (args.nonEmpty) SparkEntry.queries.keys.toSeq.filter(args.toSet)
       else SparkEntry.queries.keys.toSeq).sorted
@@ -126,9 +128,9 @@ object Bench {
         name -> (if (re >= 0) re else m)
       } else name -> m
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"queries":$qs,"sf":${str(sfDir)}}"""
     println(json)
     // A name-filtered local run must not clobber the full-suite artifact.
     val artifact = if (args.isEmpty) "BENCH_LOCAL.json" else "BENCH_LOCAL_partial.json"
@@ -140,7 +142,7 @@ object Bench {
     // LAST stdout line — short enough that any tail window contains it
     // whole — with a pointer to the per-query artifact. Additions only:
     // the full contract line and BENCH_LOCAL.json are unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"n_queries":${results.size},"queries_file":"$artifact","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","builds_sec":$buildsSec,"reps":$reps,"n_queries":${results.size},"queries_file":${str(artifact)},"sf":${str(sfDir)}}""")
     spark.stop()
   }
 }

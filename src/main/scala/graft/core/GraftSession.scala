@@ -37,9 +37,8 @@ object GraftSession {
       // by interleaved same-JVM A/B at sf0.1 (OPTIMIZATION_r15.md):
       // 64 KB over-splits sub-100 KB shuffles (pipeline-family +0.3-0.7 s
       // per query); 256 KB keeps ~70% of the fill-family win with no
-      // measured loser. Override via SPARK_GRAFT_MIN_PARTITION_SIZE.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"))
+      // measured loser.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
       // segment-pruning rule + native functions (graft.plans.SegmentPruning)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,43 +1,31 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{from_json, map_entries, map_from_entries, to_json}
-import org.apache.spark.sql.types.{MapType, StringType}
+import org.apache.spark.sql.functions.{map_entries, map_from_entries}
 
 /** Tag-map grouping-key codec.
  *
  *  Map-typed grouping keys are illegal and map/string-typed AGG BUFFERS
  *  force SortAggregate, so every aggregate that must carry the tag map
  *  re-keys it through an orderable encoding and decodes after the
- *  aggregate. Two encodings, selected by `spark.graft.tags.key`:
+ *  aggregate: `map_entries` → `array<struct<key,value>>`. Arrays of
+ *  structs are legal grouping keys and hash-aggregate cleanly (the same
+ *  posture as the ANN path's vector grouping key,
+ *  Similarity.assignToCells); encode/decode are native array ops — no
+ *  per-row Jackson. Measured against the former `to_json`/`from_json`
+ *  string round-trip (round 15, interleaved same-JVM A/B at sf0.1): see
+ *  OPTIMIZATION_r15.md — the JSON round-trip was a visible slice of
+ *  every downsample/seriesDim stage's CPU.
  *
- *   - `entries` (default): `map_entries` → `array<struct<key,value>>`.
- *    Arrays of structs are legal grouping keys and hash-aggregate
- *    cleanly (the same posture as the ANN path's vector grouping key,
- *    Similarity.assignToCells); encode/decode are native array ops —
- *    no per-row Jackson. Measured (round 15, interleaved same-JVM A/B
- *    at sf0.1): see OPTIMIZATION_r15.md — the JSON round-trip was a
- *    visible slice of every downsample/seriesDim stage's CPU.
- *   - `json`: the legacy `to_json`/`from_json` string round-trip.
- *
- *  Both encodings group identically: tag maps are constructed with a
+ *  The encoding groups correctly because tag maps are constructed with a
  *  deterministic entry order (TsdbViews.pointsFromEvents literal order;
  *  parquet map round-trips preserve order), and two maps are equal iff
- *  their ordered entry lists are — which both encodings preserve
- *  injectively. Encode and decode read the conf at plan-build time in
- *  the same query, so they can never disagree within a plan. */
+ *  their ordered entry lists are. */
 object TagsJson {
-  val MapSchema: MapType = MapType(StringType, StringType)
-
-  private def useEntries: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.tags.key", "entries") == "entries"
 
   /** Orderable grouping-key encoding of a tags map. */
-  def key(tags: Column): Column =
-    if (useEntries) map_entries(tags) else to_json(tags)
+  def key(tags: Column): Column = map_entries(tags)
 
   /** Inverse of [[key]] — the tags map back. */
-  def decode(k: Column): Column =
-    if (useEntries) map_from_entries(k) else from_json(k, MapSchema)
+  def decode(k: Column): Column = map_from_entries(k)
 }

@@ -217,7 +217,7 @@ object SeriesAnalytics {
    *  exactly once BY CONSTRUCTION. The operator first shipped as
    *  groupBy + join-back, which references the aggregated lineage
    *  three times; Spark's exchange reuse recovers part of that, but
-   *  the interleaved same-JVM A/B (ScaleProbe p_anomaly_mad_joins)
+   *  the interleaved same-JVM A/B (BENCH_SCALE_TSDB.json, p_anomaly_mad_joins)
    *  still reads 3.12 / 3.99 / 18.13 s for the join form vs
    *  2.00 / 2.72 / 15.49 s for this window form across 100k/1M/10M
    *  events — faster at every decade, and single-pass whatever the

@@ -253,7 +253,8 @@ object Dedup {
 
   /** The un-materialized plan behind [[nearDuplicatesAgainstReference]]
    *  (returned with the two persisted signature frames the caller must
-   *  release) — plan evidence ([[graft.Plans]]) needs the lazy frame. */
+   *  release) — the plan-shape spec (PipelinePlanSpec) needs the lazy
+   *  frame. */
   private[graft] def nearDuplicatesAgainstReferenceLazy(
       newDocs: DataFrame, reference: DataFrame,
       threshold: Double, maxBucketSize: Int): (DataFrame, DataFrame, DataFrame) = {

@@ -675,8 +675,8 @@ object TextAnalysis {
    *  of documents BEFORE the postings join — a term in every document
    *  contributes ~ln(1) ≈ 0 score but fans the join out to the whole
    *  corpus (on a stopword-heavy query the scan degenerates to
-   *  all-pairs; the ScaleProbe's 30-word-vocabulary corpus measures
-   *  exactly that regime). Off by default so the oracle-checked path
+   *  all-pairs; the 30-word-vocabulary scale corpus of BENCH_SCALE.json
+   *  measures exactly that regime). Off by default so the oracle-checked path
    *  is exhaustive — the [[graft.pipeline.Corpus.decontaminate]] maxDf
    *  convention.
    *

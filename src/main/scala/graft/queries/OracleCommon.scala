@@ -19,9 +19,9 @@ object OracleCommon {
   /** Concurrency gate for the DRIVER-HEAVY warm builds (the streamed
    *  replays collect a full table to the driver and hold it for the
    *  replay's lifetime): at most 2 run at once inside [[graft.Bench]]'s
-   *  build pool, so peak driver memory stays ~2 table copies however
-   *  large SPARK_GRAFT_BUILD_POOL is, while the driver-light lake
-   *  ingests keep the remaining pool slots busy. */
+   *  4-way build pool, so peak driver memory stays ~2 table copies,
+   *  while the driver-light lake ingests keep the remaining pool slots
+   *  busy. */
   private[queries] val ReplayGate = new java.util.concurrent.Semaphore(2)
 
   /** Wrap a warm-build thunk with [[ReplayGate]]. */

@@ -26,7 +26,7 @@ object StreamQueries {
       val base = java.nio.file.Files.createTempDirectory("graft_stream")
       // the file stream source wants a directory: expose the events
       // parquet through a symlinked source dir. The driver testdata's
-      // events.parquet is a single FILE; generated corpora (ScaleProbe)
+      // events.parquet is a single FILE; generated corpora (ScaleGen)
       // are parquet DIRECTORIES, whose nested part-files a non-recursive
       // read would miss — flatten those by symlinking each part-file.
       val srcDir = base.resolve("src")

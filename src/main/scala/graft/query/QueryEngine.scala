@@ -65,7 +65,7 @@ object QueryEngine {
    *  bit-identical to [[dedupe]] (max seq per timestamp).
    *
    *  MEASURED A/B (p_ds_sum_hashdedup vs q_ds_sum, 100M events,
-   *  isolated ScaleAttr): this path removes the window's reduce-stage
+   *  isolated, BENCH_SCALE4.json): this path removes the window's reduce-stage
    *  sort entirely — 12.9 GB memory / 1.05 GB disk spill → ZERO — and
    *  writes 31% less shuffle (2.30 vs 3.35 GB; the JSON tag string is
    *  more compact than the map encoding), but costs +75% reduce-stage
@@ -433,7 +433,7 @@ object QueryEngine {
     // joined back to the values side — evaluated the entire upstream
     // (dedupe window + downsample aggregate) TWICE: at the 100M-event
     // probe point that was 2× the reduce-stage task-time and 2× its
-    // ~13 GB sort spill (ScaleAttr stage table), for identical output.
+    // ~13 GB sort spill (BENCH_SCALE4.json), for identical output.
     // The JSON string as the grouping key keeps this a HashAggregate
     // (maps can't be grouping keys).
     // with a timezone the grid is NOT an epoch arithmetic sequence: DST

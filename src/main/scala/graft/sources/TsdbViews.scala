@@ -19,44 +19,6 @@ object TsdbViews {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Scale-adaptive scan fan-out (guide §2.5 "input skew: one huge
-   *  unsplittable file … repartition immediately after the read"): a
-   *  parquet file is splittable only at row-group boundaries, so a
-   *  single-row-group fact file pins the whole scan+derive stage (tag
-   *  map build, canonical serialization, xxhash) to ONE core however
-   *  many the session has. When the scan yields fewer than half the
-   *  session's parallelism in splits, round-robin repartition the RAW
-   *  rows to `defaultParallelism` BEFORE the derive projection — the
-   *  exchange carries the narrow source columns only, and time
-   *  predicates still push through Repartition into the parquet scan
-   *  (PushPredicateThroughNonJoin covers Repartition). At production
-   *  scale the scan has >= parallelism splits and this is the identity —
-   *  the condition, not a constant, is the scale knob.
-   *
-   *  Default OFF after measurement: with the TagsJson `entries` codec
-   *  the serial derive shrank enough that the extra exchange costs more
-   *  than it recovers at every probed shape (interleaved same-JVM A/B,
-   *  18 raw-path queries at sf0.1: off 19.0 s, round-robin 22.7 s,
-   *  hash-by-event_id 21.3 s — OPTIMIZATION_r15.md). Kept as an opt-in
-   *  (`auto` = hash by ingest id, `rr` = round-robin) for corpora whose
-   *  fact file is a genuinely huge single row group where the derive,
-   *  not the exchange, dominates. */
-  private[graft] def fanout(spark: SparkSession, df: DataFrame): DataFrame = {
-    val mode = spark.conf.get("spark.graft.scan.fanout", "off")
-    if (mode == "off") df
-    else {
-      val target = spark.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions * 2 <= target) {
-        // hash-partition on the unique ingest id rather than round-robin:
-        // deterministic under task retry with NO sort-before-repartition
-        // pass (guide §2.5 — "derive the synthetic key deterministically"),
-        // so the serial pre-exchange stage stays a bare scan
-        if (mode == "rr") df.repartition(target)
-        else df.repartition(target, df("event_id"))
-      } else df
-    }
-  }
-
   /** Epoch seconds from a timestamp-ish column: TIMESTAMP → floor-seconds
    *  cast; LongType (parquet TIMESTAMP(NANOS) read via nanosAsLong) →
    *  exact integer division; TIMESTAMP_NTZ (naive `timestamp[us]` read by
@@ -78,7 +40,7 @@ object TsdbViews {
    *  A subset of series (user_id % 5 == 0) carries a 4th `env` tag so the
    *  explicit-tags check (F9) is discriminating: series tag counts vary. */
   def points(spark: SparkSession, dir: String): DataFrame =
-    pointsFromEvents(fanout(spark, table(spark, dir, "events")))
+    pointsFromEvents(table(spark, dir, "events"))
 
   /** The events→points mapping alone — shared by the batch view above and
    *  the streaming ingest job (works on streaming DataFrames too). */

@@ -216,8 +216,12 @@ object IngestJob {
 
   /** Run independent store flushes concurrently on [[flushPool]]; every
    *  submitted flush settles before the first failure rethrows (no
-   *  orphaned in-flight jobs), named for diagnosis. Exposed package-side
-   *  for the failure-path spec. */
+   *  orphaned in-flight jobs), named for diagnosis. An interrupt of the
+   *  calling thread (`StreamingQuery.stop()` on the batch thread) also
+   *  waits for every submitted flush, then restores the interrupt flag
+   *  and rethrows: the batch is replayed later, and no flush of this
+   *  attempt may still be writing a store when it is. Exposed
+   *  package-side for the failure-path specs. */
   private[streaming] def runFlushes(flushes: Seq[(String, () => Unit)]): Unit = {
     if (flushes.size == 1) flushes.head._2()
     else if (flushes.nonEmpty) {
@@ -226,12 +230,17 @@ object IngestJob {
           def call(): Unit = run()
         })
       }
-      // settle ALL before rethrowing the first failure
-      val errs = futs.flatMap { case (name, f) =>
+      var interrupted: Option[InterruptedException] = None
+      def settle(f: java.util.concurrent.Future[Unit]): Option[Throwable] =
         try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          Some(name -> e.getCause) }
-      }
+        catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+          case e: InterruptedException =>
+            interrupted = interrupted.orElse(Some(e)); settle(f)
+        }
+      // settle ALL before rethrowing the interrupt or the first failure
+      val errs = futs.flatMap { case (name, f) => settle(f).map(name -> _) }
+      interrupted.foreach { e => Thread.currentThread().interrupt(); throw e }
       errs.headOption.foreach { case (name, e) =>
         throw new RuntimeException(s"store flush '$name' failed", e) }
     }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The upstream TSDB 3.x analytic nodes (sliding window, top-n,
  *  expression) over the engine's aggregated output shape — semantics
  *  (trailing frames over existing buckets, deterministic ranked cut,
- *  intersection joins) plus the plan shapes PLANS.md claims. */
+ *  intersection joins) plus their plan shapes. */
 class SeriesAnalyticsSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark

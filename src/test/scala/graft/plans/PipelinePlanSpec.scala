@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards for the pipeline operators' scale
- *  claims — the properties PLANS.md documents, pinned as assertions so a
- *  refactor cannot silently reintroduce a scale trap. */
+ *  claims, pinned as assertions so a refactor cannot silently
+ *  reintroduce a scale trap. */
 class PipelinePlanSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
@@ -32,7 +32,12 @@ class PipelinePlanSpec extends AnyFunSuite {
   test("decontamination and near-dup joins have no cartesian product") {
     val p1 = plan(graft.pipeline.Corpus.decontaminate(docs, col("doc_id") % 97 === 0, 2))
     val p2 = plan(graft.pipeline.Dedup.nearDuplicates(docs, 0.5))
-    Seq(p1, p2).foreach { p =>
+    // the incremental form probes the reference's band table: new x ref only
+    val (sigsNew, sigsRef, incremental) = graft.pipeline.Dedup
+      .nearDuplicatesAgainstReferenceLazy(docs.filter(col("doc_id") % 3 === 0),
+        docs.filter(col("doc_id") % 2 === 0), 0.5, Int.MaxValue)
+    val p3 = try plan(incremental) finally { sigsNew.unpersist(); sigsRef.unpersist() }
+    Seq(p1, p2, p3).foreach { p =>
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
         s"all-pairs product crept in:\n$p")
     }

@@ -186,7 +186,6 @@ class DownsampleOpSpec extends AnyFunSuite {
     assert(winter === Seq(1704412800L -> -25200))
     // plan-shape guard: the zone CASEs are pure projection arithmetic —
     // the tz plan must carry EXACTLY the exchanges of the UTC plan
-    // (PLANS.md documents the identical shape; this pins it)
     def exchanges(d: DownsampleSpec): Int =
       "(?<!Broadcast)Exchange".r.findAllIn(
         QueryEngine.downsample(df, d, dayStart, dayStart + 2 * 86400)

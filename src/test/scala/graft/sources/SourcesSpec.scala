@@ -84,21 +84,4 @@ class SourcesSpec extends AnyFunSuite {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))
   }
-  test("scan fan-out knob: auto repartitions a below-threshold scan, identity above, off by default (round 16)") {
-    val spark = TestSpark.spark
-    val target = spark.sparkContext.defaultParallelism
-    val ev = TsdbViews.table(spark, sf, "events")
-    // default off: the exact same frame comes back, no exchange added
-    assert(TsdbViews.fanout(spark, ev) eq ev)
-    spark.conf.set("spark.graft.scan.fanout", "auto")
-    try {
-      val narrow = ev.coalesce(1) // a single-row-group-style scan
-      val fanned = TsdbViews.fanout(spark, narrow)
-      assert(fanned.rdd.getNumPartitions === target,
-        s"auto must hash-repartition a 1-split input to defaultParallelism=$target")
-      // at/above half the parallelism the knob is the identity
-      val wide = ev.repartition(target)
-      assert(TsdbViews.fanout(spark, wide) eq wide)
-    } finally spark.conf.unset("spark.graft.scan.fanout")
-  }
 }

@@ -657,4 +657,35 @@ class IngestJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(IngestJob.seriesLogPath(cfg)).count() > 0)
     assert(spark.read.parquet(IngestJob.latestLogPath(cfg)).count() > 0)
   }
+
+  test("an interrupted batch thread still settles every store flush before rethrowing") {
+    // StreamingQuery.stop() interrupts the batch thread inside runFlushes;
+    // the batch is replayed later, so no flush of this attempt may still
+    // be writing a store once runFlushes has returned
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val gate = new CountDownLatch(1)
+    val started = new CountDownLatch(2)
+    val events = new ConcurrentLinkedQueue[String]()
+    @volatile var thrown: Throwable = null
+    @volatile var flagRestored = false
+    val batch = new Thread(() => {
+      try IngestJob.runFlushes(Seq(
+        "blocked" -> (() => { started.countDown(); gate.await(); events.add("blocked"): Unit }),
+        "sibling" -> (() => {
+          started.countDown(); gate.await(); Thread.sleep(50); events.add("sibling"): Unit })))
+      catch { case t: Throwable => thrown = t }
+      flagRestored = Thread.currentThread().isInterrupted
+      events.add("returned"): Unit
+    })
+    batch.start()
+    try {
+      assert(started.await(10, TimeUnit.SECONDS))
+      batch.interrupt()
+      Thread.sleep(100)
+    } finally gate.countDown()
+    batch.join(10000)
+    assert(events.toArray.toSeq === Seq("blocked", "sibling", "returned"))
+    assert(thrown.isInstanceOf[InterruptedException], thrown)
+    assert(flagRestored, "the interrupt flag must be restored for the caller")
+  }
 }
