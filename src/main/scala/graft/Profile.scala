@@ -13,7 +13,8 @@ import scala.util.control.NonFatal
 /** Per-query attribution for declared queries: one JSON line per
  *  (input dir, query, conf variant, pass) splitting wall time into
  *  DataFrame construction, Catalyst planning and execution (noop write),
- *  with what the run's Spark jobs did — jobs, stages, tasks, task-seconds,
+ *  with what the run's Spark jobs did — jobs (and `build_jobs`, those
+ *  started while the DataFrame was built), stages, tasks, task-seconds,
  *  shuffle / spill / input bytes — and its costliest stages.
  *
  *  Usage: sbt "runMain graft.Profile [--reps N] [--plans <dir>] <query...>"
@@ -36,15 +37,16 @@ object Profile {
   private final case class Stage(id: Int, name: String, tasks: Int, taskMs: Long,
       shuffleRead: Long, shuffleWrite: Long, spill: Long, input: Long)
 
-  /** Job count and the completed stages of one run. Listener events arrive
-   *  asynchronously, so readers call [[awaitQuiet]] first. */
+  /** Job start times and the completed stages of one run. Listener events
+   *  arrive asynchronously, so readers call [[awaitQuiet]] first. */
   private final class Metrics extends SparkListener {
-    private var started, ended = 0
+    private val started = mutable.ArrayBuffer.empty[Long]
+    private var ended = 0
     private val done = mutable.ArrayBuffer.empty[Stage]
     @volatile private var lastEventNs = System.nanoTime()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      started += 1; lastEventNs = System.nanoTime()
+      started += e.time; lastEventNs = System.nanoTime()
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       ended += 1; lastEventNs = System.nanoTime()
@@ -63,11 +65,14 @@ object Profile {
     def awaitQuiet(): Unit = {
       val deadline = System.nanoTime() + 20000000000L
       def quiet =
-        synchronized(started == ended) && System.nanoTime() - lastEventNs > 200000000L
+        synchronized(started.size == ended) && System.nanoTime() - lastEventNs > 200000000L
       while (!quiet && System.nanoTime() < deadline) Thread.sleep(20)
     }
-    def reset(): Unit = synchronized { started = 0; ended = 0; done.clear() }
-    def jobs: Int = synchronized(started)
+    def reset(): Unit = synchronized { started.clear(); ended = 0; done.clear() }
+    def jobs: Int = synchronized(started.size)
+    /** Jobs whose start time (epoch ms) falls in `[from, to]`. */
+    def jobsStartedIn(from: Long, to: Long): Int =
+      synchronized(started.count(t => t >= from && t <= to))
     def stages: Seq[Stage] = synchronized(done.toList)
   }
 
@@ -102,12 +107,16 @@ object Profile {
       val prior = variants(vi).map { case (k, _) => k -> spark.conf.getOption(k) }
       m.awaitQuiet()
       m.reset()
+      // the build interval in epoch ms, open-ended until the build returns
+      val w0 = System.currentTimeMillis()
+      var w1 = Long.MaxValue
       try {
         variants(vi).foreach { case (k, v) => spark.conf.set(k, v) }
         keys.foreach(k => confs.put(k, spark.conf.getOption(k).orNull))
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(q)(spark, dir)
         val t1 = System.nanoTime()
+        w1 = System.currentTimeMillis()
         df.queryExecution.executedPlan // analysis + optimization + planning
         val t2 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
@@ -126,7 +135,8 @@ object Profile {
       m.awaitQuiet()
       val st = m.stages
       def sum(f: Stage => Long): Long = st.map(f).sum
-      rec.put("jobs", m.jobs).put("stages", st.size).put("tasks", st.map(_.tasks).sum)
+      rec.put("jobs", m.jobs).put("build_jobs", m.jobsStartedIn(w0, w1))
+        .put("stages", st.size).put("tasks", st.map(_.tasks).sum)
         .put("task_s", sum(_.taskMs) / 1e3)
         .put("shuffle_read_bytes", sum(_.shuffleRead))
         .put("shuffle_write_bytes", sum(_.shuffleWrite))

@@ -2,6 +2,9 @@ package graft.lake
 
 import graft.filters.SeriesFilter
 import graft.sources.TsdbViews
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +23,23 @@ import org.apache.spark.sql.functions._
  * regex on every fact row and evaluating it on the O(|series|) dimension
  * then pruning the fact scan with a broadcast hash of matching ids
  * (which parquet row-group bloom/dictionary filters can also exploit).
+ *
+ * Snapshot contract: [[points]] holds one resolved read per lake dir —
+ * the partition listing and inferred schema — and reuses it, with no
+ * Spark job, while `points/_SUCCESS` keeps its modification time and the
+ * session is the same. That marker is what Spark's committer writes at
+ * the end of every [[materialize]], so writers must commit through it; a
+ * lake written without the marker is listed again on every read. Like
+ * the reference's in-memory segment metadata, this spares an unchanged
+ * lake's metadata a trip to storage per query.
  */
 object Lake {
+
+  /** A resolved points read and what it was resolved under. */
+  private final case class Snapshot(session: SparkSession, stamp: Long, points: DataFrame)
+
+  /** One entry per lake dir; a read under another session replaces it. */
+  private val snapshots = new ConcurrentHashMap[String, Snapshot]()
 
   /** One-time materialization of the fact table into the partitioned
    *  layout. */
@@ -30,8 +48,30 @@ object Lake {
       .write.mode("overwrite").partitionBy("segment_start")
       .parquet(s"$lakeDir/points")
 
-  def points(spark: SparkSession, lakeDir: String): DataFrame =
-    spark.read.parquet(s"$lakeDir/points")
+  /** The lake's points, reusing the held snapshot while the commit marker
+   *  is unchanged. The stamp is taken before the listing, so a snapshot is
+   *  never older than its stamp; `compute` makes concurrent first reads of
+   *  one dir list once. */
+  def points(spark: SparkSession, lakeDir: String): DataFrame = {
+    val dir = s"$lakeDir/points"
+    commitStamp(spark, dir) match {
+      case None =>
+        snapshots.remove(lakeDir)
+        spark.read.parquet(dir)
+      case Some(stamp) =>
+        snapshots.compute(lakeDir, (_, held) =>
+          if (held != null && (held.session eq spark) && held.stamp == stamp) held
+          else Snapshot(spark, stamp, spark.read.parquet(dir))).points
+    }
+  }
+
+  /** Modification time of `dir/_SUCCESS`, if the marker exists. */
+  private def commitStamp(spark: SparkSession, dir: String): Option[Long] = {
+    val marker = new Path(dir, "_SUCCESS")
+    try Some(marker.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(marker).getModificationTime)
+    catch { case _: FileNotFoundException => None }
+  }
 
   /** Filter → series_dim → broadcast-semi-join → fact scan. */
   def semiJoinScan(fact: DataFrame, seriesDim: DataFrame, f: SeriesFilter): DataFrame = {

@@ -50,6 +50,7 @@ object Sources {
   def register(scheme: String, f: Factory): Unit = factories.put(scheme, f): Unit
 
   def resolve(uri: String): PointsSource = uri.split(":", 2) match {
+    case Array(_, "") => throw new IllegalArgumentException(s"empty source location: $uri")
     case Array(scheme, rest) if factories.contains(scheme) => factories(scheme)(rest)
     case _ => throw new IllegalArgumentException(s"no source factory for: $uri")
   }

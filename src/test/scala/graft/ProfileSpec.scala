@@ -29,6 +29,8 @@ class ProfileSpec extends AnyFunSuite {
       if (r.get("variant").asInt == 0) assert(conf.isNull, r.toString)
       else assert(conf.asText === "hashagg")
       assert(r.get("jobs").asInt > 0 && r.get("tasks").asInt > 0, r.toString)
+      val buildJobs = r.get("build_jobs").asInt
+      assert(buildJobs >= 0 && buildJobs <= r.get("jobs").asInt, r.toString)
       assert(r.get("top_stages").size > 0)
     }
     assert(spark.conf.getOption(key).isEmpty)

@@ -3,8 +3,16 @@ package graft.lake
 import graft.TestSpark
 import graft.filters._
 import graft.sources.TsdbViews
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 /** Partitioned-lake pruning + semi-join scan path plan assertions —
  *  the 100 TB behaviors: partition filters must reach the scan, the
@@ -12,10 +20,44 @@ import org.scalatest.funsuite.AnyFunSuite
 class LakeSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
-  private lazy val lakeDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_lake").toString
+  private lazy val lakeDir = freshLake()
+
+  private def freshLake(): String = {
+    val d = Files.createTempDirectory("graft_lake").toString
     Lake.materialize(TestSpark.spark, sf, d)
     d
+  }
+
+  private def rows(df: DataFrame): Set[Row] =
+    df.select("series_id", "ts", "seq").collect().toSet
+
+  /** `body`'s result and the Spark jobs it started (tagged with a job group
+   *  of its own). A marker job in a second group drains the listener bus:
+   *  a listener sees events in post order, so once the marker's start
+   *  arrives, every job `body` started has been counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = TestSpark.spark.sparkContext
+    val group = s"lake-spec-${java.util.UUID.randomUUID}"
+    val drain = s"$group-drain"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet(): Unit
+          case `drain` => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(drain, "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(20, TimeUnit.SECONDS), "listener bus did not drain")
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("time predicates prune segment partitions at the scan") {
@@ -49,8 +91,55 @@ class LakeSpec extends AnyFunSuite {
 
   test("materialized lake round-trips the batch view") {
     val spark = TestSpark.spark
-    val lake = Lake.points(spark, lakeDir).select("series_id", "ts", "seq").collect().toSet
-    val direct = TsdbViews.points(spark, sf).select("series_id", "ts", "seq").collect().toSet
-    assert(lake === direct)
+    assert(rows(Lake.points(spark, lakeDir)) === rows(TsdbViews.points(spark, sf)))
+  }
+
+  test("a second read of an unchanged lake reuses the snapshot and starts no Spark job") {
+    val spark = TestSpark.spark
+    val dir = freshLake()
+    val (first, listed) = jobsDuring(Lake.points(spark, dir))
+    assert(listed > 0, "the first read lists and infers the schema")
+    val (second, jobs) = jobsDuring(Lake.points(spark, dir))
+    assert(jobs === 0)
+    assert(second eq first)
+    assert(rows(second) === rows(TsdbViews.points(spark, sf)))
+  }
+
+  test("a lake materialized again with different data is read afresh") {
+    val spark = TestSpark.spark
+    val alt = Files.createTempDirectory("graft_lake_src").toString
+    spark.read.parquet(s"$sf/events.parquet").filter(col("user_id") % 2 === 0)
+      .write.parquet(s"$alt/events.parquet")
+    val dir = freshLake()
+    val before = rows(Lake.points(spark, dir))
+    assert(before === rows(TsdbViews.points(spark, sf)))
+    Lake.materialize(spark, alt, dir)
+    val expected = rows(TsdbViews.points(spark, alt))
+    assert(expected.nonEmpty && expected.size < before.size)
+    assert(rows(Lake.points(spark, dir)) === expected)
+  }
+
+  test("a lake without the commit marker is listed on every read") {
+    val spark = TestSpark.spark
+    val dir = freshLake()
+    Files.delete(Paths.get(dir, "points", "_SUCCESS"))
+    val expected = rows(TsdbViews.points(spark, sf))
+    for (_ <- 1 to 2) {
+      val (pts, jobs) = jobsDuring(Lake.points(spark, dir))
+      assert(jobs > 0)
+      assert(rows(pts) === expected)
+    }
+  }
+
+  test("concurrent first reads of a fresh lake list once and agree") {
+    val spark = TestSpark.spark
+    val dir = freshLake()
+    val start = new CountDownLatch(1)
+    val reads = (1 to 4).map(_ => Future { start.await(); Lake.points(spark, dir) })
+    start.countDown()
+    val dfs = reads.map(Await.result(_, 2.minutes))
+    assert(dfs.forall(_ eq dfs.head), "every thread gets the one snapshot")
+    val counts = dfs.map(_.count())
+    assert(counts.distinct === Seq(TsdbViews.points(spark, sf).count()))
   }
 }

@@ -18,6 +18,11 @@ class SourcesSpec extends AnyFunSuite {
     assert(pts.count() > 0)
     assert(ev.seriesDim(spark).columns.contains("tag_count"))
     assertThrows[IllegalArgumentException](Sources.resolve("bogus:x"))
+    // an empty location would read `/points` at the filesystem root
+    for (uri <- Seq("lake:", "events:", "stream:")) {
+      val e = intercept[IllegalArgumentException](Sources.resolve(uri))
+      assert(e.getMessage.contains(uri))
+    }
   }
 
   test("interchangeable sources answer the same query identically") {
