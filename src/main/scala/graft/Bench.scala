@@ -11,8 +11,10 @@ package graft
  *  coverage:
  *   - the one-time harness builds run on a 4-way thread pool (the
  *     measured sweet spot at sf0.01: 242 s sequential, 176 s 4-way,
- *     380 s 8-way, where contention collapses). Each registry exposes
- *     independent `warmBuildTasks`; the driver-heavy streamed replays additionally
+ *     380 s 8-way, where contention collapses). The pool runs every
+ *     [[graft.queries.Build]] the catalogs declare
+ *     (`OracleCommon.builds`); a build another one reads waits for it
+ *     rather than running twice, and the driver-heavy streamed replays
  *     share a 2-slot semaphore (OracleCommon.ReplayGate) so at most two
  *     full-table driver collects coexist whatever the pool size;
  *   - the timed section runs 2 interleaved passes and records the MIN of
@@ -39,8 +41,9 @@ package graft
 object Bench {
   private val BuildPool = 4
 
-  /** A JSON string literal: paths may carry quotes or backslashes. */
-  private def str(s: String): String =
+  /** A JSON string literal: quotes, backslashes and every control
+   *  character escaped (paths and builder-authored SQL may carry them). */
+  private[graft] def str(s: String): String =
     "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
       .quoteAsString(s)) + "\""
 
@@ -74,20 +77,16 @@ object Bench {
     // runs only; a name-filtered local run keeps its cheap direct path.
     val buildsSec = if (args.nonEmpty) 0.0 else {
       val t0 = System.nanoTime()
-      val tasks =
-        graft.queries.StreamQueries.warmBuildTasks(spark, sfDir) ++
-        graft.queries.PipelineQueries.warmBuildTasks(spark, sfDir) ++
-        graft.queries.EventsQueries.warmBuildTasks(spark, sfDir) ++
-        graft.queries.RollupQueries.warmBuildTasks(spark, sfDir)
+      SparkEntry.queries // initializes every catalog, registering its builds
       val pool = java.util.concurrent.Executors.newFixedThreadPool(BuildPool)
       try {
-        val futs = tasks.map { case (name, run) =>
-          name -> pool.submit(new java.util.concurrent.Callable[Unit] {
+        val futs = graft.queries.OracleCommon.builds.map { b =>
+          b.name -> pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               val t1 = System.nanoTime()
-              run()
+              b(spark, sfDir)
               System.err.println(
-                f"[bench] build $name%-28s ${(System.nanoTime() - t1) / 1e9}%6.1f s")
+                f"[bench] build ${b.name}%-28s ${(System.nanoTime() - t1) / 1e9}%6.1f s")
             }
           })
         }

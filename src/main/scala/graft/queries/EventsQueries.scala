@@ -20,69 +20,36 @@ object EventsQueries {
    *  reference's daily-index layout) and queries read it back, so every
    *  events query below exercises real partition pruning, not just the
    *  in-memory column. */
-  private val stores = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val store = Build("events_store") { (s, d) =>
+    val tmp = java.nio.file.Files.createTempDirectory("graft_evstore").toString
+    EventsStore.append(EventsModel.docs(s, d), tmp)
+    tmp
+  }
 
-  private val sessionRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private def docs(s: SparkSession, d: String): DataFrame = EventsStore.log(s, store(s, d))
 
   /** True streamed sessionization per source dir per JVM: events flow
-   *  through a MemoryStream into the watermarked session_window
-   *  aggregate; two far-future sentinel batches push the (one-batch-
-   *  lagged) watermark past every real session's window end so all
-   *  sessions finalize — the StreamQueries lwwWindows protocol. */
-  private def streamedSessions(s: SparkSession, d: String): DataFrame =
-    sessionRuns.getOrElseUpdate(d, {
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ev0 = graft.sources.TsdbViews.table(s, d, "events")
-      val rows = ev0.select(col("user_id"),
-          graft.sources.TsdbViews.toEpochSeconds(ev0, "ts").as("ts"), col("value"))
-        .as[(Long, Long, Double)].collect().toSeq
-      val maxTs = rows.iterator.map(_._2).max
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val name = "sessions_" + java.lang.Long.toHexString(
-        graft.functions.Md5Prefix28.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(d)))
-      val src = input.toDF().toDF("user_id", "ts", "value")
+   *  through [[OracleCommon.replay]] into the watermarked session_window
+   *  aggregate; 3-day sentinel gaps push the watermark past every real
+   *  session's window end so all sessions finalize. The sentinel key
+   *  Long.MinValue is unambiguous against real user ids (non-negative
+   *  by the generator contract, and MinValue can't collide regardless). */
+  private val streamedSessions = Build("events_sessions", driverHeavy = true) { (s, d) =>
+    import s.implicits._
+    val ev0 = graft.sources.TsdbViews.table(s, d, "events")
+    val rows = ev0.select(col("user_id"),
+        graft.sources.TsdbViews.toEpochSeconds(ev0, "ts").as("ts"), col("value"))
+      .as[(Long, Long, Double)]
+    OracleCommon.replay("events_sessions", s, d, rows, (_: (Long, Long, Double))._2,
+      (Long.MinValue, _, 0.0), gapSec = 3 * 86400, keyCol = "key") { in =>
+      val src = in.toDF("user_id", "ts", "value")
         .select(col("user_id"), col("ts"),
           when(isnan(col("value")), lit(null).cast("double"))
             .otherwise(col("value")).as("value"))
-      val q = graft.operators.Sessions.sessionizeStream(src, col("user_id"),
-          col("ts"), col("value"), 86400L, "30 minutes")
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        // watermark ticks keyed by Long.MinValue — unambiguous against
-        // real user ids (testdata user ids are non-negative by the
-        // generator contract, and MinValue can't collide regardless)
-        input.addData(rows: _*); q.processAllAvailable()
-        input.addData((Long.MinValue, maxTs + 3 * 86400, 0.0)); q.processAllAvailable()
-        input.addData((Long.MinValue, maxTs + 6 * 86400, 0.0)); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).filter(col("key") =!= Long.MinValue)
-    })
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    val dir = stores.getOrElseUpdate(d, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evstore").toString
-      EventsStore.append(EventsModel.docs(s, d), tmp)
-      tmp
-    })
-    EventsStore.log(s, dir)
+      graft.operators.Sessions.sessionizeStream(src, col("user_id"),
+        col("ts"), col("value"), 86400L, "30 minutes")
+    }
   }
-
-  /** Force the memoized per-JVM harness builds for `d` (events store
-   *  write, streamed sessionization run) — see
-   *  [[graft.queries.StreamQueries.warmBuilds]]. */
-  def warmBuilds(s: SparkSession, d: String): Unit =
-    warmBuildTasks(s, d).foreach(_._2())
-
-  /** Independent named build tasks for [[graft.Bench]]'s parallel
-   *  warm-up pool — see [[graft.queries.StreamQueries.warmBuildTasks]]. */
-  def warmBuildTasks(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "events_store" -> (() => { docs(s, d); () }),
-    // the sessionization replay collects the table to the driver — share
-    // the cross-registry replay gate
-    "events_sessions" -> OracleCommon.gated(() => { streamedSessions(s, d); () }))
 
   val defs: Map[String, Q] = Map(
     // S10+F11+F12: text search with namespace + time-range clause

@@ -29,74 +29,43 @@ object PipelineQueries {
    *  gate → dedup-on-redacted-content through a real file-source
    *  streaming query — [[graft.streaming.DocIngest.runPipeline]]),
    *  shared by the declared stream query. */
-  private val docLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val annStreamLakes = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val docPipelineLake = Build("pipe_doc") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_docstream")
+    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    graft.streaming.DocIngest.runPipeline(s,
+      OracleCommon.streamSource(base, d, "documents.parquet"),
+      s"$base/lake", s"$base/ckpt", schema).awaitTermination()
+    s"$base/lake"
+  }
 
   /** Streamed IVF index per source dir per JVM: embeddings arrive as a
    *  file stream and are centroid-assigned on ingest
    *  ([[graft.streaming.EmbedIngest]]) into a cell-partitioned index. */
-  private def annAssignLake(s: SparkSession, d: String): String =
-    annStreamLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_embstream")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("embeddings.parquet"),
-        java.nio.file.Paths.get(s"$d/embeddings.parquet"))
-      val out = s"$base/index"
-      graft.streaming.EmbedIngest.run(s, srcDir.toString,
-        Similarity.hashSampledCentroids(emb(s, d), IvfK), out, s"$base/ckpt")
-      out
-    })
-
-  private def docPipelineLake(s: SparkSession, d: String): String =
-    docLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_docstream")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      // the file-stream source lists only top-level files: a single-file
-      // table symlinks whole; a directory table (Spark-written corpora,
-      // e.g. the scale probe's) symlinks its part files individually
-      val tgt = java.nio.file.Paths.get(s"$d/documents.parquet")
-      if (java.nio.file.Files.isDirectory(tgt)) {
-        // close the DirectoryStream: each leaked stream pins a file
-        // descriptor for the life of the suite/probe JVM
-        val st = java.nio.file.Files.list(tgt)
-        try {
-          val it = st.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet"))
-              java.nio.file.Files.createSymbolicLink(srcDir.resolve(p.getFileName), p)
-          }
-        } finally st.close()
-      } else {
-        java.nio.file.Files.createSymbolicLink(srcDir.resolve("documents.parquet"), tgt)
-      }
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      graft.streaming.DocIngest.runPipeline(s, srcDir.toString,
-        s"$base/lake", s"$base/ckpt", schema).awaitTermination()
-      s"$base/lake"
-    })
+  private val annAssignLake = Build("pipe_ann_assign") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_embstream")
+    val out = s"$base/index"
+    graft.streaming.EmbedIngest.run(s,
+      OracleCommon.streamSource(base, d, "embeddings.parquet"),
+      Similarity.hashSampledCentroids(emb(s, d), IvfK), out, s"$base/ckpt")
+    out
+  }
 
   /** One streamed ANN-SERVING lake per sf dir: the q_ann_ivf query set
    *  arrives as THREE micro-batches of retrieval requests (3 files ×
    *  maxFilesPerTrigger=1) answered against the prebuilt assigned index
    *  — per-query purity means the result must equal the batch IVF,
    *  whose oracle the declared query reuses verbatim. */
-  private val annServeLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def annServeLake(s: SparkSession, d: String): String =
-    annServeLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_annserve")
-      emb(s, d).filter(annQueryPred)
-        .select(col("vec_id").as("q_id"), col("embedding"))
-        .repartition(3).write.parquet(s"$base/src")
-      val cents = Similarity.hashSampledCentroids(emb(s, d), IvfK)
-      val assigned = Similarity.ivfAssignWith(emb(s, d), cents)
-      graft.streaming.EmbedIngest.runQueryServe(s, s"$base/src", assigned, cents,
-        s"$base/out", s"$base/ckpt", k = 3, nprobe = 1, maxFilesPerTrigger = Some(1))
-      s"$base/out"
-    })
+  private val annServeLake = Build("pipe_ann_serve") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_annserve")
+    emb(s, d).filter(annQueryPred)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+      .repartition(3).write.parquet(s"$base/src")
+    val cents = Similarity.hashSampledCentroids(emb(s, d), IvfK)
+    val assigned = Similarity.ivfAssignWith(emb(s, d), cents)
+    graft.streaming.EmbedIngest.runQueryServe(s, s"$base/src", assigned, cents,
+      s"$base/out", s"$base/ckpt", k = 3, nprobe = 1, maxFilesPerTrigger = Some(1))
+    s"$base/out"
+  }
 
   /** One streamed NEAR-DUP-admission lake per sf dir: the doc_id%3==0
    *  slice streams in THREE micro-batches (3 source files ×
@@ -105,36 +74,32 @@ object PipelineQueries {
    *  reuses that query's MinHash replay. Multi-batch on purpose: the
    *  oracle is batch-agnostic, so any admission decision that depended
    *  on batch composition would hash-mismatch. */
-  private val nearDedupLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def docNearDedupLake(s: SparkSession, d: String): String =
-    nearDedupLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_docneardedup")
-      val all = s.read.parquet(s"$d/documents.parquet")
-      all.filter(col("doc_id") % 3 === 0).repartition(3)
-        .write.parquet(s"$base/src")
-      graft.streaming.DocIngest.runPipelineNearDedup(s, s"$base/src",
-        s"$base/lake", s"$base/ckpt", s"$base/work", all.schema,
-        all.filter(col("doc_id") % 2 === 0), 0.5,
-        maxFilesPerTrigger = Some(1)).awaitTermination()
-      s"$base/lake"
-    })
+  private val docNearDedupLake = Build("pipe_neardedup") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_docneardedup")
+    val all = s.read.parquet(s"$d/documents.parquet")
+    all.filter(col("doc_id") % 3 === 0).repartition(3)
+      .write.parquet(s"$base/src")
+    graft.streaming.DocIngest.runPipelineNearDedup(s, s"$base/src",
+      s"$base/lake", s"$base/ckpt", s"$base/work", all.schema,
+      all.filter(col("doc_id") % 2 === 0), 0.5,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+    s"$base/lake"
+  }
 
   /** One ingest-MAINTAINED drift-counts log per sf dir: the corpus
    *  streams in multi-file micro-batches, each appending its partial
    *  (source, token) counts ([[graft.streaming.DocIngest.runTokenCounts]]);
    *  counts add, so the summed log equals the batch recount exactly —
    *  q_stream_drift shares q_text_drift's oracle verbatim. */
-  private val driftLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def driftCountsLake(s: SparkSession, d: String): String =
-    driftLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_driftcounts")
-      val all = s.read.parquet(s"$d/documents.parquet")
-      all.repartition(3).write.parquet(s"$base/src")
-      graft.streaming.DocIngest.runTokenCounts(s, s"$base/src",
-        s"$base/lake", s"$base/ckpt", all.schema,
-        maxFilesPerTrigger = Some(1)).awaitTermination()
-      s"$base/lake"
-    })
+  private val driftCountsLake = Build("pipe_drift") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_driftcounts")
+    val all = s.read.parquet(s"$d/documents.parquet")
+    all.repartition(3).write.parquet(s"$base/src")
+    graft.streaming.DocIngest.runTokenCounts(s, s"$base/src",
+      s"$base/lake", s"$base/ckpt", all.schema,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+    s"$base/lake"
+  }
 
   /** The drift count store rebuilt with IN-BAND compaction (round 12):
    *  four micro-batches with `compactEvery = 2`, so the fold runs inside
@@ -142,33 +107,29 @@ object PipelineQueries {
    *  q_stream_drift_compacted reads it against the same q_text_drift
    *  oracle, pinning that mid-stream folds never lose or double-count
    *  a (source, token) cell. */
-  private val driftCompactLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def driftCountsCompactedLake(s: SparkSession, d: String): String =
-    driftCompactLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_driftcomp")
-      val all = s.read.parquet(s"$d/documents.parquet")
-      all.repartition(4).write.parquet(s"$base/src")
-      graft.streaming.DocIngest.runTokenCounts(s, s"$base/src",
-        s"$base/lake", s"$base/ckpt", all.schema,
-        maxFilesPerTrigger = Some(1), compactEvery = Some(2)).awaitTermination()
-      s"$base/lake"
-    })
+  private val driftCountsCompactedLake = Build("pipe_driftcomp") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_driftcomp")
+    val all = s.read.parquet(s"$d/documents.parquet")
+    all.repartition(4).write.parquet(s"$base/src")
+    graft.streaming.DocIngest.runTokenCounts(s, s"$base/src",
+      s"$base/lake", s"$base/ckpt", all.schema,
+      maxFilesPerTrigger = Some(1), compactEvery = Some(2)).awaitTermination()
+    s"$base/lake"
+  }
 
   /** One ingest-MAINTAINED pair-counts log per sf dir
    *  ([[graft.streaming.DocIngest.runPairCounts]]): unigram AND
    *  adjacent-pair partials per micro-batch; counts add, so the summed
    *  logs serve PMI exactly — q_stream_pmi shares q_text_pmi's oracle. */
-  private val pairLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def pairCountsLake(s: SparkSession, d: String): String =
-    pairLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_paircounts")
-      val all = s.read.parquet(s"$d/documents.parquet")
-      all.repartition(3).write.parquet(s"$base/src")
-      graft.streaming.DocIngest.runPairCounts(s, s"$base/src",
-        s"$base/lake", s"$base/ckpt", all.schema,
-        maxFilesPerTrigger = Some(1)).awaitTermination()
-      s"$base/lake"
-    })
+  private val pairCountsLake = Build("pipe_pair") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_paircounts")
+    val all = s.read.parquet(s"$d/documents.parquet")
+    all.repartition(3).write.parquet(s"$base/src")
+    graft.streaming.DocIngest.runPairCounts(s, s"$base/src",
+      s"$base/lake", s"$base/ckpt", all.schema,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+    s"$base/lake"
+  }
 
   /** The pair-counts lake COMPACTED (round 12): a copy of the 3-batch
    *  store with the closed batch partitions folded to one snapshot
@@ -177,39 +138,35 @@ object PipelineQueries {
    *  against q_text_pmi's oracle verbatim, so a compaction that loses
    *  or double-counts one pair fails the hash. The copy keeps the
    *  uncompacted read (q_stream_pmi) exercised in the same gate run. */
-  private val pairCompactLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def pairCountsCompactedLake(s: SparkSession, d: String): String =
-    pairCompactLakes.getOrElseUpdate(d, {
-      val src = pairCountsLake(s, d)
-      val base = java.nio.file.Files.createTempDirectory("graft_paircomp").toString
-      val conf = s.sessionState.newHadoopConf()
-      graft.core.Fs.copyDir(conf, s"$src/uni", s"$base/uni")
-      graft.core.Fs.copyDir(conf, s"$src/bg", s"$base/bg")
-      graft.streaming.StoreCompaction.compactCounts(s, s"$base/uni", Seq("tk"))
-      graft.streaming.StoreCompaction.compactCounts(s, s"$base/bg", Seq("w1", "w2"))
-      base
-    })
+  private val pairCountsCompactedLake = Build("pipe_paircomp") { (s, d) =>
+    val src = pairCountsLake(s, d)
+    val base = java.nio.file.Files.createTempDirectory("graft_paircomp").toString
+    val conf = s.sessionState.newHadoopConf()
+    graft.core.Fs.copyDir(conf, s"$src/uni", s"$base/uni")
+    graft.core.Fs.copyDir(conf, s"$src/bg", s"$base/bg")
+    graft.streaming.StoreCompaction.compactCounts(s, s"$base/uni", Seq("tk"))
+    graft.streaming.StoreCompaction.compactCounts(s, s"$base/bg", Seq("w1", "w2"))
+    base
+  }
 
   /** One streamed DECONTAM lake per sf dir: the odd-doc_id half streams
    *  through scrub → gate → reference-bloom decontam → dedup
    *  ([[graft.streaming.DocIngest.runPipelineDecontam]]) against the
    *  even half's pipeline output as the prior snapshot. */
-  private val decontamLakes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def docDecontamLake(s: SparkSession, d: String): String =
-    decontamLakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_docdecon")
-      val all = s.read.parquet(s"$d/documents.parquet")
-      all.filter(col("doc_id") % 2 =!= 0).write.parquet(s"$base/src")
-      val reference = all.filter(col("doc_id") % 2 === 0)
-        .withColumn("text", TextAnalysis.redactedText(col("text")))
-        .filter(TextAnalysis.keepExpr(col("text")))
-      // expectedItems sized to the reference slice (a 1<<20 default bloom
-      // is ~1 MB serialized and bloats every task binary for nothing)
-      graft.streaming.DocIngest.runPipelineDecontam(s, s"$base/src",
-        s"$base/lake", s"$base/ckpt", all.schema, reference,
-        expectedItems = 1 << 14).awaitTermination()
-      s"$base/lake"
-    })
+  private val docDecontamLake = Build("pipe_decontam") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_docdecon")
+    val all = s.read.parquet(s"$d/documents.parquet")
+    all.filter(col("doc_id") % 2 =!= 0).write.parquet(s"$base/src")
+    val reference = all.filter(col("doc_id") % 2 === 0)
+      .withColumn("text", TextAnalysis.redactedText(col("text")))
+      .filter(TextAnalysis.keepExpr(col("text")))
+    // expectedItems sized to the reference slice (a 1<<20 default bloom
+    // is ~1 MB serialized and bloats every task binary for nothing)
+    graft.streaming.DocIngest.runPipelineDecontam(s, s"$base/src",
+      s"$base/lake", s"$base/ckpt", all.schema, reference,
+      expectedItems = 1 << 14).awaitTermination()
+    s"$base/lake"
+  }
 
   /** The production ANN constants the declared queries use: a
    *  CONSTANT-size centroid table / per-subspace codebook (corpus-size-
@@ -223,27 +180,6 @@ object PipelineQueries {
   private val IvfK = 64
   private val PqK = 32
   private def annQueryPred = col("vec_id") % 25 === 0 && col("vec_id") < 1000
-
-  /** Force every memoized per-JVM harness build for `d` (streamed doc/
-   *  embedding lakes) — see [[graft.queries.StreamQueries.warmBuilds]];
-   *  [[graft.Bench]] runs these untimed so first-toucher rows measure
-   *  the read, not the build. */
-  def warmBuilds(s: SparkSession, d: String): Unit =
-    warmBuildTasks(s, d).foreach(_._2())
-
-  /** Independent named build tasks for [[graft.Bench]]'s parallel
-   *  warm-up pool — see [[graft.queries.StreamQueries.warmBuildTasks]].
-   *  The pair-counts compaction copies the pair lake, so the two stay
-   *  one sequenced task. */
-  def warmBuildTasks(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "pipe_pair+paircomp" -> (() => { pairCountsLake(s, d); pairCountsCompactedLake(s, d); () }),
-    "pipe_driftcomp" -> (() => { driftCountsCompactedLake(s, d); () }),
-    "pipe_ann_assign" -> (() => { annAssignLake(s, d); () }),
-    "pipe_doc" -> (() => { docPipelineLake(s, d); () }),
-    "pipe_ann_serve" -> (() => { annServeLake(s, d); () }),
-    "pipe_neardedup" -> (() => { docNearDedupLake(s, d); () }),
-    "pipe_drift" -> (() => { driftCountsLake(s, d); () }),
-    "pipe_decontam" -> (() => { docDecontamLake(s, d); () }))
 
   val defs: Map[String, Q] = Map(
     // token-frequency heavy hitters via the count-min sketch (round 11

@@ -20,19 +20,19 @@ object RollupQueries {
 
   private val RollupInterval = "1h"
 
-  /** Persisted 1h composite store for the TRANSPARENT SQL routing rows —
-   *  one per source dir per JVM (the ingest-maintained store analog,
-   *  here built once from batch points). Warmed by [[warmBuilds]] so the
-   *  first-touching bench row measures the read, not the build. */
-  private val stores = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Persisted composite store at `interval`, built once per source dir
+   *  per JVM from batch points (the ingest-maintained store analog): the
+   *  1h store serves the TRANSPARENT SQL routing rows, the 1d store the
+   *  LADDER rows (round 13). */
+  private def rollupStore(interval: String) = Build(s"rollup_${interval}_store") { (s, d) =>
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_rollup_$interval").toString
+    Rollup.build(TsdbViews.points(s, d), interval)
+      .write.mode("overwrite").parquet(s"$dir/rollup")
+    s"$dir/rollup"
+  }
 
-  private def storeFor(s: SparkSession, d: String): String =
-    stores.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files.createTempDirectory("graft_rollup_store").toString
-      Rollup.build(TsdbViews.points(s, d), RollupInterval)
-        .write.mode("overwrite").parquet(s"$dir/rollup")
-      s"$dir/rollup"
-    })
+  private val storeFor = rollupStore(RollupInterval)
+  private val dailyStoreFor = rollupStore("1d")
 
   /** Register the marked facade view `graft_points_routed`: plain SQL
    *  aggregates over it are served from the store by the
@@ -40,17 +40,6 @@ object RollupQueries {
   private def routedView(s: SparkSession, d: String): Unit =
     graft.plans.RollupRouting.registerView(s, TsdbViews.points(s, d),
       s.read.parquet(storeFor(s, d)), RollupInterval, "graft_points_routed")
-
-  /** Persisted 1d composite for the LADDER rows (round 13). */
-  private val dailyStores = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def dailyStoreFor(s: SparkSession, d: String): String =
-    dailyStores.getOrElseUpdate(d, {
-      val dir = java.nio.file.Files.createTempDirectory("graft_rollup_1d").toString
-      Rollup.build(TsdbViews.points(s, d), "1d")
-        .write.mode("overwrite").parquet(s"$dir/rollup1d")
-      s"$dir/rollup1d"
-    })
 
   /** Register the LADDER facade view `graft_points_ladder` (1h + 1d
    *  stores): the rule serves each SQL query from the rung whose served
@@ -75,16 +64,6 @@ object RollupQueries {
       Seq((s.read.parquet(dailyStoreFor(s, d)), "1d", MidFrontier),
         (s.read.parquet(storeFor(s, d)), RollupInterval, Long.MaxValue)),
       "graft_points_ladder_lag")
-
-  /** Force the memoized store builds (untimed bench warm-up pass). */
-  def warmBuilds(s: SparkSession, d: String): Unit =
-    warmBuildTasks(s, d).foreach(_._2())
-
-  /** Independent named build tasks for [[graft.Bench]]'s parallel
-   *  warm-up pool — see [[graft.queries.StreamQueries.warmBuildTasks]]. */
-  def warmBuildTasks(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "rollup_1h_store" -> (() => { storeFor(s, d); () }),
-    "rollup_1d_store" -> (() => { dailyStoreFor(s, d); () }))
 
   private def routed(s: SparkSession, d: String, spec: DownsampleSpec): DataFrame = {
     val pts = TsdbViews.points(s, d)

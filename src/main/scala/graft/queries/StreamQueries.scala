@@ -17,66 +17,38 @@ object StreamQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** One streamed lake per source dir per JVM (Verify runs all queries in
-   *  one session; the ingest runs once and both queries read it). */
-  private val lakes = scala.collection.concurrent.TrieMap.empty[String, IngestJob.Config]
-
-  private def lakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(d, {
-      val base = java.nio.file.Files.createTempDirectory("graft_stream")
-      // the file stream source wants a directory: expose the events
-      // parquet through a symlinked source dir. The driver testdata's
-      // events.parquet is a single FILE; generated corpora (ScaleGen)
-      // are parquet DIRECTORIES, whose nested part-files a non-recursive
-      // read would miss — flatten those by symlinking each part-file.
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
-      if (java.nio.file.Files.isDirectory(src)) {
-        // close the DirectoryStream: each leaked stream pins a file
-        // descriptor for the life of the suite/probe JVM
-        val st = java.nio.file.Files.list(src)
-        try {
-          val it = st.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (p.getFileName.toString.endsWith(".parquet"))
-              java.nio.file.Files.createSymbolicLink(srcDir.resolve(p.getFileName), p)
-          }
-        } finally st.close()
-      } else {
-        java.nio.file.Files.createSymbolicLink(srcDir.resolve("events.parquet"), src)
-      }
-      // retention + future tolerance wide open here: the synthetic table
-      // spans 30 days in one batch; admission-drop behavior is
-      // unit-tested and oracle-checked (q_stream_admission) separately
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
-        rollupInterval = Some(RollupInterval),
-        // the maintained LADDER (round 14): a 1d rung beside the 1h
-        // primary, each close-gated on its own window — daily dashboards
-        // read 24× fewer rows (q_stream_rollup_ladder,
-        // q_sql_rollup_ladder_streamed)
-        rollupLadder = Seq("1d"),
-        // maintained count-min cells over the user tag (A15 sketch
-        // family): per-batch partials, merged at read
-        cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 512)),
-        // maintained DDSketch quantile buckets at TWO grains (A15
-        // sketch family): per metric, and per metric×day — the
-        // p99-dashboard serving grain. Same α as the batch queries so
-        // both streamed reads share their batch oracles verbatim.
-        dds = Seq(
-          IngestJob.DdsConfig("metric", "value", TsdbQueries.DdsAlpha),
-          IngestJob.DdsConfig(TsdbQueries.DdsDailyKeyExpr,
-            "value", TsdbQueries.DdsAlpha, name = "dds_daily")))
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      // post-ingest maintenance, as a production shutdown would: complete
-      // the close-gated rollup over the final open tail, then consolidate
-      // files — every q_stream_* read below exercises that layout
-      IngestJob.finalizeRollup(s, cfg)
-      IngestJob.compactPoints(s, cfg)
-      cfg
-    })
+  /** The main streamed lake: ingest runs once per source dir per JVM and
+   *  every q_stream_* read below shares it. */
+  private val lakeFor = Build("stream_lake") { (s, d) =>
+    // retention + future tolerance wide open here: the synthetic table
+    // spans 30 days in one batch; admission-drop behavior is
+    // unit-tested and oracle-checked (q_stream_admission) separately
+    val cfg = ingested(s, d, "graft_stream")(base => IngestJob.Config(s"$base/lake",
+      s"$base/ckpt", retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+      rollupInterval = Some(RollupInterval),
+      // the maintained LADDER (round 14): a 1d rung beside the 1h
+      // primary, each close-gated on its own window — daily dashboards
+      // read 24× fewer rows (q_stream_rollup_ladder,
+      // q_sql_rollup_ladder_streamed)
+      rollupLadder = Seq("1d"),
+      // maintained count-min cells over the user tag (A15 sketch
+      // family): per-batch partials, merged at read
+      cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 512)),
+      // maintained DDSketch quantile buckets at TWO grains (A15
+      // sketch family): per metric, and per metric×day — the
+      // p99-dashboard serving grain. Same α as the batch queries so
+      // both streamed reads share their batch oracles verbatim.
+      dds = Seq(
+        IngestJob.DdsConfig("metric", "value", TsdbQueries.DdsAlpha),
+        IngestJob.DdsConfig(TsdbQueries.DdsDailyKeyExpr,
+          "value", TsdbQueries.DdsAlpha, name = "dds_daily"))))
+    // post-ingest maintenance, as a production shutdown would: complete
+    // the close-gated rollup over the final open tail, then consolidate
+    // files — every q_stream_* read below exercises that layout
+    IngestJob.finalizeRollup(s, cfg)
+    IngestJob.compactPoints(s, cfg)
+    cfg
+  }
 
   /** The hybrid lake's frozen ingest clock: mid-query-range, so the lake
    *  is a genuine live-deployment snapshot — segments before the clock
@@ -85,32 +57,33 @@ object StreamQueries {
   private val HybridNowSec = OracleCommon.Start + 15 * 86400 // 2024-01-20 00:00
   private val HybridFutureSec = 3600L
 
+  private val RollupInterval = "1h"
+
+  /** Stream `events` through [[IngestJob]] into a fresh temp lake whose
+   *  config `cfg` derives from the temp base dir; returns that config. */
+  private def ingested(s: SparkSession, d: String, prefix: String)(
+      cfg: String => IngestJob.Config): IngestJob.Config = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    val c = cfg(base.toString)
+    IngestJob.run(s, streamSource(base, d, "events.parquet"), c).awaitTermination()
+    c
+  }
+
   /** Ingest WITHOUT the shutdown flush, under the frozen wall clock: the
    *  close gate leaves the clock's segment un-rolled, so this lake has a
    *  genuine open tail inside [Start, End) — q_rollup_hybrid must route
    *  closed segments to the rollup and the tail to raw points. */
-  private def hybridLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#hybrid", {
-      val base = java.nio.file.Files.createTempDirectory("graft_hybrid")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = Long.MaxValue / 4, maxFutureSec = HybridFutureSec,
-        rollupInterval = Some(RollupInterval),
-        // the live ladder: the 1d rung close-gates on whole DAYS, so its
-        // frontier lags the 1h rung's under the frozen mid-range clock —
-        // registerRouted attaches both and the daily SQL serves from the
-        // coarsest rung whose frontier covers each query
-        rollupLadder = Seq("1d"),
-        nowSec = Some(() => HybridNowSec))
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      cfg
-    })
-
-  private val RollupInterval = "1h"
+  private val hybridLakeFor = Build("stream_hybrid") { (s, d) =>
+    ingested(s, d, "graft_hybrid")(base => IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = HybridFutureSec,
+      rollupInterval = Some(RollupInterval),
+      // the live ladder: the 1d rung close-gates on whole DAYS, so its
+      // frontier lags the 1h rung's under the frozen mid-range clock —
+      // registerRouted attaches both and the daily SQL serves from the
+      // coarsest rung whose frontier covers each query
+      rollupLadder = Seq("1d"),
+      nowSec = Some(() => HybridNowSec)))
+  }
 
   /** Finite-retention lake for the admission oracle (S2/R2): the whole
    *  events table arrives as one batch with no wall clock, so the
@@ -119,36 +92,19 @@ object StreamQueries {
   private val AdmissionRetention = 10L * 86400
   private val AdmissionFuture = 86400L
 
-  private def admissionLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#admission", {
-      val base = java.nio.file.Files.createTempDirectory("graft_adm")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture)
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      cfg
-    })
+  private val admissionLakeFor = Build("stream_admission") { (s, d) =>
+    ingested(s, d, "graft_adm")(base => IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture))
+  }
 
   /** Lake with idle-series purge applied after ingest (R5 second half):
    *  series silent since [[OracleCommon.End]] leave the dim/latest logs. */
-  private def idleLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#idle", {
-      val base = java.nio.file.Files.createTempDirectory("graft_idle")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4)
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      IngestJob.purgeIdleSeries(s, cfg, OracleCommon.End)
-      cfg
-    })
+  private val idleLakeFor = Build("stream_idle") { (s, d) =>
+    val cfg = ingested(s, d, "graft_idle")(base => IngestJob.Config(s"$base/lake",
+      s"$base/ckpt", retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4))
+    IngestJob.purgeIdleSeries(s, cfg, OracleCommon.End)
+    cfg
+  }
 
   /** Sampling modulus for the seeded-approx admission variant (~6% of the
    *  batch feeds the median sort). */
@@ -157,20 +113,11 @@ object StreamQueries {
   /** Same admission lake, but the median is the md5-seeded sampled one
    *  (Config.admissionSampleMod) — the large-batch configuration. The
    *  oracle replays the identical sample + median arithmetic. */
-  private def admissionApproxLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#admission_approx", {
-      val base = java.nio.file.Files.createTempDirectory("graft_adm_approx")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture,
-        admissionSampleMod = Some(AdmissionSampleMod))
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      cfg
-    })
+  private val admissionApproxLakeFor = Build("stream_admission_approx") { (s, d) =>
+    ingested(s, d, "graft_adm_approx")(base => IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture,
+      admissionSampleMod = Some(AdmissionSampleMod)))
+  }
 
   /** Segments strictly before this are purged in the maintenance lake —
    *  inside the admitted window, so the purge visibly removes rows. */
@@ -185,26 +132,25 @@ object StreamQueries {
    *  compacted stores against the SAME one-shot batch oracles: a
    *  compaction that loses, duplicates, or mis-sums one cell fails the
    *  hash. */
-  private def sketchCompactedLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#sketchcompact", {
-      val base = java.nio.file.Files.createTempDirectory("graft_sketchcomp")
-      s.read.parquet(s"$d/events.parquet").repartition(4)
-        .write.parquet(s"$base/src")
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
-        cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 512)),
-        dds = Seq(IngestJob.DdsConfig("metric", "value", TsdbQueries.DdsAlpha),
-          IngestJob.DdsConfig(TsdbQueries.DdsDailyKeyExpr, "value",
-            TsdbQueries.DdsAlpha, name = "dds_daily")),
-        compactEvery = Some(2)) // the IN-BAND fold runs at batch 2 (folds 0,1)
-      IngestJob.run(s, s"$base/src", cfg, maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-      // the OFFLINE maintenance pass folds the rest (snapshot + 2 →
-      // snapshot, batch 3 stays open) — both compaction paths feed the
-      // same oracle-gated reads
-      graft.streaming.StoreCompaction.compactSketches(s, cfg)
-      cfg
-    })
+  private val sketchCompactedLakeFor = Build("stream_sketch") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_sketchcomp")
+    s.read.parquet(s"$d/events.parquet").repartition(4)
+      .write.parquet(s"$base/src")
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+      cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 512)),
+      dds = Seq(IngestJob.DdsConfig("metric", "value", TsdbQueries.DdsAlpha),
+        IngestJob.DdsConfig(TsdbQueries.DdsDailyKeyExpr, "value",
+          TsdbQueries.DdsAlpha, name = "dds_daily")),
+      compactEvery = Some(2)) // the IN-BAND fold runs at batch 2 (folds 0,1)
+    IngestJob.run(s, s"$base/src", cfg, maxFilesPerTrigger = Some(1))
+      .awaitTermination()
+    // the OFFLINE maintenance pass folds the rest (snapshot + 2 →
+    // snapshot, batch 3 stays open) — both compaction paths feed the
+    // same oracle-gated reads
+    graft.streaming.StoreCompaction.compactSketches(s, cfg)
+    cfg
+  }
 
   /** The daily-grain DDS store RETENTION-purged (round 12): a copy of
    *  the 4-batch compacted lake's dds_daily store with days before the
@@ -215,252 +161,131 @@ object StreamQueries {
    *  q_stream_dds_range's raw-scan oracle verbatim: a purge predicate
    *  that clips one in-range day fails the hash; the spec pins that
    *  expired days actually left the snapshot. */
-  private val purgedDailyDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ddsDailyPurgedDir(s: SparkSession, d: String): String =
-    purgedDailyDirs.getOrElseUpdate(d, {
-      val src = IngestJob.ddsPath(sketchCompactedLakeFor(s, d), "dds_daily")
-      val dst = java.nio.file.Files.createTempDirectory("graft_ddspurge").toString + "/dds_daily"
-      graft.core.Fs.copyDir(s.sessionState.newHadoopConf(), src, dst)
-      graft.streaming.StoreCompaction.compactRetained(s, dst,
-        TsdbQueries.ddsKeyPart(1).cast("long") >= lit(OracleCommon.Start),
-        graft.operators.QuantileSketch.merge)
-      dst
-    })
+  private val ddsDailyPurgedDir = Build("stream_dds_purged") { (s, d) =>
+    val src = IngestJob.ddsPath(sketchCompactedLakeFor(s, d), "dds_daily")
+    val dst = java.nio.file.Files.createTempDirectory("graft_ddspurge").toString + "/dds_daily"
+    graft.core.Fs.copyDir(s.sessionState.newHadoopConf(), src, dst)
+    graft.streaming.StoreCompaction.compactRetained(s, dst,
+      TsdbQueries.ddsKeyPart(1).cast("long") >= lit(OracleCommon.Start),
+      graft.operators.QuantileSketch.merge)
+    dst
+  }
 
   /** The mapGroupsWithState latest path (A18, third engine for the same
    *  semantics): stream → stateful latest → update-mode memory sink,
    *  snapshotted to parquet once per source dir. One file ⇒ one batch ⇒
    *  exactly one update row per series. */
-  private def latestStateLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#lstate", {
-      val base = java.nio.file.Files.createTempDirectory("graft_lstate")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val schema = s.read.parquet(srcDir.toString).schema
-      val stream = s.readStream.schema(schema).parquet(srcDir.toString)
-      val tableName = s"graft_latest_state_${Integer.toHexString(d.hashCode)}"
-      val q = graft.streaming.StreamOps
-        .latestByState(graft.sources.TsdbViews.pointsFromEvents(stream))
-        .writeStream.format("memory").queryName(tableName)
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(tableName).write.parquet(s"$base/latest_state")
-      IngestJob.Config(s"$base", s"$base/ckpt") // lakeDir doubles as the snapshot root
-    })
+  private val latestStateLakeFor = Build("stream_latest_state") { (s, d) =>
+    val base = java.nio.file.Files.createTempDirectory("graft_lstate")
+    val srcDir = streamSource(base, d, "events.parquet")
+    val schema = s.read.parquet(srcDir).schema
+    val stream = s.readStream.schema(schema).parquet(srcDir)
+    val tableName = s"graft_latest_state_${Integer.toHexString(d.hashCode)}"
+    val q = graft.streaming.StreamOps
+      .latestByState(graft.sources.TsdbViews.pointsFromEvents(stream))
+      .writeStream.format("memory").queryName(tableName)
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    s.table(tableName).write.parquet(s"$base/latest_state")
+    IngestJob.Config(s"$base", s"$base/ckpt") // lakeDir doubles as the snapshot root
+  }
 
   /** The ops-cycle lake (S7/R5/R6): same admission as above, then the
    *  full maintenance pass — log compaction, points-file compaction,
    *  retention purge — BEFORE any query reads it. Compaction must
    *  preserve every row hash; purge must remove exactly the segments the
    *  oracle's cutoff clause removes. */
-  private def maintenanceLakeFor(s: SparkSession, d: String): IngestJob.Config =
-    lakes.getOrElseUpdate(s"$d#maintenance", {
-      val base = java.nio.file.Files.createTempDirectory("graft_mnt")
-      val srcDir = base.resolve("src")
-      java.nio.file.Files.createDirectory(srcDir)
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$d/events.parquet"))
-      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
-        retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture)
-      IngestJob.run(s, srcDir.toString, cfg).awaitTermination()
-      // the ONE-CALL composed pass (round 12): purge → log compaction →
-      // points consolidation, same primitives as before behind
-      // Maintenance.run — the reads below still owe the oracles the
-      // exact same rows
-      graft.streaming.Maintenance.run(s, cfg,
-        retentionCutoffSec = Some(PurgeCutoff)): Unit
-      cfg
-    })
+  private val maintenanceLakeFor = Build("stream_maintenance") { (s, d) =>
+    val cfg = ingested(s, d, "graft_mnt")(base => IngestJob.Config(s"$base/lake",
+      s"$base/ckpt", retentionSec = AdmissionRetention, maxFutureSec = AdmissionFuture))
+    // the ONE-CALL composed pass (round 12): purge → log compaction →
+    // points consolidation, same primitives as before behind
+    // Maintenance.run — the reads below still owe the oracles the
+    // exact same rows
+    graft.streaming.Maintenance.run(s, cfg,
+      retentionCutoffSec = Some(PurgeCutoff)): Unit
+    cfg
+  }
 
-  /** One LWW-windowed-downsample run per source dir: the whole events
-   *  table streams through [[graft.streaming.StreamOps.windowedDownsampleLww]]
-   *  (MemoryStream batches; two far-future sentinel batches advance the
-   *  watermark so every real window finalizes), and the emitted
-   *  composites are cached for the query below. */
-  private val lwwRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val rateRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val timediffRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val transRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val ewmaRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val movavgRuns = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** ONE MemoryStream replay protocol for every point-keyed stateful
-   *  stream twin (round-12 consolidation of five copy-paste blocks):
-   *  the (optionally range-filtered) point rows arrive as one batch,
-   *  flow through `node`, and two far-future sentinel batches push the
-   *  one-batch-lagged watermark past every real point/window so
-   *  everything finalizes — then the memory sink is read back with the
-   *  sentinel series dropped. Sentinels key on Long.MinValue + a
-   *  reserved metric name: unambiguous against any real series
-   *  (testdata ids are xxh64 outputs; a collision with MinValue AND
-   *  the reserved metric is impossible by construction).
-   *
-   *  `sentinelGapSec` must exceed the node's watermark-relevant span
-   *  (window length + delay): daily-bucket nodes pass 2 days, point
-   *  nodes 2 h. One run per (source dir, cache) per JVM; `post` shapes
-   *  the frame that gets cached (e.g. lwwWindows' projection+persist).
-   *
-   *  This harness feeds the TRUE stateful streaming operators — a real
-   *  deployment reads Kafka, not a collect; the collect exists so the
-   *  gate can replay the exact driver table through the stream. */
-  private def replayThroughStream(s: SparkSession, d: String,
-      cache: scala.collection.concurrent.TrieMap[String, DataFrame],
-      namePrefix: String, node: DataFrame => org.apache.spark.sql.Dataset[_],
-      sentinelGapSec: Long,
-      rangeFilter: Boolean = true,
-      post: DataFrame => DataFrame = identity): DataFrame =
-    cache.getOrElseUpdate(d, {
+  /** A point-keyed streamed twin: the (optionally range-filtered) point
+   *  rows go through [[OracleCommon.replay]] into `node`, sentinels keyed
+   *  on series_id Long.MinValue + a reserved metric name; `post` shapes
+   *  the frame that is kept (e.g. lwwWindows' projection+persist).
+   *  Daily-bucket nodes pass a 2-day gap, point nodes 2 h. */
+  private def pointReplay(name: String, gapSec: Long, rangeFilter: Boolean = true,
+      post: DataFrame => DataFrame = identity)(
+      node: DataFrame => org.apache.spark.sql.Dataset[_]): Build[DataFrame] =
+    Build(name, driverHeavy = true) { (s, d) =>
       import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       val src0 = graft.sources.TsdbViews.points(s, d)
       val src = if (rangeFilter)
         src0.filter(col("ts") >= lit(OracleCommon.Start) && col("ts") < lit(OracleCommon.End))
       else src0
-      val pts = src
-        .select(col("series_id"), col("metric"), col("tags"),
-          col("ts"), col("value"), col("seq"))
-        .as[graft.streaming.PointRow].collect().toSeq
-      val maxTs = pts.iterator.map(_.ts).max
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.PointRow]
-      val name = namePrefix + "_" + java.lang.Long.toHexString(
-        graft.functions.Md5Prefix28.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(d)))
-      val q = node(input.toDF())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        def sentinel(ts: Long) = graft.streaming.PointRow(
-          Long.MinValue, "__sentinel", Map("user" -> "-1"), ts, 0.0, 0L)
-        input.addData(pts: _*); q.processAllAvailable()
-        input.addData(sentinel(maxTs + sentinelGapSec)); q.processAllAvailable()
-        input.addData(sentinel(maxTs + 2 * sentinelGapSec)); q.processAllAvailable()
-      } finally q.stop()
-      post(s.table(name).filter(col("series_id") =!= Long.MinValue))
-    })
+      val pts = src.select(col("series_id"), col("metric"), col("tags"),
+        col("ts"), col("value"), col("seq")).as[graft.streaming.PointRow]
+      post(replay(name, s, d, pts, (_: graft.streaming.PointRow).ts,
+        graft.streaming.PointRow(Long.MinValue, "__sentinel", Map("user" -> "-1"), _, 0.0, 0L),
+        gapSec, keyCol = "series_id")(node))
+    }
 
   /** True streamed EWMA: [[graft.streaming.StreamOps.ewmaStream]]
    *  (stateful per-series daily-bucket finalization + trailing weighted
    *  mean); 2-day sentinel gaps close every daily bucket. Shares
    *  q_ds_ewma's batch oracle verbatim. */
-  private def streamedEwma(s: SparkSession, d: String): DataFrame =
-    replayThroughStream(s, d, ewmaRuns, "ewma_stream",
-      graft.streaming.StreamOps.ewmaStream(_, samples = 4, alpha = 0.5),
-      sentinelGapSec = 2 * 86400)
+  private val streamedEwma = pointReplay("replay_ewma", gapSec = 2 * 86400)(
+    graft.streaming.StreamOps.ewmaStream(_, samples = 4, alpha = 0.5))
 
   /** The equal-weight (simple) MA mode as the same stream — shares
    *  q_ds_movavg_simple's batch oracle verbatim. */
-  private def streamedMovavgSimple(s: SparkSession, d: String): DataFrame =
-    replayThroughStream(s, d, movavgRuns, "movavg_stream",
-      graft.streaming.StreamOps.ewmaStream(_, samples = 4, exponential = false),
-      sentinelGapSec = 2 * 86400)
+  private val streamedMovavgSimple = pointReplay("replay_movavg", gapSec = 2 * 86400)(
+    graft.streaming.StreamOps.ewmaStream(_, samples = 4, exponential = false))
 
   /** True streamed rate: [[graft.streaming.StreamOps.rateStream]]
    *  (stateful per-series delta chains, LWW on resends). The batch
    *  q_rate oracle is shared verbatim: the streamed derivative must
    *  replay the batch column math bit-for-bit. */
-  private def streamedRate(s: SparkSession, d: String): DataFrame =
-    replayThroughStream(s, d, rateRuns, "rate_stream",
-      graft.streaming.StreamOps.rateStream(_), sentinelGapSec = 7200)
+  private val streamedRate = pointReplay("replay_rate", gapSec = 7200)(
+    graft.streaming.StreamOps.rateStream(_))
 
-  /** Event-type transitions as a pure stream — the [[streamedRate]]
-   *  protocol (MemoryStream input + sentinel watermark close) over the
+  /** Event-type transitions as a pure stream — the same replay over the
    *  per-entity (ts, seq)-ordered pair machine
    *  ([[graft.streaming.StreamOps.transitionsStream]]); finalized
    *  pairs aggregate through the SAME Transitions.fromPairs stage as
    *  the batch lag chain, so q_events_transitions' oracle is shared
    *  verbatim. */
-  private def streamedTransitions(s: SparkSession, d: String): DataFrame =
-    transRuns.getOrElseUpdate(d, {
-      import s.implicits._
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evTab = graft.sources.TsdbViews.table(s, d, "events")
-      val rows = evTab.select(
-          col("user_id").as("k"), col("event_type").as("t"),
-          graft.sources.TsdbViews.toEpochSeconds(evTab, "ts").as("ts"),
-          col("event_id").as("seq"))
-        .as[graft.streaming.TransRow].collect().toSeq
-      val maxTs = rows.iterator.map(_.ts).max
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[graft.streaming.TransRow]
-      val name = "trans_stream_" + java.lang.Long.toHexString(
-        graft.functions.Md5Prefix28.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(d)))
-      val q = graft.streaming.StreamOps.transitionsStream(input.toDF())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        def sentinel(ts: Long) =
-          graft.streaming.TransRow(Long.MinValue, "__sentinel", ts, 0L)
-        input.addData(rows: _*); q.processAllAvailable()
-        input.addData(sentinel(maxTs + 7200)); q.processAllAvailable()
-        input.addData(sentinel(maxTs + 14400)); q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).filter(col("k") =!= Long.MinValue)
-    })
+  private val streamedTransitions = Build("replay_transitions", driverHeavy = true) { (s, d) =>
+    import s.implicits._
+    val evTab = graft.sources.TsdbViews.table(s, d, "events")
+    val rows = evTab.select(
+        col("user_id").as("k"), col("event_type").as("t"),
+        graft.sources.TsdbViews.toEpochSeconds(evTab, "ts").as("ts"),
+        col("event_id").as("seq"))
+      .as[graft.streaming.TransRow]
+    replay("replay_transitions", s, d, rows, (_: graft.streaming.TransRow).ts,
+      graft.streaming.TransRow(Long.MinValue, "__sentinel", _, 0L),
+      gapSec = 7200, keyCol = "k")(graft.streaming.StreamOps.transitionsStream(_))
+  }
 
   /** The TimeDifference node as a pure stream — the [[streamedRate]]
    *  protocol verbatim (same sentinel close, same chained state
    *  machine), the scalar swapped for the per-point gap in minutes.
    *  Shares q_ds_timediff's batch oracle. */
-  private def streamedTimediff(s: SparkSession, d: String): DataFrame =
-    replayThroughStream(s, d, timediffRuns, "timediff_stream",
-      graft.streaming.StreamOps.timeDifferenceStream(_, 60L), sentinelGapSec = 7200)
+  private val streamedTimediff = pointReplay("replay_timediff", gapSec = 7200)(
+    graft.streaming.StreamOps.timeDifferenceStream(_, 60L))
 
   /** The watermark-finalized streaming 1h composite over the WHOLE
    *  table (no range filter — every window closes via the 2h sentinel
    *  gaps: wm after sentinel #1 = maxTs + 2h − 30m covers all ends). */
-  private def lwwWindows(s: SparkSession, d: String): DataFrame =
-    replayThroughStream(s, d, lwwRuns, "lww_win",
-      graft.streaming.StreamOps.windowedDownsampleLww(_, "1h", "30 minutes"),
-      sentinelGapSec = 7200, rangeFilter = false,
-      post = _.select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("sum"), 4).as("sum_value"), col("cnt"),
-          round(col("min"), 4).as("min_value"), round(col("max"), 4).as("max_value"),
-          round(col("last"), 4).as("last_value"))
-        .persist())
-
-  /** Force every memoized per-JVM harness build for `d` — the ingest
-   *  lakes and the streamed-replay runs the FIRST-touching query would
-   *  otherwise pay inside its own bench timer ([[graft.Bench]] runs this
-   *  as an untimed warm-up pass, so stream-row medians measure the
-   *  production READ and stay comparable round over round). */
-  def warmBuilds(s: SparkSession, d: String): Unit =
-    warmBuildTasks(s, d).foreach(_._2())
-
-  /** The same builds as independent named tasks, for [[graft.Bench]]'s
-   *  PARALLEL warm-up pool (round 15 — the round-14 driver bench run
-   *  timed out; the sequential 310 s build pass was the biggest single
-   *  cut available). Each task is internally sequenced where one build
-   *  reads another's output (the dds-purged copy reads the compacted
-   *  lake's store); across tasks there are no shared memo keys, each
-   *  streaming replay owns its checkpoint/sink name, and Spark runs
-   *  concurrent jobs in one session by design. */
-  def warmBuildTasks(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "stream_sketch+dds_purged" -> (() => { sketchCompactedLakeFor(s, d); ddsDailyPurgedDir(s, d); () }),
-    "stream_maintenance" -> (() => { maintenanceLakeFor(s, d); () }),
-    "stream_lake" -> (() => { lakeFor(s, d); () }),
-    "stream_hybrid" -> (() => { hybridLakeFor(s, d); () }),
-    "stream_admission" -> (() => { admissionLakeFor(s, d); () }),
-    "stream_idle" -> (() => { idleLakeFor(s, d); () }),
-    "stream_admission_approx" -> (() => { admissionApproxLakeFor(s, d); () }),
-    "stream_latest_state" -> (() => { latestStateLakeFor(s, d); () }),
-    "replay_lww" -> OracleCommon.gated(() => { lwwWindows(s, d); () }),
-    "replay_ewma" -> OracleCommon.gated(() => { streamedEwma(s, d); () }),
-    "replay_movavg" -> OracleCommon.gated(() => { streamedMovavgSimple(s, d); () }),
-    "replay_rate" -> OracleCommon.gated(() => { streamedRate(s, d); () }),
-    "replay_transitions" -> OracleCommon.gated(() => { streamedTransitions(s, d); () }),
-    "replay_timediff" -> OracleCommon.gated(() => { streamedTimediff(s, d); () }))
+  private val lwwWindows = pointReplay("replay_lww", gapSec = 7200, rangeFilter = false,
+    post = _.select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
+        round(col("sum"), 4).as("sum_value"), col("cnt"),
+        round(col("min"), 4).as("min_value"), round(col("max"), 4).as("max_value"),
+        round(col("last"), 4).as("last_value"))
+      .persist())(
+    graft.streaming.StreamOps.windowedDownsampleLww(_, "1h", "30 minutes"))
 
   val defs: Map[String, Q] = Map(
     // the PURE-streaming A10 composite (R3 last-write-wins included):
