@@ -21,8 +21,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *    batch's high-water mark, or absurdly in the future, are dropped —
  *    the reference's isDelayed/isEarly checks. The high-water mark is a
  *    robust statistic: the max ts among points within `maxFutureSec` of
- *    the batch **median**, so a single absurd-future outlier can neither
- *    admit itself nor drag the mark up and evict valid fresh points.
+ *    the injected clock or, without one, of the batch **median**, so a
+ *    single absurd-future outlier can neither admit itself nor drag the
+ *    mark up and evict valid fresh points.
  *  - **append** points to the lake, `partitionBy("segment_start")` — the
  *    2h-aligned partition IS the reference's segment window; old-window
  *    data lands in old partitions (R4: out-of-order tolerated, ordering
@@ -53,8 +54,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *    small files into target-sized files per segment — the
  *    flush-consolidation analog (core/.../core/TSFlusherImp.java:168-430).
  *
- * Batch accounting rides on `observe()` metrics collected by the points
- * write itself (one Spark job services both), not separate count jobs.
+ * One batch runs in three steps: the points append; then ONE flush
+ * barrier over every independent write (series log, latest log, sketch
+ * partials, and each rollup rung whose close gate fired); then the
+ * sketch fold. Batch accounting and the segments the close gate needs
+ * ride on `observe()` metrics collected by the points write itself (one
+ * Spark job services all three), not separate count or collect jobs.
  *
  * All file manipulation goes through the Hadoop FileSystem API, so purge
  * and compaction work unchanged on HDFS/S3-style stores, not just local
@@ -86,7 +91,10 @@ object IngestJob {
    *  heuristic (future cutoff relative to the batch median) — robust to
    *  outliers but, with no external clock, unable to distinguish a sparse
    *  multi-hour backfill batch from future garbage; such deployments
-   *  should widen `maxFutureSec` or supply the clock.
+   *  should widen `maxFutureSec` or supply the clock. The batch median
+   *  is computed only when there is no clock: with one, the cutoff is
+   *  known before any data is read, and one aggregate yields the
+   *  high-water mark and count.
    *
    *  `admissionSampleMod`: when set to m, the admission median is the
    *  exact median of the deterministic ~1/m row sample where
@@ -98,7 +106,8 @@ object IngestJob {
    *  in DuckDB with the shared md5 arithmetic (the oracle for
    *  q_stream_admission_approx does exactly that). The admission median
    *  only anchors the future-outlier cutoff, so a sampled median admits
-   *  an (acceptably) slightly different boundary set — deterministically. */
+   *  an (acceptably) slightly different boundary set — deterministically.
+   *  Like the median itself, it is unused when `nowSec` is set. */
   /** `rollupLatenessSec`: how long after a rollup window's end the flush
    *  waits for stragglers before building its rollup (the close gate). */
   /** `rollupLadder`: additional maintained rollup rungs beyond
@@ -196,15 +205,23 @@ object IngestJob {
     def dropped: Long = total - admitted
   }
 
-  /** Shared executor for the per-batch store flushes: one JVM-wide lazy
-   *  cached pool instead of a fresh newFixedThreadPool per micro-batch
-   *  (thread churn every trigger at a production 1-min cadence). Cached:
-   *  each batch's ≤5 flush actions run concurrently, idle threads expire,
-   *  and concurrent ingest jobs (the bench's 4-way lake-build pool) keep
-   *  the per-batch overlap they had with per-batch pools. Daemon threads
-   *  so an exiting application never blocks on the pool. */
-  private lazy val flushPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool(
+  /** Most flushes that run at once, JVM-wide. One batch submits up to
+   *  3 + |dds| + |rungs| flushes (series log, latest log, CMS, each DDS,
+   *  each due rung: 6 for a 1h+1d ladder with one sketch of each kind);
+   *  flushes past the cap, from a wider config or from concurrent ingest
+   *  jobs, queue. */
+  private[streaming] val FlushThreads = 8
+
+  /** Shared executor for the per-batch flushes: one JVM-wide lazy pool
+   *  of at most [[FlushThreads]] threads instead of a fresh pool per
+   *  micro-batch (thread churn every trigger at a production 1-min
+   *  cadence). Idle threads expire. A queued flush cannot deadlock:
+   *  flush bodies never submit to this pool. Daemon threads so an
+   *  exiting application never blocks on the pool. */
+  private lazy val flushPool: java.util.concurrent.ExecutorService = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(FlushThreads, FlushThreads,
+      60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {
@@ -213,8 +230,11 @@ object IngestJob {
           t
         }
       })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
-  /** Run independent store flushes concurrently on [[flushPool]]; every
+  /** Run independent flushes concurrently on [[flushPool]]; every
    *  submitted flush settles before the first failure rethrows (no
    *  orphaned in-flight jobs), named for diagnosis. An interrupt of the
    *  calling thread (`StreamingQuery.stop()` on the batch thread) also
@@ -246,11 +266,12 @@ object IngestJob {
     }
   }
 
-  /** One micro-batch: admission + the appends (+ rollup flush when
-   *  configured). The points append goes through the sink strategy
-   *  surface (P4) — default is the segment-partitioned parquet lake.
-   *  Returns admission stats, computed via `observe()` on the write pass
-   *  (no dedicated count jobs). */
+  /** One micro-batch: admission, the points append, then one flush
+   *  barrier over the store flushes and every due rollup rung flush,
+   *  then the sketch fold. The points append goes through the sink
+   *  strategy surface (P4) — default is the segment-partitioned parquet
+   *  lake. Returns admission stats, computed via `observe()` on the
+   *  write pass (no dedicated count jobs). */
   def processBatch(batch: DataFrame, cfg: Config,
       sink: Option[graft.sinks.PointsSink] = None,
       batchId: Long = -1L): BatchStats = {
@@ -263,52 +284,67 @@ object IngestJob {
     require(cfg.dds.forall(c => !reserved(c.name)),
       s"DdsConfig name collides with a reserved lake store: " +
         s"${cfg.dds.map(_.name).filter(reserved)} (reserved: $reserved)")
-    // One stats pass: the admission median (deterministic,
-    // oracle-replayable: exact by default, or the exact median of the
-    // md5-seeded 1/m sample for huge batches — Config.admissionSampleMod),
-    // raw max, and total count. count==0 ⇒ empty batch, done.
-    val medianOf: Column => Column = ts => percentile(ts, lit(0.5))
-    val p50Col = cfg.admissionSampleMod match {
-      case Some(m) => medianOf(when(
-        pmod(call_function("md5prefix28", col("seq").cast("string")), lit(m)) === 0, col("ts")))
-      case None => medianOf(col("ts"))
-    }
-    val head = batch.agg(
-      p50Col.as("p50"),
-      max(col("ts")).as("mx"),
-      count(lit(1)).as("total")).head
-    if (head.isNullAt(1)) return BatchStats(0, 0, Long.MinValue)
-    // empty sample (tiny batch): fall back to the full exact median
-    val p50 = if (head.isNullAt(0))
-      batch.agg(medianOf(col("ts"))).head.getDouble(0)
-    else head.getDouble(0)
-    val rawMax = head.getLong(1)
-    val total = head.getLong(2)
     val now: Option[Long] = cfg.nowSec.map(_.apply()) // sample the clock once per batch
-    val futureCutoff: Double = now match {
-      case Some(n) => (n + cfg.maxFutureSec).toDouble // reference isEarly
-      case None => p50 + cfg.maxFutureSec // event-time fallback
-    }
-    // Common case: no future outliers, hwm is the raw max (no extra job).
-    val hwm =
-      if (rawMax <= futureCutoff) rawMax
-      else {
-        val h = batch.filter(col("ts") <= lit(futureCutoff)).agg(max(col("ts"))).head
-        if (h.isNullAt(0)) return BatchStats(total, 0, Long.MinValue) // whole batch is future garbage
-        h.getLong(0)
-      }
     // Admission bounds anchor on the wall clock when we have one (the
     // reference's isEarly/isDelayed), else on the robust high-water mark:
     // a tolerated slightly-future point must not shrink the retention
     // window for its contemporaries.
-    val (admitLow, admitHigh): (Double, Double) = now match {
-      case Some(n) => ((n - cfg.retentionSec).toDouble, futureCutoff)
-      case None => ((hwm - cfg.retentionSec).toDouble, (hwm + cfg.maxFutureSec).toDouble)
+    val (total, hwm, admitLow, admitHigh) = now match {
+      case Some(n) =>
+        // One stats pass: with a clock the future cutoff (the reference's
+        // isEarly) is known before any data is read, so the high-water
+        // mark — the max ts within the cutoff — comes from the same
+        // aggregate as the raw max and the count. No median is needed.
+        val cutoff = (n + cfg.maxFutureSec).toDouble
+        val head = batch.agg(
+          max(when(col("ts") <= lit(cutoff), col("ts"))).as("hwm"),
+          max(col("ts")).as("mx"),
+          count(lit(1)).as("total")).head()
+        if (head.isNullAt(1)) return BatchStats(0, 0, Long.MinValue)
+        // whole batch is future garbage
+        if (head.isNullAt(0)) return BatchStats(head.getLong(2), 0, Long.MinValue)
+        (head.getLong(2), head.getLong(0), (n - cfg.retentionSec).toDouble, cutoff)
+      case None =>
+        // One stats pass: the admission median (deterministic,
+        // oracle-replayable: exact by default, or the exact median of the
+        // md5-seeded 1/m sample for huge batches — Config.admissionSampleMod),
+        // raw max, and total count. count==0 ⇒ empty batch, done.
+        val medianOf: Column => Column = ts => percentile(ts, lit(0.5))
+        val p50Col = cfg.admissionSampleMod match {
+          case Some(m) => medianOf(when(
+            pmod(call_function("md5prefix28", col("seq").cast("string")), lit(m)) === 0, col("ts")))
+          case None => medianOf(col("ts"))
+        }
+        val head = batch.agg(
+          p50Col.as("p50"),
+          max(col("ts")).as("mx"),
+          count(lit(1)).as("total")).head()
+        if (head.isNullAt(1)) return BatchStats(0, 0, Long.MinValue)
+        // empty sample (tiny batch): fall back to the full exact median
+        val p50 = if (head.isNullAt(0))
+          batch.agg(medianOf(col("ts"))).head().getDouble(0)
+        else head.getDouble(0)
+        val rawMax = head.getLong(1)
+        val total = head.getLong(2)
+        val cutoff = p50 + cfg.maxFutureSec // event-time fallback
+        // Common case: no future outliers, hwm is the raw max (no extra job).
+        val hwm =
+          if (rawMax <= cutoff) rawMax
+          else {
+            val h = batch.filter(col("ts") <= lit(cutoff)).agg(max(col("ts"))).head()
+            if (h.isNullAt(0)) return BatchStats(total, 0, Long.MinValue) // whole batch is future garbage
+            h.getLong(0)
+          }
+        (total, hwm, (hwm - cfg.retentionSec).toDouble, (hwm + cfg.maxFutureSec).toDouble)
     }
+    // the touched segments ride the same Observation as the admitted
+    // count: a micro-batch touches a handful of 2h windows, so the set is
+    // O(segments-per-batch) ids, collected without a job of its own
     val obs = Observation()
     val admitted = batch
       .filter(col("ts") > lit(admitLow) && col("ts") <= lit(admitHigh))
-      .observe(obs, count(lit(1)).as("admitted"))
+      .observe(obs, count(lit(1)).as("admitted"),
+        collect_set(col("segment_start")).as("touched"))
       .cache()
     try {
       // the points append runs FIRST and alone: it materializes the
@@ -316,17 +352,20 @@ object IngestJob {
       // Observation) before anything else reads the cache
       sink.getOrElse(new graft.sinks.PartitionedParquetSink(pointsPath(cfg)))
         .append(admitted)
+      val observed = obs.get
       val withTj = admitted.withColumn("__tj", graft.core.TagsJson.key(col("tags")))
-      // The per-batch store flushes below (series log, latest log, CMS
-      // partials, each DDS partial) are INDEPENDENT writes to disjoint
-      // store paths over the same cached frame — submit them from a
-      // small pool so the next flush's tasks back-fill executors freed
-      // by the previous one's tail (guide §2.6 "overlap independent
-      // jobs"): per-batch flush wall drops from the sum of the store
-      // flushes to roughly their max. Order-dependent maintenance
-      // (sketch fold, rollup close-gate) stays sequential AFTER the
-      // barrier. Failures propagate: the first failed flush rethrows
-      // once every submitted flush has settled (no orphaned jobs).
+      // ONE barrier per batch. The store flushes (series log, latest
+      // log, CMS partials, each DDS partial) and the due rollup rung
+      // flushes are INDEPENDENT writes to disjoint store paths — the
+      // stores over the same cached frame, the rungs over the lake the
+      // append just completed — so they are submitted together to a small
+      // pool and the next flush's tasks back-fill executors freed by the
+      // previous one's tail (guide §2.6 "overlap independent jobs"):
+      // per-batch flush wall drops from the sum of the flushes to
+      // roughly their max. Only the sketch fold, which reads the sketch
+      // stores, stays sequential AFTER the barrier. Failures propagate:
+      // the first failed flush rethrows once every submitted flush has
+      // settled (no orphaned jobs).
       val flushes = scala.collection.mutable.ArrayBuffer.empty[(String, () => Unit)]
       // plans are CONSTRUCTED on this thread (plan-build reads
       // session conf through the thread-local active session); only the
@@ -384,22 +423,8 @@ object IngestJob {
           else buckets.write.mode("append").parquet(ddsPath(cfg, c.name))
         })
       }
-      runFlushes(flushes.toSeq)
-      // in-band maintenance (production posture): every N committed
-      // batches, fold the closed sketch-store partials into the snapshot
-      // partition. Runs INSIDE foreachBatch, so no concurrent reader of
-      // this ingest races the swap; the fold always excludes this batch's
-      // own (max, replayable) partition, and a crash-replay of this batch
-      // re-runs the fold idempotently (the snapshot re-folds).
-      cfg.compactEvery.foreach { n =>
-        if (batchId > 0 && batchId % n == 0)
-          StoreCompaction.compactSketches(batch.sparkSession, cfg)
-      }
       if (cfg.rollupRungs.nonEmpty) {
-        // control-flow collect, not a data loop: a micro-batch touches a
-        // handful of 2h windows (cached input, O(segments-per-batch) ids)
-        val touched = admitted.select(col("segment_start")).distinct()
-          .collect().map(_.getLong(0)).toSet
+        val touched = observed("touched").asInstanceOf[scala.collection.Seq[Long]].toSet
         // CLOSE GATE, per rung: flush a rung window once, when the
         // high-water mark passes its end + lateness (the reference
         // builds rollups at flush-to-LTS time, once per segment —
@@ -417,6 +442,8 @@ object IngestJob {
         //    inside the admission window) → recompute it;
         //  - a closed lake window with no rung partition yet (it
         //    closed since the batch that last wrote it) → first flush.
+        // The gate reads only the touched set and directory listings,
+        // all settled once the append has returned.
         val anchor = now.getOrElse(hwm)
         val conf = batch.sparkSession.sessionState.newHadoopConf()
         val lakeSegs = segmentDirs(conf, pointsPath(cfg)).map(_._2)
@@ -428,10 +455,22 @@ object IngestJob {
           val rolled = segmentDirs(conf, rungPath(cfg, iv)).map(_._2).toSet
           val unflushed = lakeSegs.map(winOf).filterNot(rolled).toSet
           val due = (touched.map(winOf) ++ unflushed).filter(closed)
-          flushRung(batch.sparkSession, cfg, iv, due.toSeq.sorted)
+          rungWrite(batch.sparkSession, cfg, iv, due.toSeq.sorted)
+            .foreach(write => flushes += s"rung_$iv" -> write)
         }
       }
-      BatchStats(total, obs.get("admitted").asInstanceOf[Long], hwm)
+      runFlushes(flushes.toSeq)
+      // in-band maintenance (production posture): every N committed
+      // batches, fold the closed sketch-store partials into the snapshot
+      // partition. Runs INSIDE foreachBatch, so no concurrent reader of
+      // this ingest races the swap; the fold always excludes this batch's
+      // own (max, replayable) partition, and a crash-replay of this batch
+      // re-runs the fold idempotently (the snapshot re-folds).
+      cfg.compactEvery.foreach { n =>
+        if (batchId > 0 && batchId % n == 0)
+          StoreCompaction.compactSketches(batch.sparkSession, cfg)
+      }
+      BatchStats(total, observed("admitted").asInstanceOf[Long], hwm)
     } finally admitted.unpersist()
   }
 
@@ -561,23 +600,31 @@ object IngestJob {
    *  partitions (dynamic partition overwrite). Idempotent per window:
    *  re-flushing after late data lands simply rewrites its slice. */
   def flushRung(spark: SparkSession, cfg: Config, interval: String,
-      windows: Seq[Long]): Unit = {
-    if (windows.isEmpty) return
+      windows: Seq[Long]): Unit =
+    rungWrite(spark, cfg, interval, windows).foreach(_())
+
+  /** [[flushRung]] split at its action: the rollup plan is built on the
+   *  calling thread (plan construction reads the session conf through
+   *  the thread-local active session) and the returned write may run on
+   *  any thread. None when there is no window to flush. */
+  private def rungWrite(spark: SparkSession, cfg: Config, interval: String,
+      windows: Seq[Long]): Option[() => Unit] = {
+    if (windows.isEmpty) return None
     val w = rungWindowSeconds(interval)
     // the covered 2h lake segments — a bounded list (12 per 1d window),
     // kept as an isin so partition pruning is explicit in the scan
     val segs = windows.flatMap(win => win until (win + w) by TsdbSchema.SegmentSeconds)
     val pts = points(spark, cfg)
       .filter(col("segment_start").isin(segs: _*))
-    graft.rollup.Rollup.build(pts, interval)
+    val rolled = graft.rollup.Rollup.build(pts, interval)
       .withColumn("segment_start", graft.core.SeriesId.segmentStart(col("bucket_ts"), w))
       // co-locate each window in one task: one file per window partition
       // instead of (shuffle-partitions × windows) small files
       .repartition(col("segment_start"))
-      .write.mode("overwrite")
+    Some(() => rolled.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("segment_start")
-      .parquet(rungPath(cfg, interval))
+      .parquet(rungPath(cfg, interval)))
   }
 
   /** End-of-stream / shutdown flush: for every rung, build the rollup

@@ -33,3 +33,41 @@ object Fixtures {
       (metric, tags, t, v, i.toLong)
     }: _*)
 }
+
+/** Counts the Spark jobs started under a job group of its own. Listener
+ *  events arrive asynchronously, so [[started]] first runs a marker job
+ *  under a second group and waits for its start: a listener sees events
+ *  in post order, so by then every job the group started before the call
+ *  has been counted. */
+final class GroupJobs(sc: org.apache.spark.SparkContext) {
+  private val group = s"graft-spec-${java.util.UUID.randomUUID}"
+  private val marker = s"$group-marker"
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger
+  private val markers = new java.util.concurrent.Semaphore(0)
+  private val listener = new org.apache.spark.scheduler.SparkListener {
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+        case `group` => jobs.incrementAndGet(): Unit
+        case `marker` => markers.release()
+        case _ =>
+      }
+  }
+
+  /** `body` on the calling thread, its jobs counted. */
+  def apply[T](body: => T): T = {
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try body
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  /** Jobs started so far under the group; call from inside [[apply]]'s
+   *  body, on its thread. */
+  def started(): Int = {
+    sc.setJobGroup(marker, "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.setJobGroup(group, "counted")
+    assert(markers.tryAcquire(20, java.util.concurrent.TimeUnit.SECONDS),
+      "listener bus did not drain")
+    jobs.get
+  }
+}

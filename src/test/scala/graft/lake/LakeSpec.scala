@@ -4,9 +4,7 @@ import graft.TestSpark
 import graft.filters._
 import graft.sources.TsdbViews
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.CountDownLatch
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,33 +29,10 @@ class LakeSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Set[Row] =
     df.select("series_id", "ts", "seq").collect().toSet
 
-  /** `body`'s result and the Spark jobs it started (tagged with a job group
-   *  of its own). A marker job in a second group drains the listener bus:
-   *  a listener sees events in post order, so once the marker's start
-   *  arrives, every job `body` started has been counted. */
+  /** `body`'s result and the Spark jobs it started. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = TestSpark.spark.sparkContext
-    val group = s"lake-spec-${java.util.UUID.randomUUID}"
-    val drain = s"$group-drain"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet(): Unit
-          case `drain` => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      val r = try body finally sc.clearJobGroup()
-      sc.setJobGroup(drain, "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(20, TimeUnit.SECONDS), "listener bus did not drain")
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val jobs = new graft.GroupJobs(TestSpark.spark.sparkContext)
+    jobs { val r = body; (r, jobs.started()) }
   }
 
   test("time predicates prune segment partitions at the scan") {

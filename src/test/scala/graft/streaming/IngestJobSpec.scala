@@ -688,4 +688,124 @@ class IngestJobSpec extends AnyFunSuite {
     assert(thrown.isInstanceOf[InterruptedException], thrown)
     assert(flagRestored, "the interrupt flag must be restored for the caller")
   }
+
+  test("with a clock, admission reads the batch in one aggregate before the append") {
+    val spark = TestSpark.spark
+    val now = 500000L
+    val cfg = freshCfg(retention = 3600).copy(nowSec = Some(() => now))
+    val jobs = new graft.GroupJobs(spark.sparkContext)
+    // counts the jobs started before the append, then appends as usual
+    val sink = new graft.sinks.PointsSink {
+      @volatile var jobsBefore = -1
+      def name = "recording"
+      def append(b: org.apache.spark.sql.DataFrame): Unit = {
+        jobsBefore = jobs.started()
+        new graft.sinks.PartitionedParquetSink(IngestJob.pointsPath(cfg)).append(b)
+      }
+    }
+    val batch = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (1L, now - 10, "m", 1.0), // fresh
+      (2L, now - 3599, "m", 2.0), // inside retention of the clock
+      (3L, now - 3601, "m", 3.0), // too late → dropped
+      (4L, now + 3000, "m", 4.0), // tolerated future: the high-water mark
+      (5L, now + 7200, "m", 5.0))) // far future → dropped, and NOT the mark
+    val stats = jobs(IngestJob.processBatch(batch, cfg, sink = Some(sink)))
+    assert(stats === IngestJob.BatchStats(5, 3, now + 3000))
+    // no median pass and no second high-water-mark pass: one aggregate
+    // (its shuffle-map job and its result job)
+    assert(sink.jobsBefore >= 1 && sink.jobsBefore <= 2,
+      s"${sink.jobsBefore} jobs before the append")
+    assert(IngestJob.points(spark, cfg).select("seq").collect().map(_.getLong(0)).toSet ===
+      Set(1L, 2L, 4L))
+    // a batch of future garbage only: counted, nothing admitted, no mark
+    val allFuture = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (6L, now + 7200, "m", 6.0), (7L, now + 9000, "m", 7.0)))
+    assert(IngestJob.processBatch(allFuture, cfg) === IngestJob.BatchStats(2, 0, Long.MinValue))
+    val empty = graft.sources.TsdbViews.pointsFromEvents(eventsDf())
+    assert(IngestJob.processBatch(empty, cfg) === IngestJob.BatchStats(0, 0, Long.MinValue))
+  }
+
+  test("the flush pool runs at most FlushThreads flushes at once, across concurrent batches") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+    import java.util.concurrent.atomic.AtomicInteger
+    val running, peak, done = new AtomicInteger
+    val n = IngestJob.FlushThreads + 2
+    def flush(): Unit = {
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(60)
+      running.decrementAndGet()
+      done.incrementAndGet(): Unit
+    }
+    val start = new CountDownLatch(1)
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val callers = (1 to 3).map { c =>
+      new Thread(() =>
+        try { start.await(); IngestJob.runFlushes((1 to n).map(i => s"f$c.$i" -> (() => flush()))) }
+        catch { case t: Throwable => errors.add(t): Unit })
+    }
+    callers.foreach(_.start())
+    start.countDown()
+    callers.foreach(_.join(60000))
+    assert(errors.isEmpty, errors)
+    assert(done.get === 3 * n, "every flush completes")
+    assert(peak.get <= IngestJob.FlushThreads, s"peak ${peak.get} running at once")
+    assert(peak.get > 1, "flushes still overlap")
+  }
+
+  test("a crash at the 1d rung flush settles its siblings; replaying the batch equals a clean run") {
+    val spark = TestSpark.spark
+    val day = 86400L
+    val t0 = 30 * day
+    // day 0 closed on both rungs; day 1 open on the 1d rung, its first
+    // segments closed on the 1h rung: both rungs have windows due
+    val now = t0 + day + 10 * 3600
+    def ladderCfg(prefix: String) = {
+      val base = java.nio.file.Files.createTempDirectory(prefix).toString
+      IngestJob.Config(s"$base/lake", s"$base/ckpt",
+        retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+        rollupInterval = Some("1h"), rollupLadder = Seq("1d"),
+        nowSec = Some(() => now),
+        cms = Some(IngestJob.CmsConfig("tags['user']", depth = 2, width = 16)),
+        dds = Seq(IngestJob.DdsConfig("metric"),
+          IngestJob.DdsConfig("concat_ws('#', metric, cast(ts - ts % 86400 as string))",
+            name = "dds_daily")))
+    }
+    val batch = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (151L, t0 + 10, "cpu", 1.0), (302L, t0 + 3600, "cpu", 2.0),
+      (453L, t0 + 3600, "mem", 3.0), (604L, t0 + day + 10, "cpu", 4.0),
+      (755L, t0 + day + 21600, "mem", 8.0), (906L, t0 + day + 36000, "cpu", 16.0)))
+    val cfg = ladderCfg("graft_crash")
+    // a regular file where the 1d rung's directory belongs: its write fails
+    val planted = java.nio.file.Paths.get(IngestJob.rungPath(cfg, "1d"))
+    java.nio.file.Files.createDirectories(planted.getParent)
+    java.nio.file.Files.write(planted, "not a directory".getBytes)
+    val e = intercept[RuntimeException](IngestJob.processBatch(batch, cfg, batchId = 1L))
+    assert(e.getMessage.contains("rung_1d"), e.getMessage)
+    // the six sibling flushes settled before the rethrow
+    Seq(IngestJob.seriesLogPath(cfg), IngestJob.latestLogPath(cfg), IngestJob.cmsPath(cfg),
+      IngestJob.ddsPath(cfg), IngestJob.ddsPath(cfg, "dds_daily"), IngestJob.rungPath(cfg, "1h"))
+      .foreach(p => assert(spark.read.parquet(p).count() > 0, s"$p did not settle"))
+    // replay the same batch and batchId once the fault is gone
+    java.nio.file.Files.delete(planted)
+    IngestJob.processBatch(batch, cfg, batchId = 1L)
+    val clean = ladderCfg("graft_clean")
+    IngestJob.processBatch(batch, clean, batchId = 1L)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().toSet
+    def stores(c: IngestJob.Config) = Seq(
+      rows(graft.query.QueryEngine.dedupe(IngestJob.points(spark, c)),
+        "series_id", "ts", "value", "seq"),
+      rows(IngestJob.seriesDim(spark, c), "series_id", "metric", "first_seen", "last_seen"),
+      rows(IngestJob.latest(spark, c), "series_id", "last_ts", "last_value"),
+      rows(IngestJob.cmsCells(spark, c), "i", "j", "cnt"),
+      rows(IngestJob.ddsBuckets(spark, c), "key", "sgn", "idx", "cnt"),
+      rows(IngestJob.ddsBuckets(spark, c, "dds_daily"), "key", "sgn", "idx", "cnt")) ++
+      c.rollupRungs.map(iv => rows(IngestJob.rollupRung(spark, c, iv),
+        "series_id", "bucket_ts", "sum", "cnt", "min", "max", "last", "sumsq", "segment_start"))
+    val want = stores(clean)
+    assert(want.forall(_.nonEmpty), "every store of the clean run holds rows")
+    stores(cfg).zip(want).zipWithIndex.foreach { case ((got, exp), i) =>
+      assert(got === exp, s"store #$i differs after the replay")
+    }
+  }
 }
