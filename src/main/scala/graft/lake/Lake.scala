@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.core.TsdbSchema
 import graft.filters.SeriesFilter
 import graft.sources.TsdbViews
 import java.io.FileNotFoundException
@@ -24,14 +25,20 @@ import org.apache.spark.sql.functions._
  * then pruning the fact scan with a broadcast hash of matching ids
  * (which parquet row-group bloom/dictionary filters can also exploit).
  *
+ * Reads carry the declared [[TsdbSchema.points]], so `segment_start` is
+ * a long partition column whatever the values (partition inference would
+ * type epoch seconds below 2^31 as `int`) and no footer is read to infer
+ * a schema; [[graft.plans.SegmentPruning]] turns a `ts` range into a
+ * partition filter over it.
+ *
  * Snapshot contract: [[points]] holds one resolved read per lake dir —
- * the partition listing and inferred schema — and reuses it, with no
- * Spark job, while `points/_SUCCESS` keeps its modification time and the
- * session is the same. That marker is what Spark's committer writes at
- * the end of every [[materialize]], so writers must commit through it; a
- * lake written without the marker is listed again on every read. Like
- * the reference's in-memory segment metadata, this spares an unchanged
- * lake's metadata a trip to storage per query.
+ * the partition listing — and reuses it, with no Spark job, while
+ * `points/_SUCCESS` keeps its modification time and the session is the
+ * same. That marker is what Spark's committer writes at the end of every
+ * [[materialize]], so writers must commit through it; a lake written
+ * without the marker is listed again on every read. Like the reference's
+ * in-memory segment metadata, this spares an unchanged lake's metadata a
+ * trip to storage per query.
  */
 object Lake {
 
@@ -57,13 +64,18 @@ object Lake {
     commitStamp(spark, dir) match {
       case None =>
         snapshots.remove(lakeDir)
-        spark.read.parquet(dir)
+        readPoints(spark, dir)
       case Some(stamp) =>
         snapshots.compute(lakeDir, (_, held) =>
           if (held != null && (held.session eq spark) && held.stamp == stamp) held
-          else Snapshot(spark, stamp, spark.read.parquet(dir))).points
+          else Snapshot(spark, stamp, readPoints(spark, dir))).points
     }
   }
+
+  /** A segment-partitioned points dir (a lake's, or a streamed ingest's),
+   *  read with the declared [[TsdbSchema.points]]. */
+  def readPoints(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(TsdbSchema.points).parquet(dir)
 
   /** Modification time of `dir/_SUCCESS`, if the marker exists. */
   private def commitStamp(spark: SparkSession, dir: String): Option[Long] = {

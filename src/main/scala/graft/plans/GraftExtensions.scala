@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /**
  * Segment-pruning optimizer rule — the one piece of query planning the
@@ -27,17 +27,26 @@ import org.apache.spark.sql.types.LongType
  * `segment_start`) and purely additive (the derived predicate is implied
  * by the original, so semantics are unchanged on any source, partitioned
  * or not).
+ *
+ * graft's own readers (`Lake.points`, `IngestJob.points`) pass the
+ * declared `TsdbSchema.points`, so `segment_start` arrives as a long. A
+ * lake read without a schema gets an inferred partition type instead —
+ * `int` for epoch seconds below 2^31 — so the rule accepts any integral
+ * `segment_start` and compares it through a cast to long.
  */
 object SegmentPruning extends Rule[LogicalPlan] with PredicateHelper {
 
   private val Seg = TsdbSchema.SegmentSeconds
 
+  private val Integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val tsAttr = child.output.find(a => a.name == "ts" && a.dataType == LongType)
-      val segAttr = child.output.find(a => a.name == "segment_start" && a.dataType == LongType)
+      val segAttr = child.output.find(a => a.name == "segment_start" && Integral(a.dataType))
       (tsAttr, segAttr) match {
-        case (Some(ts), Some(seg)) if !cond.references.contains(seg) =>
+        case (Some(ts), Some(segCol)) if !cond.references.contains(segCol) =>
+          val seg = if (segCol.dataType == LongType) segCol else Cast(segCol, LongType)
           val conjuncts = splitConjunctivePredicates(cond)
           val lower = conjuncts.collectFirst {
             case GreaterThanOrEqual(a: AttributeReference, Literal(v: Long, LongType))

@@ -514,9 +514,11 @@ object IngestJob {
       .start()
   }
 
-  /** Streamed lake views. */
+  /** Streamed lake views. Points are read with the declared schema
+   *  ([[graft.lake.Lake.readPoints]]), so a lake whose segments were all
+   *  purged reads as 0 rows rather than failing schema inference. */
   def points(spark: SparkSession, cfg: Config): DataFrame =
-    spark.read.parquet(pointsPath(cfg))
+    graft.lake.Lake.readPoints(spark, pointsPath(cfg))
 
   /** The streaming-maintained PRIMARY rollup table (A10 read side):
    *  composite sum/cnt/min/max/last/sumsq rows per (series, rollup

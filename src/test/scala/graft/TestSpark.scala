@@ -3,6 +3,7 @@ package graft
 import graft.core.{GraftSession, SeriesId}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
@@ -69,5 +70,46 @@ final class GroupJobs(sc: org.apache.spark.SparkContext) {
     assert(markers.tryAcquire(20, java.util.concurrent.TimeUnit.SECONDS),
       "listener bus did not drain")
     jobs.get
+  }
+}
+
+/** What each file scan of a frame read: runs the frame's own query
+ *  execution, then walks its final adaptive plan, query stages included. */
+object ScanStats {
+
+  /** One `FileSourceScanExec`: its partition filters and the files it
+   *  opened after partition pruning (the scan's `numFiles` metric). */
+  final case class Scan(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      numFiles: Long)
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Parquet files under a segment-partitioned `dir` in the segments a
+   *  `ts` window `[lo, hi)` overlaps; the default window is every segment. */
+  def segmentFiles(dir: String, lo: Long = Long.MinValue, hi: Long = Long.MaxValue): Long = {
+    val segs = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try segs.iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("segment_start="))
+      .filter { p =>
+        val seg = p.getFileName.toString.stripPrefix("segment_start=").toLong
+        seg < hi && seg + graft.core.TsdbSchema.SegmentSeconds > lo
+      }
+      .map { p =>
+        val files = java.nio.file.Files.list(p)
+        try files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+        finally files.close()
+      }.sum.toLong
+    finally segs.close()
+  }
+
+  def apply(df: DataFrame): Seq[Scan] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("scan-stats")) {
+      qe.toRdd.foreach(_ => ())
+    }
+    Plans.collect(qe.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        Scan(s.partitionFilters, s.metrics("numFiles").value)
+    }
   }
 }

@@ -1,11 +1,11 @@
 package graft.lake
 
-import graft.TestSpark
+import graft.{ScanStats, TestSpark}
 import graft.filters._
 import graft.sources.TsdbViews
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.concurrent.{Await, Future}
@@ -35,18 +35,53 @@ class LakeSpec extends AnyFunSuite {
     jobs { val r = body; (r, jobs.started()) }
   }
 
+  private val seg = graft.core.TsdbSchema.SegmentSeconds
+
+  /** Files opened by a read of `dir`'s lake through `filter`, with the
+   *  check that the partition filter reached the one scan. */
+  private def filesRead(dir: String, filter: Column): Long = {
+    val scans = ScanStats(Lake.points(TestSpark.spark, dir).filter(filter))
+    assert(scans.size === 1)
+    assert(scans.head.partitionFilters.nonEmpty, s"no partition filter for $filter")
+    scans.head.numFiles
+  }
+
   test("time predicates prune segment partitions at the scan") {
-    val pts = Lake.points(TestSpark.spark, lakeDir)
-    val seg = graft.core.TsdbSchema.SegmentSeconds
+    val pts = s"$lakeDir/points"
     val lo = 1704067200L + 10 * seg
-    val filtered = pts.filter(col("segment_start") >= lo && col("segment_start") < lo + 2 * seg)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("segment_start"),
-      s"partition filter must reach the parquet scan:\n$plan")
-    // and the pruned read returns exactly the two windows
-    val segs = filtered.select(col("segment_start").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(segs.forall(s => s >= lo && s < lo + 2 * seg))
+    // an explicit segment_start range, as the oracle queries spell it
+    val bySeg = col("segment_start") >= lo && col("segment_start") < lo + 2 * seg
+    assert(filesRead(lakeDir, bySeg) === ScanStats.segmentFiles(pts, lo, lo + 2 * seg))
+    val segs = Lake.points(TestSpark.spark, lakeDir).filter(bySeg)
+      .select(col("segment_start").cast("long")).distinct().collect().map(_.getLong(0)).toSet
+    assert(segs.nonEmpty && segs.forall(s => s >= lo && s < lo + 2 * seg))
+    // a ts-only range, unaligned at both ends: the derived filter prunes
+    // to the three segments it touches
+    val (a, b) = (lo + 600, lo + 2 * seg + 600)
+    val spanned = ScanStats.segmentFiles(pts, a, b)
+    assert(spanned > 0 && spanned < ScanStats.segmentFiles(pts))
+    assert(filesRead(lakeDir, col("ts") >= a && col("ts") < b) === spanned)
+  }
+
+  test("a narrow ts read opens only the spanned segments' files, however large the lake") {
+    val spark = TestSpark.spark
+    val gen = Files.createTempDirectory("graft_lake_gen").toString
+    graft.ScaleGen.genEventsDistributed(spark, 4000, 200, gen)
+    val big = Files.createTempDirectory("graft_lake_big").toString
+    Lake.materialize(spark, gen, big)
+    // one unaligned hour across the boundary of segments 20 and 21, both
+    // populated in each lake
+    val lo = 1704067200L + 21 * seg - 1800
+    val hi = lo + 3600
+    val lakes = Seq(lakeDir, big).map { dir =>
+      val pts = s"$dir/points"
+      val spanned = ScanStats.segmentFiles(pts, lo, hi)
+      val all = ScanStats.segmentFiles(pts)
+      assert(filesRead(dir, col("ts") >= lo && col("ts") < hi) === spanned)
+      assert(spanned > 0 && spanned < all, s"$dir: $spanned of $all files")
+      all
+    }
+    assert(lakes(1) > lakes(0), s"the generated lake is the larger one: $lakes")
   }
 
   test("semi-join scan path broadcasts the matched series set (J1)") {

@@ -9,26 +9,45 @@ class ExtensionsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("ts-only range predicates derive segment_start partition filters") {
-    val spark = TestSpark.spark
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_ext").toString
-    graft.lake.Lake.materialize(spark, sf, lakeDir)
-    val pts = graft.lake.Lake.points(spark, lakeDir)
-    val seg = graft.core.TsdbSchema.SegmentSeconds
-    val lo = 1704067200L + 3 * seg + 100 // deliberately unaligned
-    val hi = lo + 5 * seg
+  private lazy val lakeDir = {
+    val d = java.nio.file.Files.createTempDirectory("graft_ext").toString
+    graft.lake.Lake.materialize(TestSpark.spark, sf, d)
+    d
+  }
 
+  private val seg = graft.core.TsdbSchema.SegmentSeconds
+  private val lo = 1704067200L + 3 * seg + 100 // deliberately unaligned
+  private val hi = lo + 5 * seg
+
+  /** The ts-only filter over `pts`: one scan, pruned to exactly the
+   *  files of the six segments the window spans, with rows unchanged. */
+  private def assertPrunes(pts: org.apache.spark.sql.DataFrame): Unit = {
+    val spark = TestSpark.spark
     // filter mentions ONLY ts — the rule must derive the partition bound
     val filtered = pts.filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("segment_start"),
-      s"derived partition filter missing:\n$plan")
+    val scans = graft.ScanStats(filtered)
+    assert(scans.size === 1)
+    assert(scans.head.partitionFilters.nonEmpty, "no derived partition filter reached the scan")
+    val spanned = graft.ScanStats.segmentFiles(s"$lakeDir/points", lo, hi)
+    assert(spanned > 0 && spanned < graft.ScanStats.segmentFiles(s"$lakeDir/points"))
+    assert(scans.head.numFiles === spanned)
 
     // and semantics are unchanged vs the raw view
     val direct = graft.sources.TsdbViews.points(spark, sf)
       .filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
     assert(filtered.count() === direct.count())
     assert(filtered.count() > 0)
+  }
+
+  test("ts-only range predicates derive segment_start partition filters") {
+    assertPrunes(graft.lake.Lake.points(TestSpark.spark, lakeDir))
+  }
+
+  test("a lake read without a schema (inferred int segment_start) still prunes") {
+    val raw = TestSpark.spark.read.parquet(s"$lakeDir/points")
+    // partition inference types epoch seconds below 2^31 as int
+    assert(raw.schema("segment_start").dataType === org.apache.spark.sql.types.IntegerType)
+    assertPrunes(raw)
   }
 
   test("open-ended upper bound at Long.MaxValue does not wrap to an empty result") {

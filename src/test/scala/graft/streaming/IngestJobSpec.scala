@@ -486,6 +486,27 @@ class IngestJobSpec extends AnyFunSuite {
     assert(remaining === Set(t0 + seg, t0 + 2 * seg))
   }
 
+  test("a lake whose segments were all purged reads as 0 rows; a missing lake still fails") {
+    val spark = TestSpark.spark
+    val t0 = 35 * seg
+    val cfg = freshCfg(retention = Long.MaxValue / 4)
+      .copy(nowSec = Some(() => t0 + seg))
+    IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (1L, t0, "cpu", 1.0), (2L, t0 + seg, "cpu", 2.0))), cfg)
+    // retention deletes segment dirs outside a Spark commit, so no
+    // parquet footer is left to infer a schema from
+    assert(IngestJob.purge(cfg, cutoffSec = t0 + 2 * seg) === Seq(t0, t0 + seg))
+    val pts = IngestJob.points(spark, cfg)
+    assert(pts.schema.fieldNames.toSeq === TsdbSchema.points.fieldNames.toSeq)
+    assert(pts.count() === 0)
+    val q = graft.query.TsdbQuery(graft.filters.MetricLiteral(Seq("cpu")), t0, t0 + 2 * seg,
+      downsample = Some(graft.query.DownsampleSpec("1h", "sum")))
+    assert(graft.Graft.queryRouted(spark, cfg, q).count() === 0)
+    val missing = cfg.copy(lakeDir = s"${cfg.lakeDir}_missing")
+    val e = intercept[org.apache.spark.sql.AnalysisException](IngestJob.points(spark, missing))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
   test("idle-series purge removes silent series from dim + latest; rewrite resurrects (R5)") {
     val spark = TestSpark.spark
     val t0 = 40 * seg
