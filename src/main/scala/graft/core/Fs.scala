@@ -1,12 +1,16 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Filesystem ops for the maintenance paths (log compaction, partition
- *  swap). Everything goes through the Hadoop FileSystem API so purge and
- *  compaction work on HDFS/S3-style stores, not just local disk. */
+/** Filesystem ops for the maintenance paths. `Fs` owns the on-disk store
+ *  protocol every writer shares: how a store's `key=value` partitions are
+ *  listed ([[partitions]]), how expired ones are dropped
+ *  ([[dropPartitions]]), and how a rewrite is staged, swapped in and
+ *  cleaned up ([[rewritePlanned]]). Everything goes through the Hadoop
+ *  FileSystem API so purge and compaction work on HDFS/S3-style stores,
+ *  not just local disk. */
 object Fs {
 
   def hadoopConf(): Configuration =
@@ -14,30 +18,42 @@ object Fs {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
-  /** Atomic-ish directory swap (rename is atomic on HDFS; on object
-   *  stores a table format would own this — the API boundary is what
-   *  matters here). NOTE: deletes everything currently under `dst`,
-   *  including files appended after the caller read it — only safe when
-   *  the caller holds exclusive ownership of the directory. For
-   *  concurrently-appended dirs use [[swapInFiles]]. */
-  def replaceDir(conf: Configuration, src: String, dst: String): Unit = {
-    val dstPath = new Path(dst)
-    val fs = dstPath.getFileSystem(conf)
-    if (fs.exists(dstPath) && !fs.delete(dstPath, true))
-      throw new java.io.IOException(s"delete $dst failed")
-    if (!fs.rename(new Path(src), dstPath))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
-  }
-
-  /** The data files (non-hidden, non-marker) directly under `dir`. */
-  def dataFiles(conf: Configuration, dir: String): Seq[Path] = {
+  /** The data files (non-hidden, non-marker) directly under `dir`, with
+   *  their lengths. */
+  def dataFileStatuses(conf: Configuration, dir: String): Seq[FileStatus] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
         && !s.getPath.getName.startsWith("."))
-      .map(_.getPath)
+  }
+
+  /** The data files (non-hidden, non-marker) directly under `dir`. */
+  def dataFiles(conf: Configuration, dir: String): Seq[Path] =
+    dataFileStatuses(conf, dir).map(_.getPath)
+
+  /** The `key=value` partition dirs directly under `dir`, as (dir, value)
+   *  pairs in listing order; empty when `dir` does not exist. */
+  def partitions(conf: Configuration, dir: String, key: String): Seq[(Path, String)] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val prefix = s"$key="
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .map(s => s.getPath -> s.getPath.getName.stripPrefix(prefix))
+  }
+
+  /** Delete the `key=value` partitions of `dir` whose value is `expired`
+   *  (a whole-directory drop, no data rewrite). Returns the values of
+   *  only the partitions actually deleted: a failed delete stays on disk
+   *  and is retried by the next pass. */
+  def dropPartitions(conf: Configuration, dir: String, key: String)(
+      expired: String => Boolean): Seq[String] = {
+    val fs = new Path(dir).getFileSystem(conf)
+    partitions(conf, dir, key).filter { case (p, v) => expired(v) && fs.delete(p, true) }
+      .map(_._2)
   }
 
   /** Recursive directory copy (FileUtil.copy semantics: a non-existent
@@ -60,7 +76,7 @@ object Fs {
    *  planned files). Crash window: after the move-in, before the deletes,
    *  both copies briefly coexist — readers' (ts, seq) last-write-wins
    *  fold collapses such duplicates, which is the safe failure direction
-   *  (replaceDir's window loses data instead). */
+   *  (a whole-directory replace would lose data instead). */
   def swapInFiles(conf: Configuration, stagingDir: String, liveDir: String,
       plannedOld: Seq[Path]): Unit = {
     val live = new Path(liveDir)
@@ -74,6 +90,44 @@ object Fs {
     plannedOld.foreach { f =>
       if (fs.exists(f) && !fs.delete(f, false))
         throw new java.io.IOException(s"delete $f failed")
+    }
+  }
+
+  /** Rewrite exactly the `planned` data files of the store at `root`,
+   *  race-safe against concurrent appends:
+   *   1. read the planned files (`basePath = root`, so partition columns
+   *      come back);
+   *   2. `write(frame, staging)` writes the replacement — same layout as
+   *      `root` — into the hidden staging dir `<parent>/.<name>_compact_tmp`;
+   *   3. each planned partition's staged files are swapped in with
+   *      [[swapInFiles]], which deletes only that partition's planned
+   *      files, so a batch appended between plan and swap keeps its rows
+   *      exactly once;
+   *   4. the staging dir is deleted, whether or not 2–3 succeeded.
+   *  A planned file sits directly under `root` (an unpartitioned store)
+   *  or under one of its partition dirs. No-op when nothing is planned. */
+  def rewritePlanned(spark: SparkSession, root: String, planned: Seq[Path])(
+      write: (DataFrame, String) => Unit): Unit = {
+    if (planned.isEmpty) return
+    val conf = spark.sessionState.newHadoopConf()
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(conf)
+    val qualifiedRoot = fs.makeQualified(rootPath).toString
+    val staging = new Path(rootPath.getParent, s".${rootPath.getName}_compact_tmp")
+    // partition dir relative to root ("" for root itself) → its planned files
+    val byPartition = planned.groupBy { f =>
+      val dir = fs.makeQualified(f.getParent).toString
+      require(dir.startsWith(qualifiedRoot), s"planned file $f is not under $root")
+      dir.stripPrefix(qualifiedRoot)
+    }.toSeq.sortBy(_._1)
+    val frame = spark.read.option("basePath", root).parquet(planned.map(_.toString): _*)
+    try {
+      write(frame, staging.toString)
+      byPartition.foreach { case (rel, files) =>
+        swapInFiles(conf, s"$staging$rel", s"$rootPath$rel", files)
+      }
+    } finally {
+      fs.delete(staging, true): Unit
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.events
 
+import graft.core.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,54 +68,30 @@ object EventsStore {
 
   /** Retention purge: drop whole expired day partitions (the reference
    *  expires old daily Lucene indices; a file-level directory delete is
-   *  the parquet counterpart — no data rewrite). Returns dropped days. */
-  def purgeDays(storeDir: String, cutoffDay: String): Seq[String] = {
-    val conf = graft.core.Fs.hadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/events_log")
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Seq.empty
-    val expired = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-      .map(s => s.getPath -> s.getPath.getName.stripPrefix("day="))
-      .filter(_._2 < cutoffDay) // ISO day strings order lexicographically
-    // only days whose directory delete actually succeeded are reported
-    // dropped; a failed delete stays on disk and stays in the next purge
-    expired.filter { case (p, _) => fs.delete(p, true) }.map(_._2).sorted
-  }
+   *  the parquet counterpart — no data rewrite). Returns the days actually
+   *  dropped: a failed delete stays on disk and stays in the next purge. */
+  def purgeDays(storeDir: String, cutoffDay: String): Seq[String] =
+    // ISO day strings order lexicographically
+    Fs.dropPartitions(Fs.hadoopConf(), s"$storeDir/events_log", "day")(_ < cutoffDay).sorted
 
   /** Rewrite the log to its resolved state (one version per doc),
    *  preserving the daily-index partitioning. Race-safe against a
-   *  concurrent [[append]]: the rewrite reads exactly the files listed
-   *  at plan time and the swap deletes only those
-   *  ([[graft.core.Fs.swapInFiles]]) — a batch appended mid-compaction
-   *  keeps its files, and [[current]]'s version fold resolves snapshot
-   *  rows against the newer appends correctly by construction. */
+   *  concurrent [[append]] ([[graft.core.Fs.rewritePlanned]]): the
+   *  rewrite reads exactly the files listed at plan time and the swap
+   *  deletes only those — a batch appended mid-compaction keeps its
+   *  files, and [[current]]'s version fold resolves snapshot rows against
+   *  the newer appends correctly by construction. */
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val logDir = s"$storeDir/events_log"
-    val root = new org.apache.hadoop.fs.Path(logDir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val dayDirs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-      .map(_.getPath.getName)
-    // plan: (relative partition dir, its data files at plan time)
-    val parts: Seq[(String, Seq[org.apache.hadoop.fs.Path])] =
-      if (dayDirs.nonEmpty) dayDirs.map(d => d -> graft.core.Fs.dataFiles(conf, s"$logDir/$d"))
-      else Seq("" -> graft.core.Fs.dataFiles(conf, logDir))
-    val nonEmpty = parts.filter(_._2.nonEmpty)
-    if (nonEmpty.isEmpty) return
-    val planned = nonEmpty.flatMap(_._2).map(_.toString)
-    val snapshot = spark.read.option("basePath", logDir).parquet(planned: _*)
-    val resolved = current(snapshot)
-    val tmp = s"$storeDir/.events_log_compact_tmp"
-    val w = resolved.write.mode("overwrite")
-    (if (resolved.columns.contains("day")) w.partitionBy("day") else w).parquet(tmp)
-    try nonEmpty.foreach { case (rel, files) =>
-      val sub = if (rel.isEmpty) "" else s"/$rel"
-      graft.core.Fs.swapInFiles(conf, s"$tmp$sub", s"$logDir$sub", files)
-    } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
+    val days = Fs.partitions(conf, logDir, "day")
+    val planned =
+      if (days.nonEmpty) days.flatMap(d => Fs.dataFiles(conf, d._1.toString))
+      else Fs.dataFiles(conf, logDir)
+    Fs.rewritePlanned(spark, logDir, planned) { (snapshot, staging) =>
+      val resolved = current(snapshot)
+      val w = resolved.write.mode("overwrite")
+      (if (resolved.columns.contains("day")) w.partitionBy("day") else w).parquet(staging)
     }
   }
 }

@@ -102,7 +102,7 @@ object StreamQueries {
   private val idleLakeFor = Build("stream_idle") { (s, d) =>
     val cfg = ingested(s, d, "graft_idle")(base => IngestJob.Config(s"$base/lake",
       s"$base/ckpt", retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4))
-    IngestJob.purgeIdleSeries(s, cfg, OracleCommon.End)
+    IngestJob.compact(s, cfg, idleCutoffSec = Some(OracleCommon.End))
     cfg
   }
 
@@ -127,7 +127,7 @@ object StreamQueries {
    *  split into four micro-batches (maxFilesPerTrigger = 1) so the
    *  maintained cms/dds stores accumulate several closed batch_id
    *  partitions — the 1-min-cadence production shape in miniature —
-   *  and [[graft.streaming.StoreCompaction.compactSketches]] folds the
+   *  and [[graft.streaming.StoreCompaction.foldSketches]] folds the
    *  closed ones into a snapshot partition. The queries below read the
    *  compacted stores against the SAME one-shot batch oracles: a
    *  compaction that loses, duplicates, or mis-sums one cell fails the
@@ -148,7 +148,7 @@ object StreamQueries {
     // the OFFLINE maintenance pass folds the rest (snapshot + 2 →
     // snapshot, batch 3 stays open) — both compaction paths feed the
     // same oracle-gated reads
-    graft.streaming.StoreCompaction.compactSketches(s, cfg)
+    graft.streaming.StoreCompaction.foldSketches(s, cfg): Unit
     cfg
   }
 

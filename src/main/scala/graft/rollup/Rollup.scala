@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
  * (core/.../core/downsample/DownSampler.java:32-56, AggregatorType.java,
  * SumOfSquareAggregator.java) — as a single multi-aggregate groupBy.
  * The streaming ingest maintains the rollup table with this build:
- * [[graft.streaming.IngestJob.flushRollup]] recomputes each touched
+ * [[graft.streaming.IngestJob.flushRung]] recomputes each touched
  * segment window and overwrites its partition (exact under cross-batch
  * duplicate timestamps, where merging per-batch partials would
  * double-count a re-sent point).

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.core.{Intervals, TsdbSchema}
+import graft.core.{Fs, Intervals, TsdbSchema}
 import graft.sources.TsdbViews
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -150,6 +149,16 @@ object IngestJob {
         s"not a storable rollup interval: $iv (allowed: ${Intervals.RollupVocabulary.toSeq.sorted.mkString(",")})")
       IngestJob.rungWindowSeconds(iv): Unit
     }
+    // two sketches sharing one name would silently interleave partials
+    // in one lake path, and a name matching a RESERVED store (points,
+    // cms, a ladder rung's rollup_<iv>, ...) would corrupt that store —
+    // config errors, refused here for writers and readers alike
+    require(dds.map(_.name).distinct.size == dds.size,
+      s"duplicate DdsConfig names: ${dds.map(_.name)}")
+    private def reserved: Set[String] = ReservedStores ++ rollupRungs.map(iv => s"rollup_$iv")
+    require(dds.forall(c => !reserved(c.name)),
+      s"DdsConfig name collides with a reserved lake store: " +
+        s"${dds.map(_.name).filter(reserved)} (reserved: $reserved)")
   }
 
   /** Ingest-maintained count–min sketch over `keyExpr` (a SQL
@@ -275,15 +284,6 @@ object IngestJob {
   def processBatch(batch: DataFrame, cfg: Config,
       sink: Option[graft.sinks.PointsSink] = None,
       batchId: Long = -1L): BatchStats = {
-    // two sketches sharing one name would silently interleave partials
-    // in one lake path, and a name matching a RESERVED store (points,
-    // cms, ...) would corrupt that store — config errors, not merges
-    require(cfg.dds.map(_.name).distinct.size == cfg.dds.size,
-      s"duplicate DdsConfig names: ${cfg.dds.map(_.name)}")
-    val reserved = ReservedStores ++ cfg.rollupRungs.map(iv => s"rollup_$iv")
-    require(cfg.dds.forall(c => !reserved(c.name)),
-      s"DdsConfig name collides with a reserved lake store: " +
-        s"${cfg.dds.map(_.name).filter(reserved)} (reserved: $reserved)")
     val now: Option[Long] = cfg.nowSec.map(_.apply()) // sample the clock once per batch
     // Admission bounds anchor on the wall clock when we have one (the
     // reference's isEarly/isDelayed), else on the robust high-water mark:
@@ -386,43 +386,29 @@ object IngestJob {
         .select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq")
       flushes += "latest_log" -> (() =>
         latestLogDf.write.mode("append").parquet(latestLogPath(cfg)))
-      // per-batch PARTIAL count-min cells (≤ d·w rows per batch — the
-      // mergeable-summary contract; the read sums cells, never rescans).
-      // Cell counts are SUMS, so unlike the fold-idempotent logs a blind
-      // append would double-count a foreachBatch REPLAY (at-least-once):
-      // with a real batchId each partial lands in its own partition via
-      // dynamic overwrite — replaying a batch rewrites the same
-      // partition, keeping merged cells == one-shot sketch exactly. A
-      // direct caller without a batchId (batchId < 0) appends and owns
-      // its own replay semantics.
-      cfg.cms.foreach { c =>
-        val cells = graft.operators.CountMin
-          .sketch(admitted, expr(c.keyExpr), c.depth, c.width)
-        flushes += "cms" -> (() => {
+      // per-batch PARTIAL sketch rows: count-min cells (≤ d·w rows per
+      // batch — the mergeable-summary contract; the read sums cells,
+      // never rescans) and DDSketch quantile buckets. Counts are SUMS, so
+      // unlike the fold-idempotent logs a blind append would
+      // double-count a foreachBatch REPLAY (at-least-once): with a real
+      // batchId each partial lands in its own partition via dynamic
+      // overwrite — replaying a batch rewrites the same partition,
+      // keeping merged counts == one-shot sketch exactly. A direct
+      // caller without a batchId (batchId < 0) appends and owns its own
+      // replay semantics.
+      def partial(name: String, rows: DataFrame, dir: String): Unit =
+        flushes += name -> (() =>
           if (batchId >= 0)
-            cells.withColumn("batch_id", lit(batchId))
+            rows.withColumn("batch_id", lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id")
-              .parquet(cmsPath(cfg))
-          else cells.write.mode("append").parquet(cmsPath(cfg))
-        })
-      }
-      // per-batch PARTIAL DDSketch quantile buckets — the same
-      // counts-are-sums replay discipline as the count-min cells above
-      cfg.dds.foreach { c =>
-        val buckets = graft.operators.QuantileSketch
-          .sketch(admitted, expr(c.keyExpr), expr(c.valueExpr), c.alpha)
-        flushes += s"dds_${c.name}" -> (() => {
-          if (batchId >= 0)
-            buckets.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(ddsPath(cfg, c.name))
-          else buckets.write.mode("append").parquet(ddsPath(cfg, c.name))
-        })
-      }
+              .parquet(dir)
+          else rows.write.mode("append").parquet(dir))
+      cfg.cms.foreach(c => partial("cms", graft.operators.CountMin
+        .sketch(admitted, expr(c.keyExpr), c.depth, c.width), cmsPath(cfg)))
+      cfg.dds.foreach(c => partial(s"dds_${c.name}", graft.operators.QuantileSketch
+        .sketch(admitted, expr(c.keyExpr), expr(c.valueExpr), c.alpha), ddsPath(cfg, c.name)))
       if (cfg.rollupRungs.nonEmpty) {
         val touched = observed("touched").asInstanceOf[scala.collection.Seq[Long]].toSet
         // CLOSE GATE, per rung: flush a rung window once, when the
@@ -446,15 +432,13 @@ object IngestJob {
         // all settled once the append has returned.
         val anchor = now.getOrElse(hwm)
         val conf = batch.sparkSession.sessionState.newHadoopConf()
-        val lakeSegs = segmentDirs(conf, pointsPath(cfg)).map(_._2)
+        val lakeSegs = segments(conf, pointsPath(cfg))
         cfg.rollupRungs.foreach { iv =>
           val w = rungWindowSeconds(iv)
-          def winOf(seg: Long): Long = seg - Math.floorMod(seg, w)
           def closed(win: Long): Boolean =
             win + w + cfg.rollupLatenessSec <= anchor
-          val rolled = segmentDirs(conf, rungPath(cfg, iv)).map(_._2).toSet
-          val unflushed = lakeSegs.map(winOf).filterNot(rolled).toSet
-          val due = (touched.map(winOf) ++ unflushed).filter(closed)
+          val due = (touched.map(s => s - Math.floorMod(s, w)) ++
+            unflushed(iv, lakeSegs, segments(conf, rungPath(cfg, iv)))).filter(closed)
           rungWrite(batch.sparkSession, cfg, iv, due.toSeq.sorted)
             .foreach(write => flushes += s"rung_$iv" -> write)
         }
@@ -468,7 +452,7 @@ object IngestJob {
       // re-runs the fold idempotently (the snapshot re-folds).
       cfg.compactEvery.foreach { n =>
         if (batchId > 0 && batchId % n == 0)
-          StoreCompaction.compactSketches(batch.sparkSession, cfg)
+          StoreCompaction.foldSketches(batch.sparkSession, cfg): Unit
       }
       BatchStats(total, observed("admitted").asInstanceOf[Long], hwm)
     } finally admitted.unpersist()
@@ -535,12 +519,15 @@ object IngestJob {
    *  [[graft.plans.RollupRouting.registerLadder]]. Rungs whose store has
    *  no closed window yet (a young lake's 1d rung) are skipped: there is
    *  nothing to serve from them, and their frontier would precede every
-   *  query anyway. */
+   *  query anyway. Lists the lake once and each rung once. */
   def rollupLadder(spark: SparkSession, cfg: Config): Seq[(DataFrame, String, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
+    val lakeSegs = segments(conf, pointsPath(cfg))
     cfg.rollupRungs.flatMap { iv =>
-      if (segmentDirs(conf, rungPath(cfg, iv)).isEmpty) None
-      else Some((rollupRung(spark, cfg, iv), iv, rungFrontier(spark, cfg, iv)))
+      val rolled = segments(conf, rungPath(cfg, iv))
+      if (rolled.isEmpty) None
+      else Some((rollupRung(spark, cfg, iv), iv,
+        unflushed(iv, lakeSegs, rolled).minOption.getOrElse(Long.MaxValue)))
     }
   }
 
@@ -588,12 +575,6 @@ object IngestJob {
     foldLatestLog(spark.read.parquet(latestLogPath(cfg)))
       .select("series_id", "metric", "tags", "last_ts", "last_value")
 
-  /** A10: flush-time rollup maintenance for the PRIMARY rung (kept as
-   *  the historical entry point; `segments` are 2h segment windows). */
-  def flushRollup(spark: SparkSession, cfg: Config, interval: String,
-      segments: Seq[Long]): Unit =
-    flushRung(spark, cfg, interval, segments)
-
   /** Flush-time maintenance for one ladder rung. Recomputes the
    *  composite rollup (exact — over the deduped lake, not merged
    *  per-batch partials) for the given rung WINDOWS
@@ -637,12 +618,9 @@ object IngestJob {
    *  windows (historical contract). */
   def finalizeRollup(spark: SparkSession, cfg: Config): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
-    val lakeSegs = segmentDirs(conf, pointsPath(cfg)).map(_._2)
+    val lakeSegs = segments(conf, pointsPath(cfg))
     val flushed = cfg.rollupRungs.map { iv =>
-      val w = rungWindowSeconds(iv)
-      val rolled = segmentDirs(conf, rungPath(cfg, iv)).map(_._2).toSet
-      val missing = lakeSegs.map(s => s - Math.floorMod(s, w))
-        .distinct.filterNot(rolled).sorted
+      val missing = unflushed(iv, lakeSegs, segments(conf, rungPath(cfg, iv))).sorted
       flushRung(spark, cfg, iv, missing)
       iv -> missing
     }.toMap
@@ -676,13 +654,24 @@ object IngestJob {
    *  not flushed (a coarser rung's frontier naturally lags the fine
    *  rung's — its windows close later). */
   def rungFrontier(spark: SparkSession, cfg: Config, interval: String): Long = {
-    val w = rungWindowSeconds(interval)
     val conf = spark.sessionState.newHadoopConf()
-    val rolled = segmentDirs(conf, rungPath(cfg, interval)).map(_._2).toSet
-    val missing = segmentDirs(conf, pointsPath(cfg)).map(_._2)
-      .map(s => s - Math.floorMod(s, w)).distinct.filterNot(rolled)
-    if (missing.isEmpty) Long.MaxValue else missing.min
+    unflushed(interval, segments(conf, pointsPath(cfg)), segments(conf, rungPath(cfg, interval)))
+      .minOption.getOrElse(Long.MaxValue)
   }
+
+  /** The rung ledger: the [[rungWindowSeconds]]-aligned windows of the
+   *  lake segments `lakeSegs` that have no partition among `rolled` (the
+   *  rung store's windows) — what the close gate, [[finalizeRollup]] and
+   *  the frontiers all read. */
+  private def unflushed(interval: String, lakeSegs: Seq[Long], rolled: Seq[Long]): Seq[Long] = {
+    val w = rungWindowSeconds(interval)
+    val have = rolled.toSet
+    lakeSegs.map(s => s - Math.floorMod(s, w)).distinct.filterNot(have)
+  }
+
+  /** The `segment_start` partitions of a segment-partitioned store. */
+  private def segments(conf: Configuration, dir: String): Seq[Long] =
+    Fs.partitions(conf, dir, "segment_start").map(_._2.toLong)
 
   /** R5: drop whole expired segment partitions (cheap file-level delete,
    *  no data rewrite) from the points lake and every maintained rung.
@@ -697,13 +686,14 @@ object IngestJob {
    *  in the same pass; callers without one should align cutoffs to rung
    *  window boundaries, where no straddle exists. */
   def purge(cfg: Config, cutoffSec: Long): Seq[Long] = {
-    val conf = hadoopConf()
-    cfg.rollupRungs.foreach(iv =>
-      dropSegmentsBefore(conf, rungPath(cfg, iv), cutoffSec))
+    val conf = Fs.hadoopConf()
+    def dropBefore(dir: String): Seq[Long] =
+      Fs.dropPartitions(conf, dir, "segment_start")(_.toLong < cutoffSec).map(_.toLong).sorted
     // lakes written by configs that no longer list a rung still purge
     // the historical primary path
-    if (cfg.rollupRungs.isEmpty) dropSegmentsBefore(conf, rollupPath(cfg), cutoffSec): Unit
-    dropSegmentsBefore(conf, pointsPath(cfg), cutoffSec)
+    (if (cfg.rollupRungs.isEmpty) Seq(rollupPath(cfg)) else cfg.rollupRungs.map(rungPath(cfg, _)))
+      .foreach(dropBefore)
+    dropBefore(pointsPath(cfg))
   }
 
   /** [[purge]] plus store repair (round-15 ADVICE): after the file-level
@@ -720,7 +710,7 @@ object IngestJob {
   def purgeAndRepair(spark: SparkSession, cfg: Config, cutoffSec: Long): Seq[Long] = {
     val dropped = purge(cfg, cutoffSec)
     val conf = spark.sessionState.newHadoopConf()
-    val segs = segmentDirs(conf, pointsPath(cfg)).map(_._2)
+    val segs = segments(conf, pointsPath(cfg))
     // Only a CLOSED straddling window may be re-flushed: repairing a
     // still-open window would hand it a partition the ingest's close
     // gate never refreshes (the missing-partition trigger sees one, and
@@ -746,56 +736,32 @@ object IngestJob {
     dropped
   }
 
-  private def dropSegmentsBefore(conf: Configuration, dir: String, cutoffSec: Long): Seq[Long] = {
-    val fs = new Path(dir).getFileSystem(conf)
-    val expired = segmentDirs(conf, dir).filter(_._2 < cutoffSec)
-    // report only segments actually deleted; a failed delete stays on
-    // disk and is retried by the next maintenance pass
-    expired.filter { case (p, _) => fs.delete(p, true) }.map(_._2).sorted
-  }
-
-  /** R5 second half — idle-series deletion: series whose last admitted
-   *  point precedes the cutoff leave the series and latest logs (the
-   *  reference's PurgeJob deleting idle series and their meta docs,
-   *  core/.../core/TimeSeriesShard.java:446-645,552-569). Same race-safe
-   *  swap as [[compact]]: the filtered fold covers exactly the plan-time
-   *  log files, so a concurrent batch's appends survive — and a purged
-   *  series that writes again is simply re-created by its new log rows
-   *  (first_seen restarts), which is the reference's behavior for a
-   *  deleted-then-reappearing series. */
-  def purgeIdleSeries(spark: SparkSession, cfg: Config, cutoffSec: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    compactLog(spark, conf, seriesLogPath(cfg), log =>
-      foldSeriesLog(log).filter(col("last_seen") >= cutoffSec)
-        .select("series_id", "metric", "tags", "first_seen", "last_seen"))
-    compactLog(spark, conf, latestLogPath(cfg), log =>
-      foldLatestLog(log).filter(col("last_ts") >= cutoffSec)
-        .select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq"))
-  }
-
-  /** Compact the series/latest logs to one row per series. Race-safe
-   *  against a concurrently-running ingest: the snapshot is computed over
+  /** R6: compact the series/latest logs to one row per series.
+   *  `idleCutoffSec` adds the R5 second half, idle-series deletion:
+   *  series whose last admitted point precedes the cutoff leave both logs
+   *  (the reference's PurgeJob deleting idle series and their meta docs,
+   *  core/.../core/TimeSeriesShard.java:446-645,552-569); a purged series
+   *  that writes again is simply re-created by its new log rows
+   *  (first_seen restarts), the reference's behavior for a
+   *  deleted-then-reappearing series.
+   *
+   *  Race-safe against a concurrently-running ingest
+   *  ([[graft.core.Fs.rewritePlanned]]): the snapshot is computed over
    *  exactly the log files listed at plan time, staged, moved in, and
    *  only those planned files are deleted — a batch appending between
    *  plan and swap keeps its rows, and the log FOLD (min/max / LWW over
    *  snapshot + newer rows) remains correct by construction. */
-  def compact(spark: SparkSession, cfg: Config): Unit = {
+  def compact(spark: SparkSession, cfg: Config, idleCutoffSec: Option[Long] = None): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    compactLog(spark, conf, seriesLogPath(cfg), log =>
-      foldSeriesLog(log).select("series_id", "metric", "tags", "first_seen", "last_seen"))
-    compactLog(spark, conf, latestLogPath(cfg), log =>
-      foldLatestLog(log).select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq"))
-  }
-
-  private def compactLog(spark: SparkSession, conf: Configuration, dir: String,
-      fold: DataFrame => DataFrame): Unit = {
-    val planned = graft.core.Fs.dataFiles(conf, dir)
-    if (planned.isEmpty) return
-    val tmp = s"$dir.compact_tmp"
-    fold(spark.read.parquet(planned.map(_.toString): _*))
-      .write.mode("overwrite").parquet(tmp)
-    try graft.core.Fs.swapInFiles(conf, tmp, dir, planned)
-    finally new Path(tmp).getFileSystem(conf).delete(new Path(tmp), true): Unit
+    def rewrite(dir: String)(fold: DataFrame => DataFrame): Unit =
+      Fs.rewritePlanned(spark, dir, Fs.dataFiles(conf, dir))((log, staging) =>
+        fold(log).write.mode("overwrite").parquet(staging))
+    def active(lastCol: String)(folded: DataFrame): DataFrame =
+      idleCutoffSec.fold(folded)(cut => folded.filter(col(lastCol) >= cut))
+    rewrite(seriesLogPath(cfg))(log => active("last_seen")(foldSeriesLog(log))
+      .select("series_id", "metric", "tags", "first_seen", "last_seen"))
+    rewrite(latestLogPath(cfg))(log => active("last_ts")(foldLatestLog(log))
+      .select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq"))
   }
 
   /** R6: consolidate the lake's per-micro-batch small files — rewrite
@@ -804,9 +770,9 @@ object IngestJob {
    *  repartition keyed by segment so each segment lands in its target
    *  number of tasks), written to a staging root and swapped in per file.
    *
-   *  Race-safe against a live ingest: the rewrite reads EXACTLY the data
-   *  files listed at plan time, and the swap moves the staged files in
-   *  and deletes only those planned files ([[graft.core.Fs.swapInFiles]])
+   *  Race-safe against a live ingest ([[graft.core.Fs.rewritePlanned]]):
+   *  the rewrite reads EXACTLY the data files listed at plan time, and the
+   *  swap moves the staged files in and deletes only those planned files
    *  — a micro-batch appending to the segment between plan and swap
    *  keeps its files and its rows appear exactly once. (The previous
    *  whole-directory replace could silently delete such an append.)
@@ -818,46 +784,24 @@ object IngestJob {
       targetFileBytes: Long = 128L << 20, segments: Option[Seq[Long]] = None): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
     val plan = for {
-      (partDir, seg) <- segmentDirs(conf, pointsPath(cfg))
+      (partDir, seg) <- Fs.partitions(conf, pointsPath(cfg), "segment_start")
+        .map { case (p, v) => p -> v.toLong }
       if segments.forall(_.contains(seg))
-      fs = partDir.getFileSystem(conf)
-      files = fs.listStatus(partDir).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
+      files = Fs.dataFileStatuses(conf, partDir.toString)
       target = math.max(1L, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toLong).toInt
       if files.length > target
     } yield (seg, target, files.map(_.getPath))
     if (plan.isEmpty) return Nil
     val targets = spark.createDataFrame(plan.map { case (s, n, _) => (s, n) })
       .toDF("segment_start", "__nf")
-    val tmp = s"${cfg.lakeDir}/.compact_points_tmp"
-    spark.read.option("basePath", pointsPath(cfg))
-      .parquet(plan.flatMap(_._3).map(_.toString): _*) // exactly the planned files
-      .join(broadcast(targets), Seq("segment_start"))
-      .withColumn("__salt", pmod(hash(col("series_id")), col("__nf")))
-      .repartition(col("segment_start"), col("__salt"))
-      .drop("__nf", "__salt")
-      .write.mode("overwrite").partitionBy("segment_start").parquet(tmp)
-    val sorted = plan.sortBy(_._1)
-    try sorted.foreach { case (seg, _, planned) =>
-      graft.core.Fs.swapInFiles(conf, s"$tmp/segment_start=$seg",
-        s"${pointsPath(cfg)}/segment_start=$seg", planned)
-    } finally {
-      new Path(tmp).getFileSystem(conf).delete(new Path(tmp), true): Unit
+    Fs.rewritePlanned(spark, pointsPath(cfg), plan.flatMap(_._3)) { (planned, staging) =>
+      planned
+        .join(broadcast(targets), Seq("segment_start"))
+        .withColumn("__salt", pmod(hash(col("series_id")), col("__nf")))
+        .repartition(col("segment_start"), col("__salt"))
+        .drop("__nf", "__salt")
+        .write.mode("overwrite").partitionBy("segment_start").parquet(staging)
     }
-    sorted.map(_._1)
+    plan.map(_._1).sorted
   }
-
-  private def hadoopConf(): Configuration = graft.core.Fs.hadoopConf()
-
-  /** (partition dir, segment_start) pairs under a segment-partitioned root. */
-  private def segmentDirs(conf: Configuration, dir: String): Seq[(Path, Long)] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("segment_start="))
-      .map(s => s.getPath -> s.getPath.getName.stripPrefix("segment_start=").toLong)
-  }
-
 }

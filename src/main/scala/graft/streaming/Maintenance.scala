@@ -14,24 +14,24 @@ import org.apache.spark.sql.{Column, SparkSession}
  *  1. retention purge of expired segment partitions — file-level drop,
  *     no rewrite — plus re-flush of any rung window straddling the
  *     cutoff from the surviving segments ([[IngestJob.purgeAndRepair]]);
- *  2. series/latest log maintenance — idle-series removal when a
- *     cutoff is given ([[IngestJob.purgeIdleSeries]], which also
- *     snapshots the logs), else a plain one-row-per-series compaction
- *     ([[IngestJob.compact]]);
+ *  2. series/latest log compaction to one row per series, removing idle
+ *     series when a cutoff is given ([[IngestJob.compact]]);
  *  3. points-file consolidation of surviving oversized segments
  *     ([[IngestJob.compactPoints]]);
  *  4. maintained-sketch folds — the count-min cell store and every
- *     configured DDSketch grain ([[StoreCompaction]]), with optional
- *     per-store retention applied DURING the fold (`sketchRetain`,
- *     e.g. a day-keyed cutoff predicate for a daily grain — the key
- *     encoding is the caller's contract, so the predicate is too).
+ *     configured DDSketch grain ([[StoreCompaction.foldSketches]]),
+ *     with optional per-store retention applied DURING the fold
+ *     (`sketchRetain`, e.g. a day-keyed cutoff predicate for a daily
+ *     grain — the key encoding is the caller's contract, so the
+ *     predicate is too).
  *
  * Every sub-pass is independently race-safe against a live ingest (the
  * planned-files swap discipline — see each primitive's scaladoc), so
- * the composition is as well; the one global caveat is StoreCompaction's
- * documented reader window (a reader overlapping a fold's swap can see
- * a folded batch twice), which is why deployments run this pass where
- * their readers tolerate it or between query windows.
+ * the composition is as well. A reader overlapping a sketch fold's swap
+ * still reads exact counts ([[StoreCompaction.read]] excludes the
+ * folded sources); the one remaining exposure is filesystem-level: a
+ * reader that listed a file the instant before a swap deleted it fails
+ * its scan, a retryable read error, never a wrong answer.
  */
 object Maintenance {
 
@@ -49,24 +49,8 @@ object Maintenance {
       targetFileBytes: Long = 128L << 20,
       sketchRetain: Map[String, Column] = Map.empty): Report = {
     val purged = retentionCutoffSec.map(IngestJob.purgeAndRepair(spark, cfg, _)).getOrElse(Nil)
-    idleCutoffSec match {
-      case Some(cut) => IngestJob.purgeIdleSeries(spark, cfg, cut)
-      case None => IngestJob.compact(spark, cfg)
-    }
+    IngestJob.compact(spark, cfg, idleCutoffSec)
     val compacted = IngestJob.compactPoints(spark, cfg, targetFileBytes)
-    def foldStore(name: String, dir: String,
-        merge: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Option[String] = {
-      val folded = sketchRetain.get(name) match {
-        case Some(retain) => StoreCompaction.compactRetained(spark, dir, retain, merge)
-        case None => StoreCompaction.compactBatchStore(spark, dir, merge)
-      }
-      if (folded) Some(name) else None
-    }
-    val folds =
-      cfg.cms.toSeq.flatMap(_ => foldStore("cms", IngestJob.cmsPath(cfg),
-        graft.operators.CountMin.merge)) ++
-      cfg.dds.flatMap(c => foldStore(c.name, IngestJob.ddsPath(cfg, c.name),
-        graft.operators.QuantileSketch.merge))
-    Report(purged, compacted, folds)
+    Report(purged, compacted, StoreCompaction.foldSketches(spark, cfg, sketchRetain))
   }
 }

@@ -76,7 +76,8 @@ object StoreCompaction {
       fold: DataFrame => DataFrame, minFolded: Int = 2): Boolean = {
     val conf = spark.sessionState.newHadoopConf()
     recover(conf, dir) // heal any swap a crash interrupted (see scaladoc)
-    val parts = batchDirs(conf, dir)
+    val parts = graft.core.Fs.partitions(conf, dir, "batch_id")
+      .map { case (p, id) => p -> id.toLong }
     if (parts.isEmpty) return false
     val maxId = parts.map(_._2).max
     val folded = parts.filter(_._2 != maxId)
@@ -241,7 +242,7 @@ object StoreCompaction {
       val df =
         if (dead.isEmpty) spark.read.parquet(dir)
         else {
-          val live = batchDirs(conf, dir)
+          val live = graft.core.Fs.partitions(conf, dir, "batch_id")
             .flatMap(p => graft.core.Fs.dataFiles(conf, p._1.toString))
             .map(f => fs.makeQualified(f).toString)
             .filterNot(dead.contains)
@@ -271,19 +272,25 @@ object StoreCompaction {
       fold: DataFrame => DataFrame): Boolean =
     compactBatchStore(spark, dir, df => fold(df.filter(retain)), minFolded = 1)
 
-  /** Compact every maintained sketch store of an ingest lake: the
-   *  count-min cell grid and each configured DDSketch bucket store.
-   *  Merged reads ([[IngestJob.cmsCells]]/[[IngestJob.ddsBuckets]]) are
-   *  bit-identical before and after — the fold IS the read-side merge,
-   *  applied once and stored. */
-  def compactSketches(spark: SparkSession, cfg: IngestJob.Config): Unit = {
-    cfg.cms.foreach { _ =>
-      compactBatchStore(spark, IngestJob.cmsPath(cfg),
-        graft.operators.CountMin.merge): Unit
-    }
-    cfg.dds.foreach { c =>
-      compactBatchStore(spark, IngestJob.ddsPath(cfg, c.name),
-        graft.operators.QuantileSketch.merge): Unit
+  /** Fold every maintained sketch store of an ingest lake: the
+   *  count-min cell grid ("cms") and each configured DDSketch bucket
+   *  store (its [[IngestJob.DdsConfig]] name). A store named in `retain`
+   *  drops the rows failing its predicate during the fold
+   *  ([[compactRetained]]). Without retention, merged reads
+   *  ([[IngestJob.cmsCells]]/[[IngestJob.ddsBuckets]]) are bit-identical
+   *  before and after — the fold IS the read-side merge, applied once and
+   *  stored. Returns the names of the stores folded. */
+  def foldSketches(spark: SparkSession, cfg: IngestJob.Config,
+      retain: Map[String, org.apache.spark.sql.Column] = Map.empty): Seq[String] = {
+    val stores: Seq[(String, String, DataFrame => DataFrame)] =
+      cfg.cms.toSeq.map(_ => ("cms", IngestJob.cmsPath(cfg), graft.operators.CountMin.merge _)) ++
+        cfg.dds.map(c => (c.name, IngestJob.ddsPath(cfg, c.name), graft.operators.QuantileSketch.merge _))
+    stores.flatMap { case (name, dir, merge) =>
+      val folded = retain.get(name) match {
+        case Some(r) => compactRetained(spark, dir, r, merge)
+        case None => compactBatchStore(spark, dir, merge)
+      }
+      if (folded) Some(name) else None
     }
   }
 
@@ -294,15 +301,5 @@ object StoreCompaction {
     import org.apache.spark.sql.functions._
     compactBatchStore(spark, dir,
       _.groupBy(keyCols.map(col): _*).agg(sum(col("__c")).as("__c")))
-  }
-
-  /** (partition dir, batch_id) pairs under a batch-partitioned root. */
-  private def batchDirs(conf: Configuration, dir: String): Seq[(Path, Long)] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(s => s.getPath -> s.getPath.getName.stripPrefix("batch_id=").toLong)
   }
 }

@@ -112,7 +112,7 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("ingest maintenance no-ops are safe: empty rollup flush, missing lake compaction") {
     val base = java.nio.file.Files.createTempDirectory("graft_edge_ing").toString
     val cfg = graft.streaming.IngestJob.Config(s"$base/lake", s"$base/ckpt")
-    graft.streaming.IngestJob.flushRollup(spark, cfg, "1h", Seq.empty) // no segments: no-op
+    graft.streaming.IngestJob.flushRung(spark, cfg, "1h", Seq.empty) // no segments: no-op
     assert(graft.streaming.IngestJob.compactPoints(spark, cfg) === Seq.empty) // no lake yet
     assert(graft.streaming.IngestJob.purge(cfg, Long.MaxValue) === Seq.empty)
   }

@@ -1,11 +1,19 @@
 package graft.core
 
+import graft.{Fixtures, TestSpark}
+import graft.events.EventsStore
+import graft.streaming.IngestJob
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Race-safety contract of the maintenance-path file swap: a file
- *  appended to the live dir after the rewrite was planned must survive
- *  the swap (the whole-dir replace it replaced would delete it). */
+/** Race-safety contract of the maintenance-path rewrite: a file appended
+ *  to the live dir after the rewrite was planned must survive the swap
+ *  (the whole-dir replace it replaced would delete it), both at the file
+ *  level ([[Fs.swapInFiles]]) and end to end over real stores
+ *  ([[Fs.rewritePlanned]]). */
 class FsSpec extends AnyFunSuite {
 
   private def touch(dir: java.nio.file.Path, name: String): java.nio.file.Path =
@@ -37,5 +45,102 @@ class FsSpec extends AnyFunSuite {
     Fs.swapInFiles(conf, staging.toString, live.toString, ghost)
     val names = new java.io.File(live.toString).listFiles().map(_.getName).toSet
     assert(names === Set("part-x"))
+  }
+
+  private val t0 = 1704067200L
+
+  /** An ingest lake (points, series and latest logs) built by two
+   *  batches that each span two segments, so every store has several
+   *  files per partition. */
+  private def ingestLake(): IngestJob.Config = {
+    val base = java.nio.file.Files.createTempDirectory("graft_fs_rewrite").toString
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4)
+    IngestJob.processBatch(batch("m.a", 0), cfg)
+    IngestJob.processBatch(batch("m.b", 100), cfg)
+    cfg
+  }
+
+  /** Six points of `metric`, one per host, 30 min apart (two segments). */
+  private def batch(metric: String, seq0: Long): DataFrame =
+    Fixtures.points((0 until 6).map(i =>
+      (metric, Map("host" -> s"h$i"), t0 + i * 1800L, i.toDouble, seq0 + i)): _*)
+
+  private def docs(ids: Range): DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    ids.map(i => (i.toLong, 1L, s"doc $i", s"2024-01-0${1 + i % 2}")).toDF("doc_id", "version", "title", "day")
+  }
+
+  private def rowCounts(df: DataFrame): Map[Row, Int] =
+    df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+
+  private def pointFiles(conf: Configuration, cfg: IngestJob.Config): Seq[Path] =
+    Fs.partitions(conf, IngestJob.pointsPath(cfg), "segment_start")
+      .flatMap(p => Fs.dataFiles(conf, p._1.toString))
+
+  test("rewritePlanned keeps a batch appended between plan and swap exactly once (points, series log, events log)") {
+    val spark = TestSpark.spark
+    val conf = spark.sessionState.newHadoopConf()
+    val cfg = ingestLake()
+    val eventsDir = java.nio.file.Files.createTempDirectory("graft_fs_events").toString
+    EventsStore.append(docs(0 until 4), eventsDir)
+    EventsStore.append(docs(4 until 8), eventsDir)
+    val eventsLog = s"$eventsDir/events_log"
+    val eventFiles = Fs.partitions(conf, eventsLog, "day").flatMap(p => Fs.dataFiles(conf, p._1.toString))
+
+    /** Rewrite `planned` with a `write` that first appends a real batch to
+     *  the live store, then writes the planned rows unchanged into one file
+     *  per partition. The appended rows (`isNew`) must appear exactly once
+     *  and `expectNew` of them; every other row exactly as before. */
+    def racing(root: String, planned: Seq[Path], read: () => DataFrame, append: () => Unit,
+        isNew: Column, expectNew: Int, partitionCol: Option[String]): Unit = {
+      assert(planned.size >= 2, s"$root: the rewrite should consolidate several files")
+      val before = rowCounts(read())
+      Fs.rewritePlanned(spark, root, planned) { (df, staging) =>
+        append()
+        val w = df.coalesce(1).write.mode("overwrite")
+        partitionCol.fold(w)(w.partitionBy(_)).parquet(staging)
+      }
+      val fs = new Path(root).getFileSystem(conf)
+      assert(planned.forall(f => !fs.exists(f)), s"$root: planned files must be gone")
+      val after = read()
+      val appended = rowCounts(after.filter(isNew))
+      assert(appended.values.forall(_ == 1), s"$root: appended rows must appear exactly once")
+      assert(appended.size === expectNew, s"$root: every appended row must survive")
+      assert(rowCounts(after.filter(!isNew)) === before, s"$root: planned rows must be unchanged")
+      assert(!fs.exists(new Path(new Path(root).getParent, s".${new Path(root).getName}_compact_tmp")))
+    }
+
+    racing(IngestJob.pointsPath(cfg), pointFiles(conf, cfg), () => IngestJob.points(spark, cfg),
+      () => IngestJob.processBatch(batch("m.c", 200), cfg): Unit,
+      col("metric") === "m.c", expectNew = 6, Some("segment_start"))
+    racing(IngestJob.seriesLogPath(cfg), Fs.dataFiles(conf, IngestJob.seriesLogPath(cfg)),
+      () => spark.read.parquet(IngestJob.seriesLogPath(cfg)),
+      () => IngestJob.processBatch(batch("m.d", 300), cfg): Unit,
+      col("metric") === "m.d", expectNew = 6, None)
+    racing(eventsLog, eventFiles, () => EventsStore.log(spark, eventsDir),
+      () => EventsStore.append(docs(8 until 12), eventsDir),
+      col("doc_id") >= 8, expectNew = 4, Some("day"))
+  }
+
+  test("rewritePlanned whose write fails removes the staging dir and leaves the store as it was") {
+    val spark = TestSpark.spark
+    val conf = spark.sessionState.newHadoopConf()
+    val cfg = ingestLake()
+    val root = IngestJob.pointsPath(cfg)
+    val planned = pointFiles(conf, cfg)
+    val rowsBefore = rowCounts(IngestJob.points(spark, cfg))
+    val err = intercept[IllegalStateException] {
+      Fs.rewritePlanned(spark, root, planned) { (df, staging) =>
+        df.write.mode("overwrite").partitionBy("segment_start").parquet(staging)
+        throw new IllegalStateException("write failed after staging")
+      }
+    }
+    assert(err.getMessage === "write failed after staging")
+    val fs = new Path(root).getFileSystem(conf)
+    assert(!fs.exists(new Path(cfg.lakeDir, ".points_compact_tmp")))
+    assert(pointFiles(conf, cfg).map(_.toString).toSet === planned.map(_.toString).toSet)
+    assert(rowCounts(IngestJob.points(spark, cfg)) === rowsBefore)
   }
 }

@@ -515,7 +515,7 @@ class IngestJobSpec extends AnyFunSuite {
     // user 0 (event_id 150) goes idle at t0; user 1 (event_id 151) stays active
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (150L, t0, "cpu", 1.0), (151L, t0 + seg, "cpu", 2.0))), cfg)
-    IngestJob.purgeIdleSeries(spark, cfg, cutoffSec = t0 + 1)
+    IngestJob.compact(spark, cfg, idleCutoffSec = Some(t0 + 1))
     def users() = IngestJob.seriesDim(spark, cfg)
       .select(col("tags")("user")).collect().map(_.getString(0)).toSet
     assert(users() === Set("1"))
@@ -624,6 +624,21 @@ class IngestJobSpec extends AnyFunSuite {
       cfg.copy(dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig("metric")))))
     assertThrows[IllegalArgumentException](IngestJob.processBatch(b1,
       cfg.copy(dds = Seq(IngestJob.DdsConfig("metric", name = "cms")))))
+  }
+
+  test("building a Config refuses duplicate or reserved DdsConfig names") {
+    val cfg = freshCfg()
+    assertThrows[IllegalArgumentException](
+      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig("metric"))))
+    assertThrows[IllegalArgumentException](
+      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric", name = "cms"))))
+    // a ladder rung's store is reserved too: a 1d rung writes rollup_1d
+    assertThrows[IllegalArgumentException](cfg.copy(rollupInterval = Some("1h"),
+      rollupLadder = Seq("1d"), dds = Seq(IngestJob.DdsConfig("metric", name = "rollup_1d"))))
+    // distinct, unreserved names still build
+    val ok = cfg.copy(rollupInterval = Some("1h"), rollupLadder = Seq("1d"),
+      dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig("metric", name = "dds_daily")))
+    assert(ok.dds.map(_.name) === Seq("dds", "dds_daily"))
   }
 
   test("data-gen source streams synthetic points through the same pipeline (S1 DATA_GEN)") {
