@@ -32,12 +32,27 @@ object TextAnalysis {
   def bpeCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit(BpeRegex), lit(0)))
 
-  /** One row per (doc, token) — the shared relational token table every
-   *  token-level statistic aggregates over. explode of a codegen'd
-   *  split() stays in whole-stage codegen; per-doc higher-order
-   *  filter/aggregate lambdas would run interpreted. */
+  /** One row per (doc, token): the relational token table behind the
+   *  corpus-level statistics (vocabularies, language markers, tf-idf).
+   *  explode of a codegen'd split() stays in whole-stage codegen.
+   *  Per-document statistics do not go through it: [[textStats]]
+   *  computes them inside the row, with no shuffle. */
   def tokenTable(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
+
+  /** Per-document token statistics of `text` as one struct of exact
+   *  long counts — `n_tok`, `tok_chars`, `n_types`, `n_stop`,
+   *  `n_stop_distinct`, `top_bigram_cover`, `dup5_chars`, `max_run` —
+   *  from the native [[graft.functions.TextStats]] expression
+   *  (registered by GraftExtensions) over [[tokens]]. One codegen call
+   *  per row; a higher-order lambda over the token array would drop the
+   *  projection to interpreted eval. Null for a null text. */
+  def textStats(text: Column): Column = call_function("text_stats", tokens(text))
+
+  /** `docs` with its [[textStats]] struct as `__ts`. A null text has no
+   *  token stream, so its row drops. */
+  private def withTextStats(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull).withColumn("__ts", textStats(col("text")))
 
   /** Array of consecutive word n-grams of the text, each as a struct
    *  with fields `w0 … w(n-1)`, built from `n` aligned slices of the
@@ -59,53 +74,48 @@ object TextAnalysis {
     arrays_zip((0 until n).map(i => slice(t, lit(i + 1), len).as(s"w$i")): _*)
   }
 
-  /** Token-level aggregates per document (single hash aggregate). */
-  private def tokenAggs(docs: DataFrame): DataFrame =
-    tokenTable(docs)
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("__n_tok"),
-        countDistinct(col("tk")).as("__n_typ"),
-        sum(length(col("tk"))).as("__tok_chars"),
-        sum(when(col("tk").isin(Stopwords: _*), 1L).otherwise(0L)).as("__n_stop"))
-
   /** Per-document statistics. Ratios are exact-integer divisions, hence
-   *  bit-identical across engines with no rounding needed. */
+   *  bit-identical across engines with no rounding needed; the
+   *  character ratios of an empty text are null. */
   def stats(docs: DataFrame): DataFrame = {
     val len = length(col("text")).cast("double")
-    val charSide = docs.select(
+    val ts = col("__ts")
+    withTextStats(docs).select(
       col("doc_id"),
+      ts("n_tok").cast("int").as("n_tokens"),
+      ts("n_types").cast("int").as("n_types"),
       bpeCount(col("text")).as("n_bpe_tokens"),
       length(col("text")).as("n_chars"),
-      (length(regexp_replace(lower(col("text")), "[^a-z]", "")).cast("double") / len)
+      try_divide(length(regexp_replace(lower(col("text")), "[^a-z]", "")).cast("double"), len)
         .as("alpha_ratio"),
-      (length(regexp_replace(col("text"), "[^0-9]", "")).cast("double") / len)
-        .as("digit_ratio"))
-    charSide.join(tokenAggs(docs), Seq("doc_id"))
-      .select(
-        col("doc_id"),
-        col("__n_tok").cast("int").as("n_tokens"),
-        col("__n_typ").cast("int").as("n_types"),
-        col("n_bpe_tokens"), col("n_chars"), col("alpha_ratio"), col("digit_ratio"),
-        (col("__n_stop").cast("double") / col("__n_tok").cast("double")).as("stopword_ratio"),
-        (col("__n_typ").cast("double") / col("__n_tok").cast("double")).as("type_token_ratio"))
+      try_divide(length(regexp_replace(col("text"), "[^0-9]", "")).cast("double"), len)
+        .as("digit_ratio"),
+      stopRatio(ts).as("stopword_ratio"),
+      typeTokenRatio(ts).as("type_token_ratio"))
   }
 
   /** Quality score + keep flag: mean-token-length and stopword/type
    *  ratios combined; thresholds follow common heuristics (length
    *  bounds, lexical diversity, stopword presence). */
   def quality(docs: DataFrame): DataFrame = {
-    val nTok = col("__n_tok").cast("double")
-    val meanTokLen = col("__tok_chars").cast("double") / nTok
-    val stopRatio = col("__n_stop").cast("double") / nTok
-    val ttr = col("__n_typ").cast("double") / nTok
-    val score = meanTokLen / lit(10.0) + stopRatio + ttr
-    tokenAggs(docs).select(
+    val ts = col("__ts")
+    withTextStats(docs).select(
       col("doc_id"),
-      meanTokLen.as("mean_token_len"),
-      score.as("quality_score"),
-      (nTok >= 8 && nTok <= 100000 && stopRatio > 0.0 && ttr > 0.1).as("keep"))
+      meanTokenLen(ts).as("mean_token_len"),
+      (meanTokenLen(ts) / lit(10.0) + stopRatio(ts) + typeTokenRatio(ts)).as("quality_score"),
+      keep(ts).as("keep"))
   }
+
+  private def meanTokenLen(ts: Column): Column =
+    ts("tok_chars").cast("double") / ts("n_tok").cast("double")
+  private def stopRatio(ts: Column): Column =
+    ts("n_stop").cast("double") / ts("n_tok").cast("double")
+  private def typeTokenRatio(ts: Column): Column =
+    ts("n_types").cast("double") / ts("n_tok").cast("double")
+
+  /** [[quality]]'s keep gate over a [[textStats]] struct. */
+  private def keep(ts: Column): Column =
+    ts("n_tok") >= 8 && ts("n_tok") <= 100000 && stopRatio(ts) > 0.0 && typeTokenRatio(ts) > 0.1
 
   /** Fused language-ID + quality score: langid's per-language marker
    *  sums and quality's token statistics are independent aggregate
@@ -194,59 +204,30 @@ object TextAnalysis {
    *     5-grams occurring more than once;
    *   - `max_token_run`: longest run of consecutive identical tokens.
    *
-   *  One posexplode + ONE window pass (partitioned by doc, ordered by
-   *  position) supplies the lead/lag columns for all three branches.
-   *  Three aggregates consume the windowed table; persisting it was
-   *  measured SLOWER (2.36 s → 1.66 s without, sf0.1) — InMemoryRelation
-   *  encoding of the wide string table costs more than recomputing the
-   *  codegen'd window, the same trade [[Dedup.candidates]] documents.
-   *  Every ratio is an exact integer division — bit-identical across
-   *  engines, no rounding needed. At 100 TB the window partitions by
-   *  doc_id (no global sort) and each branch is a hash aggregate. */
+   *  One projection over the [[textStats]] struct: every n-gram count
+   *  belongs to one document, so nothing is exploded, sorted, shuffled
+   *  or joined back. Every ratio is an exact integer division —
+   *  bit-identical across engines, no rounding needed — and null for a
+   *  zero-length token stream (an empty or all-space text). */
   def repetition(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val base = docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))))
-      .select(col("doc_id"), col("pos"), col("col").as("tk"),
-        lead(col("col"), 1).over(w).as("__t1"),
-        lead(col("col"), 2).over(w).as("__t2"),
-        lead(col("col"), 3).over(w).as("__t3"),
-        lead(col("col"), 4).over(w).as("__t4"),
-        lag(col("col"), 1).over(w).as("__tp"))
-    val totals = base.groupBy(col("doc_id")).agg(
-      count(lit(1)).as("n_tokens"),
-      (sum(length(col("tk"))) + count(lit(1)) - 1).as("__total_chars"))
-    val bigram = base.filter(col("__t1").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("tk"), col("__t1")).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("c") * length(col("g"))).as("__cover"))
-    val five = base.filter(col("__t4").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("tk"), col("__t1"), col("__t2"), col("__t3"), col("__t4")).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .groupBy(col("doc_id")).agg(sum(col("c") * length(col("g"))).as("__dup5"))
-    val runs = base
-      .withColumn("__chg", when(col("__tp").isNull || col("__tp") =!= col("tk"), 1).otherwise(0))
-      .withColumn("__run", sum(col("__chg")).over(w))
-      .groupBy(col("doc_id"), col("__run")).agg(count(lit(1)).as("__rl"))
-      .groupBy(col("doc_id")).agg(max(col("__rl")).as("max_token_run"))
-    totals
-      .join(bigram, Seq("doc_id"), "left")
-      .join(five, Seq("doc_id"), "left")
-      .join(runs, Seq("doc_id"))
-      .select(
-        col("doc_id"), col("n_tokens"),
-        coalesce(col("__cover"), lit(0L)).as("top_bigram_cover"),
-        (coalesce(col("__cover"), lit(0L)).cast("double") / col("__total_chars").cast("double"))
-          .as("top_bigram_frac"),
-        coalesce(col("__dup5"), lit(0L)).as("dup_5gram_chars"),
-        (coalesce(col("__dup5"), lit(0L)).cast("double") / col("__total_chars").cast("double"))
-          .as("dup_5gram_frac"),
-        col("max_token_run"))
+    val ts = col("__ts")
+    withTextStats(docs).select(
+      col("doc_id"),
+      ts("n_tok").as("n_tokens"),
+      ts("top_bigram_cover").as("top_bigram_cover"),
+      streamFrac(ts, "top_bigram_cover").as("top_bigram_frac"),
+      ts("dup5_chars").as("dup_5gram_chars"),
+      streamFrac(ts, "dup5_chars").as("dup_5gram_frac"),
+      ts("max_run").as("max_token_run"))
   }
+
+  /** Length of the `" "`-joined token stream of a [[textStats]] struct. */
+  private def streamChars(ts: Column): Column = ts("tok_chars") + ts("n_tok") - 1
+
+  /** A struct field's share of [[streamChars]]; null on a zero-length
+   *  stream. */
+  private def streamFrac(ts: Column, field: String): Column =
+    try_divide(ts(field).cast("double"), streamChars(ts).cast("double"))
 
   /** Corpus-unigram language-model scoring (the CCNet-style "how typical
    *  of the corpus is this document" quality signal) plus doc-local token
@@ -792,20 +773,11 @@ object TextAnalysis {
         Ipv4Re, "<IP>"),
       DigitRunRe, "<NUM>")
 
-  /** [[quality]]'s keep gate as a PER-ROW Column over higher-order array
-   *  functions — bit-identical booleans to the relational batch path
-   *  (the ratios are the same exact-integer divisions), but STATELESS:
-   *  usable inside a streaming micro-batch where the batch path's
-   *  explode + hash aggregate would need an aggregation state. The
-   *  interpreted-HOF cost is paid per row only on the ingest stream,
-   *  not on the batch analytics path (spec pins the equivalence). */
-  def keepExpr(text: Column): Column = {
-    val t = tokens(text)
-    val n = size(t).cast("double")
-    val stop = size(filter(t, x => x.isin(Stopwords: _*))).cast("double")
-    val ttr = size(array_distinct(t)).cast("double") / n
-    size(t) >= 8 && size(t) <= 100000 && stop / n > 0.0 && ttr > 0.1
-  }
+  /** [[quality]]'s keep gate as a per-row Column over [[textStats]] —
+   *  the same booleans as the batch path (the ratios are the same
+   *  exact-integer divisions) and stateless, so a streaming micro-batch
+   *  can filter on it without aggregation state. */
+  def keepExpr(text: Column): Column = keep(textStats(text))
 
   /** PII redaction: emails → `<EMAIL>`, then IPv4s → `<IP>`, then
    *  standalone runs of ≥ 6 digits (account/phone-like ids) → `<NUM>`,
@@ -832,14 +804,6 @@ object TextAnalysis {
       md5(t3).as("redacted_hash"))
   }
 
-  /** Winnowing-style fingerprint: base-31 rolling hash over windows of
-   *  [[HashConstants.FpWindow]] token hashes; the document fingerprint is
-   *  the minimum window hash (plus the distinct-window count).
-   *  [[ngramStructs]] emits each FpWindow-gram shuffle-free; the hash of
-   *  every gram member is a codegen'd md5 on the exploded row (each token
-   *  is hashed up to FpWindow times — trading ≤ 5 cheap md5s for the
-   *  token-table exchange + sort the lead() window paid); docs with
-   *  fewer than FpWindow tokens produce no windows and drop out. */
   /** Gopher-style quality rule set (Rae et al. 2021 §A1.1, restated
    *  over this engine's token statistics): a document keeps iff
    *   - token count in [50, 100000],
@@ -853,44 +817,47 @@ object TextAnalysis {
    *  Every RULE compares integers cross-multiplied (e.g. mean token
    *  length ∈ [3,10] ⇔ `3·n ≤ chars ≤ 10·n`) — no FP anywhere in a
    *  keep decision, so the gate replays bit-identically on any engine;
-   *  the surfaced ratio columns are single divisions of exact ints.
+   *  the surfaced ratio columns are single divisions of exact ints
+   *  (null where the text or token stream has zero length).
    *
-   *  Plan: one fused token aggregate + one char-side projection + the
-   *  [[repetition]] aggregates, all joined by doc_id — every stage is
-   *  per-doc-bounded and linear in corpus size. */
+   *  Plan: one projection over the [[textStats]] struct and two
+   *  character counts of the text — no shuffle, no join. */
   def gopherRules(docs: DataFrame): DataFrame = {
-    val tokStats = tokenTable(docs).groupBy(col("doc_id")).agg(
-      count(lit(1)).as("__n_tok"),
-      sum(length(col("tk"))).as("__tok_chars"),
-      countDistinct(when(col("tk").isin(Stopwords: _*), col("tk"))).as("n_stop_distinct"))
-    val chars = docs.select(col("doc_id"),
-      length(col("text")).as("__n_chars"),
-      length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", "")).as("__sym_chars"))
-    val rep = repetition(docs).select(col("doc_id"),
-      col("top_bigram_cover"), col("dup_5gram_chars"),
-      col("top_bigram_frac"), col("dup_5gram_frac"))
-    val joined = tokStats.join(chars, "doc_id").join(rep, "doc_id")
-    val totalChars = col("__tok_chars") + col("__n_tok") - 1 // repetition's total_chars
-    val rCount = col("__n_tok") >= 50 && col("__n_tok") <= 100000
-    val rWordLen = col("__tok_chars") >= col("__n_tok") * 3 &&
-      col("__tok_chars") <= col("__n_tok") * 10
+    val ts = col("__ts")
+    val nTok = ts("n_tok")
+    val tokChars = ts("tok_chars")
+    val total = streamChars(ts)
+    val rCount = nTok >= 50 && nTok <= 100000
+    val rWordLen = tokChars >= nTok * 3 && tokChars <= nTok * 10
     val rSymbol = col("__sym_chars") * 10 <= col("__n_chars")
-    val rStop = col("n_stop_distinct") >= 2
-    val rRep = col("top_bigram_cover") * 5 <= totalChars &&
-      col("dup_5gram_chars") * 20 <= totalChars * 3
-    joined.select(
-      col("doc_id"),
-      col("__n_tok").as("n_tokens"),
-      round(col("__tok_chars").cast("double") / col("__n_tok"), 4).as("mean_token_len"),
-      round(col("__sym_chars").cast("double") / col("__n_chars"), 4).as("symbol_ratio"),
-      col("n_stop_distinct"),
-      round(col("top_bigram_frac"), 4).as("top_bigram_frac"),
-      round(col("dup_5gram_frac"), 4).as("dup_5gram_frac"),
-      rCount.as("r_count"), rWordLen.as("r_wordlen"), rSymbol.as("r_symbol"),
-      rStop.as("r_stop"), rRep.as("r_rep"),
-      (rCount && rWordLen && rSymbol && rStop && rRep).as("keep"))
+    val rStop = ts("n_stop_distinct") >= 2
+    val rRep = ts("top_bigram_cover") * 5 <= total && ts("dup5_chars") * 20 <= total * 3
+    withTextStats(docs)
+      .select(col("doc_id"), ts,
+        length(col("text")).as("__n_chars"),
+        length(regexp_replace(lower(col("text")), "[a-z0-9\\s]", "")).as("__sym_chars"))
+      .select(
+        col("doc_id"),
+        nTok.as("n_tokens"),
+        round(meanTokenLen(ts), 4).as("mean_token_len"),
+        round(try_divide(col("__sym_chars").cast("double"), col("__n_chars")), 4)
+          .as("symbol_ratio"),
+        ts("n_stop_distinct").as("n_stop_distinct"),
+        round(streamFrac(ts, "top_bigram_cover"), 4).as("top_bigram_frac"),
+        round(streamFrac(ts, "dup5_chars"), 4).as("dup_5gram_frac"),
+        rCount.as("r_count"), rWordLen.as("r_wordlen"), rSymbol.as("r_symbol"),
+        rStop.as("r_stop"), rRep.as("r_rep"),
+        (rCount && rWordLen && rSymbol && rStop && rRep).as("keep"))
   }
 
+  /** Winnowing-style fingerprint: base-31 rolling hash over windows of
+   *  [[HashConstants.FpWindow]] token hashes; the document fingerprint is
+   *  the minimum window hash (plus the distinct-window count).
+   *  [[ngramStructs]] emits each FpWindow-gram shuffle-free; the hash of
+   *  every gram member is a codegen'd md5 on the exploded row (each token
+   *  is hashed up to FpWindow times — trading ≤ 5 cheap md5s for the
+   *  token-table exchange + sort the lead() window paid); docs with
+   *  fewer than FpWindow tokens produce no windows and drop out. */
   def fingerprint(docs: DataFrame): DataFrame = {
     val wh = FpWeights.zipWithIndex.map { case (wt, j) =>
       baseHash(col(s"g.w$j")) * lit(wt)

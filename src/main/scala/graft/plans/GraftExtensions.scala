@@ -92,6 +92,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "dotp"),
       (children: Seq[Expression]) =>
         graft.functions.DotProduct(children(0), children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("text_stats"),
+      new ExpressionInfo(classOf[graft.functions.TextStats].getName, "text_stats"),
+      (children: Seq[Expression]) => graft.functions.TextStats(children.head)))
     // Spark's own bloom-filter pair (the machinery behind runtime join
     // filtering), surfaced as callable functions: graft_bloom_agg(longCol,
     // expectedItems) builds a serialized bloom; graft_might_contain(bloom,

@@ -526,8 +526,7 @@ object IngestJob {
     cfg.rollupRungs.flatMap { iv =>
       val rolled = segments(conf, rungPath(cfg, iv))
       if (rolled.isEmpty) None
-      else Some((rollupRung(spark, cfg, iv), iv,
-        unflushed(iv, lakeSegs, rolled).minOption.getOrElse(Long.MaxValue)))
+      else Some((rollupRung(spark, cfg, iv), iv, frontier(iv, lakeSegs, rolled)))
     }
   }
 
@@ -641,23 +640,26 @@ object IngestJob {
    *  never over-trusts any store. Only a config with NO maintained rung
    *  at all still refuses: there is no store for the frontier to
    *  describe. */
-  def rollupFrontier(spark: SparkSession, cfg: Config): Long =
-    cfg.rollupInterval match {
-      case Some(iv) => rungFrontier(spark, cfg, iv)
-      case None =>
-        if (cfg.rollupRungs.isEmpty) throw new IllegalArgumentException(
-          "no maintained rollup rung configured (rollupInterval and rollupLadder both empty)")
-        cfg.rollupRungs.map(rungFrontier(spark, cfg, _)).min
-    }
+  def rollupFrontier(spark: SparkSession, cfg: Config): Long = {
+    val rungs = cfg.rollupInterval.fold(cfg.rollupRungs)(Seq(_))
+    if (rungs.isEmpty) throw new IllegalArgumentException(
+      "no maintained rollup rung configured (rollupInterval and rollupLadder both empty)")
+    val conf = spark.sessionState.newHadoopConf()
+    val lakeSegs = segments(conf, pointsPath(cfg))
+    rungs.map(iv => frontier(iv, lakeSegs, segments(conf, rungPath(cfg, iv)))).min
+  }
 
   /** One rung's flush frontier: the earliest lake window the rung has
    *  not flushed (a coarser rung's frontier naturally lags the fine
    *  rung's — its windows close later). */
   def rungFrontier(spark: SparkSession, cfg: Config, interval: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    unflushed(interval, segments(conf, pointsPath(cfg)), segments(conf, rungPath(cfg, interval)))
-      .minOption.getOrElse(Long.MaxValue)
+    frontier(interval, segments(conf, pointsPath(cfg)), segments(conf, rungPath(cfg, interval)))
   }
+
+  /** The earliest [[unflushed]] window, Long.MaxValue when none is. */
+  private def frontier(interval: String, lakeSegs: Seq[Long], rolled: Seq[Long]): Long =
+    unflushed(interval, lakeSegs, rolled).minOption.getOrElse(Long.MaxValue)
 
   /** The rung ledger: the [[rungWindowSeconds]]-aligned windows of the
    *  lake segments `lakeSegs` that have no partition among `rolled` (the

@@ -88,15 +88,15 @@ object StoreCompaction {
     val planned = folded.flatMap(p => graft.core.Fs.dataFiles(conf, p._1.toString))
     if (planned.isEmpty) return false
     val tmp = s"$dir.compact_tmp"
-    // partition-dir reads don't carry batch_id (a partition column), so
-    // the folded frame has exactly the store's cell/count schema; ONE
-    // output file so the move-in below is a single atomic rename (the
-    // relation is summary-sized by construction)
-    fold(spark.read.parquet(planned.map(_.toString): _*))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
     val snapDir = new Path(s"$dir/batch_id=$SnapshotBatchId")
     val fs = snapDir.getFileSystem(conf)
     try {
+      // partition-dir reads don't carry batch_id (a partition column), so
+      // the folded frame has exactly the store's cell/count schema; ONE
+      // output file so the move-in below is a single atomic rename (the
+      // relation is summary-sized by construction)
+      fold(spark.read.parquet(planned.map(_.toString): _*))
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
       val staged = graft.core.Fs.dataFiles(conf, tmp) match {
         case Seq(one) => one
         case other => throw new java.io.IOException(

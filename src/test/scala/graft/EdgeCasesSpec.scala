@@ -229,6 +229,34 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(graft.operators.QuantileSketch.quantiles(b, Seq(0.5), 0.02).count() === 0)
   }
 
+  test("pipeline operators on empty and all-space documents: null fractions, no failure") {
+    import spark.implicits._
+    val blank = Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text")
+    import graft.pipeline._
+    // both texts are the one empty token: a zero-length token stream
+    val rep = TextAnalysis.repetition(blank).collect()
+    assert(rep.length === 2)
+    rep.foreach { r =>
+      assert(r.getAs[Long]("n_tokens") === 1L)
+      assert(r.getAs[Long]("top_bigram_cover") === 0L && r.getAs[Long]("max_token_run") === 1L)
+      assert(r.isNullAt(r.fieldIndex("top_bigram_frac")) && r.isNullAt(r.fieldIndex("dup_5gram_frac")))
+    }
+    val gopher = TextAnalysis.gopherRules(blank).collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(gopher.size === 2)
+    gopher.values.foreach { r =>
+      assert(r.isNullAt(r.fieldIndex("top_bigram_frac")) && r.isNullAt(r.fieldIndex("dup_5gram_frac")))
+      // the integer gates still decide: 0 ≤ 0 passes, a 1-token count fails
+      assert(r.getAs[Boolean]("r_rep") && !r.getAs[Boolean]("r_count") && !r.getAs[Boolean]("keep"))
+    }
+    assert(gopher(1L).isNullAt(gopher(1L).fieldIndex("symbol_ratio")))
+    assert(gopher(2L).getAs[Double]("symbol_ratio") === 0.0)
+    val st = TextAnalysis.stats(blank).collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(st(1L).isNullAt(st(1L).fieldIndex("alpha_ratio")) &&
+      st(1L).isNullAt(st(1L).fieldIndex("digit_ratio")))
+    assert(st(2L).getAs[Double]("alpha_ratio") === 0.0)
+    assert(TextAnalysis.quality(blank).filter(col("keep")).count() === 0)
+  }
+
   test("pipeline operators on a one-token document") {
     import spark.implicits._
     val one = Seq((7L, "word")).toDF("doc_id", "text")

@@ -79,7 +79,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(out(4L).getAs[String]("redacted_hash") === md5clean)
   }
 
-  test("keepExpr: per-row HOF gate is bit-identical to the batch quality gate") {
+  test("keepExpr: per-row gate is bit-identical to the batch quality gate") {
     val sf = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val batch = TextAnalysis.quality(sf).select(col("doc_id"), col("keep"))
     val perRow = sf.select(col("doc_id"), TextAnalysis.keepExpr(col("text")).as("keep"))

@@ -43,9 +43,28 @@ class PipelinePlanSpec extends AnyFunSuite {
     }
   }
 
-  test("repetition metrics stay window + hash aggregates: no sort aggregate") {
-    val p = plan(graft.pipeline.TextAnalysis.repetition(docs))
-    assert(!p.contains("SortAggregate"), s"SortAggregate crept in:\n$p")
+  test("text statistics are row-local: no exchange, window, aggregate or join") {
+    import graft.pipeline.TextAnalysis
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Seq[(String, DataFrame => DataFrame)](
+      "stats" -> TextAnalysis.stats, "quality" -> TextAnalysis.quality,
+      "repetition" -> TextAnalysis.repetition, "gopherRules" -> TextAnalysis.gopherRules)
+      .foreach { case (name, op) =>
+        val df = op(docs)
+        df.collect()
+        val nodes = Nodes.collect(df.queryExecution.executedPlan) { case n => n }
+        assert(nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]),
+          s"$name: the walk must reach the scan")
+        val bad = nodes.filter {
+          case _: Exchange | _: WindowExecBase | _: BaseAggregateExec | _: BaseJoinExec => true
+          case _ => false
+        }
+        assert(bad.isEmpty, s"$name is not row-local: ${bad.map(_.nodeName).mkString(", ")}")
+      }
   }
 
   test("embedding near-dup: per-(table, bucket) equi-join, scalar distinct, no cartesian") {

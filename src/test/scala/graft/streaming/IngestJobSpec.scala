@@ -375,6 +375,29 @@ class IngestJobSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](IngestJob.rollupFrontier(spark, bare))
   }
 
+  test("rollupFrontier is the minimum of the rung frontiers when one rung lags") {
+    val spark = TestSpark.spark
+    val base = java.nio.file.Files.createTempDirectory("graft_frontier_min").toString
+    val day = 86400L
+    val t0 = 50 * day
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+      rollupInterval = None, rollupLadder = Seq("1h", "1d"),
+      nowSec = Some(() => t0 + day + 3600))
+    IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg)
+    def perRungMin = cfg.rollupRungs.map(IngestJob.rungFrontier(spark, cfg, _)).min
+    assert(IngestJob.rollupFrontier(spark, cfg) === perRungMin)
+    // a crash lost the fine rung's first window: it now lags the 1d rung
+    val lost = new java.io.File(IngestJob.rungPath(cfg, "1h"), s"segment_start=$t0")
+    assert(lost.isDirectory)
+    org.apache.commons.io.FileUtils.deleteDirectory(lost)
+    assert(IngestJob.rungFrontier(spark, cfg, "1h") === t0)
+    assert(IngestJob.rungFrontier(spark, cfg, "1d") === t0 + day)
+    assert(IngestJob.rollupFrontier(spark, cfg) === perRungMin)
+    assert(IngestJob.rollupFrontier(spark, cfg) === t0)
+  }
+
   test("mid-window purge re-flushes the straddling rung window from survivors (round 15)") {
     val spark = TestSpark.spark
     val base = java.nio.file.Files.createTempDirectory("graft_purge_repair").toString

@@ -301,6 +301,21 @@ class StoreCompactionSpec extends AnyFunSuite {
     assert(merged(dir) === after)
   }
 
+  test("a fold that fails mid-write leaves no compact_tmp and the store as it was") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sc_fail").toString + "/store"
+    writeBatch(dir, 0, Seq(("a", 2L)))
+    writeBatch(dir, 1, Seq(("a", 3L), ("b", 1L)))
+    writeBatch(dir, 2, Seq(("b", 7L)))
+    val before = merged(dir)
+    val failing: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.withColumn("__c", when(col("__c") > 0, raise_error(lit("fold failed")))
+        .otherwise(col("__c")).cast("long"))
+    intercept[Exception](StoreCompaction.compactBatchStore(spark, dir, failing))
+    assert(!new java.io.File(s"$dir.compact_tmp").exists)
+    assert(batchIds(dir) === Set(0L, 1L, 2L))
+    assert(merged(dir) === before)
+  }
+
   test("a store with nothing safely foldable is left untouched") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sc3").toString + "/store"
     writeBatch(dir, 0, Seq(("a", 1L)))
