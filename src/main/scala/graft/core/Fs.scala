@@ -2,12 +2,21 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Filesystem ops for the maintenance paths. `Fs` owns the on-disk store
  *  protocol every writer shares: how a store's `key=value` partitions are
  *  listed ([[partitions]]), how expired ones are dropped
- *  ([[dropPartitions]]), and how a rewrite is staged, swapped in and
+ *  ([[dropPartitions]]), how the files a rewrite planned are read
+ *  ([[readPlanned]]), and how a rewrite is staged, swapped in and
  *  cleaned up ([[rewritePlanned]]). Everything goes through the Hadoop
  *  FileSystem API so purge and compaction work on HDFS/S3-style stores,
  *  not just local disk. */
@@ -93,10 +102,58 @@ object Fs {
     }
   }
 
+  /** A frame over exactly the `planned` data files, served from the
+   *  statuses the caller listed at plan time: the file index is an
+   *  `InMemoryFileIndex` over a cache pre-filled with those statuses, so
+   *  no listing job starts, however many files there are (a
+   *  `spark.read.parquet` of more than 32 paths re-lists them in a
+   *  parallel job). With `basePath`, the `key=value` partition columns
+   *  under it come back; without, only the files' data columns. A
+   *  declared `schema` types the columns (partition columns included)
+   *  and starts no inference job; otherwise the data schema is read from
+   *  the first planned file's footer on the driver. Files a concurrent
+   *  writer adds after planning are never read. */
+  def readPlanned(spark: SparkSession, planned: Seq[FileStatus],
+      basePath: Option[String] = None, schema: Option[StructType] = None): DataFrame = {
+    require(planned.nonEmpty, "readPlanned needs at least one planned file")
+    val byDir = planned.groupBy(_.getPath.getParent).view.mapValues(_.toArray).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byDir.get(path)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val options = basePath.map("basePath" -> _).toMap
+    val index = new InMemoryFileIndex(spark, byDir.keys.toSeq, options, schema, listed,
+      if (basePath.isEmpty) Some(PartitionSpec(new StructType(), Nil)) else None)
+    val partitionSchema = StructType(index.partitionSchema.map(p =>
+      schema.flatMap(_.find(_.name == p.name)).getOrElse(p)))
+    val dataSchema = schema.getOrElse {
+      val conf = spark.sessionState.newHadoopConf()
+      val head = planned.head
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(head, conf), ParquetMetadataConverter.NO_FILTER)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(head.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+    // every data column reads as nullable, as in a `spark.read` relation
+    val dataOnly = nullable(StructType(
+      dataSchema.filterNot(f => partitionSchema.fieldNames.contains(f.name))))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      dataOnly.asInstanceOf[StructType], None, new ParquetFileFormat, options)(spark))
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
   /** Rewrite exactly the `planned` data files of the store at `root`,
    *  race-safe against concurrent appends:
-   *   1. read the planned files (`basePath = root`, so partition columns
-   *      come back);
+   *   1. read the planned files through [[readPlanned]] (`basePath =
+   *      root`, so partition columns come back; `schema` as there);
    *   2. `write(frame, staging)` writes the replacement — same layout as
    *      `root` — into the hidden staging dir `<parent>/.<name>_compact_tmp`;
    *   3. each planned partition's staged files are swapped in with
@@ -106,8 +163,8 @@ object Fs {
    *   4. the staging dir is deleted, whether or not 2–3 succeeded.
    *  A planned file sits directly under `root` (an unpartitioned store)
    *  or under one of its partition dirs. No-op when nothing is planned. */
-  def rewritePlanned(spark: SparkSession, root: String, planned: Seq[Path])(
-      write: (DataFrame, String) => Unit): Unit = {
+  def rewritePlanned(spark: SparkSession, root: String, planned: Seq[FileStatus],
+      schema: Option[StructType])(write: (DataFrame, String) => Unit): Unit = {
     if (planned.isEmpty) return
     val conf = spark.sessionState.newHadoopConf()
     val rootPath = new Path(root)
@@ -115,12 +172,12 @@ object Fs {
     val qualifiedRoot = fs.makeQualified(rootPath).toString
     val staging = new Path(rootPath.getParent, s".${rootPath.getName}_compact_tmp")
     // partition dir relative to root ("" for root itself) → its planned files
-    val byPartition = planned.groupBy { f =>
+    val byPartition = planned.map(_.getPath).groupBy { f =>
       val dir = fs.makeQualified(f.getParent).toString
       require(dir.startsWith(qualifiedRoot), s"planned file $f is not under $root")
       dir.stripPrefix(qualifiedRoot)
     }.toSeq.sortBy(_._1)
-    val frame = spark.read.option("basePath", root).parquet(planned.map(_.toString): _*)
+    val frame = readPlanned(spark, planned, Some(root), schema)
     try {
       write(frame, staging.toString)
       byPartition.foreach { case (rel, files) =>
@@ -130,4 +187,13 @@ object Fs {
       fs.delete(staging, true): Unit
     }
   }
+
+  /** [[rewritePlanned]] for a caller holding planned paths rather than
+   *  listed statuses: each path is looked up once on the driver. */
+  def rewritePlanned(spark: SparkSession, root: String, planned: Seq[Path])(
+      write: (DataFrame, String) => Unit): Unit =
+    if (planned.nonEmpty) {
+      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      rewritePlanned(spark, root, planned.map(fs.getFileStatus), None)(write)
+    }
 }

@@ -86,9 +86,9 @@ object EventsStore {
     val logDir = s"$storeDir/events_log"
     val days = Fs.partitions(conf, logDir, "day")
     val planned =
-      if (days.nonEmpty) days.flatMap(d => Fs.dataFiles(conf, d._1.toString))
-      else Fs.dataFiles(conf, logDir)
-    Fs.rewritePlanned(spark, logDir, planned) { (snapshot, staging) =>
+      if (days.nonEmpty) days.flatMap(d => Fs.dataFileStatuses(conf, d._1.toString))
+      else Fs.dataFileStatuses(conf, logDir)
+    Fs.rewritePlanned(spark, logDir, planned, None) { (snapshot, staging) =>
       val resolved = current(snapshot)
       val w = resolved.write.mode("overwrite")
       (if (resolved.columns.contains("day")) w.partitionBy("day") else w).parquet(staging)

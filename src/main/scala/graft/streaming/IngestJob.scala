@@ -216,17 +216,24 @@ object IngestJob {
 
   /** Most flushes that run at once, JVM-wide. One batch submits up to
    *  3 + |dds| + |rungs| flushes (series log, latest log, CMS, each DDS,
-   *  each due rung: 6 for a 1h+1d ladder with one sketch of each kind);
-   *  flushes past the cap, from a wider config or from concurrent ingest
-   *  jobs, queue. */
+   *  each due rung: 6 for a 1h+1d ladder with one sketch of each kind),
+   *  and one [[Maintenance.run]] pass 3 + |dds| chains (points, both
+   *  logs, CMS, each DDS); work past the cap, from a wider config or
+   *  from concurrent callers, queues. */
   private[streaming] val FlushThreads = 8
 
-  /** Shared executor for the per-batch flushes: one JVM-wide lazy pool
-   *  of at most [[FlushThreads]] threads instead of a fresh pool per
-   *  micro-batch (thread churn every trigger at a production 1-min
-   *  cadence). Idle threads expire. A queued flush cannot deadlock:
-   *  flush bodies never submit to this pool. Daemon threads so an
-   *  exiting application never blocks on the pool. */
+  /** The threads of [[flushPool]], told apart so [[runFlushes]] can run
+   *  a nested barrier inline. */
+  private final class FlushThread(r: Runnable, name: String) extends Thread(r, name)
+
+  /** Shared executor for the per-batch flushes and the maintenance
+   *  chains: one JVM-wide lazy pool of at most [[FlushThreads]] threads
+   *  instead of a fresh pool per micro-batch (thread churn every trigger
+   *  at a production 1-min cadence). Idle threads expire. A queued body
+   *  cannot deadlock: a body that itself calls [[runFlushes]] runs those
+   *  flushes inline on its own thread, never queued behind itself.
+   *  Daemon threads so an exiting application never blocks on the
+   *  pool. */
   private lazy val flushPool: java.util.concurrent.ExecutorService = {
     val pool = new java.util.concurrent.ThreadPoolExecutor(FlushThreads, FlushThreads,
       60L, java.util.concurrent.TimeUnit.SECONDS,
@@ -234,7 +241,7 @@ object IngestJob {
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-ingest-flush-${n.getAndIncrement()}")
+          val t = new FlushThread(r, s"graft-ingest-flush-${n.getAndIncrement()}")
           t.setDaemon(true)
           t
         }
@@ -245,33 +252,43 @@ object IngestJob {
 
   /** Run independent flushes concurrently on [[flushPool]]; every
    *  submitted flush settles before the first failure rethrows (no
-   *  orphaned in-flight jobs), named for diagnosis. An interrupt of the
-   *  calling thread (`StreamingQuery.stop()` on the batch thread) also
-   *  waits for every submitted flush, then restores the interrupt flag
-   *  and rethrows: the batch is replayed later, and no flush of this
-   *  attempt may still be writing a store when it is. Exposed
-   *  package-side for the failure-path specs. */
-  private[streaming] def runFlushes(flushes: Seq[(String, () => Unit)]): Unit = {
+   *  orphaned in-flight jobs), named for diagnosis as `"$what '$name'
+   *  failed"`. An interrupt of the calling thread
+   *  (`StreamingQuery.stop()` on the batch thread) also waits for every
+   *  submitted flush, then restores the interrupt flag and rethrows: the
+   *  batch is replayed later, and no flush of this attempt may still be
+   *  writing a store when it is. Called from a pool thread (a flush body
+   *  or maintenance chain that nests a barrier), the flushes run inline,
+   *  one after another, with the same settle-then-rethrow contract.
+   *  Exposed package-side for the failure-path specs. */
+  private[streaming] def runFlushes(flushes: Seq[(String, () => Unit)],
+      what: String = "store flush"): Unit = {
     if (flushes.size == 1) flushes.head._2()
     else if (flushes.nonEmpty) {
-      val futs = flushes.map { case (name, run) =>
-        name -> flushPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = run()
-        })
-      }
       var interrupted: Option[InterruptedException] = None
-      def settle(f: java.util.concurrent.Future[Unit]): Option[Throwable] =
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-          case e: InterruptedException =>
-            interrupted = interrupted.orElse(Some(e)); settle(f)
+      val errs =
+        if (Thread.currentThread().isInstanceOf[FlushThread])
+          flushes.flatMap { case (name, run) =>
+            scala.util.Try(run()).failed.toOption.map(name -> _) }
+        else {
+          val futs = flushes.map { case (name, run) =>
+            name -> flushPool.submit(new java.util.concurrent.Callable[Unit] {
+              def call(): Unit = run()
+            })
+          }
+          def settle(f: java.util.concurrent.Future[Unit]): Option[Throwable] =
+            try { f.get(); None }
+            catch {
+              case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+              case e: InterruptedException =>
+                interrupted = interrupted.orElse(Some(e)); settle(f)
+            }
+          // settle ALL before rethrowing the interrupt or the first failure
+          futs.flatMap { case (name, f) => settle(f).map(name -> _) }
         }
-      // settle ALL before rethrowing the interrupt or the first failure
-      val errs = futs.flatMap { case (name, f) => settle(f).map(name -> _) }
       interrupted.foreach { e => Thread.currentThread().interrupt(); throw e }
       errs.headOption.foreach { case (name, e) =>
-        throw new RuntimeException(s"store flush '$name' failed", e) }
+        throw new RuntimeException(s"$what '$name' failed", e) }
     }
   }
 
@@ -753,17 +770,25 @@ object IngestJob {
    *  only those planned files are deleted — a batch appending between
    *  plan and swap keeps its rows, and the log FOLD (min/max / LWW over
    *  snapshot + newer rows) remains correct by construction. */
-  def compact(spark: SparkSession, cfg: Config, idleCutoffSec: Option[Long] = None): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    def rewrite(dir: String)(fold: DataFrame => DataFrame): Unit =
-      Fs.rewritePlanned(spark, dir, Fs.dataFiles(conf, dir))((log, staging) =>
-        fold(log).write.mode("overwrite").parquet(staging))
+  def compact(spark: SparkSession, cfg: Config, idleCutoffSec: Option[Long] = None): Unit =
+    logCompactions(spark, cfg, idleCutoffSec).foreach(_._2())
+
+  /** [[compact]] as its two independent rewrites, named by store
+   *  ("series_log", "latest_log"): they touch disjoint paths, so
+   *  [[Maintenance.run]] runs them side by side. Each plans its files
+   *  when it runs. */
+  private[streaming] def logCompactions(spark: SparkSession, cfg: Config,
+      idleCutoffSec: Option[Long]): Seq[(String, () => Unit)] = {
+    def rewrite(dir: String)(fold: DataFrame => DataFrame): () => Unit = () =>
+      Fs.rewritePlanned(spark, dir, Fs.dataFileStatuses(spark.sessionState.newHadoopConf(), dir),
+        None)((log, staging) => fold(log).write.mode("overwrite").parquet(staging))
     def active(lastCol: String)(folded: DataFrame): DataFrame =
       idleCutoffSec.fold(folded)(cut => folded.filter(col(lastCol) >= cut))
-    rewrite(seriesLogPath(cfg))(log => active("last_seen")(foldSeriesLog(log))
-      .select("series_id", "metric", "tags", "first_seen", "last_seen"))
-    rewrite(latestLogPath(cfg))(log => active("last_ts")(foldLatestLog(log))
-      .select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq"))
+    Seq(
+      "series_log" -> rewrite(seriesLogPath(cfg))(log => active("last_seen")(foldSeriesLog(log))
+        .select("series_id", "metric", "tags", "first_seen", "last_seen")),
+      "latest_log" -> rewrite(latestLogPath(cfg))(log => active("last_ts")(foldLatestLog(log))
+        .select("series_id", "metric", "tags", "last_ts", "last_value", "last_seq")))
   }
 
   /** R6: consolidate the lake's per-micro-batch small files — rewrite
@@ -773,7 +798,9 @@ object IngestJob {
    *  number of tasks), written to a staging root and swapped in per file.
    *
    *  Race-safe against a live ingest ([[graft.core.Fs.rewritePlanned]]):
-   *  the rewrite reads EXACTLY the data files listed at plan time, and the
+   *  the rewrite reads EXACTLY the data files listed at plan time — from
+   *  their listed statuses, with the declared [[TsdbSchema.points]], so
+   *  the read starts no listing or schema-inference job — and the
    *  swap moves the staged files in and deletes only those planned files
    *  — a micro-batch appending to the segment between plan and swap
    *  keeps its files and its rows appear exactly once. (The previous
@@ -792,11 +819,12 @@ object IngestJob {
       files = Fs.dataFileStatuses(conf, partDir.toString)
       target = math.max(1L, math.ceil(files.map(_.getLen).sum.toDouble / targetFileBytes).toLong).toInt
       if files.length > target
-    } yield (seg, target, files.map(_.getPath))
+    } yield (seg, target, files)
     if (plan.isEmpty) return Nil
     val targets = spark.createDataFrame(plan.map { case (s, n, _) => (s, n) })
       .toDF("segment_start", "__nf")
-    Fs.rewritePlanned(spark, pointsPath(cfg), plan.flatMap(_._3)) { (planned, staging) =>
+    Fs.rewritePlanned(spark, pointsPath(cfg), plan.flatMap(_._3),
+        Some(TsdbSchema.points)) { (planned, staging) =>
       planned
         .join(broadcast(targets), Seq("segment_start"))
         .withColumn("__salt", pmod(hash(col("series_id")), col("__nf")))

@@ -85,17 +85,19 @@ object StoreCompaction {
     // plan exactly the data files under the folded partitions: a new
     // batch partition appended between plan and swap is never read,
     // never deleted (the compactPoints discipline)
-    val planned = folded.flatMap(p => graft.core.Fs.dataFiles(conf, p._1.toString))
-    if (planned.isEmpty) return false
+    val listed = folded.flatMap(p => graft.core.Fs.dataFileStatuses(conf, p._1.toString))
+    if (listed.isEmpty) return false
+    val planned = listed.map(_.getPath)
     val tmp = s"$dir.compact_tmp"
     val snapDir = new Path(s"$dir/batch_id=$SnapshotBatchId")
     val fs = snapDir.getFileSystem(conf)
     try {
-      // partition-dir reads don't carry batch_id (a partition column), so
-      // the folded frame has exactly the store's cell/count schema; ONE
-      // output file so the move-in below is a single atomic rename (the
-      // relation is summary-sized by construction)
-      fold(spark.read.parquet(planned.map(_.toString): _*))
+      // the planned files read without a basePath don't carry batch_id (a
+      // partition column), so the folded frame has exactly the store's
+      // cell/count schema; ONE output file so the move-in below is a
+      // single atomic rename (the relation is summary-sized by
+      // construction)
+      fold(graft.core.Fs.readPlanned(spark, listed))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val staged = graft.core.Fs.dataFiles(conf, tmp) match {
         case Seq(one) => one
@@ -281,16 +283,22 @@ object StoreCompaction {
    *  before and after — the fold IS the read-side merge, applied once and
    *  stored. Returns the names of the stores folded. */
   def foldSketches(spark: SparkSession, cfg: IngestJob.Config,
-      retain: Map[String, org.apache.spark.sql.Column] = Map.empty): Seq[String] = {
+      retain: Map[String, org.apache.spark.sql.Column] = Map.empty): Seq[String] =
+    sketchFolds(spark, cfg, retain).filter(_._2()).map(_._1)
+
+  /** [[foldSketches]] as one fold per store, in config order (cms first,
+   *  then each DDS), each returning whether it folded. The stores are
+   *  disjoint dirs, so [[Maintenance.run]] runs the folds side by side. */
+  private[streaming] def sketchFolds(spark: SparkSession, cfg: IngestJob.Config,
+      retain: Map[String, org.apache.spark.sql.Column]): Seq[(String, () => Boolean)] = {
     val stores: Seq[(String, String, DataFrame => DataFrame)] =
       cfg.cms.toSeq.map(_ => ("cms", IngestJob.cmsPath(cfg), graft.operators.CountMin.merge _)) ++
         cfg.dds.map(c => (c.name, IngestJob.ddsPath(cfg, c.name), graft.operators.QuantileSketch.merge _))
-    stores.flatMap { case (name, dir, merge) =>
-      val folded = retain.get(name) match {
+    stores.map { case (name, dir, merge) =>
+      name -> (() => retain.get(name) match {
         case Some(r) => compactRetained(spark, dir, r, merge)
         case None => compactBatchStore(spark, dir, merge)
-      }
-      if (folded) Some(name) else None
+      })
     }
   }
 

@@ -143,4 +143,44 @@ class FsSpec extends AnyFunSuite {
     assert(pointFiles(conf, cfg).map(_.toString).toSet === planned.map(_.toString).toSet)
     assert(rowCounts(IngestJob.points(spark, cfg)) === rowsBefore)
   }
+
+  test("rewritePlanned over more than 32 listed files starts only the write's jobs; a file appended after planning is neither read nor deleted") {
+    val spark = TestSpark.spark
+    val conf = spark.sessionState.newHadoopConf()
+    val declared = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, p BIGINT")
+    Seq(None, Some(declared)).foreach { schema =>
+      val root = java.nio.file.Files.createTempDirectory("graft_fs_many").resolve("store").toString
+      // 20 tasks of two consecutive ids, one per partition value: 40 files
+      spark.range(0, 40, 1, 20).withColumn("p", col("id") % 2)
+        .write.partitionBy("p").parquet(root)
+      val listed = Fs.partitions(conf, root, "p").flatMap(d => Fs.dataFileStatuses(conf, d._1.toString))
+      assert(listed.size > 32, s"${listed.size} planned files")
+      val jobs = new graft.GroupJobs(spark.sparkContext)
+      var atReader, beforeWrite, afterWrite = -1
+      var readColumns = Seq.empty[String]
+      val total = jobs {
+        Fs.rewritePlanned(spark, root, listed, schema) { (df, staging) =>
+          atReader = jobs.started()
+          readColumns = df.columns.toSeq
+          // a concurrent append lands after planning, before the write
+          spark.range(100, 101).withColumn("p", lit(0L))
+            .write.mode("append").partitionBy("p").parquet(root)
+          beforeWrite = jobs.started()
+          df.coalesce(1).write.mode("overwrite").partitionBy("p").parquet(staging)
+          afterWrite = jobs.started()
+        }
+        jobs.started()
+      }
+      assert(atReader === 0, s"schema $schema: the reader started $atReader jobs")
+      assert(afterWrite > beforeWrite, "the write ran")
+      assert(total === afterWrite, "nothing but the write ran after the append")
+      assert(readColumns.toSet === Set("id", "p"))
+      val fs = new Path(root).getFileSystem(conf)
+      assert(listed.forall(f => !fs.exists(f.getPath)), "planned files must be gone")
+      val after = spark.read.parquet(root)
+      assert(rowCounts(after.select(col("id"), col("p").cast("long"))) ===
+        ((0L until 40L).map(i => Row(i, i % 2)) :+ Row(100L, 0L)).map(_ -> 1).toMap,
+        "every planned row once, the appended row once")
+    }
+  }
 }

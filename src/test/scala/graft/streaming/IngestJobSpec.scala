@@ -867,4 +867,52 @@ class IngestJobSpec extends AnyFunSuite {
       assert(got === exp, s"store #$i differs after the replay")
     }
   }
+
+  test("a flush body that calls runFlushes runs it inline: 8 + 1 concurrent callers all complete") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val callers = IngestJob.FlushThreads + 1
+    val innerDone = new AtomicInteger
+    // every pool thread holds an outer body before any body nests a
+    // barrier: queued nested flushes would wait behind outer bodies that
+    // wait on them
+    val poolFull = new CountDownLatch(IngestJob.FlushThreads)
+    def inner(): Unit = { Thread.sleep(10); innerDone.incrementAndGet(): Unit }
+    def outer(): Unit = {
+      poolFull.countDown()
+      poolFull.await(10, TimeUnit.SECONDS)
+      IngestJob.runFlushes(Seq("inner_a" -> (() => inner()), "inner_b" -> (() => inner())))
+    }
+    val start = new CountDownLatch(1)
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to callers).map { c =>
+      val t = new Thread(() =>
+        try { start.await(); IngestJob.runFlushes(Seq(s"o$c.a" -> (() => outer()), s"o$c.b" -> (() => outer()))) }
+        catch { case e: Throwable => errors.add(e): Unit })
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    threads.foreach(t => t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L)))
+    assert(threads.forall(!_.isAlive), "a nested barrier deadlocked the flush pool")
+    assert(errors.isEmpty, errors)
+    assert(innerDone.get === callers * 2 * 2)
+
+    // inline, a nested barrier keeps the settle-then-rethrow contract
+    val ran = new AtomicInteger
+    val boom = new IllegalStateException("nested failure")
+    @volatile var nested: Throwable = null
+    IngestJob.runFlushes(Seq(
+      "outer" -> (() =>
+        try IngestJob.runFlushes(Seq(
+          "bad" -> (() => throw boom),
+          "ok" -> (() => ran.incrementAndGet(): Unit)))
+        catch { case e: Throwable => nested = e }),
+      "sibling" -> (() => ())))
+    assert(nested.getMessage.contains("store flush 'bad' failed"), nested)
+    assert(nested.getCause eq boom)
+    assert(ran.get === 1, "the nested sibling settles before the rethrow")
+  }
 }

@@ -114,4 +114,76 @@ class MaintenanceSpec extends AnyFunSuite {
     // the series log is snapshotted to one row per series
     assert(IngestJob.seriesDim(spark, cfg).count() === 2)
   }
+
+  test("a failing chain settles its siblings; a rerun after removing the fault equals a clean pass") {
+    val seg = TsdbSchema.SegmentSeconds
+    val oldSeg = 10 * seg; val newSeg = 40 * seg
+    def lake(prefix: String): IngestJob.Config = {
+      val base = java.nio.file.Files.createTempDirectory(prefix).toString
+      val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+        retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+        cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 32)),
+        dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig(
+          "concat_ws('#', metric, cast(ts - ts % 86400 as string))", name = "dds_daily")))
+      Seq(Seq((1L, oldSeg + 5, 1.0), (2L, newSeg + 5, 2.0)),
+        Seq((2L, newSeg + 10, 3.0), (3L, newSeg + 20, 4.0)),
+        Seq((3L, newSeg + 30, 5.0))).zipWithIndex.foreach { case (rows, i) =>
+        IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(rows: _*)),
+          cfg, batchId = i.toLong)
+      }
+      cfg
+    }
+    def pass(cfg: IngestJob.Config): Maintenance.Report =
+      Maintenance.run(spark, cfg, retentionCutoffSec = Some(20 * seg), idleCutoffSec = Some(20 * seg))
+    val conf = spark.sessionState.newHadoopConf()
+    def exists(p: String): Boolean = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+    val cfg = lake("graft_mnt_fault")
+    val liveSeg = s"${IngestJob.pointsPath(cfg)}/segment_start=$newSeg"
+    assert(graft.core.Fs.dataFiles(conf, liveSeg).size > 1)
+    val seriesBefore = graft.core.Fs.dataFiles(conf, IngestJob.seriesLogPath(cfg)).toSet
+    val latestBefore = graft.core.Fs.dataFiles(conf, IngestJob.latestLogPath(cfg)).toSet
+    // the fault: a corrupt data file in the latest log fails that chain
+    val fault = java.nio.file.Paths.get(IngestJob.latestLogPath(cfg), "part-00000-corrupt.parquet")
+    java.nio.file.Files.write(fault, "not a parquet file".getBytes)
+    val e = intercept[RuntimeException](pass(cfg))
+    assert(e.getMessage === "maintenance chain 'latest_log' failed", e.getMessage)
+    // the sibling chains settled: points purged and consolidated, the
+    // series log rewritten, every sketch store folded
+    assert(graft.core.Fs.partitions(conf, IngestJob.pointsPath(cfg), "segment_start")
+      .map(_._2.toLong) === Seq(newSeg))
+    assert(graft.core.Fs.dataFiles(conf, liveSeg).size === 1)
+    assert((graft.core.Fs.dataFiles(conf, IngestJob.seriesLogPath(cfg)).toSet & seriesBefore).isEmpty)
+    Seq(IngestJob.cmsPath(cfg), IngestJob.ddsPath(cfg), IngestJob.ddsPath(cfg, "dds_daily"))
+      .foreach(d => assert(exists(s"$d/batch_id=${StoreCompaction.SnapshotBatchId}"), s"$d not folded"))
+    // the failed chain left its store as it was, with no staging dir
+    assert(graft.core.Fs.dataFiles(conf, IngestJob.latestLogPath(cfg)).toSet ===
+      latestBefore + new org.apache.hadoop.fs.Path(fault.toUri))
+    assert(!exists(s"${cfg.lakeDir}/.latest_log_compact_tmp"))
+
+    java.nio.file.Files.delete(fault)
+    pass(cfg)
+    val clean = lake("graft_mnt_clean")
+    val report = pass(clean)
+    assert(report.purgedSegments === Seq(oldSeg))
+    assert(report.compactedSegments === Seq(newSeg))
+    assert(report.sketchStoresFolded === Seq("cms", "dds", "dds_daily"))
+    assert(report.chainMs.keys.toSeq === Seq("points", "series_log", "latest_log", "cms", "dds", "dds_daily"))
+    assert(report.chainMs.values.forall(_ >= 0))
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().toSet
+    def stores(c: IngestJob.Config) = Seq(
+      rows(IngestJob.points(spark, c), "series_id", "ts", "value", "seq", "segment_start"),
+      rows(IngestJob.seriesDim(spark, c), "series_id", "metric", "first_seen", "last_seen"),
+      rows(IngestJob.latest(spark, c), "series_id", "last_ts", "last_value"),
+      rows(IngestJob.cmsCells(spark, c), "i", "j", "cnt"),
+      rows(IngestJob.ddsBuckets(spark, c), "key", "sgn", "idx", "cnt"),
+      rows(IngestJob.ddsBuckets(spark, c, "dds_daily"), "key", "sgn", "idx", "cnt"))
+    val want = stores(clean)
+    assert(want.forall(_.nonEmpty), "every store of the clean pass holds rows")
+    stores(cfg).zip(want).zipWithIndex.foreach { case ((got, exp), i) =>
+      assert(got === exp, s"store #$i differs after the rerun")
+    }
+    assert(graft.core.Fs.dataFiles(conf, IngestJob.latestLogPath(cfg)).toSet.intersect(latestBefore).isEmpty,
+      "the rerun compacted the latest log")
+  }
 }
