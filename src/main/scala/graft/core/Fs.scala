@@ -88,19 +88,32 @@ object Fs {
    *  (a whole-directory replace would lose data instead). */
   def swapInFiles(conf: Configuration, stagingDir: String, liveDir: String,
       plannedOld: Seq[Path]): Unit = {
-    val live = new Path(liveDir)
+    moveIn(conf, new Path(stagingDir), new Path(liveDir))
+    deleteFiles(conf, plannedOld)
+  }
+
+  /** Move the data files directly under `staged` into `live`, creating
+   *  `live` if absent. */
+  private def moveIn(conf: Configuration, staged: Path, live: Path): Unit = {
     val fs = live.getFileSystem(conf)
-    if (!fs.exists(live) && !fs.mkdirs(live))
-      throw new java.io.IOException(s"mkdirs $liveDir failed")
-    dataFiles(conf, stagingDir).foreach { f =>
+    val files = dataFiles(conf, staged.toString)
+    if (files.nonEmpty && !fs.exists(live) && !fs.mkdirs(live))
+      throw new java.io.IOException(s"mkdirs $live failed")
+    files.foreach { f =>
       if (!fs.rename(f, new Path(live, f.getName)))
-        throw new java.io.IOException(s"rename $f into $liveDir failed")
-    }
-    plannedOld.foreach { f =>
-      if (fs.exists(f) && !fs.delete(f, false))
-        throw new java.io.IOException(s"delete $f failed")
+        throw new java.io.IOException(s"rename $f into $live failed")
     }
   }
+
+  /** Delete `files`. A file someone else already deleted counts as
+   *  deleted: only a file that survives a failed delete throws, so two
+   *  cleaners racing over the same files never fail each other. */
+  def deleteFiles(conf: Configuration, files: Seq[Path]): Unit =
+    files.foreach { f =>
+      val fs = f.getFileSystem(conf)
+      if (!fs.delete(f, false) && fs.exists(f))
+        throw new java.io.IOException(s"delete $f failed")
+    }
 
   /** A frame over exactly the `planned` data files, served from the
    *  statuses the caller listed at plan time: the file index is an
@@ -156,11 +169,17 @@ object Fs {
    *      root`, so partition columns come back; `schema` as there);
    *   2. `write(frame, staging)` writes the replacement — same layout as
    *      `root` — into the hidden staging dir `<parent>/.<name>_compact_tmp`;
-   *   3. each planned partition's staged files are swapped in with
-   *      [[swapInFiles]], which deletes only that partition's planned
-   *      files, so a batch appended between plan and swap keeps its rows
-   *      exactly once;
-   *   4. the staging dir is deleted, whether or not 2–3 succeeded.
+   *   3. EVERY staged file is moved into the same relative dir under
+   *      `root` (a staged partition the plan never touched is created);
+   *   4. only then are the planned files deleted — nothing else, so a
+   *      batch appended between plan and swap keeps its rows exactly once;
+   *   5. the staging dir is deleted, whether or not 2–4 succeeded.
+   *  Steps 3 and 4 are ordered across the whole store, not per partition:
+   *  a reader that lists the store while the planned files are going
+   *  away has already been able to see every replacement. The LWW
+   *  stores' reads collapse the duplicates of the window between 3 and
+   *  4; the count stores ([[graft.streaming.StoreCompaction]]) rely on
+   *  the order itself.
    *  A planned file sits directly under `root` (an unpartitioned store)
    *  or under one of its partition dirs. No-op when nothing is planned. */
   def rewritePlanned(spark: SparkSession, root: String, planned: Seq[FileStatus],
@@ -170,30 +189,30 @@ object Fs {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     val qualifiedRoot = fs.makeQualified(rootPath).toString
+    planned.foreach { f =>
+      require(fs.makeQualified(f.getPath.getParent).toString.startsWith(qualifiedRoot),
+        s"planned file ${f.getPath} is not under $root")
+    }
     val staging = new Path(rootPath.getParent, s".${rootPath.getName}_compact_tmp")
-    // partition dir relative to root ("" for root itself) → its planned files
-    val byPartition = planned.map(_.getPath).groupBy { f =>
-      val dir = fs.makeQualified(f.getParent).toString
-      require(dir.startsWith(qualifiedRoot), s"planned file $f is not under $root")
-      dir.stripPrefix(qualifiedRoot)
-    }.toSeq.sortBy(_._1)
     val frame = readPlanned(spark, planned, Some(root), schema)
     try {
+      fs.delete(staging, true) // what a crashed rewrite left staged is never moved in
       write(frame, staging.toString)
-      byPartition.foreach { case (rel, files) =>
-        swapInFiles(conf, s"$staging$rel", s"$rootPath$rel", files)
+      stagedDirs(fs, staging, "").foreach { rel =>
+        moveIn(conf, new Path(s"$staging$rel"), new Path(s"$rootPath$rel"))
       }
+      deleteFiles(conf, planned.map(_.getPath))
     } finally {
       fs.delete(staging, true): Unit
     }
   }
 
-  /** [[rewritePlanned]] for a caller holding planned paths rather than
-   *  listed statuses: each path is looked up once on the driver. */
-  def rewritePlanned(spark: SparkSession, root: String, planned: Seq[Path])(
-      write: (DataFrame, String) => Unit): Unit =
-    if (planned.nonEmpty) {
-      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-      rewritePlanned(spark, root, planned.map(fs.getFileStatus), None)(write)
-    }
+  /** `dir` and its non-hidden subdirectories, as paths relative to the
+   *  staging root (`rel`, "" for the root itself). */
+  private def stagedDirs(fs: org.apache.hadoop.fs.FileSystem, dir: Path, rel: String): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else rel +: fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_")
+        && !s.getPath.getName.startsWith("."))
+      .flatMap(s => stagedDirs(fs, s.getPath, s"$rel/${s.getPath.getName}"))
 }

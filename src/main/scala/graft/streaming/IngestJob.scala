@@ -55,10 +55,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *
  * One batch runs in three steps: the points append; then ONE flush
  * barrier over every independent write (series log, latest log, sketch
- * partials, and each rollup rung whose close gate fired); then the
- * sketch fold. Batch accounting and the segments the close gate needs
- * ride on `observe()` metrics collected by the points write itself (one
- * Spark job services all three), not separate count or collect jobs.
+ * partials, and each rollup rung whose close gate fired); then, every
+ * `compactEvery` batches, one barrier over the sketch folds. Batch
+ * accounting and the segments the close gate needs ride on `observe()`
+ * metrics collected by the points write itself (one Spark job services
+ * all three), not separate count or collect jobs.
  *
  * All file manipulation goes through the Hadoop FileSystem API, so purge
  * and compaction work unchanged on HDFS/S3-style stores, not just local
@@ -292,9 +293,20 @@ object IngestJob {
     }
   }
 
+  /** `body` as a flush for [[runFlushes]]: a pool thread keeps the
+   *  active session of whichever thread created it, so the flush makes
+   *  `spark` active before it builds a plan and restores the previous
+   *  one after. */
+  private[streaming] def inSession(spark: SparkSession)(body: => Unit): () => Unit = () => {
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    try body
+    finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+  }
+
   /** One micro-batch: admission, the points append, then one flush
    *  barrier over the store flushes and every due rollup rung flush,
-   *  then the sketch fold. The points append goes through the sink
+   *  then the sketch folds. The points append goes through the sink
    *  strategy surface (P4) — default is the segment-partitioned parquet
    *  lake. Returns admission stats, computed via `observe()` on the
    *  write pass (no dedicated count jobs). */
@@ -379,10 +391,10 @@ object IngestJob {
       // pool and the next flush's tasks back-fill executors freed by the
       // previous one's tail (guide §2.6 "overlap independent jobs"):
       // per-batch flush wall drops from the sum of the flushes to
-      // roughly their max. Only the sketch fold, which reads the sketch
-      // stores, stays sequential AFTER the barrier. Failures propagate:
-      // the first failed flush rethrows once every submitted flush has
-      // settled (no orphaned jobs).
+      // roughly their max. Only the sketch folds, which read the sketch
+      // stores, run AFTER the barrier, in a barrier of their own.
+      // Failures propagate: the first failed flush rethrows once every
+      // submitted flush has settled (no orphaned jobs).
       val flushes = scala.collection.mutable.ArrayBuffer.empty[(String, () => Unit)]
       // plans are CONSTRUCTED on this thread (plan-build reads
       // session conf through the thread-local active session); only the
@@ -463,13 +475,15 @@ object IngestJob {
       runFlushes(flushes.toSeq)
       // in-band maintenance (production posture): every N committed
       // batches, fold the closed sketch-store partials into the snapshot
-      // partition. Runs INSIDE foreachBatch, so no concurrent reader of
-      // this ingest races the swap; the fold always excludes this batch's
-      // own (max, replayable) partition, and a crash-replay of this batch
-      // re-runs the fold idempotently (the snapshot re-folds).
+      // partition, every store in one barrier. The fold always excludes
+      // this batch's own (max, replayable) partition, and a crash-replay
+      // of this batch re-runs the fold idempotently (the snapshot
+      // re-folds).
       cfg.compactEvery.foreach { n =>
         if (batchId > 0 && batchId % n == 0)
-          StoreCompaction.foldSketches(batch.sparkSession, cfg): Unit
+          runFlushes(StoreCompaction.sketchFolds(batch.sparkSession, cfg, Map.empty)
+            .map { case (name, fold) => name -> inSession(batch.sparkSession)(fold(): Unit) },
+            what = "sketch fold")
       }
       BatchStats(total, observed("admitted").asInstanceOf[Long], hwm)
     } finally admitted.unpersist()
@@ -549,8 +563,9 @@ object IngestJob {
 
   /** The maintained count–min sketch: micro-batch partials merged by
    *  cell-wise sum — identical to the one-shot batch sketch. Reads via
-   *  [[StoreCompaction.read]]: swap-crash immune, never mutates (a
-   *  crashed fold's outstanding deletes are simply excluded). */
+   *  [[StoreCompaction.read]]: only the store's live set, so a fold in
+   *  progress or one that crashed mid-swap never changes the counts;
+   *  never mutates. */
   def cmsCells(spark: SparkSession, cfg: Config): DataFrame =
     graft.operators.CountMin.merge(StoreCompaction.read(spark, cmsPath(cfg)))
 

@@ -37,10 +37,11 @@ import org.apache.spark.sql.{Column, SparkSession}
  * Every chain is independently race-safe against a live ingest (the
  * planned-files swap discipline — see each primitive's scaladoc), so
  * the composition is as well. A reader overlapping a sketch fold's swap
- * still reads exact counts ([[StoreCompaction.read]] excludes the
- * folded sources); the one remaining exposure is filesystem-level: a
- * reader that listed a file the instant before a swap deleted it fails
- * its scan, a retryable read error, never a wrong answer.
+ * still reads exact counts ([[StoreCompaction.read]] reads only the
+ * live set, which the snapshot's name defines); the one remaining
+ * exposure is filesystem-level: a reader that listed a file the instant
+ * before a swap deleted it fails its scan, a retryable read error,
+ * never a wrong answer.
  */
 object Maintenance {
 
@@ -61,18 +62,11 @@ object Maintenance {
       targetFileBytes: Long = 128L << 20,
       sketchRetain: Map[String, Column] = Map.empty): Report = {
     val ms = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    // a pool thread keeps the active session of whichever thread created
-    // it, so each chain makes `spark` active before it builds a plan
-    def chain(name: String)(body: => Unit): (String, () => Unit) = name -> (() => {
-      val prev = SparkSession.getActiveSession
-      SparkSession.setActiveSession(spark)
-      val t0 = System.nanoTime()
-      try body
-      finally {
-        ms.put(name, (System.nanoTime() - t0) / 1000000L)
-        prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    def chain(name: String)(body: => Unit): (String, () => Unit) =
+      name -> IngestJob.inSession(spark) {
+        val t0 = System.nanoTime()
+        try body finally ms.put(name, (System.nanoTime() - t0) / 1000000L)
       }
-    })
     var purged, compacted: Seq[Long] = Nil
     val folds = StoreCompaction.sketchFolds(spark, cfg, sketchRetain)
     val folded = Array.fill(folds.size)(false)

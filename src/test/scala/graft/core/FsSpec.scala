@@ -4,7 +4,7 @@ import graft.{Fixtures, TestSpark}
 import graft.events.EventsStore
 import graft.streaming.IngestJob
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +47,28 @@ class FsSpec extends AnyFunSuite {
     assert(names === Set("part-x"))
   }
 
+  test("a planned file another deleter removed between our exists and delete counts as deleted") {
+    val base = java.nio.file.Files.createTempDirectory("graft_fs3")
+    val live = java.nio.file.Files.createDirectory(base.resolve("live"))
+    val staging = java.nio.file.Files.createDirectory(base.resolve("staging"))
+    touch(live, "part-old")
+    touch(staging, "part-new")
+    val conf = new Configuration()
+    conf.set("fs.racy.impl", classOf[LosingDeleteFs].getName)
+    conf.setBoolean("fs.racy.impl.disable.cache", true)
+    // through this filesystem every delete loses its race: the file goes,
+    // but the delete reports false
+    val planned = Seq(new Path(s"racy://${live.resolve("part-old")}"))
+    Fs.swapInFiles(conf, staging.toString, live.toString, planned)
+    val names = new java.io.File(live.toString).listFiles().map(_.getName).toSet
+    assert(names === Set("part-new"))
+    // a file that survives its failed delete still fails the swap
+    touch(live, "part-stuck")
+    val stuck = new Path(s"racy://${live.resolve("part-stuck")}")
+    conf.setBoolean("graft.spec.delete.keeps", true)
+    intercept[java.io.IOException](Fs.swapInFiles(conf, staging.toString, live.toString, Seq(stuck)))
+  }
+
   private val t0 = 1704067200L
 
   /** An ingest lake (points, series and latest logs) built by two
@@ -75,9 +97,9 @@ class FsSpec extends AnyFunSuite {
   private def rowCounts(df: DataFrame): Map[Row, Int] =
     df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
 
-  private def pointFiles(conf: Configuration, cfg: IngestJob.Config): Seq[Path] =
+  private def pointFiles(conf: Configuration, cfg: IngestJob.Config): Seq[FileStatus] =
     Fs.partitions(conf, IngestJob.pointsPath(cfg), "segment_start")
-      .flatMap(p => Fs.dataFiles(conf, p._1.toString))
+      .flatMap(p => Fs.dataFileStatuses(conf, p._1.toString))
 
   test("rewritePlanned keeps a batch appended between plan and swap exactly once (points, series log, events log)") {
     val spark = TestSpark.spark
@@ -87,23 +109,23 @@ class FsSpec extends AnyFunSuite {
     EventsStore.append(docs(0 until 4), eventsDir)
     EventsStore.append(docs(4 until 8), eventsDir)
     val eventsLog = s"$eventsDir/events_log"
-    val eventFiles = Fs.partitions(conf, eventsLog, "day").flatMap(p => Fs.dataFiles(conf, p._1.toString))
+    val eventFiles = Fs.partitions(conf, eventsLog, "day").flatMap(p => Fs.dataFileStatuses(conf, p._1.toString))
 
     /** Rewrite `planned` with a `write` that first appends a real batch to
      *  the live store, then writes the planned rows unchanged into one file
      *  per partition. The appended rows (`isNew`) must appear exactly once
      *  and `expectNew` of them; every other row exactly as before. */
-    def racing(root: String, planned: Seq[Path], read: () => DataFrame, append: () => Unit,
+    def racing(root: String, planned: Seq[FileStatus], read: () => DataFrame, append: () => Unit,
         isNew: Column, expectNew: Int, partitionCol: Option[String]): Unit = {
       assert(planned.size >= 2, s"$root: the rewrite should consolidate several files")
       val before = rowCounts(read())
-      Fs.rewritePlanned(spark, root, planned) { (df, staging) =>
+      Fs.rewritePlanned(spark, root, planned, None) { (df, staging) =>
         append()
         val w = df.coalesce(1).write.mode("overwrite")
         partitionCol.fold(w)(w.partitionBy(_)).parquet(staging)
       }
       val fs = new Path(root).getFileSystem(conf)
-      assert(planned.forall(f => !fs.exists(f)), s"$root: planned files must be gone")
+      assert(planned.forall(f => !fs.exists(f.getPath)), s"$root: planned files must be gone")
       val after = read()
       val appended = rowCounts(after.filter(isNew))
       assert(appended.values.forall(_ == 1), s"$root: appended rows must appear exactly once")
@@ -115,7 +137,7 @@ class FsSpec extends AnyFunSuite {
     racing(IngestJob.pointsPath(cfg), pointFiles(conf, cfg), () => IngestJob.points(spark, cfg),
       () => IngestJob.processBatch(batch("m.c", 200), cfg): Unit,
       col("metric") === "m.c", expectNew = 6, Some("segment_start"))
-    racing(IngestJob.seriesLogPath(cfg), Fs.dataFiles(conf, IngestJob.seriesLogPath(cfg)),
+    racing(IngestJob.seriesLogPath(cfg), Fs.dataFileStatuses(conf, IngestJob.seriesLogPath(cfg)),
       () => spark.read.parquet(IngestJob.seriesLogPath(cfg)),
       () => IngestJob.processBatch(batch("m.d", 300), cfg): Unit,
       col("metric") === "m.d", expectNew = 6, None)
@@ -132,7 +154,7 @@ class FsSpec extends AnyFunSuite {
     val planned = pointFiles(conf, cfg)
     val rowsBefore = rowCounts(IngestJob.points(spark, cfg))
     val err = intercept[IllegalStateException] {
-      Fs.rewritePlanned(spark, root, planned) { (df, staging) =>
+      Fs.rewritePlanned(spark, root, planned, None) { (df, staging) =>
         df.write.mode("overwrite").partitionBy("segment_start").parquet(staging)
         throw new IllegalStateException("write failed after staging")
       }
@@ -140,7 +162,7 @@ class FsSpec extends AnyFunSuite {
     assert(err.getMessage === "write failed after staging")
     val fs = new Path(root).getFileSystem(conf)
     assert(!fs.exists(new Path(cfg.lakeDir, ".points_compact_tmp")))
-    assert(pointFiles(conf, cfg).map(_.toString).toSet === planned.map(_.toString).toSet)
+    assert(pointFiles(conf, cfg).map(_.getPath.toString).toSet === planned.map(_.getPath.toString).toSet)
     assert(rowCounts(IngestJob.points(spark, cfg)) === rowsBefore)
   }
 
@@ -182,5 +204,17 @@ class FsSpec extends AnyFunSuite {
         ((0L until 40L).map(i => Row(i, i % 2)) :+ Row(100L, 0L)).map(_ -> 1).toMap,
         "every planned row once, the appended row once")
     }
+  }
+}
+
+/** A local filesystem under the `racy` scheme whose deletes report
+ *  false, as when another deleter removes the file first. With
+ *  `graft.spec.delete.keeps` set, the file also stays, as in a delete
+ *  that really failed. */
+final class LosingDeleteFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("racy:///")
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (!getConf.getBoolean("graft.spec.delete.keeps", false)) super.delete(p, recursive): Unit
+    false
   }
 }

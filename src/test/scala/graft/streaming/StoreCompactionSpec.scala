@@ -3,6 +3,7 @@ package graft.streaming
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Batch-partitioned count-store compaction: the fold must preserve the
  *  merged read bit-exactly, always exclude the max (replayable) batch
@@ -58,10 +59,12 @@ class StoreCompactionSpec extends AnyFunSuite {
 
   test("in-band auto-compaction (Config.compactEvery) folds during ingest; merged sketches unchanged") {
     val base = java.nio.file.Files.createTempDirectory("graft_sc_auto").toString
+    val dailyKey = "concat_ws('#', metric, cast(ts - ts % 86400 as string))"
     val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
       retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
       cms = Some(IngestJob.CmsConfig("tags['user']", depth = 4, width = 32)),
-      dds = Seq(IngestJob.DdsConfig("metric", "value", 0.02)),
+      dds = Seq(IngestJob.DdsConfig("metric", "value", 0.02),
+        IngestJob.DdsConfig(dailyKey, "value", 0.02, name = "dds_daily")),
       compactEvery = Some(2))
     def eventsDf(rows: (Long, Long, Double)*) =
       rows.toSeq.toDF("event_id", "tsec", "value")
@@ -78,9 +81,13 @@ class StoreCompactionSpec extends AnyFunSuite {
       IngestJob.processBatch(b, cfg, batchId = bid.toLong): Unit
     }
     // folds ran at batch 2 (0,1 → snapshot) and batch 4 (snapshot,2,3 →
-    // snapshot); only the snapshot and the open (replayable) batch remain
-    assert(batchIds(IngestJob.cmsPath(cfg)) === Set(StoreCompaction.SnapshotBatchId, 4L))
-    assert(batchIds(IngestJob.ddsPath(cfg)) === Set(StoreCompaction.SnapshotBatchId, 4L))
+    // snapshot), every store in the same barrier; only the snapshot of
+    // batches 0-3 and the open (replayable) batch remain
+    Seq(IngestJob.cmsPath(cfg), IngestJob.ddsPath(cfg), IngestJob.ddsPath(cfg, "dds_daily"))
+      .foreach { dir =>
+        assert(batchIds(dir) === Set(StoreCompaction.SnapshotBatchId, 4L), dir)
+        assert(snapshotNames(dir).map(_.take("snapshot-3-".length)) === Seq("snapshot-3-"), dir)
+      }
     val all = batches.reduce(_ unionByName _)
     val cmsMerged = IngestJob.cmsCells(spark, cfg)
       .select(col("i").cast("long"), col("j").cast("long"), col("cnt").cast("long"))
@@ -95,6 +102,8 @@ class StoreCompactionSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
     assert(bucketMap(IngestJob.ddsBuckets(spark, cfg)) ===
       bucketMap(graft.operators.QuantileSketch.sketch(all, col("metric"), col("value"), 0.02)))
+    assert(bucketMap(IngestJob.ddsBuckets(spark, cfg, "dds_daily")) ===
+      bucketMap(graft.operators.QuantileSketch.sketch(all, expr(dailyKey), col("value"), 0.02)))
   }
 
   test("DocIngest.runPairCounts compactEvery: in-band fold, summed counts equal batch") {
@@ -177,128 +186,138 @@ class StoreCompactionSpec extends AnyFunSuite {
     }
   }
 
-  test("crash protocol: snapshot file is single and atomic, recovery completes or aborts") {
-    val conf = spark.sessionState.newHadoopConf()
-    // (a) a completed fold leaves ONE snapshot data file and no manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_sc_cr").toString + "/store"
-    writeBatch(dir, 0, Seq(("a", 2L), ("b", 1L)))
-    writeBatch(dir, 1, Seq(("a", 3L)))
-    writeBatch(dir, 2, Seq(("c", 1L)))
-    val before = merged(dir)
-    assert(StoreCompaction.compactCounts(spark, dir, Seq("tk")))
-    val snap = new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}")
-    assert(snap.listFiles().count(_.getName.endsWith(".parquet")) === 1,
-      "snapshot must be one atomically-renamed file")
-    assert(!snap.listFiles().exists(_.getName == "_fold_manifest"))
-
-    // (b) crash AFTER the snapshot rename, BEFORE the source deletes:
-    // rebuild that state by re-creating the folded sources + a manifest
-    // naming them — recovery must finish the deletes, restoring the
-    // exact pre-crash merged counts (no double-count survives)
-    writeBatch(dir, 1, Seq(("a", 3L))) // the "undeleted" folded source
-    val snapFile = snap.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val srcFiles = new java.io.File(s"$dir/batch_id=1").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-    val mf = new java.io.File(snap, "_fold_manifest")
-    java.nio.file.Files.writeString(mf.toPath,
-      (snapFile.getAbsolutePath +: srcFiles.toSeq).mkString("\n"))
-    assert(merged(dir) != before, "precondition: the crashed state double-counts")
-    StoreCompaction.recover(conf, dir)
-    assert(merged(dir) === before, "recovery must remove the folded sources")
-    assert(!mf.exists)
-
-    // (c) crash BEFORE the snapshot rename: manifest names a target that
-    // never arrived — recovery must abort without touching sources
-    writeBatch(dir, 3, Seq(("d", 9L)))
-    val src3 = new java.io.File(s"$dir/batch_id=3").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-    java.nio.file.Files.writeString(mf.toPath,
-      (s"${snap.getAbsolutePath}/never-arrived.parquet" +: src3.toSeq).mkString("\n"))
-    val withNew = merged(dir)
-    StoreCompaction.recover(conf, dir)
-    assert(merged(dir) === withNew, "an aborted swap must lose nothing")
-    assert(!mf.exists)
-    // and the next fold entry (which recovers first) works normally
-    assert(StoreCompaction.compactCounts(spark, dir, Seq("tk")))
-    assert(merged(dir) === withNew)
-  }
-
   private def readVia(dir: String): Map[String, Long] =
     StoreCompaction.read(spark, dir)
       .groupBy(col("tk")).agg(sum(col("__c")).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  test("a reader between the snapshot rename and the source deletes reads exact counts and mutates nothing") {
-    // the verdict-#4 window: manifest committed, snapshot renamed in,
-    // folded sources NOT yet deleted (a live fold mid-swap, or a fold
-    // that crashed there). StoreCompaction.read must treat the
-    // manifest-planned sources as dead — exact counts — and must not
-    // delete anything (a read racing the live fold's own cleanup would
-    // otherwise destroy the manifest the protocol depends on).
-    val dir = java.nio.file.Files.createTempDirectory("graft_sc_win").toString + "/store"
+  /** Every file under `dir`, hidden ones included, relative to it. */
+  private def tree(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toSet
+    finally walk.close()
+  }
+
+  private def snapshotNames(dir: String): Seq[String] =
+    new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}").listFiles().toSeq
+      .map(_.getName).filter(_.endsWith(".parquet"))
+
+  private def stagingDir(dir: String): java.io.File = {
+    val f = new java.io.File(dir)
+    new java.io.File(f.getParentFile, s".${f.getName}_compact_tmp")
+  }
+
+  /** A store interrupted inside its second fold: a first fold folded
+   *  batches 0–1 into snapshot K = 1; the second folds that snapshot and
+   *  batches 2–3 into snapshot K = 3, batch 4 staying open. The second
+   *  fold runs for real, then `interrupt` rebuilds one of its step
+   *  boundaries from a copy of the store taken just before it. Returns
+   *  the store and its exact counts. */
+  private def midFold(name: String)(interrupt: (String, String) => Unit): (String, Map[String, Long]) = {
+    val base = java.nio.file.Files.createTempDirectory(name).toString
+    val dir = s"$base/store"
     writeBatch(dir, 0, Seq(("a", 2L), ("b", 1L)))
     writeBatch(dir, 1, Seq(("a", 3L)))
     writeBatch(dir, 2, Seq(("c", 1L)))
-    val before = merged(dir)
     assert(StoreCompaction.compactCounts(spark, dir, Seq("tk")))
-    // rebuild the mid-swap state: folded source back in place + manifest
-    writeBatch(dir, 1, Seq(("a", 3L)))
-    val snap = new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}")
-    val snapFile = snap.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val srcFiles = new java.io.File(s"$dir/batch_id=1").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-    val mf = new java.io.File(snap, "_fold_manifest")
-    java.nio.file.Files.writeString(mf.toPath,
-      (snapFile.getAbsolutePath +: srcFiles.toSeq).mkString("\n"))
-    assert(merged(dir) != before, "precondition: a raw read of this state double-counts")
-    assert(readVia(dir) === before, "the read path must exclude manifest-dead sources")
-    // pure: manifest and sources untouched by the read
-    assert(mf.exists, "a read must never delete the manifest")
-    assert(srcFiles.forall(f => new java.io.File(f).exists),
-      "a read must never delete source files")
-    // the next fold entry heals the window for real
-    StoreCompaction.recover(spark.sessionState.newHadoopConf(), dir)
-    assert(merged(dir) === before)
-    assert(!mf.exists)
-  }
-
-  test("a reader with a manifest whose target never arrived reads the sources and mutates nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sc_win2").toString + "/store"
-    writeBatch(dir, 0, Seq(("a", 2L)))
-    writeBatch(dir, 1, Seq(("b", 5L)))
+    writeBatch(dir, 3, Seq(("a", 4L), ("d", 2L)))
+    writeBatch(dir, 4, Seq(("b", 6L)))
     val truth = merged(dir)
-    val snap = new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}")
-    snap.mkdirs()
-    val src = new java.io.File(s"$dir/batch_id=0").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-    val mf = new java.io.File(snap, "_fold_manifest")
-    java.nio.file.Files.writeString(mf.toPath,
-      (s"${snap.getAbsolutePath}/never-arrived.parquet" +: src.toSeq).mkString("\n"))
-    // target absent ⇒ the fold never became durable ⇒ sources are truth
-    assert(readVia(dir) === truth)
-    assert(mf.exists, "a read must not abort-delete a manifest (fold-entry only)")
-    assert(src.forall(f => new java.io.File(f).exists))
+    graft.core.Fs.copyDir(spark.sessionState.newHadoopConf(), dir, s"$base/pre")
+    assert(StoreCompaction.compactCounts(spark, dir, Seq("tk")))
+    assert(snapshotNames(dir).map(_.takeWhile(_ != '-')) === Seq("snapshot"))
+    interrupt(dir, s"$base/pre")
+    (dir, truth)
   }
 
-  test("recover tolerates planned files another finisher already removed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sc_idem").toString + "/store"
-    writeBatch(dir, 0, Seq(("a", 2L)))
-    writeBatch(dir, 1, Seq(("b", 5L)))
+  /** Put back the listed partition dirs (`batch_id=N`) and snapshot
+   *  files of the pre-fold copy `pre`. */
+  private def restore(dir: String, pre: String, parts: Seq[Long], oldSnapshot: Boolean): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    parts.foreach(id => graft.core.Fs.copyDir(conf, s"$pre/batch_id=$id", s"$dir/batch_id=$id"))
+    if (oldSnapshot) snapshotNames(pre).foreach { f =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$pre/batch_id=-1/$f"),
+        java.nio.file.Paths.get(s"$dir/batch_id=-1/$f"))
+    }
+  }
+
+  /** At a step boundary the read is exact and deletes nothing; the next
+   *  fold leaves exactly the snapshot of batches 0–3 and the open batch. */
+  private def readsExactThenHeals(dir: String, truth: Map[String, Long]): Unit = {
+    val files = tree(dir)
+    assert(readVia(dir) === truth, "the live set must read exact counts")
+    assert(tree(dir) === files, "a read must never delete")
+    StoreCompaction.compactCounts(spark, dir, Seq("tk")): Unit
+    assert(batchIds(dir) === Set(StoreCompaction.SnapshotBatchId, 4L))
+    assert(snapshotNames(dir).size === 1 && snapshotNames(dir).head.startsWith("snapshot-3-"),
+      s"one snapshot covering batch 3: ${snapshotNames(dir)}")
+    assert(!stagingDir(dir).exists)
+    assert(merged(dir) === truth)
+  }
+
+  test("a fold staged but not moved in: the read is exact, the next fold redoes it") {
+    val (dir, truth) = midFold("graft_sc_staged") { (dir, pre) =>
+      restore(dir, pre, Seq(2L, 3L), oldSnapshot = true)
+      val snap = snapshotNames(dir).filter(_.startsWith("snapshot-3-"))
+      val staged = new java.io.File(stagingDir(dir), "batch_id=-1")
+      staged.mkdirs()
+      snap.flatMap(f => Seq(f, s".$f.crc")).map(f => java.nio.file.Paths.get(s"$dir/batch_id=-1/$f"))
+        .filter(java.nio.file.Files.exists(_))
+        .foreach(f => java.nio.file.Files.move(f, staged.toPath.resolve(f.getFileName)))
+    }
+    assert(snapshotNames(dir).forall(_.startsWith("snapshot-1-")))
+    readsExactThenHeals(dir, truth)
+  }
+
+  test("a new snapshot moved in beside the old snapshot and every source: the read is exact") {
+    val (dir, truth) = midFold("graft_sc_movedin") { (dir, pre) =>
+      restore(dir, pre, Seq(2L, 3L), oldSnapshot = true)
+    }
+    assert(snapshotNames(dir).size === 2)
+    assert(merged(dir) != truth, "precondition: a raw read of this state double-counts")
+    readsExactThenHeals(dir, truth)
+  }
+
+  test("a fold with half of its sources deleted: the read is exact") {
+    val (dir, truth) = midFold("graft_sc_half") { (dir, pre) =>
+      restore(dir, pre, Seq(3L), oldSnapshot = false)
+    }
+    assert(merged(dir) != truth, "precondition: a raw read of this state double-counts")
+    readsExactThenHeals(dir, truth)
+  }
+
+  test("an old-format fold-<uuid> snapshot covers no batch id: the read is exact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sc_oldfmt").toString + "/store"
+    val staged = s"$dir.staged"
+    // what the previous fold wrote for batches 0-1, whose sources it deleted
+    Seq(("a", 5L), ("b", 1L)).toDF("tk", "__c").coalesce(1).write.parquet(staged)
+    val snapDir = new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}")
+    snapDir.mkdirs()
+    java.nio.file.Files.move(new java.io.File(staged).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath,
+      snapDir.toPath.resolve(s"fold-${java.util.UUID.randomUUID}.parquet"))
     writeBatch(dir, 2, Seq(("c", 1L)))
-    assert(StoreCompaction.compactCounts(spark, dir, Seq("tk")))
-    val after = merged(dir)
-    val snap = new java.io.File(s"$dir/batch_id=${StoreCompaction.SnapshotBatchId}")
-    val snapFile = snap.listFiles().filter(_.getName.endsWith(".parquet")).head
-    // a manifest whose planned sources are ALREADY gone (a concurrent
-    // finisher won the exists-then-delete race): recover must finish
-    // cleanly, not throw from a failed delete of a missing file
-    val mf = new java.io.File(snap, "_fold_manifest")
-    java.nio.file.Files.writeString(mf.toPath,
-      Seq(snapFile.getAbsolutePath, s"$dir/batch_id=0/already-gone.parquet")
-        .mkString("\n"))
-    StoreCompaction.recover(spark.sessionState.newHadoopConf(), dir)
-    assert(!mf.exists)
-    assert(merged(dir) === after)
+    writeBatch(dir, 3, Seq(("a", 4L), ("d", 2L)))
+    writeBatch(dir, 4, Seq(("b", 6L)))
+    val truth = Map("a" -> 9L, "b" -> 7L, "c" -> 1L, "d" -> 2L)
+    assert(merged(dir) === truth)
+    readsExactThenHeals(dir, truth)
+  }
+
+  test("building the read of a store with 40 batch partitions starts no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sc_jobs").toString + "/store"
+    spark.range(0, 40, 1, 1)
+      .select(lit("a").as("tk"), lit(1L).as("__c"), col("id").as("batch_id"))
+      .write.partitionBy("batch_id").parquet(dir)
+    val jobs = new graft.GroupJobs(spark.sparkContext)
+    val (frame, started) = jobs {
+      val df = StoreCompaction.read(spark, dir)
+      (df, jobs.started())
+    }
+    assert(started === 0, s"building the read started $started jobs")
+    assert(frame.agg(sum(col("__c"))).head.getLong(0) === 40L)
   }
 
   test("a fold that fails mid-write leaves no compact_tmp and the store as it was") {
@@ -311,7 +330,7 @@ class StoreCompactionSpec extends AnyFunSuite {
       _.withColumn("__c", when(col("__c") > 0, raise_error(lit("fold failed")))
         .otherwise(col("__c")).cast("long"))
     intercept[Exception](StoreCompaction.compactBatchStore(spark, dir, failing))
-    assert(!new java.io.File(s"$dir.compact_tmp").exists)
+    assert(!stagingDir(dir).exists)
     assert(batchIds(dir) === Set(0L, 1L, 2L))
     assert(merged(dir) === before)
   }
