@@ -3,6 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -15,7 +16,11 @@ import scala.util.control.NonFatal
  *  DataFrame construction, Catalyst planning and execution (noop write),
  *  with what the run's Spark jobs did — jobs (and `build_jobs`, those
  *  started while the DataFrame was built), stages, tasks, task-seconds,
- *  shuffle / spill / input bytes — and its costliest stages.
+ *  shuffle / spill / input bytes — and its costliest stages, plus
+ *  `codegen_compiles`: how many classes Janino compiled during the run
+ *  (the exact count delta of Spark's `CodegenMetrics` compilation-time
+ *  histogram; JVM-wide, so with a local master it counts task-side
+ *  compiles too).
  *
  *  Usage: sbt "runMain graft.Profile [--reps N] [--plans <dir>] <query...>"
  *  Env:
@@ -28,8 +33,15 @@ import scala.util.control.NonFatal
  *     drift hits both sides of a same-JVM A/B alike. A variant's keys are
  *     restored after each of its runs.
  *  `--plans <dir>` writes `explain("formatted")` per (query, variant) to
- *  `<dir>/<query>_v<i>.txt`. Pass 1 carries first-touch costs (codegen
- *  cache, file listing); later passes are the steady state. */
+ *  `<dir>/<query>_v<i>.txt`. Pass 1 carries first-touch costs (file
+ *  listing, and compiling the query's generated classes); later passes
+ *  are the steady state, where `codegen_compiles` drops to what the
+ *  query cannot reuse from Spark's codegen class cache. A later pass
+ *  that compiles as much as pass 1 had its classes evicted: a recompile
+ *  regression shows there, per query. The cache size
+ *  (`spark.sql.codegen.cache.maxEntries`, set by
+ *  [[graft.core.GraftSession]]) is a static conf read once per JVM, so
+ *  a `GRAFT_CONFS` variant cannot change it. */
 object Profile {
   private val mapper = new ObjectMapper()
   private val EventsDir = """.*/e(\d+)""".r
@@ -109,6 +121,7 @@ object Profile {
       m.reset()
       // the build interval in epoch ms, open-ended until the build returns
       val w0 = System.currentTimeMillis()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       var w1 = Long.MaxValue
       try {
         variants(vi).foreach { case (k, v) => spark.conf.set(k, v) }
@@ -133,6 +146,7 @@ object Profile {
         prior.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
       m.awaitQuiet()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val st = m.stages
       def sum(f: Stage => Long): Long = st.map(f).sum
       rec.put("jobs", m.jobs).put("build_jobs", m.jobsStartedIn(w0, w1))
@@ -141,6 +155,7 @@ object Profile {
         .put("shuffle_read_bytes", sum(_.shuffleRead))
         .put("shuffle_write_bytes", sum(_.shuffleWrite))
         .put("spill_bytes", sum(_.spill)).put("input_bytes", sum(_.input))
+        .put("codegen_compiles", compiles)
       val top = rec.putArray("top_stages")
       st.sortBy(-_.taskMs).take(5).foreach { s =>
         top.addObject().put("stage", s.id).put("name", s.name).put("tasks", s.tasks)

@@ -16,6 +16,22 @@ import org.apache.spark.sql.SparkSession
  *   must keep reading as TIMESTAMP_LTZ (stored value = UTC micros,
  *   identical bytes interpretation, `cast(.. as long)` = epoch seconds)
  *   instead of TIMESTAMP_NTZ, which refuses the numeric cast.
+ * - `codegen.cache.maxEntries` 1000: Spark keeps the classes Janino
+ *   compiles for whole-stage codegen in one JVM-wide LRU cache of 100
+ *   entries by default. graft's per-cycle working sets are larger: one
+ *   `ingest_routed` cycle of the graftbench benchmark (a `processBatch`
+ *   on a 1h+1d ladder with CMS and DDS, two `Graft.queryRouted` reads
+ *   and their checks, `IngestJob.latest`, a `Maintenance.run` every
+ *   second batch) needs 166 distinct classes, `tsdb_read` ~175 and
+ *   `corpus_pipeline` ~100. At 100 entries every steady-state ingest
+ *   batch found its classes evicted and recompiled 99–109 of them
+ *   (~2 s of compile CPU on 4 cores) before running them cold; at 1000
+ *   it compiles 8–12, and a whole `ingest_routed` run 226 classes
+ *   instead of 464–474. 1000 holds several such working sets side by
+ *   side. This is a STATIC conf: `CodeGenerator` reads it once per JVM,
+ *   when it is first used, so it only takes effect through the session
+ *   that creates the SparkContext, and a runtime `spark.conf.set` (a
+ *   `GRAFT_CONFS` variant of `graft.Profile`) cannot change it.
  */
 object GraftSession {
   def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
@@ -39,6 +55,8 @@ object GraftSession {
       // per query); 256 KB keeps ~70% of the fill-family win with no
       // measured loser.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
+      // keep a micro-batch cycle's generated classes between batches (see above)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // segment-pruning rule + native functions (graft.plans.SegmentPruning)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * reference's `InputMode {KAFKA, PULSAR, DATA_GEN}` switch
  * (opentsdb/.../AuraMetricsService.java:150-155), uniform with the P3/P4
  * source/sink factories: a scheme-keyed URI picks the stream source, and
- * every mode funnels through the one [[IngestJob.processBatch]] pipeline.
+ * every mode funnels through the one [[IngestJob.batchBody]]
+ * ([[IngestJob.processBatch]] with the micro-batch id).
  *
  *   file:<dir>                — parquet file stream ([[IngestJob.run]])
  *   datagen:<rowsPerSecond>   — synthetic rate source ([[IngestJob.runDataGen]])

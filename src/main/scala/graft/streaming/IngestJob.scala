@@ -489,6 +489,15 @@ object IngestJob {
     } finally admitted.unpersist()
   }
 
+  /** The one `foreachBatch` body of every ingest starter ([[run]],
+   *  [[runDataGen]], [[KafkaSource.run]], [[PulsarSource.run]]):
+   *  [[processBatch]] with the micro-batch's id. The id is what makes a
+   *  replay safe: each CMS/DDS partial lands in its own `batch_id=N`
+   *  partition, which a replay of batch N overwrites, and the in-band
+   *  `compactEvery` fold keys on it. */
+  def batchBody(cfg: Config): (DataFrame, Long) => Unit =
+    (batch, batchId) => processBatch(batch, cfg, batchId = batchId): Unit
+
   /** Start the stream over a directory of events parquet files.
    *  `maxFilesPerTrigger` bounds each micro-batch to that many source
    *  files — the probe/test knob for driving a controlled batch COUNT
@@ -503,7 +512,7 @@ object IngestJob {
     val stream = reader.parquet(sourceDir)
     val writer = TsdbViews.pointsFromEvents(stream).writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch((b: DataFrame, bid: Long) => { processBatch(b, cfg, batchId = bid); () })
+      .foreachBatch(batchBody(cfg))
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
@@ -525,7 +534,7 @@ object IngestJob {
       .withColumn("segment_start", graft.core.SeriesId.segmentStart(col("ts")))
     points.writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch((b: DataFrame, bid: Long) => { processBatch(b, cfg, batchId = bid); () })
+      .foreachBatch(batchBody(cfg))
       .start()
   }
 

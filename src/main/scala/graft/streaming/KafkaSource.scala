@@ -81,9 +81,11 @@ object KafkaSource {
       lit(0).as("timestampType"))
 
   /** The real broker stream: `format("kafka")` → [[parse]] → the same
-   *  foreachBatch pipeline as every other input mode. Untestable in this
-   *  environment (no broker, no kafka connector jar) — the plan below is
-   *  identical to [[IngestJob.run]]'s with a different source. */
+   *  foreachBatch body as every other input mode
+   *  ([[IngestJob.batchBody]], which passes each micro-batch's id, so a
+   *  replayed batch overwrites its own sketch partials). No spec starts
+   *  it, since that needs a broker and the kafka connector jar;
+   *  KafkaSourceSpec drives [[parse]] and the batch body without one. */
   def run(spark: SparkSession, brokers: String, topic: String,
       cfg: IngestJob.Config): StreamingQuery =
     parse(
@@ -93,6 +95,6 @@ object KafkaSource {
         .load())
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch((b: DataFrame, _: Long) => { IngestJob.processBatch(b, cfg); () })
+      .foreachBatch(IngestJob.batchBody(cfg))
       .start()
 }

@@ -94,9 +94,11 @@ object PulsarSource {
   }
 
   /** The real broker stream: `format("pulsar")` → [[parse]] → the same
-   *  foreachBatch pipeline as every other input mode. Untestable in this
-   *  environment (no broker, no pulsar connector jar) — the plan is
-   *  identical to [[KafkaSource.run]]'s with a different source. */
+   *  foreachBatch body as every other input mode
+   *  ([[IngestJob.batchBody]], which passes each micro-batch's id). No
+   *  spec starts it, since that needs a broker and the pulsar connector
+   *  jar; PulsarSourceSpec drives [[parse]] and the batch body without
+   *  one. */
   def run(spark: SparkSession, serviceUrl: String, topic: String,
       cfg: IngestJob.Config): StreamingQuery =
     parse(
@@ -106,6 +108,6 @@ object PulsarSource {
         .load())
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch((b: DataFrame, _: Long) => { IngestJob.processBatch(b, cfg); () })
+      .foreachBatch(IngestJob.batchBody(cfg))
       .start()
 }

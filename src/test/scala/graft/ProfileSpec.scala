@@ -32,7 +32,12 @@ class ProfileSpec extends AnyFunSuite {
       val buildJobs = r.get("build_jobs").asInt
       assert(buildJobs >= 0 && buildJobs <= r.get("jobs").asInt, r.toString)
       assert(r.get("top_stages").size > 0)
+      assert(r.get("codegen_compiles").asLong >= 0, r.toString)
     }
+    // pass 2 reuses the classes pass 1 compiled for the same query and variant
+    val compiled = rs.map(r => (r.get("pass").asInt, r.get("variant").asInt) ->
+      r.get("codegen_compiles").asLong).toMap
+    for (v <- 0 to 1) assert(compiled((2, v)) <= compiled((1, v)), compiled)
     assert(spark.conf.getOption(key).isEmpty)
     assert(Files.list(plans).iterator.asScala.map(_.getFileName.toString).toSet ===
       Set("q_groupby_v0.txt", "q_groupby_v1.txt"))

@@ -69,4 +69,34 @@ class KafkaSourceSpec extends AnyFunSuite {
     val latest = IngestJob.latest(spark, cfg).collect()
     assert(latest.length === 1 && latest(0).getAs[Double]("last_value") === 2.0)
   }
+
+  test("the batch body writes sketch partials into the batch's partition; a replay leaves counts unchanged") {
+    val spark = TestSpark.spark
+    val base = java.nio.file.Files.createTempDirectory("graft_kafka_body").toString
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4,
+      cms = Some(IngestJob.CmsConfig("metric")), dds = Seq(IngestJob.DdsConfig("metric")))
+    def payload(m: String, ts: Long, v: Double) =
+      s"""{"metric":"$m","tags":{"host":"a"},"ts":$ts,"value":$v}""".getBytes
+    def wire(offset: Long, rows: (String, Long, Double)*) = KafkaSource.parse(spark.createDataFrame(
+      java.util.Arrays.asList(rows.zipWithIndex.map { case ((m, ts, v), i) =>
+        Row(m.getBytes, payload(m, ts, v), "t", 0, offset + i, new java.sql.Timestamp(0), 0)
+      }: _*), KafkaSource.WireSchema))
+    val body = IngestJob.batchBody(cfg)
+    body(wire(0, ("cpu", 1000, 1.0), ("cpu", 1060, 2.0), ("mem", 1000, 3.0)), 2L)
+    val b3 = wire(3, ("cpu", 1120, 4.0), ("disk", 1120, 5.0))
+    body(b3, 3L)
+    val conf = spark.sessionState.newHadoopConf()
+    for (dir <- Seq(IngestJob.cmsPath(cfg), IngestJob.ddsPath(cfg))) {
+      assert(graft.core.Fs.partitions(conf, dir, "batch_id").map(_._2).sorted === Seq("2", "3"), dir)
+      assert(graft.core.Fs.dataFiles(conf, dir).isEmpty, s"partials appended under the store root of $dir")
+    }
+    def counts() = (IngestJob.cmsCells(spark, cfg).collect().toSet,
+      IngestJob.ddsBuckets(spark, cfg).collect().toSet)
+    val before = counts()
+    // 5 points, each adding 1 to one cell of every count-min row
+    assert(before._1.toSeq.map(_.getAs[Long]("cnt")).sum === 5L * IngestJob.CmsConfig("metric").depth)
+    body(b3, 3L) // foreachBatch replays batch 3 after a failure
+    assert(counts() === before)
+  }
 }
