@@ -28,19 +28,24 @@ object Graft {
     QueryEngine.run(source.points(spark), q)
 
   /** Run a TSDB query against a STREAMED lake with A14 ladder routing:
-   *  a plain filtered downsample serves from the maintained rollup rung
-   *  whose served frontier reaches furthest, tie-breaking coarser
-   *  (hybrid-splitting at the winning rung's frontier, round 15); every
-   *  other query shape runs the raw engine path
-   *  unchanged. The JSON-front-end twin of [[registerRouted]] — same
-   *  frontier-snapshot semantics, so re-call per refresh tick on a live
-   *  lake. A lake with no flushed rung yet just runs raw. */
+   *  the engine plan of `q` is built over the lake's points marked with
+   *  its maintained rollup ladder ([[graft.plans.RollupRouting.routed]]),
+   *  and the [[graft.plans.RollupRouting]] rule serves its downsample —
+   *  under any filter, group-by, fill or analytics node above it — from
+   *  the rung whose served frontier reaches furthest, tie-breaking
+   *  coarser (hybrid-splitting at the winning rung's frontier, round 15).
+   *  A shape no rung can serve runs the raw engine path, reading only
+   *  the segments its range spans. The JSON-front-end twin of
+   *  [[registerRouted]] — same rule, same frontier-snapshot semantics,
+   *  so re-call per refresh tick on a live lake. A lake with no flushed
+   *  rung yet just runs raw. */
   def queryRouted(spark: SparkSession, cfg: graft.streaming.IngestJob.Config,
       q: TsdbQuery): DataFrame = {
     val points = graft.streaming.IngestJob.points(spark, cfg)
     val ladder = graft.streaming.IngestJob.rollupLadder(spark, cfg)
     if (ladder.isEmpty) QueryEngine.run(points, q)
-    else graft.rollup.Rollup.runQueryLadder(points, ladder, q)
+    else QueryEngine.run(graft.plans.RollupRouting.routed(spark, points, ladder), q,
+      assumeDeduped = true)
   }
 
   /** Register the ROUTED facade view for a streamed deployment: the

@@ -18,12 +18,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
 case class RollupStoreRef(plan: LogicalPlan, intervalSeconds: Long, frontier: Long)
 
 /**
- * Marker node for transparent rollup routing in SQL (A14 lifted into the
- * optimizer). `child` is the LWW-deduped points plan a temp view exposes;
- * `stores` is the rollup LADDER attached at registration — one or more
- * stored composites (e.g. 1h + 1d), each covering `child`'s ENTIRE time
- * domain at its own granularity up to its own flush frontier. The
- * reference's rollup-aware read picks among stored aggregation streams
+ * Marker node for transparent rollup routing (A14 lifted into the
+ * optimizer). `child` is the LWW-deduped points plan a routed frame
+ * exposes; `stores` is the rollup LADDER attached by [[RollupRouting.routed]]
+ * — one or more stored composites (e.g. 1h + 1d), each covering `child`'s
+ * ENTIRE time domain at its own granularity up to its own flush frontier.
+ * The reference's rollup-aware read picks among stored aggregation streams
  * the same way — interval id + aggregator bitmask per segment
  * (GorillaDownSampledTimeSeriesEncoder.java:85-120,138-180).
  *
@@ -43,13 +43,28 @@ case class RollupServable(
 }
 
 /**
+ * Pass-through node over the raw points inside a [[RollupServable]]'s
+ * child: it marks where the LWW dedupe reads its input, so the
+ * [[RollupRouting]] rule can apply a raw side's ts and series conjuncts
+ * BELOW the dedupe (see `RollupRouting.raw`). The rule removes it
+ * together with the marker.
+ */
+case class DedupeInput(child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override def maxRows: Option[Long] = child.maxRows
+  override protected def withNewChildInternal(newChild: LogicalPlan): DedupeInput =
+    copy(child = newChild)
+}
+
+/**
  * The reference's serve-from-rollup decision
  * (opentsdb/.../storage/AerospikeBatchQueryNode.java:196-226: stored
- * aggregator + exact interval divisibility) re-expressed as a Catalyst
- * rewrite, so plain `spark.sql` over the facade view gets A14 routing
- * transparently — the engine-path router ([[graft.rollup.Rollup]]) serves
- * programmatic queries; this rule serves the SQL front end from the SAME
- * stored composites.
+ * aggregator + exact interval divisibility) as a Catalyst rewrite — the
+ * ONE rung choice in graft. Every routed front end builds its plan over a
+ * [[routed]] frame and lets this rule decide: plain `spark.sql` over a
+ * registered view ([[registerLadder]], [[graft.Graft.registerRouted]])
+ * and the engine path ([[graft.Graft.queryRouted]], which runs
+ * [[graft.query.QueryEngine.run]] over the same frame).
  *
  * A downsample-shaped aggregate
  *
@@ -58,9 +73,9 @@ case class RollupServable(
  * FROM graft_points_lww WHERE ts >= a AND ts < b GROUP BY 1, 2, 3
  * }}}
  *
- * over a [[RollupServable]]-marked view is rewritten to scan ONLY the
- * COARSEST rollup store that can answer it exactly, when every condition
- * for an exact answer holds:
+ * over a [[RollupServable]]-marked frame is rewritten to scan ONLY the
+ * rollup store that can answer it exactly, when every condition for an
+ * exact answer holds:
  *
  *  - every grouping expression references `ts` only through a recognized
  *    BUCKETING CORE that is provably constant within each stored rollup
@@ -83,11 +98,19 @@ case class RollupServable(
  *        `to_unix_timestamp` wrappers) — legal when every wall-clock
  *        boundary instant of the truncation AND every zone transition
  *        inside the queried range lands on a multiple of the store
- *        interval (the [[graft.rollup.Rollup.canServeCalendar]] /
- *        `canServeTz` test, evaluated directly on the enumerated
- *        boundary set: Denver month starts are whole hours — a 1h store
- *        serves; Kolkata's +05:30 puts them on half hours — refused
- *        unless a 30m store is in the ladder);
+ *        interval (evaluated directly on the enumerated boundary set:
+ *        Denver month starts are whole hours — a 1h store serves;
+ *        Kolkata's +05:30 puts them on half hours — refused unless a 30m
+ *        store is in the ladder);
+ *      - the engine's compiled labels ([[graft.query.QueryEngine.downsample]]):
+ *        the calendar label, a literal step chain
+ *        `CASE WHEN ts >= b THEN b … END`, legal when every threshold
+ *        inside the served range is on the store grid; and the zone
+ *        label `((ts + O) - pmod(ts + O, iv)) - L`, with `O` a literal
+ *        offset or offset step chain and `L` a function of the local
+ *        bucket alone, legal when `iv` is a multiple of the store
+ *        interval, every value of `O` is too, and every threshold of `O`
+ *        inside the served range is on the grid;
  *  - every aggregate is sum/min/max/count/avg/stddev_samp/last of the
  *    NaN-cleaned value (`CASE WHEN isnan(value) THEN NULL ELSE value
  *    END`, or `nanvl(value, NULL)`) — the exact event space the stored
@@ -99,37 +122,38 @@ case class RollupServable(
  *    END)` from the stored `last` column when the grouping pins the
  *    series (LAST is a stored aggregator in the reference's
  *    downsampled stream, core/downsample/AggregatorType.java);
- *  - every ts range bound is store-aligned (`a % rSec == 0`), so stored
- *    rows clip exactly like raw points — an unaligned bound would let an
- *    edge composite row smuggle out-of-range points into the first or
- *    last bucket;
+ *  - the lower ts bound is store-aligned (`a % rSec == 0`), so stored
+ *    rows clip exactly like raw points — an unaligned start would let
+ *    the first composite row smuggle out-of-range points into the first
+ *    bucket. An upper bound off the grid splits instead: the store
+ *    serves up to the last split label on the grid, the rest reads raw;
  *  - all other conjuncts reference only series identity columns or ts
  *    through a legal core (they carry over to the store scan: the
  *    composite holds per-series rows).
  *
  * Anything else — count(*) (row count ≠ value count), plain sum(value)
  * (NaN-poisoning semantics the composite cannot reproduce), predicates
- * on value/seq, unaligned bounds, non-deterministic expressions — falls
+ * on value/seq, unaligned starts, non-deterministic expressions — falls
  * back: first to the next-finer store in the ladder, then by stripping
  * the marker so the query runs raw and stays correct. The output schema
  * (names, exprIds, types) is preserved exactly, so parent operators
- * never notice the substitution.
+ * never notice the substitution. Every raw side — a stripped marker or a
+ * hybrid tail — applies its ts and series conjuncts below the LWW dedupe
+ * ([[raw]]), so it scans only the segments it spans.
  *
  * A MAINTAINED store (frontier < ∞) additionally splits a
  * frontier-straddling range hybrid: closed query buckets from the store
- * UNION the open tail raw, the engine router's discipline
- * ([[graft.rollup.Rollup.downsampleHybrid]]) at the SQL layer — a
- * dashboard's trailing window never forfeits the store for its closed
- * days. The split keys on any group expr that is an INJECTIVE bucket
- * axis — a bare core, Spark's window() struct, or the epoch-lift
- * calendar idioms — and lands on the largest axis label at or below the
- * frontier (a calendar axis splits on a wall boundary, so a mid-bucket
- * frontier never bisects a local day). Results equal the raw computation up to floating-point summation
- * ORDER (the same nondeterminism any Spark aggregation has across
- * partitionings); the oracle rows pin equality at the engine's
- * round-4 contract.
+ * UNION the open tail raw — a dashboard's trailing window never forfeits
+ * the store for its closed days. The split keys on any group expr that
+ * is an INJECTIVE bucket axis — a bare core, Spark's window() struct, or
+ * the epoch-lift calendar idioms — and lands on the largest axis label at
+ * or below the frontier (a calendar or zone axis splits on a label, so a
+ * mid-bucket frontier never bisects a local day). Results equal the raw
+ * computation up to floating-point summation ORDER (the same
+ * nondeterminism any Spark aggregation has across partitionings); the
+ * oracle rows pin equality at the engine's round-4 contract.
  *
- * Scale: this is the difference between a SQL dashboard aggregating a
+ * Scale: this is the difference between a dashboard aggregating a
  * 100 TB fact table and the same dashboard reading a composite that is
  * ~1/3600th of it — and with a ladder, a DAILY dashboard reads the 1d
  * store (24× fewer rows again) instead of re-aggregating the 1h one —
@@ -139,30 +163,36 @@ case class RollupServable(
 object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Register `viewName` as the LWW-deduped points view with one rollup
-   *  store attached for transparent serving — see [[registerLadder]] for
-   *  the full contract (this is the single-store special case). */
+   *  store attached for transparent serving — see [[routed]] for the
+   *  full contract (this is the single-store special case). */
   def registerView(spark: SparkSession, points: DataFrame, rollupStore: DataFrame,
       rollupInterval: String, viewName: String,
       rollupUntil: Long = Long.MaxValue): Unit =
     registerLadder(spark, points, Seq((rollupStore, rollupInterval, rollupUntil)),
       viewName)
 
-  /** Register `viewName` as the LWW-deduped points view with a rollup
-   *  LADDER attached: `stores` is (composite, interval, frontier) per
-   *  rung, e.g. the 1h and 1d stores an ingest maintains. Queries are
-   *  served from the rung whose served frontier reaches FURTHEST,
-   *  tie-breaking coarser (round 15): with complete stores a daily
-   *  dashboard reads the 1d store and an hourly one the 1h store, a
-   *  non-dividing bucket falls to the finer rung before falling back to
-   *  raw — and when an independently-maintained coarse rung lags, a
-   *  fully-flushed finer rung serves the whole range instead of the
-   *  dashboard re-scanning the coarse rung's open tail raw. The
-   *  reference's per-segment interval-id dispatch
+  /** Register [[routed]]`(spark, points, stores)` as the temp view
+   *  `viewName`, for plain `spark.sql` users. */
+  def registerLadder(spark: SparkSession, points: DataFrame,
+      stores: Seq[(DataFrame, String, Long)], viewName: String): Unit =
+    routed(spark, points, stores).createOrReplaceTempView(viewName)
+
+  /** The LWW-deduped `points` with a rollup LADDER attached: `stores` is
+   *  (composite, interval, frontier) per rung, e.g. the 1h and 1d stores
+   *  an ingest maintains. Any aggregate built over the returned frame —
+   *  SQL over a view of it, or [[graft.query.QueryEngine.run]] with
+   *  `assumeDeduped = true` — is served from the rung whose served
+   *  frontier reaches FURTHEST, tie-breaking coarser (round 15): with
+   *  complete stores a daily dashboard reads the 1d store and an hourly
+   *  one the 1h store, a non-dividing bucket falls to the finer rung
+   *  before falling back to raw — and when an independently-maintained
+   *  coarse rung lags, a fully-flushed finer rung serves the whole range
+   *  instead of the dashboard re-scanning the coarse rung's open tail
+   *  raw. The reference's per-segment interval-id dispatch
    *  (GorillaDownSampledTimeSeriesEncoder.java:138-180).
    *
-   *  REGISTRATION CONTRACT (not merely a bound check — violating it
-   *  diverges silently, the same `ts >= 0` assumption
-   *  [[SegmentPruning]] makes):
+   *  CONTRACT (not merely a bound check — violating it diverges
+   *  silently, the same `ts >= 0` assumption [[SegmentPruning]] makes):
    *   - each store is the exact [[graft.rollup.Rollup.build]] composite
    *     of `points` over its whole time domain at its interval, up to
    *     its frontier;
@@ -180,9 +210,9 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
    *  [[graft.core.GraftSession]] / `spark.sql.extensions =
    *  graft.plans.GraftExtensions`) — otherwise the marker node would
    *  survive to planning and fail with an obscure error far from the
-   *  registration site, so this refuses upfront instead. */
-  def registerLadder(spark: SparkSession, points: DataFrame,
-      stores: Seq[(DataFrame, String, Long)], viewName: String): Unit = {
+   *  call site, so this refuses upfront instead. */
+  def routed(spark: SparkSession, points: DataFrame,
+      stores: Seq[(DataFrame, String, Long)]): DataFrame = {
     require(stores.nonEmpty, "rollup ladder needs at least one store")
     stores.foreach { case (_, interval, _) =>
       // refuse a permanently-dead rung (e.g. "0all" parses to -1) HERE,
@@ -191,14 +221,15 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
         s"not a positive rollup interval: $interval")
     }
     requireInstalled(spark)
-    val deduped = graft.query.QueryEngine.dedupeConfigured(points)
+    val deduped = graft.query.QueryEngine.dedupeConfigured(
+      GraftSqlBridge.ofRows(spark, DedupeInput(points.queryExecution.analyzed)))
     val marker = RollupServable(
       deduped.queryExecution.analyzed,
       stores.map { case (df, interval, until) =>
         RollupStoreRef(df.queryExecution.analyzed,
           Intervals.toSeconds(interval), until)
       })
-    GraftSqlBridge.ofRows(spark, marker).createOrReplaceTempView(viewName)
+    GraftSqlBridge.ofRows(spark, marker)
   }
 
   /** Probe that this session's optimizer actually carries the routing
@@ -218,10 +249,60 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case agg: Aggregate if unwrap(agg.child).isDefined =>
-      tryServe(agg).getOrElse(agg.transform { case m: RollupServable => m.child })
-    // marker in any non-servable position (SELECT *, joins, limits…):
-    // plain pass-through
-    case m: RollupServable => m.child
+      val (cs, renames, m) = unwrap(agg.child).get
+      val conjuncts = cs.map(normalize(renames, _))
+      tryServe(agg, conjuncts, renames, m)
+        .getOrElse(agg.transform { case m: RollupServable => raw(m, conjuncts) })
+    // marker under filters in any other position (a rate window, a
+    // SELECT *): raw, with the filters' ts and series conjuncts also
+    // applied below the dedupe
+    case p @ (_: Filter | _: Project) if unwrap(p).isDefined =>
+      val (cs, renames, _) = unwrap(p).get
+      p.transform { case m: RollupServable => raw(m, cs.map(normalize(renames, _))) }
+    // marker in any other position (joins, limits…): plain pass-through
+    case m: RollupServable => raw(m, Nil)
+  }
+
+  /** The series-identity and time columns: conjuncts over these alone
+   *  commute with the LWW dedupe, which keeps or drops whole
+   *  (series, ts) groups. */
+  private val DedupeKeys = Set("ts", "series_id", "metric", "tags")
+
+  /** The marker's raw side: its LWW-deduped points, with every conjunct
+   *  of `conjuncts` (over the marker's output) that reads only
+   *  [[DedupeKeys]] ALSO applied below the dedupe, at its
+   *  [[DedupeInput]] — so the scan under it prunes segments and pushes
+   *  the ts bounds instead of deduping the whole lake. The caller keeps
+   *  every conjunct above as well; ones over value or seq stay there
+   *  only. Columns are matched by name: the window dedupe passes its
+   *  input attributes through, the hashagg dedupe re-aliases them. */
+  private def raw(m: RollupServable, conjuncts: Seq[Expression]): LogicalPlan = {
+    val keys = AttributeSet(m.child.output.filter(a => DedupeKeys(a.name)))
+    val movable = conjuncts.filter(c => c.deterministic && c.references.nonEmpty &&
+      c.references.subsetOf(keys) && !SubqueryExpression.hasSubquery(c))
+    m.child.transformDown { case d: DedupeInput =>
+      val byName = d.output.map(a => a.name -> a).toMap
+      val below = movable
+        .filter(_.references.forall(a => byName.contains(a.name)))
+        .map(_.transform { case a: AttributeReference if keys.contains(a) => byName(a.name) })
+      below.reduceOption(And).fold(d.child)(Filter(_, d.child))
+    }
+  }
+
+  /** Inline view-compensation / pulled-out-grouping aliases down to the
+   *  marker's own attributes, so all pattern matching sees one id space
+   *  over one expression shape. Alias chains are short; iterate to a
+   *  bounded fixpoint. */
+  private def normalize(renames: Map[ExprId, Expression], e: Expression): Expression = {
+    var cur = e
+    var i = 0
+    while (i < 8 && cur.references.exists(a => renames.contains(a.exprId))) {
+      cur = cur.transformUp {
+        case a: AttributeReference if renames.contains(a.exprId) => renames(a.exprId)
+      }
+      i += 1
+    }
+    cur
   }
 
   /** Peel filters and projects off the path from an aggregate to the
@@ -298,12 +379,18 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
 
   /** What a recognized bucketing core buckets by: a fixed epoch-anchored
    *  width (seconds), the same at microsecond precision with an anchor
-   *  offset (Spark's `window()` lowering), or a civil-calendar
-   *  truncation in a zone. */
+   *  offset (Spark's `window()` lowering), a civil-calendar truncation in
+   *  a zone, or one of the engine's compiled labels — a literal step
+   *  chain of ts (`steps` = (threshold, value) in evaluation order, then
+   *  the else value), or the zone label over the local bucket `local`
+   *  with offset steps `offsets`. */
   private sealed trait BucketShape
   private case class UniformBucket(n: Long) extends BucketShape
   private case class UniformMicrosBucket(nUs: Long, offUs: Long) extends BucketShape
   private case class CalendarBucket(unit: String, zone: String) extends BucketShape
+  private case class StepBucket(steps: Seq[(Long, Long)], otherwise: Long) extends BucketShape
+  private case class ZoneBucket(core: Expression, local: Expression, iv: Long,
+      offsets: Seq[(Long, Long)], otherwise: Long) extends BucketShape
 
   /** date_trunc units this rule can enumerate boundaries for (SECOND and
    *  finer truncate below any storable rollup — never servable). */
@@ -358,25 +445,9 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
     if (steps >= 200000) None else Some(out.toList)
   }
 
-  private def tryServe(agg: Aggregate): Option[LogicalPlan] = {
-    val (rawConjuncts, renames, marker) = unwrap(agg.child).get
-
-    /** Inline view-compensation / pulled-out-grouping aliases down to the
-     *  marker's own attributes, so all pattern matching below sees one id
-     *  space over one expression shape. Alias chains are short; iterate
-     *  to a bounded fixpoint. */
-    def normalize(e: Expression): Expression = {
-      var cur = e
-      var i = 0
-      while (i < 8 && cur.references.exists(a => renames.contains(a.exprId))) {
-        cur = cur.transformUp {
-          case a: AttributeReference if renames.contains(a.exprId) => renames(a.exprId)
-        }
-        i += 1
-      }
-      cur
-    }
-    val conjuncts = rawConjuncts.map(normalize)
+  private def tryServe(agg: Aggregate, conjuncts: Seq[Expression],
+      renames: Map[ExprId, Expression], marker: RollupServable): Option[LogicalPlan] = {
+    def normalize(e: Expression): Expression = RollupRouting.normalize(renames, e)
     // ColumnPruning's generic case prunes the marker's CHILD down to what
     // the query references (a count() wrapper needs no `value`; a
     // groups-only distinct may not need `ts`), so these are looked up
@@ -399,6 +470,27 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
           case _ => None
         }
         case SecondsToTimestamp(a: AttributeReference) if isTs(a) => Some(a)
+        case _ => None
+      }
+    }
+
+    /** A literal step function of ts: a foldable integral, or the literal
+     *  CASE chain the engine compiles zone offsets and calendar labels to
+     *  (`CASE WHEN ts >= t THEN v … ELSE rest END`, nested or flat, maybe
+     *  cast to long) → ((threshold, value) in evaluation order, else
+     *  value). It changes value only at its thresholds. */
+    object TsSteps {
+      def unapply(e: Expression): Option[(Seq[(Long, Long)], Long)] = e match {
+        case IntegralLiteral(v) => Some((Nil, v))
+        case c: Cast if c.dataType == LongType &&
+            (c.child.dataType == IntegerType || c.child.dataType == LongType) =>
+          unapply(c.child)
+        case CaseWhen(branches, Some(TsSteps(rest, otherwise))) =>
+          val steps = branches.collect {
+            case (GreaterThanOrEqual(a: AttributeReference, IntegralLiteral(t)),
+                IntegralLiteral(v)) if isTs(a) => t -> v
+          }
+          if (steps.size == branches.size) Some((steps ++ rest, otherwise)) else None
         case _ => None
       }
     }
@@ -497,8 +589,34 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
             case _ => None
           }
         }
+      // the engine's zone label ((ts + O) - pmod(ts + O, iv)) - L
+      // ([[graft.query.QueryEngine.tzBucket]]): O a literal step chain of
+      // ts (the zone's offsets), L any function of the local bucket alone
+      // (the label's offset)
+      case Subtract(local @ Subtract(Add(t1: AttributeReference, o1 @ TsSteps(offs, off0), _),
+          p: Pmod, _), label, _)
+          if isTs(t1) && label.deterministic && (p.right match {
+            case IntegralLiteral(iv) => iv > 0
+            case _ => false
+          }) && (p.left match {
+            case Add(t2: AttributeReference, o2, _) => isTs(t2) && o2.semanticEquals(o1)
+            case _ => false
+          }) && !label.transformDown {
+            case x if x.semanticEquals(local) => Literal(0L)
+          }.references.exists(a => tsA.exists(_.exprId == a.exprId)) =>
+        val IntegralLiteral(iv) = p.right: @unchecked
+        Some(ZoneBucket(e, local, iv, offs, off0))
+      // the engine's calendar label ([[graft.query.QueryEngine.calendarBucket]])
+      case TsSteps(steps, otherwise) if steps.nonEmpty => Some(StepBucket(steps, otherwise))
       case _ => None
     }
+
+    /** `e` with ts bound to `t`, evaluated on the driver. */
+    def evalAt(e: Expression, t: Long): Option[Long] =
+      try e.transform { case a: AttributeReference if isTs(a) => Literal(t) }.eval() match {
+        case v: java.lang.Long => Some(v)
+        case _ => None
+      } catch { case scala.util.control.NonFatal(_) => None }
 
     // --- filter pass 1 (store-independent): ts range bounds; everything
     // else deferred to per-store rewriting. `kept` holds the normalized
@@ -538,7 +656,7 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
     // pre-1970 instants: the store buckets with Spark's TRUNCATED `%`
     // (bucket_ts = -3600 holds ts ∈ (-7200, -3600]), so range clipping
     // by bucket_ts would admit out-of-range points — refuse and run raw,
-    // the same ts >= 0 registration contract [[registerLadder]] states
+    // the same ts >= 0 contract [[routed]] states
     if (lo.exists(_ < 0) || hi.exists(_ < 0)) return None
     val deferredC = deferred.result()
     val notNullTs = keptNotNullTs.result()
@@ -603,27 +721,29 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
       val rSec = store.intervalSeconds
       if (rSec <= 0) return None
       if (lo.exists(v => Math.floorMod(v, rSec) != 0L)) return None
-      if (hi.exists(v => Math.floorMod(v, rSec) != 0L)) return None
 
-      // --- the flush frontier of a MAINTAINED store, decided FIRST: the
-      // head range [lo, split) is what the store must legally serve, so
-      // the calendar legality below enumerates boundaries/transitions
-      // over it (the engine path's sub-range discipline,
-      // [[graft.rollup.Rollup.downsampleHybrid]]). A range wholly below
-      // the frontier serves outright; a straddling range SPLITS on the
-      // largest query-bucket label at or below the frontier — closed
-      // buckets from the store, the open tail raw. The split keys on an
-      // INJECTIVE bucket axis among the group exprs ([[splitAxis]]
-      // above), so no group's rows land on both sides.
+      // --- the head the store can serve, decided FIRST: the head range
+      // [lo, split) is what the store must legally serve, so the
+      // calendar legality below enumerates boundaries/transitions over
+      // it. The head ends at the store's flush frontier when it is
+      // MAINTAINED, and at the last grid instant at or below `hi` when
+      // `hi` is off the store grid (a stored row there would carry
+      // points past `hi`). A range wholly inside serves outright; any
+      // other range SPLITS on the largest query-bucket label at or below
+      // that limit — closed buckets from the store, the rest raw. The
+      // split keys on an INJECTIVE bucket axis among the group exprs
+      // ([[splitAxis]] above), so no group's rows land on both sides.
+      val hiOnGrid = hi.forall(v => Math.floorMod(v, rSec) == 0L)
+      val limit = math.min(store.frontier, hi.getOrElse(Long.MaxValue))
       def axisBoundary(shape: BucketShape): Option[Long] = shape match {
         case UniformBucket(n) =>
-          Some(store.frontier - Math.floorMod(store.frontier, n))
+          Some(limit - Math.floorMod(limit, n))
         case UniformMicrosBucket(nUs, offUs) =>
           // largest µs-grid label (≡ offUs mod nUs) at or below the
-          // frontier, expressed back in whole seconds
-          if (store.frontier > Long.MaxValue / 1000000L) None
+          // limit, expressed back in whole seconds
+          if (limit > Long.MaxValue / 1000000L) None
           else {
-            val fUs = store.frontier * 1000000L
+            val fUs = limit * 1000000L
             val b = fUs - Math.floorMod(fUs - offUs, nUs)
             if (Math.floorMod(b, 1000000L) != 0L) None else Some(b / 1000000L)
           }
@@ -638,11 +758,39 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
             // day) resolves two walls to one instant, which would let
             // one group label occur on both sides of the split
             if bs.zip(bs.drop(1)).forall { case (x, y) => x < y }
-            f <- bs.takeWhile(_ <= store.frontier).lastOption
+            f <- bs.takeWhile(_ <= limit).lastOption
+          } yield f
+        case StepBucket(steps, otherwise) =>
+          // a label chain — each value its own threshold, thresholds
+          // descending in evaluation order, the else value below them
+          // all — labels ts by the largest threshold at or below it, so
+          // every threshold splits it
+          val ts = steps.map(_._1)
+          if (steps.forall { case (t, v) => t == v } && otherwise < ts.last &&
+              ts.zip(ts.drop(1)).forall { case (x, y) => x > y })
+            ts.find(_ <= limit)
+          else None
+        case ZoneBucket(core, local, iv, offsets, otherwise) =>
+          // the label of the bucket holding the limit, evaluated on the
+          // driver. It splits when it is a label of its own bucket and
+          // the second before it is not in that bucket, and the labels
+          // never decrease: the local bucket never steps back at an
+          // offset threshold, and consecutive local buckets (iv apart)
+          // cannot trade order through offsets that differ by < iv
+          val offs = otherwise +: offsets.map(_._2)
+          val monotone = offs.max - offs.min < iv && offsets.forall { case (t, _) =>
+            (for (x <- evalAt(local, t - 1); y <- evalAt(local, t)) yield x <= y)
+              .getOrElse(false)
+          }
+          for {
+            f <- evalAt(core, limit)
+            if monotone && f <= limit && evalAt(core, f).contains(f)
+            if evalAt(core, f - 1).exists(_ < f)
           } yield f
       }
       val frontierSplit: Option[Long] =
-        if (store.frontier == Long.MaxValue || hi.exists(_ <= store.frontier)) None
+        if (hiOnGrid && (store.frontier == Long.MaxValue || hi.exists(_ <= store.frontier)))
+          None
         else {
           val cands = splitAxes.flatMap(axisBoundary)
             .filter(f => Math.floorMod(f, rSec) == 0L)
@@ -703,6 +851,17 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
               case _ => false
             }
           })
+        case StepBucket(steps, _) => stepsOnGrid(steps)
+        case ZoneBucket(_, _, iv, offsets, otherwise) =>
+          // every offset a grid multiple: each stored row lies on one
+          // offset and its local clock inside one local bucket
+          iv % rSec == 0 && stepsOnGrid(offsets) &&
+            (otherwise +: offsets.map(_._2)).forall(o => Math.floorMod(o, rSec) == 0L)
+      }
+      /** A step function of ts is constant on every stored row of the
+       *  served range when each threshold inside it is on the grid. */
+      def stepsOnGrid(steps: Seq[(Long, Long)]): Boolean = steps.forall { case (t, _) =>
+        lo.exists(t <= _) || servedHi.exists(t >= _) || Math.floorMod(t, rSec) == 0L
       }
 
       /** `value` only in its NaN-cleaned form — the composite's event
@@ -773,10 +932,9 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
             case sd: StddevSamp if cleanValue(sd.child) =>
               // sample stddev from the stored moments — the reason the
               // reference's composite carries sumofsquare at all
-              // (core/downsample/SumOfSquareAggregator.java:24); the same
-              // reconstruction Rollup.serve uses, with greatest(0, ·)
-              // clamping the tiny negative variance FP can produce when
-              // all values are equal
+              // (core/downsample/SumOfSquareAggregator.java:24), with
+              // greatest(0, ·) clamping the tiny negative variance FP can
+              // produce when all values are equal
               val n = Cast(fresh(Sum(cntA)), DoubleType)
               val s = fresh(Sum(sumA))
               val sq = fresh(Sum(sumsqA))
@@ -895,13 +1053,12 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
         case None => Some((served, Long.MaxValue))
         case Some(f) =>
           // raw tail [f, hi): the original aggregate, normalized to the
-          // marker's own attribute space, over the unrouted child. Result
+          // marker's own attribute space, over the marker's raw side. Result
           // aliases get FRESH ids — Union takes its output from the served
           // branch, and sibling branches must not share defining ids.
           val ts = tsA.getOrElse(return None)
-          val keptRaw = deferredC ++ notNullTs
-          val rawCond = (Seq[Expression](GreaterThanOrEqual(ts, Literal(f))) ++
-            hi.map(v => LessThan(ts, Literal(v))) ++ keptRaw).reduce(And)
+          val rawConjuncts = Seq[Expression](GreaterThanOrEqual(ts, Literal(f))) ++
+            hi.map(v => LessThan(ts, Literal(v))) ++ deferredC ++ notNullTs
           // normalize() can turn a bare view attribute into a non-named
           // expression (a derived-table alias inlines to GetMapValue /
           // the floor arithmetic) — re-alias those under the original
@@ -911,7 +1068,8 @@ object RollupRouting extends Rule[LogicalPlan] with PredicateHelper {
             case (_, n: NamedExpression) => n
             case (ne, other) => Alias(other, ne.name)()
           }
-          val rawAgg = pullOutGroups(normGroups, rawResult, Filter(rawCond, marker.child))
+          val rawAgg = pullOutGroups(normGroups, rawResult,
+            Filter(rawConjuncts.reduce(And), raw(marker, rawConjuncts)))
           val typesMatch = rawAgg.output.zip(served.output).forall { case (a, b) =>
             a.dataType == b.dataType
           }

@@ -1,17 +1,21 @@
 package graft.queries
 
-import graft.query.DownsampleSpec
+import graft.filters.MatchAll
+import graft.plans.RollupRouting
+import graft.query.{DownsampleSpec, QueryEngine, TsdbQuery}
 import graft.rollup.Rollup
 import graft.sources.TsdbViews
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Rollup-routed downsample queries (A10 + A14). Each query builds the 1h
- * rollup table from raw points, routes a coarser downsample through it
- * (or falls back to raw when the interval doesn't divide), and is
- * checked against a DuckDB oracle computing the answer directly from raw
- * points — proving the two-stage rollup aggregation is lossless.
+ * Rollup-routed downsample queries (A10 + A14). Each query routes a
+ * downsample through the persisted 1h (and 1d) rollup stores — the
+ * engine path over [[RollupRouting.routed]], or plain SQL over a view of
+ * it — so the [[RollupRouting]] rule serves it from a store (or falls
+ * back to raw when the interval doesn't divide), and is checked against
+ * a DuckDB oracle computing the answer directly from raw points —
+ * proving the two-stage rollup aggregation is lossless.
  */
 object RollupQueries {
   import OracleCommon._
@@ -38,7 +42,7 @@ object RollupQueries {
    *  aggregates over it are served from the store by the
    *  [[graft.plans.RollupRouting]] optimizer rule when exact. */
   private def routedView(s: SparkSession, d: String): Unit =
-    graft.plans.RollupRouting.registerView(s, TsdbViews.points(s, d),
+    RollupRouting.registerView(s, TsdbViews.points(s, d),
       s.read.parquet(storeFor(s, d)), RollupInterval, "graft_points_routed")
 
   /** Register the LADDER facade view `graft_points_ladder` (1h + 1d
@@ -47,10 +51,13 @@ object RollupQueries {
    *  complete, a daily dashboard reads the 1d composite and an hourly
    *  one the 1h (plan-asserted in RollupRoutingSpec). */
   private def ladderView(s: SparkSession, d: String): Unit =
-    graft.plans.RollupRouting.registerLadder(s, TsdbViews.points(s, d),
-      Seq((s.read.parquet(dailyStoreFor(s, d)), "1d", Long.MaxValue),
-        (s.read.parquet(storeFor(s, d)), RollupInterval, Long.MaxValue)),
+    RollupRouting.registerLadder(s, TsdbViews.points(s, d), ladder(s, d),
       "graft_points_ladder")
+
+  /** The complete 1d + 1h ladder, with the 1d rung's frontier at `daily`. */
+  private def ladder(s: SparkSession, d: String, daily: Long = Long.MaxValue) =
+    Seq((s.read.parquet(dailyStoreFor(s, d)), "1d", daily),
+      (s.read.parquet(storeFor(s, d)), RollupInterval, Long.MaxValue))
 
   /** A LAGGING-ladder facade (round 15): the 1d rung's flush frontier
    *  stops mid-range while the 1h rung is fully flushed. The dispatch
@@ -60,17 +67,23 @@ object RollupQueries {
   private val MidFrontier = Start + 10 * 86400L
 
   private def ladderLagView(s: SparkSession, d: String): Unit =
-    graft.plans.RollupRouting.registerLadder(s, TsdbViews.points(s, d),
-      Seq((s.read.parquet(dailyStoreFor(s, d)), "1d", MidFrontier),
-        (s.read.parquet(storeFor(s, d)), RollupInterval, Long.MaxValue)),
+    RollupRouting.registerLadder(s, TsdbViews.points(s, d), ladder(s, d, MidFrontier),
       "graft_points_ladder_lag")
 
-  private def routed(s: SparkSession, d: String, spec: DownsampleSpec): DataFrame = {
-    val pts = TsdbViews.points(s, d)
-      .filter(col("ts") >= lit(Start) && col("ts") < lit(End))
-    val rollup = Rollup.build(pts, RollupInterval)
-    Rollup.downsampleRouted(pts, rollup, RollupInterval, spec, Start, End)
-  }
+  /** The engine path: `spec` over [from, to) through [[QueryEngine.run]]
+   *  over the points marked with `stores` — the rule serves it. */
+  private def engineRouted(s: SparkSession, d: String,
+      stores: Seq[(DataFrame, String, Long)], spec: DownsampleSpec,
+      from: Long = Start, to: Long = End): DataFrame =
+    QueryEngine.run(RollupRouting.routed(s, TsdbViews.points(s, d), stores),
+      TsdbQuery(MatchAll, from, to, downsample = Some(spec)), assumeDeduped = true)
+
+  /** The complete 1h store alone, up to `until`. */
+  private def hourly(s: SparkSession, d: String, until: Long = Long.MaxValue) =
+    Seq((s.read.parquet(storeFor(s, d)), RollupInterval, until))
+
+  private def routed(s: SparkSession, d: String, spec: DownsampleSpec): DataFrame =
+    engineRouted(s, d, hourly(s, d), spec)
 
   private def out(df: DataFrame, name: String): DataFrame =
     df.select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
@@ -88,7 +101,7 @@ object RollupQueries {
     "q_rollup_dev" -> ((s, d) => out(routed(s, d, DownsampleSpec("1d", "dev")), "dev_value")),
     // TIMEZONE-aligned serving: Denver local-midnight daily sums from
     // the stored 1h composites (legal — every Jan-2024 offset is a
-    // whole hour, Rollup.canServeTz). Shares q_ds_tz's oracle verbatim,
+    // whole hour, so every stored row lies inside one local day). Shares q_ds_tz's oracle verbatim,
     // so a serve-side bucketing that diverges from the raw zone
     // expression by one row fails the hash.
     "q_rollup_tz" -> ((s, d) => out(routed(s, d,
@@ -112,39 +125,26 @@ object RollupQueries {
     // non-uniform, so an epoch floor could bisect a local day). Shares
     // q_ds_tz's oracle verbatim: a double-emitted or lost straddling
     // bucket fails the hash.
-    "q_rollup_tz_hybrid" -> { (s, d) =>
-      val pts = TsdbViews.points(s, d)
-        .filter(col("ts") >= lit(Start) && col("ts") < lit(End))
-      val rollup = Rollup.build(pts, RollupInterval)
-      out(Rollup.downsampleHybrid(pts, rollup, RollupInterval,
-        DownsampleSpec("1d", "sum", timezone = Some("America/Denver")),
-        Start, End, Start + 10 * 86400 + 3600), "sum_value")
-    },
+    "q_rollup_tz_hybrid" -> ((s, d) =>
+      out(engineRouted(s, d, hourly(s, d, until = Start + 10 * 86400 + 3600),
+        DownsampleSpec("1d", "sum", timezone = Some("America/Denver"))), "sum_value")),
     // CALENDAR serving (round 11): Denver MONTHLY sums from the stored
     // 1h composites — legal because every month boundary is a local
     // midnight on a whole-hour offset, so no stored row straddles two
-    // months (Rollup.canServeCalendar). Shares q_ds_month_tz's raw-scan
+    // months). Shares q_ds_month_tz's raw-scan
     // oracle verbatim: a stored row mis-floored across the Dec/Jan
     // local boundary fails the hash.
-    "q_rollup_month_tz" -> { (s, d) =>
-      val pts = TsdbViews.points(s, d)
-        .filter(col("ts") >= lit(DataStart) && col("ts") < lit(TzFillEnd))
-      val rollup = Rollup.build(pts, RollupInterval)
-      out(Rollup.downsampleRouted(pts, rollup, RollupInterval,
+    "q_rollup_month_tz" -> ((s, d) =>
+      out(engineRouted(s, d, hourly(s, d),
         DownsampleSpec("1n", "sum", timezone = Some("America/Denver")),
-        DataStart, TzFillEnd), "sum_value")
-    },
+        DataStart, TzFillEnd), "sum_value")),
     // quarters ("3n") through the same serve: the epoch-calendar
     // anchoring (Oct 1 2023 label for the early-January rows) must
     // survive the stored-row path; q_ds_quarter_tz's oracle verbatim
-    "q_rollup_quarter_tz" -> { (s, d) =>
-      val pts = TsdbViews.points(s, d)
-        .filter(col("ts") >= lit(DataStart) && col("ts") < lit(TzFillEnd))
-      val rollup = Rollup.build(pts, RollupInterval)
-      out(Rollup.downsampleRouted(pts, rollup, RollupInterval,
+    "q_rollup_quarter_tz" -> ((s, d) =>
+      out(engineRouted(s, d, hourly(s, d),
         DownsampleSpec("3n", "sum", timezone = Some("America/Denver")),
-        DataStart, TzFillEnd), "sum_value")
-    },
+        DataStart, TzFillEnd), "sum_value")),
     // 90m does not divide by 1h ⇒ the router must fall back to raw points
     "q_rollup_fallback" -> ((s, d) => out(routed(s, d, DownsampleSpec("90m", "sum")), "sum_value")),
     // A14 FOR SQL USERS (round 12): the identical daily-sum SQL a user
@@ -179,7 +179,7 @@ object RollupQueries {
     // A14 HYBRID at the SQL layer (round 12): the marked view carries a
     // store TRUNCATED at a mid-range flush frontier, so the rewrite must
     // SPLIT — closed days served from the store UNION the open tail run
-    // raw — exactly downsampleHybrid's no-partial-merge discipline, now
+    // raw — the same no-partial-merge split the engine path gets,
     // transparent to a SQL user whose dashboard window straddles the
     // frontier. Shares q_rollup_sum's oracle verbatim: a split that
     // loses, double-counts, or mis-floors the straddling day fails the
@@ -367,8 +367,8 @@ object RollupQueries {
     // zone-truncation idiom a SQL user writes for Denver months —
     // from_utc→trunc→to_utc→epoch — served from the stored 1h composite
     // because every Denver month boundary AND the in-range spring-forward
-    // land on whole hours (the same legality Rollup.canServeCalendar
-    // proves on the engine path; Kolkata's +05:30 walls refuse,
+    // land on whole hours (the same legality the engine path's
+    // q_rollup_month_tz gets; Kolkata's +05:30 walls refuse,
     // spec-pinned). Shares q_ds_month_tz's raw-scan oracle verbatim: a
     // stored row mis-floored across the Dec/Jan local boundary fails the
     // hash.
@@ -461,16 +461,11 @@ object RollupQueries {
            |WHERE ts >= $Start AND ts < $End
            |GROUP BY 1, 2, 3""".stripMargin)
     },
-    // the engine-path twin: downsampleLadder over the same lagging rung
-    // set picks the 1h rung by served-frontier rank — shared oracle
-    "q_rollup_ladder_fresh" -> { (s, d) =>
-      val pts = TsdbViews.points(s, d)
-        .filter(col("ts") >= lit(Start) && col("ts") < lit(End))
-      out(graft.rollup.Rollup.downsampleLadder(pts,
-        Seq((s.read.parquet(dailyStoreFor(s, d)), "1d", MidFrontier),
-          (s.read.parquet(storeFor(s, d)), RollupInterval, Long.MaxValue)),
-        DownsampleSpec("1d", "sum"), Start, End), "sum_value")
-    },
+    // the engine-path twin: the same lagging rung set, and the rule
+    // picks the 1h rung by served-frontier rank — shared oracle
+    "q_rollup_ladder_fresh" -> ((s, d) =>
+      out(engineRouted(s, d, ladder(s, d, MidFrontier), DownsampleSpec("1d", "sum")),
+        "sum_value")),
     // the SQL fallback: a 90m bucket is not a multiple of the stored 1h,
     // so the rule must refuse and the query runs raw over the marked
     // view — q_rollup_fallback's oracle verbatim

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.query.{DownsampleSpec, QueryEngine}
+import graft.query.{DownsampleSpec, QueryEngine, TsdbQuery}
 import graft.streaming.IngestJob
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,6 +58,16 @@ object StreamQueries {
   private val HybridFutureSec = 3600L
 
   private val RollupInterval = "1h"
+
+  /** A plain downsample over [from, to), as the routed front ends get it. */
+  private def dsQuery(spec: DownsampleSpec, from: Long = Start,
+      to: Long = End): TsdbQuery =
+    TsdbQuery(graft.filters.MatchAll, from, to, downsample = Some(spec))
+
+  /** The routed rows' output: one (metric, user, bucket) sum per row. */
+  private def sums(df: DataFrame): DataFrame =
+    df.select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
+      round(col("value"), 4).as("sum_value"))
 
   /** Stream `events` through [[IngestJob]] into a fresh temp lake whose
    *  config `cfg` derives from the temp base dir; returns that config. */
@@ -437,14 +447,16 @@ object StreamQueries {
           col("first_seen"), col("last_seen"))
     },
 
-    // A10 served from the ingest-MAINTAINED rollup table: the query scans
-    // only rollup rows (plan-asserted in IngestJobSpec), never raw points
+    // A10 served from the ingest-MAINTAINED 1h rollup table alone: the
+    // engine path over the lake marked with that one rung, served by the
+    // RollupRouting rule — the query scans only rollup rows, never raw
+    // points
     "q_rollup_streamed" -> { (s, d) =>
-      import graft.query.DownsampleSpec
-      graft.rollup.Rollup
-        .serve(IngestJob.rollup(s, lakeFor(s, d)), DownsampleSpec("1d", "sum"), Start, End)
-        .select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("value"), 4).as("sum_value"))
+      val cfg = lakeFor(s, d)
+      val primary = IngestJob.rollupLadder(s, cfg).filter(_._2 == RollupInterval)
+      sums(QueryEngine.run(
+        graft.plans.RollupRouting.routed(s, IngestJob.points(s, cfg), primary),
+        dsQuery(DownsampleSpec("1d", "sum")), assumeDeduped = true))
     },
 
     // TRANSPARENT SQL over the STREAMED deployment (round 12): the marked
@@ -469,20 +481,12 @@ object StreamQueries {
 
     // LADDER over the LIVE streamed lake (round 14, verdict #3): the
     // ingest maintains 1h AND 1d rungs (each close-gated on its own
-    // window); the engine-path ladder dispatch serves this daily query
-    // from the 1d rung — 24× fewer rows than the 1h rung it previously
-    // re-aggregated (plan-asserted in IngestJobSpec). Shares
-    // q_rollup_streamed's oracle verbatim: a 1d rung that lost or
-    // double-flushed a window fails the hash.
-    "q_stream_rollup_ladder" -> { (s, d) =>
-      import graft.query.DownsampleSpec
-      val cfg = lakeFor(s, d)
-      graft.rollup.Rollup
-        .downsampleLadder(IngestJob.points(s, cfg), IngestJob.rollupLadder(s, cfg),
-          DownsampleSpec("1d", "sum"), Start, End)
-        .select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("value"), 4).as("sum_value"))
-    },
+    // window); Graft.queryRouted serves this daily query from the 1d
+    // rung — 24× fewer rows than the 1h rung (plan-asserted in
+    // IngestJobSpec). Shares q_rollup_streamed's oracle verbatim: a 1d
+    // rung that lost or double-flushed a window fails the hash.
+    "q_stream_rollup_ladder" -> ((s, d) =>
+      sums(graft.Graft.queryRouted(s, lakeFor(s, d), dsQuery(DownsampleSpec("1d", "sum"))))),
 
     // the TRANSPARENT-SQL twin over the SAME live ladder: registerRouted
     // attaches every maintained rung and the RollupRouting rewrite picks
@@ -536,18 +540,13 @@ object StreamQueries {
     },
 
     // A10 × timezone from the ingest-MAINTAINED rollup (round 11): the
-    // Denver local-day serve over the streamed composite table — the
-    // deployment shape for tz dashboards (canServeTz legality + the
-    // serve-side zone CASE over stored 1h rows, no raw scan). Shares
-    // q_ds_tz's oracle verbatim.
-    "q_stream_rollup_tz" -> { (s, d) =>
-      import graft.query.DownsampleSpec
-      graft.rollup.Rollup
-        .serve(IngestJob.rollup(s, lakeFor(s, d)),
-          DownsampleSpec("1d", "sum", timezone = Some("America/Denver")), Start, End)
-        .select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("value"), 4).as("sum_value"))
-    },
+    // Denver local-day serve over the streamed ladder — the deployment
+    // shape for tz dashboards (whole-hour offsets, so the rule serves
+    // the zone label from stored 1h rows, no raw scan). Shares q_ds_tz's
+    // oracle verbatim.
+    "q_stream_rollup_tz" -> ((s, d) =>
+      sums(graft.Graft.queryRouted(s, lakeFor(s, d),
+        dsQuery(DownsampleSpec("1d", "sum", timezone = Some("America/Denver")))))),
 
     // A15 sketch family, STREAMED (round 11): heavy-hitter frequency
     // estimates from the ingest-MAINTAINED count-min cells — per-batch
@@ -648,36 +647,25 @@ object StreamQueries {
     },
 
     // A10 × CALENDAR from the ingest-MAINTAINED rollup (round 11): the
-    // Denver MONTHLY serve over the streamed composite — month starts
-    // are whole-hour local midnights here, so every stored 1h row lies
-    // inside one month (canServeCalendar) and the serve-side boundary
-    // CASE reproduces point-level labels. The early-January rows must
-    // surface as the December-2023 bucket from STORED rows; shares
-    // q_ds_month_tz's raw-scan oracle verbatim.
-    "q_stream_rollup_month_tz" -> { (s, d) =>
-      import graft.query.DownsampleSpec
-      graft.rollup.Rollup
-        .serve(IngestJob.rollup(s, lakeFor(s, d)),
-          DownsampleSpec("1n", "sum", timezone = Some("America/Denver")),
-          OracleCommon.DataStart, OracleCommon.TzFillEnd)
-        .select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("value"), 4).as("sum_value"))
-    },
+    // Denver MONTHLY serve over the streamed ladder — month starts are
+    // whole-hour local midnights here, so every stored 1h row lies
+    // inside one month and the rule serves the engine's boundary CASE
+    // from stored rows. The early-January rows must surface as the
+    // December-2023 bucket from STORED rows; shares q_ds_month_tz's
+    // raw-scan oracle verbatim.
+    "q_stream_rollup_month_tz" -> ((s, d) =>
+      sums(graft.Graft.queryRouted(s, lakeFor(s, d),
+        dsQuery(DownsampleSpec("1n", "sum", timezone = Some("America/Denver")),
+          OracleCommon.DataStart, OracleCommon.TzFillEnd)))),
 
     // A10+A14 hybrid: closed segments from the maintained rollup UNION
-    // the open tail from raw points (frontier = the flush boundary).
-    // The answer must equal the all-raw oracle exactly — the straddling
-    // query bucket reads raw, so no partial-merge error can hide here.
-    "q_rollup_hybrid" -> { (s, d) =>
-      import graft.query.DownsampleSpec
-      val cfg = hybridLakeFor(s, d)
-      val frontier = IngestJob.rollupFrontier(s, cfg)
-      graft.rollup.Rollup.downsampleHybrid(
-          IngestJob.points(s, cfg), IngestJob.rollup(s, cfg), RollupInterval,
-          DownsampleSpec("1d", "sum"), Start, End, frontier)
-        .select(col("metric"), col("tags")("user").as("tag_user"), col("bucket_ts"),
-          round(col("value"), 4).as("sum_value"))
-    },
+    // the open tail from raw points (split at the serving rung's flush
+    // frontier), through Graft.queryRouted. The answer must equal the
+    // all-raw oracle exactly — the straddling query bucket reads raw, so
+    // no partial-merge error can hide here.
+    "q_rollup_hybrid" -> ((s, d) =>
+      sums(graft.Graft.queryRouted(s, hybridLakeFor(s, d),
+        dsQuery(DownsampleSpec("1d", "sum"))))),
 
     // The TRANSPARENT-SQL twin of q_rollup_hybrid (round 12): the marked
     // view pairs the live hybrid lake's raw points with its

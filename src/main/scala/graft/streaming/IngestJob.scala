@@ -42,8 +42,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  *    downsample/DownSampler.java:32-56). A late point landing in an
  *    already-closed segment idempotently re-flushes just that segment.
  *    Queries serve closed segments from [[rollup]] and the open tail
- *    from raw points ([[graft.rollup.Rollup.downsampleHybrid]] with
- *    [[rollupFrontier]]); [[finalizeRollup]] completes the table at
+ *    from raw points (the [[graft.plans.RollupRouting]] rule's frontier
+ *    split over [[rollupLadder]]); [[finalizeRollup]] completes the table at
  *    stream end/shutdown.
  *  - **retention purge** (R5): [[purge]] drops whole expired
  *    segment_start partitions — the partition-drop analog of the
@@ -447,11 +447,11 @@ object IngestJob {
         // live window on every micro-batch would rewrite O(window
         // volume) per batch: at a 1-min cadence into a 2h segment, ~120
         // rewrites of the same partition. The open tail is served from
-        // raw points instead (Rollup.downsampleHybrid /
-        // RollupRouting's frontier split). A coarser rung (1d) gates on
-        // its own wider window, so its frontier naturally lags the
-        // fine rung's — each query picks the rung whose served frontier
-        // reaches furthest, tie-breaking coarser (round 15). Two flush
+        // raw points instead (RollupRouting's frontier split). A
+        // coarser rung (1d) gates on its own wider window, so its
+        // frontier naturally lags the fine rung's — each query picks
+        // the rung whose served frontier reaches furthest,
+        // tie-breaking coarser (round 15). Two flush
         // triggers per rung, both exact and idempotent:
         //  - a closed window touched by this batch (late straggler
         //    inside the admission window) → recompute it;
@@ -546,7 +546,7 @@ object IngestJob {
 
   /** The streaming-maintained PRIMARY rollup table (A10 read side):
    *  composite sum/cnt/min/max/last/sumsq rows per (series, rollup
-   *  bucket), window-partitioned. Feed to [[graft.rollup.Rollup.serve]]. */
+   *  bucket), window-partitioned — one rung of [[rollupLadder]]. */
   def rollup(spark: SparkSession, cfg: Config): DataFrame =
     spark.read.parquet(rollupPath(cfg))
 
@@ -555,11 +555,12 @@ object IngestJob {
     spark.read.parquet(rungPath(cfg, interval))
 
   /** The maintained ladder as (store, interval, frontier) rungs — the
-   *  input shape of [[graft.rollup.Rollup.downsampleLadder]] and
-   *  [[graft.plans.RollupRouting.registerLadder]]. Rungs whose store has
-   *  no closed window yet (a young lake's 1d rung) are skipped: there is
-   *  nothing to serve from them, and their frontier would precede every
-   *  query anyway. Lists the lake once and each rung once. */
+   *  input shape of [[graft.plans.RollupRouting.routed]], behind
+   *  [[graft.Graft.queryRouted]] and [[graft.Graft.registerRouted]].
+   *  Rungs whose store has no closed window yet (a young lake's 1d
+   *  rung) are skipped: there is nothing to serve from them, and their
+   *  frontier would precede every query anyway. Lists the lake once and
+   *  each rung once. */
   def rollupLadder(spark: SparkSession, cfg: Config): Seq[(DataFrame, String, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val lakeSegs = segments(conf, pointsPath(cfg))
@@ -669,9 +670,9 @@ object IngestJob {
 
   /** The PRIMARY rung's flush frontier: every lake segment strictly
    *  below it has a maintained rollup partition; at or above it, queries
-   *  must read raw points ([[graft.rollup.Rollup.downsampleHybrid]]'s
-   *  `rollupUntil`). Long.MaxValue when the rollup covers the whole
-   *  lake. A LADDER-ONLY config (`rollupLadder` set, no primary
+   *  must read raw points (the rung's frontier in [[rollupLadder]],
+   *  where the routing rule splits). Long.MaxValue when the rollup
+   *  covers the whole lake. A LADDER-ONLY config (`rollupLadder` set, no primary
    *  `rollupInterval` — representable since round 14) degrades to the
    *  MINIMUM of all configured rungs' frontiers instead of throwing
    *  (round-15 ADVICE): under one close-gated ingest that is the

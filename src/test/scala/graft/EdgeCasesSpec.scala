@@ -139,10 +139,11 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("rollup serve over a window with no rollup rows is empty, count included") {
     val pts = Fixtures.series("m", tagset, (0L, 1.0))
-    val rollup = graft.rollup.Rollup.build(pts, "1h")
+    val (store, storeDir) = Routed.persist(graft.rollup.Rollup.build(pts, "1h"), "rollup")
     for (agg <- Seq("sum", "count")) {
-      val served = graft.rollup.Rollup.serve(rollup,
+      val served = Routed.downsample(pts, Seq((store, "1h", Long.MaxValue)),
         DownsampleSpec("2h", agg), start = 7200, end = 14400)
+      assert(ScanStats.scanned(served, storeDir) === Set(storeDir), s"agg=$agg: served")
       assert(served.count() === 0, s"agg=$agg: absent buckets stay absent (count fills 0 only within present rows)")
     }
   }

@@ -73,14 +73,54 @@ final class GroupJobs(sc: org.apache.spark.SparkContext) {
   }
 }
 
+/** The engine path over a routed frame, the way [[Graft.queryRouted]]
+ *  runs it: [[graft.query.QueryEngine.run]] over `points` marked with
+ *  `stores` by [[graft.plans.RollupRouting.routed]], so the routing rule
+ *  decides which store serves. */
+object Routed {
+  import graft.query.{DownsampleSpec, QueryEngine, TsdbQuery}
+
+  def run(points: DataFrame, stores: Seq[(DataFrame, String, Long)], q: TsdbQuery): DataFrame =
+    QueryEngine.run(graft.plans.RollupRouting.routed(TestSpark.spark, points, stores), q,
+      assumeDeduped = true)
+
+  /** A plain downsample over [start, end). */
+  def downsample(points: DataFrame, stores: Seq[(DataFrame, String, Long)],
+      spec: DownsampleSpec, start: Long, end: Long): DataFrame =
+    run(points, stores, TsdbQuery(graft.filters.MatchAll, start, end, downsample = Some(spec)))
+
+  /** `df` written as parquet under a fresh temp dir: (read-back, path). */
+  def persist(df: DataFrame, name: String): (DataFrame, String) = {
+    val dir = s"${java.nio.file.Files.createTempDirectory("graft_routed")}/$name"
+    df.write.parquet(dir)
+    (TestSpark.spark.read.parquet(dir), dir)
+  }
+}
+
 /** What each file scan of a frame read: runs the frame's own query
  *  execution, then walks its final adaptive plan, query stages included. */
 object ScanStats {
 
-  /** One `FileSourceScanExec`: its partition filters and the files it
-   *  opened after partition pruning (the scan's `numFiles` metric). */
+  /** One `FileSourceScanExec`: its partition filters, the files it
+   *  opened after partition pruning (the scan's `numFiles` metric), and
+   *  the root paths of the relation it reads. */
   final case class Scan(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      numFiles: Long)
+      numFiles: Long, roots: Seq[String]) {
+    /** Reads from `dir` or from under it. */
+    def under(dir: String): Boolean = {
+      val d = norm(dir)
+      roots.exists(r => r == d || r.startsWith(d + "/"))
+    }
+  }
+
+  private def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath.stripSuffix("/")
+
+  private def scans(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Scan] =
+    Plans.collect(plan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        Scan(s.partitionFilters, s.metrics("numFiles").value,
+          s.relation.location.rootPaths.map(p => norm(p.toString)))
+    }
 
   private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
@@ -102,14 +142,21 @@ object ScanStats {
     finally segs.close()
   }
 
+  /** The subset of `dirs` that some file scan of `df`'s executed plan
+   *  reads from (a scan's root is the dir or lies under it). Plans the
+   *  frame without running it. Structural, unlike a plan-string test: a
+   *  hybrid split scans a store AND the points, a served read the store
+   *  alone, a raw read the points alone. */
+  def scanned(df: DataFrame, dirs: String*): Set[String] = {
+    val all = scans(df.queryExecution.executedPlan)
+    dirs.filter(d => all.exists(_.under(d))).toSet
+  }
+
   def apply(df: DataFrame): Seq[Scan] = {
     val qe = df.queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("scan-stats")) {
       qe.toRdd.foreach(_ => ())
     }
-    Plans.collect(qe.executedPlan) {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        Scan(s.partitionFilters, s.metrics("numFiles").value)
-    }
+    scans(qe.executedPlan)
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Randomized equivalence property for the SQL rollup rewrite and the
- *  engine ladder dispatch: for RANDOM flush frontiers, range bounds
+/** Randomized equivalence property for the rollup routing rule, over
+ *  SQL and over the engine path: for RANDOM flush frontiers, range bounds
  *  (aligned and unaligned), bucket phrasings, and aggregates, the result
  *  over the marked view must equal the raw view EXACTLY — whether the
  *  rewrite fires, splits hybrid, or refuses is an optimization detail
@@ -28,6 +28,7 @@ class RollupRoutingPropSpec extends AnyFunSuite {
     (pts, spark.read.parquet(s"$dir/rollup"), spark.read.parquet(s"$dir/rollup1d"))
   }
 
+  private val DataStart = 1704067200L // 2024-01-01, where the points start
   private val Lo = 1704412800L // 2024-01-05
   private val Hi = 1705622400L // 2024-01-19
 
@@ -132,24 +133,45 @@ class RollupRoutingPropSpec extends AnyFunSuite {
 
   test("engine ladder == raw downsample for random rung frontiers and specs (seeded)") {
     import graft.query.{DownsampleSpec, QueryEngine}
-    val (pts, store1h, store1d) = env
+    val day = 86400L
+    // the testdata spans January only: a copy of Jan 5-19 shifted 59 days
+    // onto Mar 4-18 puts points on both sides of the DST transition
+    val jan = env._1
+    val pts = jan.unionByName(jan.filter(col("ts") >= Lo && col("ts") < Hi)
+      .withColumn("ts", col("ts") + 59 * day)
+      .withColumn("segment_start", graft.core.SeriesId.segmentStart(col("ts"))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_prop_mar").toString
+    Rollup.build(pts, "1h").write.parquet(s"$dir/rollup")
+    Rollup.build(pts, "1d").write.parquet(s"$dir/rollup1d")
+    val (store1h, store1d) = (spark.read.parquet(s"$dir/rollup"), spark.read.parquet(s"$dir/rollup1d"))
     val rng = new scala.util.Random(41)
-    val specs = Seq(
-      DownsampleSpec("1d", "sum"), DownsampleSpec("2h", "avg"),
-      DownsampleSpec("1d", "max"), DownsampleSpec("1d", "last"),
-      DownsampleSpec("90m", "sum"), // never servable from 1h/1d: raw path
-      DownsampleSpec("1d", "sum", timezone = Some("America/Denver")),
-      DownsampleSpec("1n", "sum", timezone = Some("America/Denver")))
-    for (i <- 0 until 25) {
-      val spec = specs(rng.nextInt(specs.size))
-      val f1h = if (rng.nextBoolean()) Long.MaxValue else Lo + (rng.nextInt(16 * 24) + 1) * 3600L
-      val f1d = if (rng.nextBoolean()) Long.MaxValue else Lo + (rng.nextInt(16) + 1) * 86400L
+    val denver = Some("America/Denver")
+    // (spec, range start) per scenario: epoch buckets over the Jan
+    // window, Denver days across the 2024-03-10 spring-forward, and
+    // Denver months / quarters across the Dec/Jan local boundary
+    val dst = 1710028800L - 2 * day // 2024-03-08 00:00Z
+    val scenarios: Seq[(DownsampleSpec, () => Long)] = Seq(
+      DownsampleSpec("1d", "sum") -> (() => Lo + rng.nextInt(5) * day),
+      DownsampleSpec("2h", "avg") -> (() => Lo + rng.nextInt(5) * day),
+      DownsampleSpec("1d", "max") -> (() => Lo + rng.nextInt(5) * day),
+      DownsampleSpec("1d", "last") -> (() => Lo + rng.nextInt(5) * day),
+      DownsampleSpec("90m", "sum") -> (() => Lo), // never servable from 1h/1d: raw path
+      DownsampleSpec("1d", "sum", timezone = denver) -> (() => Lo + rng.nextInt(5) * day),
+      DownsampleSpec("1d", "sum", timezone = denver) -> (() => dst + rng.nextInt(2) * day),
+      DownsampleSpec("1n", "sum", timezone = denver) -> (() => DataStart),
+      DownsampleSpec("3n", "sum", timezone = denver) -> (() => DataStart))
+    for (i <- 0 until 30) {
+      val (spec, startAt) = scenarios(rng.nextInt(scenarios.size))
+      val lo = startAt()
+      // ends on the day grid, or OFF every store grid (a split there)
+      val hi = lo + (rng.nextInt(6) + 1) * day + (if (rng.nextBoolean()) 0L else rng.nextInt(86400))
+      def frontier(grid: Long) =
+        if (rng.nextBoolean()) Long.MaxValue else lo + (rng.nextInt(7 * 86400 / grid.toInt) + 1) * grid
+      val (f1h, f1d) = (frontier(3600L), frontier(day))
       val rungs = Seq(
         (store1h.filter(col("bucket_ts") < f1h), "1h", f1h),
         (store1d.filter(col("bucket_ts") < f1d), "1d", f1d))
-      val lo = Lo + rng.nextInt(5) * 86400L
-      val hi = lo + (rng.nextInt(10) + 1) * 86400L
-      val served = Rollup.downsampleLadder(pts, rungs, spec, lo, hi)
+      val served = graft.Routed.downsample(pts, rungs, spec, lo, hi)
         .withColumn("value", org.apache.spark.sql.functions.round(col("value"), 4))
         .collect().map(_.toString).sorted.toSeq
       val raw = QueryEngine.downsample(
@@ -157,7 +179,7 @@ class RollupRoutingPropSpec extends AnyFunSuite {
             pts.filter(col("ts") >= lo && col("ts") < hi)), spec, lo, hi)
         .withColumn("value", org.apache.spark.sql.functions.round(col("value"), 4))
         .collect().map(_.toString).sorted.toSeq
-      assert(served === raw,
+      assert(served.nonEmpty && served === raw,
         s"case $i diverged (spec=$spec f1h=$f1h f1d=$f1d lo=$lo hi=$hi)")
     }
   }

@@ -34,10 +34,17 @@ class RollupRoutingSpec extends AnyFunSuite {
   private def sql(view: String, q: String): DataFrame =
     spark.sql(q.replace("$V", view))
 
-  private def routed(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan.toString
-    !plan.contains("Window") // the LWW dedupe window is gone iff served
-  }
+  /** What the executed plan scans: (a rollup store, the raw points).
+   *  Stores live in temp dirs, the points under the testdata dir. */
+  private def sides(df: DataFrame): (Boolean, Boolean) =
+    (graft.ScanStats.scanned(df, System.getProperty("java.io.tmpdir")).nonEmpty,
+      graft.ScanStats.scanned(df, sf).nonEmpty)
+
+  /** Served from a store alone. */
+  private def routed(df: DataFrame): Boolean = sides(df) == ((true, false))
+
+  /** Split hybrid: a store head and a raw tail. */
+  private def hybrid(df: DataFrame): Boolean = sides(df) == ((true, true))
 
   private def assertSame(q: String, expectRouted: Boolean): Unit = {
     setup
@@ -169,9 +176,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     // a straddling range splits: store scan for closed days UNION a raw
     // window tail — both shapes present in one plan
     val past = q(Hi)
-    val plan = past.queryExecution.executedPlan.toString
-    assert(plan.contains("Window") && plan.contains("bucket_ts"),
-      s"hybrid split missing a side:\n$plan")
+    assert(hybrid(past), s"hybrid split missing a side:\n${past.queryExecution.executedPlan}")
     val rawSql =
       s"""SELECT metric, ts - ts % 86400 AS b, round(sum($clean), 4) AS s
          |FROM $$V WHERE ts >= $Lo AND ts < $Hi GROUP BY 1, 2""".stripMargin
@@ -268,9 +273,7 @@ class RollupRoutingSpec extends AnyFunSuite {
          |      FROM $view)
          |WHERE ts >= $Lo AND ts < $Hi GROUP BY u, d""".stripMargin)
     val a = q("v_dtbl")
-    val plan = a.queryExecution.executedPlan.toString
-    assert(plan.contains("bucket_ts") && plan.contains("Window"),
-      s"derived-table hybrid did not split:\n$plan")
+    assert(hybrid(a), s"derived-table hybrid did not split:\n${a.queryExecution.executedPlan}")
     assert(a.collect().map(_.toString).sorted.toSeq ===
       q("v_raw").collect().map(_.toString).sorted.toSeq)
   }
@@ -304,18 +307,18 @@ class RollupRoutingSpec extends AnyFunSuite {
     assert(!routed(f), "90m must run raw over the marked view")
     val h = graft.SparkEntry.queries("q_sql_rollup_hybrid")(spark, sf)
     val hPlan = h.queryExecution.executedPlan.toString
-    assert(hPlan.contains("Window") && hPlan.contains("bucket_ts"),
+    assert(hybrid(h),
       s"registry hybrid row must carry both sides:\n$hPlan")
   }
 
   test("the round-14 registry rows route / split as declared") {
     val wh = graft.SparkEntry.queries("q_sql_rollup_window_hybrid")(spark, sf)
     val whPlan = wh.queryExecution.executedPlan.toString
-    assert(whPlan.contains("Window") && whPlan.contains("bucket_ts"),
+    assert(hybrid(wh),
       s"window-hybrid registry row must carry both sides:\n$whPlan")
     val tz = graft.SparkEntry.queries("q_sql_rollup_tz_hybrid")(spark, sf)
     val tzPlan = tz.queryExecution.executedPlan.toString
-    assert(tzPlan.contains("Window") && tzPlan.contains("bucket_ts"),
+    assert(hybrid(tz),
       s"tz-hybrid registry row must carry both sides:\n$tzPlan")
     val last = graft.SparkEntry.queries("q_sql_rollup_last")(spark, sf)
     assert(routed(last), last.queryExecution.executedPlan.toString)
@@ -593,7 +596,7 @@ class RollupRoutingSpec extends AnyFunSuite {
   test("ladder × calendar: Kolkata months refuse the 1h rung and serve from a 30m rung") {
     // +05:30 walls sit on half hours: illegal against 1h rows, legal
     // against 30m — the coarsest-first walk must land on the 30m store,
-    // exactly the engine path's canServeCalendar outcome per rung
+    // the same per-rung outcome the engine path's calendar label gets
     val (pts, _) = env
     val dir = java.nio.file.Files.createTempDirectory("graft_route_30m").toString
     Rollup.build(pts, "30m").write.mode("overwrite").parquet(s"$dir/rollup30m")
@@ -681,9 +684,7 @@ class RollupRoutingSpec extends AnyFunSuite {
   private def assertHybridEqualsRaw(q: String, view: String,
       splitAt: Option[Long] = None): Unit = {
     val a = spark.sql(q.replace("$V", view))
-    val plan = a.queryExecution.executedPlan.toString
-    assert(plan.contains("Window") && plan.contains("bucket_ts"),
-      s"hybrid split missing a side:\n$plan")
+    assert(hybrid(a), s"hybrid split missing a side:\n${a.queryExecution.executedPlan}")
     splitAt.foreach { f =>
       assert(a.queryExecution.optimizedPlan.toString.contains(f.toString),
         s"split did not land on $f:\n${a.queryExecution.optimizedPlan}")
@@ -749,9 +750,7 @@ class RollupRoutingSpec extends AnyFunSuite {
          |HAVING count($clean) > 5
          |ORDER BY s DESC, b, metric LIMIT 50""".stripMargin
     val a = spark.sql(q.replace("$V", "v_multi_frontier"))
-    val plan = a.queryExecution.executedPlan.toString
-    assert(plan.contains("Window") && plan.contains("bucket_ts"),
-      s"hybrid split missing a side:\n$plan")
+    assert(hybrid(a), s"hybrid split missing a side:\n${a.queryExecution.executedPlan}")
     assert(a.collect().map(_.toString).toSeq ===
       sql("v_raw", q).collect().map(_.toString).toSeq) // ordered compare
   }

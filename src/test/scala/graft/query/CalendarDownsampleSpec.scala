@@ -63,26 +63,55 @@ class CalendarDownsampleSpec extends AnyFunSuite {
       DecB -> 0.0, JanB -> 5.0, 1706770800L -> 0.0, 1709276400L -> 0.0))
   }
 
-  test("canServeCalendar: every boundary must land on a rollup row edge") {
+  /** `spec` over [s, e) on the engine path, served by the rule from the
+   *  persisted `ivs` stores of `lake`: (rows, which of points/stores it
+   *  scanned), checked equal to the raw engine answer. */
+  private def routed(lake: (String, Seq[(String, String)]), ivs: Seq[String],
+      spec: DownsampleSpec, s: Long, e: Long): (Map[Long, Double], Set[String]) = {
+    val spark = graft.TestSpark.spark
+    val (pointsDir, stores) = lake
+    val points = spark.read.parquet(pointsDir)
+    val df = graft.Routed.downsample(points,
+      ivs.map(iv => (spark.read.parquet(stores.toMap.apply(iv)), iv, Long.MaxValue)),
+      spec, s, e)
+    def toMap(d: org.apache.spark.sql.DataFrame) =
+      d.select("bucket_ts", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val names = ("points" -> pointsDir) +: stores
+    val hit = graft.ScanStats.scanned(df, names.map(_._2): _*)
+    val out = toMap(df)
+    assert(out === toMap(QueryEngine.run(points, TsdbQuery(MatchAll, s, e,
+      downsample = Some(spec)))), s"$spec $ivs")
+    (out, names.collect { case (n, d) if hit(d) => n }.toSet)
+  }
+
+  /** Points and their 1h and 30m rollup stores, persisted. */
+  private def persisted(pts: org.apache.spark.sql.DataFrame): (String, Seq[(String, String)]) = {
+    val (_, pointsDir) = graft.Routed.persist(pts, "points")
+    (pointsDir, Seq("1h", "30m").map(iv =>
+      iv -> graft.Routed.persist(Rollup.build(pts, iv), s"rollup_$iv")._2))
+  }
+
+  test("calendar serving needs every boundary on a store row edge") {
     val denver = DownsampleSpec("1n", "sum", timezone = Some("America/Denver"))
     val kolkata = DownsampleSpec("1n", "sum", timezone = Some("Asia/Kolkata"))
     val utc = DownsampleSpec("1n", "sum")
     val (s, e) = (1704067200L, 1709251200L)
-    assert(Rollup.canServeCalendar(denver, "1h", s, e), "whole-hour offsets")
-    assert(Rollup.canServeCalendar(utc, "1h", s, e))
+    // one point every 5h over Jan-Feb 2024
+    val lake = persisted(Fixtures.series("m", tagset,
+      (s until e by 18000L).map(t => (t, (t % 11).toDouble)): _*))
+    assert(routed(lake, Seq("1h"), denver, s, e)._2 === Set("1h"), "whole-hour offsets")
+    assert(routed(lake, Seq("1h"), utc, s, e)._2 === Set("1h"))
     // Kolkata +5:30: month starts at :30 past the hour — a 1h rollup row
     // straddles the local month boundary; a 30m row does not
-    assert(!Rollup.canServeCalendar(kolkata, "1h", s, e))
-    assert(Rollup.canServeCalendar(kolkata, "30m", s, e))
-    // unaligned query edges clip differently on the two paths
-    assert(!Rollup.canServeCalendar(denver, "1h", s + 60, e))
-    // order statistics are not stored; fixed intervals are not this path
-    assert(!Rollup.canServeCalendar(
-      DownsampleSpec("1n", "median", timezone = Some("America/Denver")), "1h", s, e))
-    assert(!Rollup.canServeCalendar(DownsampleSpec("1d", "sum"), "1h", s, e))
-    // and the fixed-interval gate must not throw on (or accept) calendar specs
-    assert(!Rollup.canServe(denver, "1h"))
-    assert(!Rollup.canServe(utc, "1h"))
+    assert(routed(lake, Seq("1h"), kolkata, s, e)._2 === Set("points"))
+    assert(routed(lake, Seq("30m"), kolkata, s, e)._2 === Set("30m"))
+    // an unaligned start clips differently on the two paths
+    assert(routed(lake, Seq("1h"), denver, s + 60, e)._2 === Set("points"))
+    // order statistics are not stored; fixed intervals serve as before
+    assert(routed(lake, Seq("1h"),
+      DownsampleSpec("1n", "median", timezone = Some("America/Denver")), s, e)._2 ===
+      Set("points"))
+    assert(routed(lake, Seq("1h"), DownsampleSpec("1d", "sum"), s, e)._2 === Set("1h"))
   }
 
   test("calendar rollup serving equals the raw path, full and hybrid") {
@@ -90,21 +119,34 @@ class CalendarDownsampleSpec extends AnyFunSuite {
     val pts = Fixtures.series("m", tagset,
       (1704064000L, 1.0), (1704067000L, 2.0), // Dec 31 Denver
       (1704093000L, 4.0), (1704150000L, 8.0)) // January Denver
-    val spec = DownsampleSpec("1n", "sum", timezone = Some("America/Denver"))
     val (s, e) = (1704063600L, 1704153600L)
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.select("bucket_ts", "value").collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val raw = toMap(QueryEngine.downsample(pts, spec, s, e))
-    assert(raw === Map(DecB -> 3.0, JanB -> 12.0))
-    val rollup = Rollup.build(pts, "1h")
-    assert(toMap(Rollup.downsampleRouted(pts, rollup, "1h", spec, s, e)) === raw)
-    // hybrid: flush frontier at the month boundary → served head + raw tail
-    assert(toMap(Rollup.downsampleHybrid(pts, rollup, "1h", spec, s, e,
-      rollupUntil = JanB)) === raw)
-    // frontier below the first in-range boundary → all raw
-    assert(toMap(Rollup.downsampleHybrid(pts, rollup, "1h", spec, s, e,
-      rollupUntil = s + 3600)) === raw)
+    def raw(spec: DownsampleSpec) = QueryEngine.downsample(pts, spec, s, e)
+      .select("bucket_ts", "value").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val month = DownsampleSpec("1n", "sum", timezone = Some("America/Denver"))
+    assert(raw(month) === Map(DecB -> 3.0, JanB -> 12.0))
+    val (pointsDir, stores) = persisted(pts)
+    val spark = graft.TestSpark.spark
+    val store = stores.toMap.apply("1h")
+    // months and quarters: Denver's Q4/Q1 boundary is the same local
+    // midnight as Dec/Jan
+    for (spec <- Seq(month, month.copy(interval = "3n"))) {
+      def run(until: Long, end: Long = e) = {
+        val df = graft.Routed.downsample(spark.read.parquet(pointsDir),
+          Seq((spark.read.parquet(store), "1h", until)), spec, s, end)
+        val hit = graft.ScanStats.scanned(df, pointsDir, store)
+        (df.select("bucket_ts", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+          Set("points" -> pointsDir, "1h" -> store).collect { case (n, d) if hit(d) => n })
+      }
+      val expect = raw(spec)
+      assert(run(Long.MaxValue) === ((expect, Set("1h"))), spec)
+      // hybrid: flush frontier at the month boundary → served head + raw tail
+      assert(run(JanB) === ((expect, Set("1h", "points"))), spec)
+      // an end off the store grid splits at the month boundary too
+      assert(run(Long.MaxValue, e - 600) === ((expect, Set("1h", "points"))), spec)
+      // frontier below the first in-range boundary → all raw
+      assert(run(s + 3600) === ((expect, Set("points"))), spec)
+    }
   }
 
   test("olympic seasonal position keys on absolute calendar ordinals") {

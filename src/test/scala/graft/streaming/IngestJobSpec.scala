@@ -26,6 +26,16 @@ class IngestJobSpec extends AnyFunSuite {
 
   private val seg = TsdbSchema.SegmentSeconds
 
+  /** A plain `interval` sum downsample over [start, end). */
+  private def ds(interval: String, start: Long, end: Long) =
+    graft.query.TsdbQuery(graft.filters.MatchAll, start, end,
+      downsample = Some(graft.query.DownsampleSpec(interval, "sum")))
+
+  /** Which of the lake's points and rung stores `df` scans. */
+  private def scans(df: org.apache.spark.sql.DataFrame, cfg: IngestJob.Config): Set[String] =
+    graft.ScanStats.scanned(df, (IngestJob.pointsPath(cfg) +:
+      cfg.rollupRungs.map(IngestJob.rungPath(cfg, _))): _*)
+
   test("admission drops too-late and too-future points (R2)") {
     val cfg = freshCfg(retention = 3600)
     val now = 100000L
@@ -154,12 +164,14 @@ class IngestJobSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(ru(t0) === ((12.0, 2L, 5.0))) // 7.0 (LWW) + 5.0; last by ts = 5.0
     assert(ru(t0 + 3600) === ((9.0, 1L, 9.0)))
-    // a rollup-served query's plan scans the MAINTAINED table, never raw points
-    val served = graft.rollup.Rollup.serve(IngestJob.rollup(spark, cfg),
-      graft.query.DownsampleSpec("2h", "sum"), t0, t0 + 2 * seg)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("/rollup"), "must scan the maintained rollup table")
-    assert(!plan.contains("lake/points"), "must not touch raw points")
+    // a routed read of the closed segment scans the MAINTAINED table,
+    // never raw points
+    val served = graft.Graft.queryRouted(spark, cfg, ds("2h", t0, t0 + seg))
+    assert(scans(served, cfg) === Set(IngestJob.rollupPath(cfg)),
+      "must scan the maintained rollup table only")
+    assert(served.filter(col("metric") === "cpu").collect()
+      .map(r => r.getAs[Long]("bucket_ts") -> r.getAs[Double]("value")).toMap ===
+      Map(t0 -> 21.0))
   }
 
   test("close gate: mid-segment batches never rewrite the open segment's rollup; late data re-flushes a closed one") {
@@ -201,12 +213,10 @@ class IngestJobSpec extends AnyFunSuite {
     val frontier = IngestJob.rollupFrontier(spark, cfg)
     assert(frontier === t0 + 2 * seg)
     // hybrid routing: closed segments from the rollup, the open tail raw
-    val res = graft.rollup.Rollup.downsampleHybrid(
-      IngestJob.points(spark, cfg), IngestJob.rollup(spark, cfg), "1h",
-      graft.query.DownsampleSpec("2h", "sum"), t0, t0 + 3 * seg, frontier)
+    val res = graft.Graft.queryRouted(spark, cfg, ds("2h", t0, t0 + 3 * seg))
+    assert(scans(res, cfg) === Set(IngestJob.rollupPath(cfg), IngestJob.pointsPath(cfg)),
+      "closed segments from the rollup scan, the open tail from a raw scan")
     val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("/rollup"), "closed segments must come from the rollup scan")
-    assert(plan.contains("/points"), "the open tail must come from a raw scan")
     assert(plan.contains(s">= ${t0 + 2 * seg}"),
       s"raw side must carry the segment_start pruning conjunct:\n$plan")
     val byBucket = res.filter(col("metric") === "cpu")
@@ -243,21 +253,17 @@ class IngestJobSpec extends AnyFunSuite {
     assert(IngestJob.rungFrontier(spark, cfg, "1d") === t0 + day)
     // every lake segment is closed and flushed on the 1h rung
     assert(IngestJob.rungFrontier(spark, cfg, "1h") === Long.MaxValue)
-    // engine-path ladder dispatch (round-15 rung choice): the straddling
+    // engine-path ladder routing (round-15 rung choice): the straddling
     // daily range serves ENTIRELY from the fully-flushed 1h rung — its
     // frontier (∞) reaches further than the lagging 1d rung's, so no raw
     // scan of the open day happens at all
     val ladder = IngestJob.rollupLadder(spark, cfg)
     assert(ladder.map(_._2).toSet === Set("1h", "1d"))
-    val res = graft.rollup.Rollup.downsampleLadder(
-      IngestJob.points(spark, cfg), ladder,
-      graft.query.DownsampleSpec("1d", "sum"), t0, t0 + 2 * day)
-    val plan = res.queryExecution.executedPlan.toString
+    val (rung1h, rung1d) = (IngestJob.rungPath(cfg, "1h"), IngestJob.rungPath(cfg, "1d"))
+    val res = graft.Graft.queryRouted(spark, cfg, ds("1d", t0, t0 + 2 * day))
     // the 1h primary rung's store path is lake/rollup (historical name)
-    assert(plan.contains("lake/rollup") && !plan.contains("rollup_1d"),
-      s"the fresher 1h rung must serve the whole straddling range:\n$plan")
-    assert(!plan.contains("lake/points"),
-      s"no raw scan when a finer rung covers the range from its store:\n$plan")
+    assert(scans(res, cfg) === Set(rung1h),
+      "the fresher 1h rung must serve the whole straddling range, no raw scan")
     val byBucket = res.collect().map(r =>
       r.getAs[Long]("bucket_ts") -> r.getAs[Double]("value")).toMap
     assert(byBucket === Map(t0 -> 3.0, (t0 + day) -> 12.0))
@@ -265,22 +271,17 @@ class IngestJobSpec extends AnyFunSuite {
     // to the same finite frontier, the straddle serves day 1 from the 1d
     // rung (fewer store rows) and the open day raw
     val clamped = ladder.map { case (df, iv, _) => (df, iv, t0 + day) }
-    val tied = graft.rollup.Rollup.downsampleLadder(
-      IngestJob.points(spark, cfg), clamped,
-      graft.query.DownsampleSpec("1d", "sum"), t0, t0 + 2 * day)
-    val tiedPlan = tied.queryExecution.executedPlan.toString
-    assert(tiedPlan.contains("rollup_1d") && tiedPlan.contains("lake/points"),
-      s"equal frontiers must tie-break to the coarser rung + raw tail:\n$tiedPlan")
+    val tied = graft.Routed.run(IngestJob.points(spark, cfg), clamped,
+      ds("1d", t0, t0 + 2 * day))
+    assert(scans(tied, cfg) === Set(rung1d, IngestJob.pointsPath(cfg)),
+      "equal frontiers must tie-break to the coarser rung + raw tail")
     assert(tied.collect().map(r =>
       r.getAs[Long]("bucket_ts") -> r.getAs[Double]("value")).toMap ===
       Map(t0 -> 3.0, (t0 + day) -> 12.0))
     // a fully-closed daily range reads ONLY the 1d rung
-    val closedOnly = graft.rollup.Rollup.downsampleLadder(
-      IngestJob.points(spark, cfg), ladder,
-      graft.query.DownsampleSpec("1d", "sum"), t0, t0 + day)
-    val closedPlan = closedOnly.queryExecution.executedPlan.toString
-    assert(closedPlan.contains("rollup_1d") && !closedPlan.contains("lake/points"),
-      s"closed range must serve entirely from the 1d rung:\n$closedPlan")
+    val closedOnly = graft.Graft.queryRouted(spark, cfg, ds("1d", t0, t0 + day))
+    assert(scans(closedOnly, cfg) === Set(rung1d),
+      "closed range must serve entirely from the 1d rung")
     // the SQL one-liner attaches the whole ladder: the closed daily SQL
     // serves from the 1d rung (no raw scan, no dedupe window); the
     // straddling one splits hybrid on the 1d rung's own frontier
@@ -291,9 +292,8 @@ class IngestJobSpec extends AnyFunSuite {
          |                      ELSE value END), 4) AS s
          |FROM v_live_ladder WHERE ts >= $t0 AND ts < ${t0 + day}
          |GROUP BY 1, 2""".stripMargin)
-    val sqlClosedPlan = sqlClosed.queryExecution.executedPlan.toString
-    assert(sqlClosedPlan.contains("rollup_1d") && !sqlClosedPlan.contains("Window"),
-      s"closed daily SQL must read the maintained 1d rung:\n$sqlClosedPlan")
+    assert(scans(sqlClosed, cfg) === Set(rung1d),
+      "closed daily SQL must read the maintained 1d rung")
     assert(sqlClosed.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap ===
       Map(t0 -> 3.0))
     val sqlStraddle = spark.sql(
@@ -302,15 +302,100 @@ class IngestJobSpec extends AnyFunSuite {
          |                      ELSE value END), 4) AS s
          |FROM v_live_ladder WHERE ts >= $t0 AND ts < ${t0 + 2 * day}
          |GROUP BY 1, 2""".stripMargin)
-    val sqlStraddlePlan = sqlStraddle.queryExecution.executedPlan.toString
     // round-15 rung choice: the fully-flushed 1h rung outranks the
     // lagging 1d rung, so the straddling daily SQL serves entirely from
-    // the 1h store — no hybrid split, no raw dedupe window
-    assert(sqlStraddlePlan.contains("lake/rollup") &&
-      !sqlStraddlePlan.contains("rollup_1d") && !sqlStraddlePlan.contains("Window"),
-      s"straddling daily SQL must serve whole from the fresher 1h rung:\n$sqlStraddlePlan")
+    // the 1h store — no hybrid split, no raw scan
+    assert(scans(sqlStraddle, cfg) === Set(rung1h),
+      "straddling daily SQL must serve whole from the fresher 1h rung")
     assert(sqlStraddle.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap ===
       Map(t0 -> 3.0, (t0 + day) -> 12.0))
+  }
+
+  test("a routed raw side reads only the segments it spans: hybrid tail and refused query") {
+    val spark = TestSpark.spark
+    val base = java.nio.file.Files.createTempDirectory("graft_raw_side").toString
+    val day = 86400L
+    val t0 = 100 * day
+    // the clock 6h into day 1: the 1h rung is flushed up to t0 + day + 6h
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+      rollupInterval = Some("1h"), nowSec = Some(() => t0 + day + 6 * 3600 + 100))
+    // a point every 30 min over two days: 24 segments
+    IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (0 until 96).map(i => (i.toLong + 1, t0 + i * 1800L, "cpu", i.toDouble)): _*)), cfg)
+    assert(IngestJob.rollupFrontier(spark, cfg) === t0 + day + 6 * 3600)
+    val points = IngestJob.pointsPath(cfg)
+    def pointFiles(df: org.apache.spark.sql.DataFrame): Long = {
+      val read = graft.ScanStats(df).filter(_.under(points))
+      assert(read.nonEmpty, "no raw scan")
+      read.map(_.numFiles).sum
+    }
+    graft.Graft.registerRouted(spark, cfg, "v_raw_side")
+    def daily(view: String) = spark.sql(
+      s"""SELECT metric, ts - ts % 86400 AS b,
+         |       round(sum(CASE WHEN isnan(value) THEN CAST(NULL AS DOUBLE)
+         |                      ELSE value END), 4) AS s
+         |FROM $view WHERE ts >= $t0 AND ts < ${t0 + 2 * day}
+         |GROUP BY 1, 2""".stripMargin)
+    // hybrid: day 0 from the store, the open day 1 raw — its tail scan
+    // opens day 1's 12 segments, not all 24
+    val hybrid = daily("v_raw_side")
+    assert(scans(hybrid, cfg) === Set(IngestJob.rollupPath(cfg), points))
+    assert(pointFiles(hybrid) === graft.ScanStats.segmentFiles(points, t0 + day, t0 + 2 * day))
+    graft.query.QueryEngine.dedupeConfigured(IngestJob.points(spark, cfg))
+      .createOrReplaceTempView("v_raw_side_plain")
+    assert(hybrid.collect().map(_.toString).sorted.toSeq ===
+      daily("v_raw_side_plain").collect().map(_.toString).sorted.toSeq)
+    // a refused 90m bucket runs raw over the three segments it spans
+    val (lo, hi) = (t0 + 6 * 3600, t0 + 12 * 3600)
+    val refused = spark.sql(
+      s"""SELECT metric, ts - ts % 5400 AS b, count(*) AS n FROM v_raw_side
+         |WHERE ts >= $lo AND ts < $hi GROUP BY 1, 2""".stripMargin)
+    assert(scans(refused, cfg) === Set(points))
+    assert(pointFiles(refused) === graft.ScanStats.segmentFiles(points, lo, hi))
+    assert(refused.collect().map(_.getLong(2)).sum === 12)
+    // the engine path's refused shape (a rate over the marked points)
+    // reads the same three segments
+    val rate = graft.Graft.queryRouted(spark, cfg, graft.query.TsdbQuery(
+      graft.filters.MatchAll, lo, hi, rate = Some(graft.query.RateSpec())))
+    assert(pointFiles(rate) === graft.ScanStats.segmentFiles(points, lo, hi))
+  }
+
+  test("queryRouted serves the JSON ladder reads from a rung") {
+    val spark = TestSpark.spark
+    val base = java.nio.file.Files.createTempDirectory("graft_json_routed").toString
+    val day = 86400L
+    val t0 = 200 * day
+    val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
+      retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4,
+      rollupInterval = Some("1h"), rollupLadder = Seq("1d"),
+      nowSec = Some(() => t0 + 3 * day + 100))
+    IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
+      (0 until 144).map(i => (i.toLong + 1, t0 + i * 1800L,
+        if (i % 3 == 0) "click" else "view", (i % 7).toDouble)): _*)), cfg)
+    def check(json: String, expect: Set[String]): Unit = {
+      val q = graft.query.TsdbJson.parseQuery(json)
+      val df = graft.Graft.queryRouted(spark, cfg, q)
+      assert(scans(df, cfg) === expect, json)
+      def sorted(d: org.apache.spark.sql.DataFrame) =
+        d.withColumn("value", round(col("value"), 4)).collect().map(_.toString).sorted.toSeq
+      assert(sorted(df) === sorted(graft.query.QueryEngine.run(IngestJob.points(spark, cfg), q)))
+    }
+    // the q_json_rollup_ladder shape: a metric filter and a daily sum
+    check(s"""{"start": $t0, "end": ${t0 + 3 * day},
+      "filter": {"type": "MetricLiteral", "metric": "click"},
+      "downsample": {"interval": "1d", "aggregator": "sum"}}""",
+      Set(IngestJob.rungPath(cfg, "1d")))
+    // the ingest_routed group-by: a daily sum from a segment boundary 2h
+    // past midnight — the 1d rung cannot clip there, the 1h rung can
+    val groupBy = s""""downsample": {"interval": "1d", "aggregator": "sum"},
+      "groupBy": {"tagKeys": ["user"], "aggregator": "sum"}}"""
+    check(s"""{"start": ${t0 + 7200}, "end": ${t0 + 3 * day}, $groupBy""",
+      Set(IngestJob.rungPath(cfg, "1h")))
+    // ...and with the end off the grid (a wall-clock `now`), the 1h rung
+    // serves up to the last midnight and the rest reads raw
+    check(s"""{"start": ${t0 + 7200}, "end": ${t0 + 3 * day - 600}, $groupBy""",
+      Set(IngestJob.rungPath(cfg, "1h"), IngestJob.pointsPath(cfg)))
   }
 
   test("finalize and purge cover every ladder rung") {
@@ -342,9 +427,8 @@ class IngestJobSpec extends AnyFunSuite {
     assert(IngestJob.points(spark, cfg).select("ts").collect()
       .map(_.getLong(0)).toSet === Set(t0 + day + 10))
     // the surviving rung still serves the surviving day exactly
-    val served = graft.rollup.Rollup.downsampleLadder(
-      IngestJob.points(spark, cfg), IngestJob.rollupLadder(spark, cfg),
-      graft.query.DownsampleSpec("1d", "sum"), t0 + day, t0 + 2 * day)
+    val served = graft.Graft.queryRouted(spark, cfg, ds("1d", t0 + day, t0 + 2 * day))
+    assert(scans(served, cfg) === Set(IngestJob.rungPath(cfg, "1d")))
     assert(served.collect().map(r =>
       r.getAs[Long]("bucket_ts") -> r.getAs[Double]("value")).toMap ===
       Map((t0 + day) -> 2.0))
@@ -420,12 +504,9 @@ class IngestJobSpec extends AnyFunSuite {
     IngestJob.purgeAndRepair(spark, cfg, t0 + 4 * 3600)
     assert(IngestJob.rungFrontier(spark, cfg, "1d") === Long.MaxValue)
     assert(IngestJob.rungFrontier(spark, cfg, "1h") === Long.MaxValue)
-    val served = graft.rollup.Rollup.downsampleLadder(
-      IngestJob.points(spark, cfg), IngestJob.rollupLadder(spark, cfg),
-      graft.query.DownsampleSpec("1d", "sum"), t0, t0 + day)
-    val plan = served.queryExecution.executedPlan.toString
-    assert(plan.contains("rollup_1d") && !plan.contains("lake/points"),
-      s"the repaired window must serve from the store, not raw:\n$plan")
+    val served = graft.Graft.queryRouted(spark, cfg, ds("1d", t0, t0 + day))
+    assert(scans(served, cfg) === Set(IngestJob.rungPath(cfg, "1d")),
+      "the repaired window must serve from the store, not raw")
     // the rebuilt composite agrees with the post-purge lake: survivors only
     assert(served.collect().map(r =>
       r.getAs[Long]("bucket_ts") -> r.getAs[Double]("value")).toMap ===
