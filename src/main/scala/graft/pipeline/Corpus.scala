@@ -497,6 +497,14 @@ object Corpus {
         md5(concat_ws(" ", transform(col("__kept"), k => k("__c")))).as("kept_hash"))
   }
 
+  /** Each document's exact-dup canonical id: its normalized-content md5
+   *  joined to [[Dedup.exact]]'s groups, as (doc_id, canonical_id). */
+  private def exactCanonical(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), md5(Dedup.normalized(col("text"))).as("__h"))
+      .join(Dedup.exact(docs).select(col("content_hash").as("__h"), col("canonical_id")), "__h")
+      .select(col("doc_id"), col("canonical_id"))
+
   /** One-row corpus funnel report — the "data card" numbers a pipeline
    *  publishes with every corpus build: doc counts at each gate
    *  (quality, exact-dup canonical, near-dup survivor) and token totals
@@ -510,10 +518,7 @@ object Corpus {
     val totals = withTok.agg(
       count(lit(1)).as("n_docs"), sum(col("__n_tok")).as("tokens_total"))
     val quality = TextAnalysis.quality(docs).select(col("doc_id"), col("keep"))
-    val canonical = docs
-      .select(col("doc_id"), md5(Dedup.normalized(col("text"))).as("__h"))
-      .join(Dedup.exact(docs).select(col("content_hash").as("__h"), col("canonical_id")), "__h")
-      .select(col("doc_id"), col("canonical_id"))
+    val canonical = exactCanonical(docs)
     // ONE cluster collapse serves both the cluster stats and the
     // survivor gate (calling select() here would run the whole LSH +
     // propagation a second time — measured at ~2 s of pure duplicate
@@ -774,10 +779,7 @@ object Corpus {
   def select(docs: DataFrame, nearThreshold: Double): DataFrame = {
     val quality = TextAnalysis.quality(docs)
       .select(col("doc_id"), col("quality_score"), col("keep"))
-    val canonical = docs
-      .select(col("doc_id"), md5(Dedup.normalized(col("text"))).as("__h"))
-      .join(Dedup.exact(docs).select(col("content_hash").as("__h"), col("canonical_id")), "__h")
-      .select(col("doc_id"), col("canonical_id"))
+    val canonical = exactCanonical(docs)
     val clusters = Dedup.duplicateClusters(Dedup.nearDuplicates(docs, nearThreshold))
     docs.select(col("doc_id"))
       .join(quality, "doc_id")
@@ -803,10 +805,7 @@ object Corpus {
   def selectBestPerCluster(docs: DataFrame, nearThreshold: Double): DataFrame = {
     val quality = TextAnalysis.quality(docs)
       .select(col("doc_id"), col("quality_score"), col("keep"))
-    val canonical = docs
-      .select(col("doc_id"), md5(Dedup.normalized(col("text"))).as("__h"))
-      .join(Dedup.exact(docs).select(col("content_hash").as("__h"), col("canonical_id")), "__h")
-      .select(col("doc_id"), col("canonical_id"))
+    val canonical = exactCanonical(docs)
     val clusters = Dedup.duplicateClusters(Dedup.nearDuplicates(docs, nearThreshold))
     val best = clusters
       .join(quality.select(col("doc_id"), col("quality_score")), "doc_id")

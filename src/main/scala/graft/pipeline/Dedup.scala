@@ -179,6 +179,41 @@ object Dedup {
       .select(col("doc_id"), col("sig"), col("bk.band"), col("bk.key"))
   }
 
+  /** The LSH skew cap, shared by every bucketed candidate generator: a
+   *  bucket (one value of `keys`) holding a huge clone cluster emits
+   *  |bucket|² pairs — the classic LSH skew degeneracy — so each of
+   *  `sides` keeps only the rows whose bucket holds at most
+   *  `maxBucketSize` rows of `sized`. Capped buckets are dropped whole
+   *  (their members are trivially discoverable by exact dedup instead);
+   *  `Int.MaxValue` turns the cap off, the exhaustive oracle-checked
+   *  path. */
+  private def capBuckets(sized: DataFrame, keys: Seq[String], maxBucketSize: Int)(
+      sides: DataFrame*): Seq[DataFrame] =
+    if (maxBucketSize == Int.MaxValue) sides
+    else {
+      val ok = sized.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") <= maxBucketSize)
+        .select(keys.map(col): _*)
+      sides.map(_.join(ok, keys, "left_semi"))
+    }
+
+  /** The LSH bucket-mate self-join of every bucketed near-dup operator
+   *  (MinHash bands, SimHash blocks, hyperplane tables): after the
+   *  [[capBuckets]] skew cap, rows sharing all of `keys` meet on one
+   *  equi-join, each pair once. Each side carries `id` as
+   *  `<pair>_a`/`<pair>_b` (a < b) and each `payload` column `c` as
+   *  `<p>a`/`<p>b` for its (c, p). A pair may share several buckets, so
+   *  callers dedup after scoring. */
+  private[pipeline] def bucketMates(rows: DataFrame, keys: Seq[String], maxBucketSize: Int,
+      id: String, pair: String, payload: (String, String)*): DataFrame = {
+    val b = capBuckets(rows, keys, maxBucketSize)(rows).head
+    def side(s: String): DataFrame =
+      b.select((col(id).as(s"${pair}_$s") +: payload.map { case (c, p) => col(c).as(p + s) }) ++
+        keys.map(col): _*)
+    side("a").join(side("b"), keys).filter(col(s"${pair}_a") < col(s"${pair}_b"))
+  }
+
   /** Candidate pairs: docs sharing at least one full band, each pair
    *  once (a < b), with both signatures attached. The signature table is
    *  persisted and computed ONCE — the band self-join sides carry only
@@ -187,50 +222,41 @@ object Dedup {
    *  recomputed per join side; sig_a/sig_b attach by two equi-joins
    *  after the pair set is deduped. (The persisted frame is released by
    *  Spark's context cleaner when unreferenced; eager operators like
-   *  [[ngramJaccard]] unpersist explicitly.) */
-  def candidates(docs: DataFrame): DataFrame = candidates(docs, Int.MaxValue)
-
-  /** As [[candidates]] with a bucket-size cap: a band bucket holding a
-   *  huge clone cluster produces |bucket|² pairs — the classic LSH skew
-   *  degeneracy. Capped buckets are dropped whole (their members are
-   *  trivially discoverable by exact dedup instead); the cap is off by
-   *  default so the oracle-checked path is exhaustive. */
-  def candidates(docs: DataFrame, maxBucketSize: Int): DataFrame =
-    candidatesFromSignatures(signatures(docs).persist(), maxBucketSize)
-
-  /** Candidate pairs from a signature table the CALLER owns (and should
-   *  persist — the plan references it four times: two band sides, two
-   *  signature attaches). */
-  def candidatesFromSignatures(sigs: DataFrame, maxBucketSize: Int): DataFrame =
+   *  [[ngramJaccard]] unpersist explicitly.) `maxBucketSize` is the
+   *  [[capBuckets]] skew cap over (band, key) buckets, off by default so
+   *  the oracle-checked path is exhaustive. */
+  def candidates(docs: DataFrame, maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val sigs = signatures(docs).persist()
     candidatePairsFromSignatures(sigs, maxBucketSize)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select("doc_a", "doc_b", "sig_a", "sig_b")
+  }
 
   /** Candidate pair IDS only — consumers that verify by other means (the
    *  exact-Jaccard stage) skip the signature-attach joins entirely. */
-  def candidatePairsFromSignatures(sigs: DataFrame, maxBucketSize: Int): DataFrame = {
-    val b0 = bands(sigs).select("doc_id", "band", "key") // scalars only
-    val b =
-      if (maxBucketSize == Int.MaxValue) b0
-      else {
-        val sizes = b0.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize)
-          .select("band", "key")
-        b0.join(sizes, Seq("band", "key"), "left_semi")
-      }
-    b.select(col("doc_id").as("doc_a"), col("band"), col("key"))
-      .join(b.select(col("doc_id").as("doc_b"), col("band"), col("key")), Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
+  def candidatePairsFromSignatures(sigs: DataFrame, maxBucketSize: Int): DataFrame =
+    bucketMates(bands(sigs).select("doc_id", "band", "key"), // scalars only
+        Seq("band", "key"), maxBucketSize, "doc_id", "doc")
       // scalar pair dedup (hash aggregate); with sigs in tow this would
       // be an array-buffered dropDuplicates
       .select("doc_a", "doc_b")
       .distinct()
-  }
 
-  /** MinHash near-dup pairs: candidate pairs with estimated Jaccard
-   *  (fraction of agreeing signature components) ≥ threshold. */
+  /** The MinHash Jaccard estimate of a (sig_a, sig_b) pair: the fraction
+   *  of agreeing signature components. */
+  private def estJaccard: Column =
+    aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), _ + _).cast("double") / lit(NumPerms.toDouble)
+
+  /** MinHash near-dup pairs: candidate pairs with [[estJaccard]] ≥
+   *  threshold. */
+  def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame =
+    candidates(docs)
+      .withColumn("est_jaccard", estJaccard)
+      .filter(col("est_jaccard") >= threshold)
+      .select("doc_a", "doc_b", "est_jaccard")
+
   /** Incremental NEAR-dup: candidate pairs between a NEW snapshot and a
    *  REFERENCE corpus only — no new×new, no ref×ref — through the same
    *  MinHash/banding pipeline as [[nearDuplicates]] (so a pair's
@@ -260,40 +286,30 @@ object Dedup {
       threshold: Double, maxBucketSize: Int): (DataFrame, DataFrame, DataFrame) = {
     val sigsNew = signatures(newDocs).persist()
     val sigsRef = signatures(reference).persist()
-    val bNew0 = bands(sigsNew).select(col("doc_id").as("new_id"), col("band"), col("key"))
-    val bRef0 = bands(sigsRef).select(col("doc_id").as("ref_id"), col("band"), col("key"))
-    val (bNew, bRef) =
-      if (maxBucketSize == Int.MaxValue) (bNew0, bRef0)
-      else {
-        val sizes = bNew0.select(col("band"), col("key"))
-          .unionByName(bRef0.select(col("band"), col("key")))
-          .groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize)
-          .select("band", "key")
-        (bNew0.join(sizes, Seq("band", "key"), "left_semi"),
-          bRef0.join(sizes, Seq("band", "key"), "left_semi"))
-      }
-    val pairs = bNew.join(bRef, Seq("band", "key"))
-      .select("new_id", "ref_id").distinct()
-    val eq = zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0))
-    val out = pairs
-      .join(sigsNew.select(col("doc_id").as("new_id"), col("sig").as("sig_a")), "new_id")
-      .join(sigsRef.select(col("doc_id").as("ref_id"), col("sig").as("sig_b")), "ref_id")
-      .withColumn("est_jaccard",
-        aggregate(eq, lit(0), _ + _).cast("double") / lit(NumPerms.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select("new_id", "ref_id", "est_jaccard")
-    (sigsNew, sigsRef, out)
+    val bRef = bands(sigsRef).select(col("doc_id").as("ref_id"), col("band"), col("key"))
+    (sigsNew, sigsRef, referencePairs(sigsNew, sigsRef, bRef, threshold, maxBucketSize))
   }
 
-  def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
-    val eq = zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0))
-    candidates(docs)
-      .withColumn("est_jaccard",
-        aggregate(eq, lit(0), _ + _).cast("double") / lit(NumPerms.toDouble))
+  /** The new×reference MinHash join behind [[nearDuplicatesAgainstReference]]
+   *  and the streaming [[graft.streaming.DocIngest.runPipelineNearDedup]]:
+   *  the new docs' bands equi-join the reference band index `bandsRef`
+   *  (ref_id, band, key), each (new_id, ref_id) pair once, after the
+   *  [[capBuckets]] skew cap sized over BOTH sides; both signatures then
+   *  attach and pairs with [[estJaccard]] ≥ threshold survive. */
+  private[graft] def referencePairs(sigsNew: DataFrame, sigsRef: DataFrame,
+      bandsRef: DataFrame, threshold: Double, maxBucketSize: Int): DataFrame = {
+    val keys = Seq("band", "key")
+    val bNew0 = bands(sigsNew).select(col("doc_id").as("new_id"), col("band"), col("key"))
+    val Seq(bNew, bRef) = capBuckets(
+      bNew0.select(keys.map(col): _*).unionByName(bandsRef.select(keys.map(col): _*)),
+      keys, maxBucketSize)(bNew0, bandsRef)
+    bNew.join(bRef, keys)
+      .select("new_id", "ref_id").distinct()
+      .join(sigsNew.select(col("doc_id").as("new_id"), col("sig").as("sig_a")), "new_id")
+      .join(sigsRef.select(col("doc_id").as("ref_id"), col("sig").as("sig_b")), "ref_id")
+      .withColumn("est_jaccard", estJaccard)
       .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
+      .select("new_id", "ref_id", "est_jaccard")
   }
 
   /** Exact n-gram Jaccard, restricted to LSH candidate pairs (the
@@ -304,17 +320,15 @@ object Dedup {
    *  shingles on (doc, shingle) → count per pair — instead of
    *  `array_intersect` on paired shingle arrays: the relational form is
    *  codegen'd, reuses one persisted shingle table for both sides, and
-   *  never ships whole shingle arrays through a shuffle. */
-  def ngramJaccard(docs: DataFrame, threshold: Double): DataFrame =
-    ngramJaccard(docs, threshold, Int.MaxValue)
-
-  /** As [[ngramJaccard]] with the candidate bucket cap of
-   *  [[candidates]]: the production shape on clone-heavy corpora, where
-   *  an uncapped band bucket's |bucket|² pairs dominate the verify
-   *  join's input. Cap-off (the 2-arg overload) stays the oracle
-   *  contract — the same opt-in posture as the capped minhash/simhash
-   *  candidate generators. */
-  def ngramJaccard(docs: DataFrame, threshold: Double, maxBucketSize: Int): DataFrame = {
+   *  never ships whole shingle arrays through a shuffle.
+   *
+   *  `maxBucketSize` is the [[candidates]] bucket cap: the production
+   *  shape on clone-heavy corpora, where an uncapped band bucket's
+   *  |bucket|² pairs dominate the verify join's input. Cap-off (the
+   *  default) stays the oracle contract — the same opt-in posture as
+   *  [[candidates]] and [[simhashNearDuplicates]]. */
+  def ngramJaccard(docs: DataFrame, threshold: Double,
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val (persisted, out) = ngramJaccardLazy(docs, threshold, maxBucketSize)
     val materialized = Iterate.truncate(out) // pairs ≥ threshold only (small)
     persisted.foreach(_.unpersist())
@@ -326,10 +340,26 @@ object Dedup {
    *  frame, the query needs the eager truncate. */
   private[graft] def ngramJaccardLazy(docs: DataFrame, threshold: Double,
       maxBucketSize: Int): (Seq[DataFrame], DataFrame) = {
-    // ONE shingle table feeds the signature pipeline, the per-doc counts,
-    // and both intersection sides; the caller eagerly materializes the
-    // (small) result so the big intermediates can be unpersisted.
-    // Signatures and per-doc totals come out of one shared aggregate.
+    val (persisted, sigs, pairs) = shingleIntersections(docs, maxBucketSize)
+    val out = pairs
+      .join(sigs.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(sigs.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .withColumn("jaccard", exactJaccard)
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
+    (persisted, out)
+  }
+
+  /** The exact-shingle intersection core of the verify-after-LSH
+   *  operators ([[ngramJaccard]], [[minhashEval]]). ONE distinct shingle
+   *  table feeds the signature pipeline, the per-doc counts (both from
+   *  one shared aggregate) and both intersection sides; the callers
+   *  eagerly materialize their (small) results so the big intermediates
+   *  can be unpersisted. Returns the persisted frames to release, the
+   *  (doc_id, sig, n) table, and the candidate pairs with their
+   *  shared-shingle count `i` (0 when they share none). */
+  private def shingleIntersections(docs: DataFrame,
+      maxBucketSize: Int): (Seq[DataFrame], DataFrame, DataFrame) = {
     val expl = shingleRows(docs).persist()
     val sigs = signaturesAndCountsFromShingles(expl).persist()
     // the pair set is read TWICE (intersection probe + the left join
@@ -351,17 +381,14 @@ object Dedup {
       .join(explCand.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
       .join(explCand.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    val out = cand
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("i"))
-      .join(sigs.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-      .withColumn("jaccard",
-        col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-    (Seq(expl, sigs, cand), out)
+    (Seq(expl, sigs, cand), sigs,
+      cand.join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("i")))
   }
+
+  /** A pair's exact shingle Jaccard from its intersection `i` and the
+   *  per-doc totals `na`, `nb`. */
+  private def exactJaccard: Column =
+    col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double")
 
   /** MinHash estimator-quality evaluation over the LSH candidate set —
    *  the dedup analog of ANN recall@k ("measure, don't guess" as a
@@ -386,31 +413,16 @@ object Dedup {
    *  frame, the query needs the eager truncate. */
   private[graft] def minhashEvalLazy(docs: DataFrame,
       threshold: Double): (Seq[DataFrame], DataFrame) = {
-    val expl = shingleRows(docs).persist()
-    // signature + per-doc shingle total from ONE aggregate (see
-    // signaturesAndCountsFromShingles); the per-side attach below then
-    // carries (sig, n) through a single join per side instead of two
-    val sigs = signaturesAndCountsFromShingles(expl).persist()
-    val cand = candidatePairsFromSignatures(sigs, Int.MaxValue).persist()
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-    val explCand = expl.join(candDocs, Seq("doc_id"), "left_semi")
-    val inter = cand
-      .join(explCand.select(col("doc_id").as("doc_a"), col("s")), "doc_a")
-      .join(explCand.select(col("doc_id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    val eq = zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0))
-    val pairs = cand
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("i"))
+    // the per-side attach below carries (sig, n) through a single join
+    // per side, both out of shingleIntersections' one aggregate
+    val (persisted, sigs, withI) = shingleIntersections(docs, Int.MaxValue)
+    val pairs = withI
       .join(sigs.select(col("doc_id").as("doc_a"), col("n").as("na"),
         col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("n").as("nb"),
         col("sig").as("sig_b")), "doc_b")
-      .withColumn("est",
-        aggregate(eq, lit(0), _ + _).cast("double") / lit(NumPerms.toDouble))
-      .withColumn("exact",
-        col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double"))
+      .withColumn("est", estJaccard)
+      .withColumn("exact", exactJaccard)
     val t = lit(threshold)
     // a collision-free corpus has ZERO candidate pairs; sum/avg over no
     // rows are SQL-null, so the confusion counts coalesce to 0 (the
@@ -423,7 +435,7 @@ object Dedup {
       coalesce(sum(when(col("est") < t && col("exact") >= t, 1L).otherwise(0L)), lit(0L)).as("fn"),
       coalesce(sum(when(col("est") < t && col("exact") < t, 1L).otherwise(0L)), lit(0L)).as("tn"),
       round(avg(round(abs(col("est") - col("exact")), 4)), 4).as("mean_abs_err"))
-    (Seq(expl, sigs, cand), agg)
+    (persisted, agg)
   }
 
   /** Streaming exact dedup: content-hash keyed, first-arrival-wins,
@@ -507,21 +519,19 @@ object Dedup {
    *  at least one whole block — so candidates come from per-(block,
    *  value) equi-joins (shuffle O(docs × blocks), never all-pairs) and
    *  the exact distance check is one codegen'd xor + bit_count per
-   *  candidate. Emits each qualifying pair once with its distance. */
-  def simhashNearDuplicates(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    simhashNearDuplicates(docs, maxHamming, Int.MaxValue)
-
-  /** As [[simhashNearDuplicates]] with the per-(block, value) bucket cap
-   *  the MinHash side has ([[candidates]]): a block bucket holding a huge
-   *  clone cluster is |bucket|² candidate pairs — identical documents
-   *  collide in EVERY block, and "emit every in-radius pair" is quadratic
-   *  in clone-neighborhood size (measured 58.8× wall / 104.6M output
-   *  pairs at 10× data when uncapped). Capped buckets drop whole; pair
-   *  with [[simhashNearDuplicatesCapped]] so exact-collision clusters
-   *  survive as O(n) star edges. Off by default so the oracle-checked
-   *  path stays exhaustive. */
-  def simhashNearDuplicates(docs: DataFrame, maxHamming: Int,
-      maxBucketSize: Int): DataFrame = {
+   *  candidate. Emits each qualifying pair once with its distance.
+   *
+   *  `maxBucketSize` is the per-(block, value) bucket cap the MinHash
+   *  side has ([[candidates]]): a block bucket holding a huge clone
+   *  cluster is |bucket|² candidate pairs — identical documents collide
+   *  in EVERY block, and "emit every in-radius pair" is quadratic in
+   *  clone-neighborhood size (measured 58.8× wall / 104.6M output pairs
+   *  at 10× data when uncapped). Capped buckets drop whole; pair with
+   *  [[simhashNearDuplicatesCapped]] so exact-collision clusters survive
+   *  as O(n) star edges. Off by default so the oracle-checked path stays
+   *  exhaustive. */
+  def simhashNearDuplicates(docs: DataFrame, maxHamming: Int = 3,
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 28, "maxHamming in [0, 28)")
     val nBlocks = maxHamming + 1
     val bits = 28
@@ -532,24 +542,10 @@ object Dedup {
       struct(lit(b).as("blk"),
         shiftright(col("simhash"), lo).bitwiseAND(lit((1L << (hi - lo)) - 1)).as("v"))
     }
-    val b0 = sh.select(col("doc_id"), col("simhash"),
+    val blocks = sh.select(col("doc_id"), col("simhash"),
       explode(array(blockCols: _*)).as("bv"))
       .select(col("doc_id"), col("simhash"), col("bv.blk").as("blk"), col("bv.v").as("v"))
-    val blocks =
-      if (maxBucketSize == Int.MaxValue) b0
-      else {
-        val ok = b0.groupBy(col("blk"), col("v"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize)
-          .select("blk", "v")
-        b0.join(ok, Seq("blk", "v"), "left_semi")
-      }
-    val left = blocks.select(col("doc_id").as("doc_a"), col("simhash").as("ha"),
-      col("blk"), col("v"))
-    val right = blocks.select(col("doc_id").as("doc_b"), col("simhash").as("hb"),
-      col("blk"), col("v"))
-    left.join(right, Seq("blk", "v"))
-      .filter(col("doc_a") < col("doc_b"))
+    bucketMates(blocks, Seq("blk", "v"), maxBucketSize, "doc_id", "doc", "simhash" -> "h")
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       // scalar distinct across blocks (a pair may agree on several)

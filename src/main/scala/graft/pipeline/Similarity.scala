@@ -38,21 +38,42 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Brute-force cosine top-k for a query subset against the corpus.
-   *  Results ranked by 4-decimal-rounded similarity (vec_id tiebreak)
-   *  for deterministic cross-engine ordering. */
+  /** The one per-query ranking window: row_number over q_id in `order`,
+   *  numbered into `as` and kept while it is at most `k`. */
+  private def firstPerQuery(df: DataFrame, k: Int, as: String, order: Column*): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id")).orderBy(order: _*)
+    df.withColumn(as, row_number().over(w)).filter(col(as) <= k)
+  }
+
+  /** The per-query top-k every ranked search shares: rank on the
+   *  4-decimal-rounded score — `sim` descending, or the ADC distance
+   *  `adist` ascending — with a vec_id tiebreak, for deterministic
+   *  cross-engine ordering. Emits (q_id, rank, vec_id, keep…, score). */
+  private def topK(scored: DataFrame, score: String, k: Int, keep: String*): DataFrame = {
+    val order = if (score == "adist") col(score).asc else col(score).desc
+    firstPerQuery(scored, k, "rank", order, col("vec_id").asc)
+      .select((Seq("q_id", "rank", "vec_id") ++ keep :+ score).map(col): _*)
+  }
+
+  /** [[topK]] on 4-decimal cosine over (q_id, q_vec) × (vec_id, vec)
+   *  candidate pairs. */
+  private def cosineTopK(pairs: DataFrame, k: Int, keep: String*): DataFrame =
+    topK(pairs.withColumn("sim", round(cosine(col("q_vec"), col("vec")), 4)), "sim", k, keep: _*)
+
+  /** Cosine top-k among bucket-mates: the broadcast `probes` (q_id,
+   *  q_vec, `key`) meet the corpus (vec_id, vec, `key`) on one equi-join
+   *  — the corpus is never shuffled for the query side — and a query
+   *  never ranks itself. */
+  private def probeTopK(corpus: DataFrame, probes: DataFrame, key: String, k: Int): DataFrame =
+    cosineTopK(corpus.join(broadcast(probes), Seq(key)).filter(col("vec_id") =!= col("q_id")), k)
+
+  /** Brute-force cosine top-k for a query subset against the corpus,
+   *  ranked by [[topK]]. */
   def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val queries = emb.filter(queryPred)
       .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_vec"))
     val corpus = emb.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
-    val sim = round(cosine(col("q_vec"), col("vec")), 4)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "sim")
+    cosineTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("q_id")), k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -70,14 +91,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         asDouble(col("embedding")).as("q_vec"))
     val corpus = emb.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("vec"))
-    val sim = round(cosine(col("q_vec"), col("vec")), 4)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    corpus.join(broadcast(queries), col("label") =!= col("q_label"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "label", "sim")
+    cosineTopK(corpus.join(broadcast(queries), col("label") =!= col("q_label")), k, "label")
   }
 
   /** Per-group embedding centroids (mean pooling): one (group, dim,
@@ -147,6 +161,14 @@ object Similarity {
     emb.select(col("vec_id"), col("label"),
       bucketId(asDouble(col("embedding"))).as("bucket"))
 
+  /** The 1e-4-grid vector fingerprint both [[exactDuplicates]] and
+   *  [[nearDuplicateEdgesCapped]]'s star join key — ONE definition, so
+   *  the "loss-free for exact clones" guarantee can't silently break by
+   *  the two snap/format expressions drifting apart. */
+  private def vecFingerprint: Column =
+    md5(concat_ws(",",
+      transform(asDouble(col("embedding")), x => round(x * 10000).cast("long").cast("string"))))
+
   /** Exact-embedding dedup at 1e-4 resolution: vectors identical after
    *  snapping every component to the 1e-4 grid share a fingerprint —
    *  one md5 over the snapped-integer string, then a hash-groupBy with
@@ -157,14 +179,6 @@ object Similarity {
    *  (`round(x·10⁴)`) BEFORE stringifying, so both engines format the
    *  canonical string identically (float-to-text rules differ;
    *  integer-to-text does not). */
-  /** The 1e-4-grid vector fingerprint both [[exactDuplicates]] and
-   *  [[nearDuplicateEdgesCapped]]'s star join key — ONE definition, so
-   *  the "loss-free for exact clones" guarantee can't silently break by
-   *  the two snap/format expressions drifting apart. */
-  private def vecFingerprint: Column =
-    md5(concat_ws(",",
-      transform(asDouble(col("embedding")), x => round(x * 10000).cast("long").cast("string"))))
-
   def exactDuplicates(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), vecFingerprint.as("vec_fp"))
       .groupBy(col("vec_fp"))
@@ -184,54 +198,37 @@ object Similarity {
    *  hyperplane-LSH candidates (never all-pairs) filtered to cosine ≥
    *  threshold — the embedding-space analog of MinHash banding
    *  ([[Dedup.candidates]]). Each vector lands in one bucket per table
-   *  (shuffle O(n·NdTables)); the self-join runs per (table, bucket), so
+   *  (shuffle O(n·tables)); the self-join runs per (table, bucket), so
    *  only same-table bucket-mates ever meet, and the cross-table union
    *  is a scalar `distinct` AFTER the sim threshold — surviving pairs
-   *  shuffle as three scalars, never the vectors. */
-  def cosineNearDuplicates(emb: DataFrame, threshold: Double): DataFrame =
-    cosineNearDuplicates(emb, threshold, Int.MaxValue)
-
-  /** As [[cosineNearDuplicates]] with the bucket-size cap the MinHash
-   *  side has ([[Dedup.candidates]]): a bucket holding a huge clone
-   *  cluster is |bucket|² pairs — the LSH skew degeneracy — and identical
-   *  vectors collide in EVERY table, so the cap drops such buckets whole
-   *  (their members are trivially discoverable by exact-embedding dedup
-   *  instead). Off by default so the oracle-checked path is exhaustive;
-   *  at warehouse scale run with a cap (e.g. 10⁴) and route capped
-   *  buckets through exact dedup. */
-  def cosineNearDuplicates(emb: DataFrame, threshold: Double, maxBucketSize: Int): DataFrame =
-    cosineNearDuplicates(emb, threshold, maxBucketSize, NdTables, NdPlanesPerTable)
-
-  /** As [[cosineNearDuplicates]] with explicit banding knobs — the 100 TB
-   *  tuning surface. A bigger corpus raises `planesPerTable` (buckets
-   *  shrink 2× per extra plane, collapsing the O(n²/2^b) per-bucket
-   *  join) and raises `tables` to buy recall back (each extra table is
-   *  an independent chance to collide). [[HashConstants.ndPlaneTables]]
-   *  generates the planes from one fixed stream, so the defaults
-   *  reproduce the oracle constants exactly and a larger table count
-   *  strictly extends the default tables (recall is monotone in
-   *  `tables` — spec-pinned). */
-  def cosineNearDuplicates(emb: DataFrame, threshold: Double, maxBucketSize: Int,
-      tables: Int, planesPerTable: Int): DataFrame = {
+   *  shuffle as three scalars, never the vectors.
+   *
+   *  `maxBucketSize` is the bucket cap the MinHash side has
+   *  ([[Dedup.candidates]]): identical vectors collide in EVERY table, so
+   *  the cap drops a clone cluster's buckets whole (their members are
+   *  trivially discoverable by [[exactDuplicates]] instead). Off by
+   *  default so the oracle-checked path is exhaustive; at warehouse
+   *  scale run with a cap (e.g. 10⁴) and route capped buckets through
+   *  exact dedup ([[nearDuplicateEdgesCapped]]).
+   *
+   *  `tables` × `planesPerTable` is the 100 TB tuning surface. A bigger
+   *  corpus raises `planesPerTable` (buckets shrink 2× per extra plane,
+   *  collapsing the O(n²/2^b) per-bucket join) and raises `tables` to
+   *  buy recall back (each extra table is an independent chance to
+   *  collide). [[HashConstants.ndPlaneTables]] generates the planes from
+   *  one fixed stream, so the defaults reproduce the oracle constants
+   *  exactly and a larger table count strictly extends the default
+   *  tables (recall is monotone in `tables` — spec-pinned). */
+  def cosineNearDuplicates(emb: DataFrame, threshold: Double,
+      maxBucketSize: Int = Int.MaxValue, tables: Int = NdTables,
+      planesPerTable: Int = NdPlanesPerTable): DataFrame = {
     val planes = ndPlaneTables(tables, planesPerTable)
     val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
     val tb = (0 until tables).map(t =>
       struct(lit(t).as("tbl"), bucketIdFromPlanes(col("vec"), planes(t)).as("bucket")))
     val b0 = vecs.select(col("vec_id"), col("vec"), explode(array(tb: _*)).as("tb"))
       .select(col("vec_id"), col("vec"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-    val b =
-      if (maxBucketSize == Int.MaxValue) b0
-      else {
-        val ok = b0.groupBy(col("tbl"), col("bucket"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= maxBucketSize)
-          .select("tbl", "bucket")
-        b0.join(ok, Seq("tbl", "bucket"), "left_semi")
-      }
-    val left = b.select(col("vec_id").as("vec_a"), col("vec").as("va"), col("tbl"), col("bucket"))
-    val right = b.select(col("vec_id").as("vec_b"), col("vec").as("vb"), col("tbl"), col("bucket"))
-    left.join(right, Seq("tbl", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
+    Dedup.bucketMates(b0, Seq("tbl", "bucket"), maxBucketSize, "vec_id", "vec", "vec" -> "v")
       .withColumn("sim", round(cosine(col("va"), col("vb")), 4))
       .filter(col("sim") >= threshold)
       // sim is a pure function of the pair, so the cross-table union is a
@@ -458,31 +455,24 @@ object Similarity {
     require(nprobe >= 1, "nprobe >= 1")
     val assigned = assignToCells(
       emb.select(col("vec_id"), asDouble(col("embedding")).as("vec")), cents).persist()
-    val queries =
+    val queries = assigned.filter(queryPred)
+    val probes =
       if (nprobe == 1)
-        assigned.filter(queryPred)
-          .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d").asc, col("c_id").asc)
-        assigned.filter(queryPred)
-          .select(col("vec_id").as("q_id"), col("vec").as("q_vec"))
-          .join(broadcast(cents), lit(true))
-          .withColumn("d", round(lit(1.0) - cosine(col("q_vec"), col("c_vec")), 4))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= nprobe)
-          .select(col("q_id"), col("q_vec"), col("c_id").as("cell"))
-      }
-    val sim = round(cosine(col("q_vec"), col("vec")), 4)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    assigned.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "sim")
+        queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
+      else nearestCells(
+        queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec")), cents, nprobe)
+    probeTopK(assigned, probes, "cell", k)
   }
+
+  /** IVF multi-probe: each (q_id, q_vec) query's `nprobe` nearest cells
+   *  by 4-decimal cosine distance (c_id tiebreak) against the broadcast
+   *  centroid table, as (q_id, q_vec, cell). */
+  private def nearestCells(qv: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    firstPerQuery(
+      qv.join(broadcast(cents), lit(true))
+        .withColumn("d", round(lit(1.0) - cosine(col("q_vec"), col("c_vec")), 4)),
+      nprobe, "rn", col("d").asc, col("c_id").asc)
+      .select(col("q_id"), col("q_vec"), col("c_id").as("cell"))
 
   /** IVF top-k: candidates restricted to the query's cell (sampled
    *  centroids — the oracle-replayable path). */
@@ -509,24 +499,8 @@ object Similarity {
       if (nprobe == 1)
         assignToCells(qv.select(col("q_id").as("vec_id"), col("q_vec").as("vec")), cents)
           .select(col("vec_id").as("q_id"), col("vec").as("q_vec"), col("cell"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id")).orderBy(col("d").asc, col("c_id").asc)
-        qv.join(broadcast(cents), lit(true))
-          .withColumn("d", round(lit(1.0) - cosine(col("q_vec"), col("c_vec")), 4))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= nprobe)
-          .select(col("q_id"), col("q_vec"), col("c_id").as("cell"))
-      }
-    val sim = round(cosine(col("q_vec"), col("vec")), 4)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "sim")
+      else nearestCells(qv, cents, nprobe)
+    probeTopK(assigned, probes, "cell", k)
   }
 
   /** Recall@k of the IVF index against the exact brute-force baseline —
@@ -580,18 +554,13 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val exact = bruteForceTopK(emb, queryPred, k).select(col("q_id"), col("vec_id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
     val perDim = dims.map { dm =>
       val queries = emb.filter(queryPred)
         .select(col("vec_id").as("q_id"),
           slice(asDouble(col("embedding")), 1, dm).as("q_vec"))
       val corpus = emb.select(col("vec_id"),
         slice(asDouble(col("embedding")), 1, dm).as("vec"))
-      corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("sim", round(cosine(col("q_vec"), col("vec")), 4))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      cosineTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("q_id")), k)
         .select(lit(dm).as("trunc_dim"), col("q_id"), col("vec_id"))
     }.reduce(_ unionByName _)
     val hits = perDim
@@ -642,14 +611,25 @@ object Similarity {
    *  v: array&lt;double&gt;) frame — the seam the residual path shares. */
   private def subspaceCodebooksV(sample: DataFrame, m: Int): DataFrame = {
     require(Dim % m == 0, s"m must divide the dimension $Dim")
-    val subLen = Dim / m
-    val subs = (0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as("c_vec")))
     sample
       .select(col("vec_id").as("c_id"), col("v"))
-      .select(col("c_id"), explode(array(subs: _*)).as("sc"))
+      .select(col("c_id"), subVectors(m, "c_vec").as("sc"))
       .select(col("sc.sub").as("sub"), col("c_id"), col("sc.c_vec").as("c_vec"))
   }
+
+  /** The PQ sub-vector split: `v` cut into m equal slices, exploded as
+   *  one (sub, `field`) struct per subspace. */
+  private def subVectors(m: Int, field: String): Column = {
+    val subLen = Dim / m
+    explode(array((0 until m).map(s =>
+      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as(field))): _*))
+  }
+
+  /** Squared L2 between a sub-vector `x` and a codeword `c_vec`, rounded
+   *  to 4 decimals. */
+  private def subDist2: Column = round(
+    dot(col("x"), col("x")) - lit(2) * dot(col("x"), col("c_vec"))
+      + dot(col("c_vec"), col("c_vec")), 4)
 
   /** PQ encoding: each vector compresses to `m` small codes — per
    *  subspace, the nearest codeword by (4-decimal-rounded) squared L2,
@@ -685,16 +665,10 @@ object Similarity {
    *  keyed by vec_id would re-shuffle the codes. */
   private def pqEncodeVecs(vecs: DataFrame, m: Int, cb: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
-    val subLen = Dim / m
     val carryCols = carry.map(col)
-    val subs = (0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as("x")))
     val expl = vecs
-      .select(col("vec_id") +: carryCols :+ explode(array(subs: _*)).as("sx"): _*)
+      .select(col("vec_id") +: carryCols :+ subVectors(m, "x").as("sx"): _*)
       .select(col("vec_id") +: carryCols :+ col("sx.sub").as("sub") :+ col("sx.x").as("x"): _*)
-    val d2 = round(
-      dot(col("x"), col("x")) - lit(2) * dot(col("x"), col("c_vec"))
-        + dot(col("c_vec"), col("c_vec")), 4)
     // clamp to the 23-bit distance field's exact range (the doc bound
     // above): beyond it every candidate packs equal and the c_id
     // tiebreak decides — a defined, deterministic degradation instead
@@ -702,7 +676,7 @@ object Similarity {
     val packed = round(least(col("__d"), lit(838.0)) * lit(10000)).cast("long") *
       lit(1L << 40) + col("c_id")
     expl.join(broadcast(cb), Seq("sub"))
-      .withColumn("__d", d2)
+      .withColumn("__d", subDist2)
       .groupBy(col("vec_id") +: carryCols :+ col("sub"): _*)
       .agg(min(packed).as("__p"))
       .select(col("vec_id") +: carryCols :+ col("sub").cast("long").as("sub") :+
@@ -724,30 +698,33 @@ object Similarity {
 
   /** As [[pqTopK]] over an explicit codebook table — pair with
    *  [[pqCodebooksK]] for the constant-k production shape. */
-  def pqTopKWith(emb: DataFrame, cb: DataFrame, queryPred: Column, k: Int, m: Int): DataFrame = {
-    val codes = pqEncodeWith(emb, m, cb)
-    val subLen = Dim / m
-    val subs = (0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as("x")))
-    val qsubs = emb.filter(queryPred)
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("v"))
-      .select(col("q_id"), explode(array(subs: _*)).as("sx"))
-      .select(col("q_id"), col("sx.sub").as("sub"), col("sx.x").as("x"))
-    val d2 = round(
-      dot(col("x"), col("x")) - lit(2) * dot(col("x"), col("c_vec"))
-        + dot(col("c_vec"), col("c_vec")), 4)
-    val table = qsubs.join(broadcast(cb), Seq("sub"))
-      .select(col("q_id"), col("sub").cast("long").as("sub"),
-        col("c_id").as("code"), d2.as("pd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist").asc, col("vec_id").asc)
-    codes.join(broadcast(table), Seq("sub", "code"))
+  def pqTopKWith(emb: DataFrame, cb: DataFrame, queryPred: Column, k: Int, m: Int): DataFrame =
+    topK(adcScores(pqEncodeWith(emb, m, cb),
+      emb.filter(queryPred)
+        .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("v")),
+      col("q_id"), cb, m), "adist", k)
+
+  /** PQ asymmetric-distance (ADC) scoring, shared by every PQ search:
+   *  each query row of `queries` (`qId` becomes q_id; `carry` columns
+   *  and the vector `v`) splits into sub-vectors and builds its
+   *  per-(subspace, codeword) distance table against the BROADCAST
+   *  codebooks; the table broadcasts onto the compressed `codes`
+   *  (vec_id, carry…, sub, code) — one equi-join on (carry…, sub, code)
+   *  plus a hash aggregate summing the m partial distances per (query,
+   *  vector) into `adist`. A query never scores itself. */
+  private def adcScores(codes: DataFrame, queries: DataFrame, qId: Column, cb: DataFrame,
+      m: Int, carry: Seq[String] = Nil): DataFrame = {
+    val keep = carry.map(col)
+    val table = queries
+      .select(qId +: keep :+ subVectors(m, "x").as("sx"): _*)
+      .select(col("q_id") +: keep :+ col("sx.sub").as("sub") :+ col("sx.x").as("x"): _*)
+      .join(broadcast(cb), Seq("sub"))
+      .select(col("q_id") +: keep :+ col("sub").cast("long").as("sub") :+
+        col("c_id").as("code") :+ subDist2.as("pd"): _*)
+    codes.join(broadcast(table), carry ++ Seq("sub", "code"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(round(sum(col("pd")), 4).as("adist"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "adist")
   }
 
   /** Two-stage retrieval: approximate candidate generation (PQ/ADC over
@@ -769,15 +746,9 @@ object Similarity {
     val cand = pqTopKWith(emb, cb, queryPred, kCand, m).select("q_id", "vec_id")
     val qv = emb.filter(queryPred)
       .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_vec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
+    cosineTopK(emb.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
       .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qv), Seq("q_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("vec")), 4))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "sim")
+      .join(broadcast(qv), Seq("q_id")), k)
   }
 
   /** IVF-PQ top-k — the production-standard ANN layout (coarse inverted
@@ -802,29 +773,10 @@ object Similarity {
       .select(col("vec_id"), col("cell")).persist()
     val codes = pqEncodeWith(emb, m, cb)
       .join(assigned, "vec_id") // (vec_id, sub, code, cell)
-    val subLen = Dim / m
-    val subs = (0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as("x")))
-    val qsubs = emb.filter(queryPred)
+    val queries = emb.filter(queryPred)
       .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("v"))
       .join(assigned.select(col("vec_id").as("q_id"), col("cell")), "q_id")
-      .select(col("q_id"), col("cell"), explode(array(subs: _*)).as("sx"))
-      .select(col("q_id"), col("cell"), col("sx.sub").as("sub"), col("sx.x").as("x"))
-    val d2 = round(
-      dot(col("x"), col("x")) - lit(2) * dot(col("x"), col("c_vec"))
-        + dot(col("c_vec"), col("c_vec")), 4)
-    val table = qsubs.join(broadcast(cb), Seq("sub"))
-      .select(col("q_id"), col("cell"), col("sub").cast("long").as("sub"),
-        col("c_id").as("code"), d2.as("pd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist").asc, col("vec_id").asc)
-    codes.join(broadcast(table), Seq("cell", "sub", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(round(sum(col("pd")), 4).as("adist"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "adist")
+    topK(adcScores(codes, queries, col("q_id"), cb, m, carry = Seq("cell")), "adist", k)
   }
 
   /** Residual IVF-PQ top-k — the full production ANN layout (the
@@ -882,27 +834,8 @@ object Similarity {
       residuals(embV.join(broadcast(sampleIds), "vec_id"))
         .select(col("vec_id"), col("v")), m)
     val codes = pqEncodeVecs(residuals(embV), m, cb, carry = Seq("cell"))
-    val subLen = Dim / m
-    val subs = (0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("v"), s * subLen + 1, subLen).as("x")))
-    val qsubs = residuals(embV.filter(queryPred))
-      .select(col("vec_id").as("q_id"), col("cell"), explode(array(subs: _*)).as("sx"))
-      .select(col("q_id"), col("cell"), col("sx.sub").as("sub"), col("sx.x").as("x"))
-    val d2 = round(
-      dot(col("x"), col("x")) - lit(2) * dot(col("x"), col("c_vec"))
-        + dot(col("c_vec"), col("c_vec")), 4)
-    val table = qsubs.join(broadcast(cb), Seq("sub"))
-      .select(col("q_id"), col("cell"), col("sub").cast("long").as("sub"),
-        col("c_id").as("code"), d2.as("pd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist").asc, col("vec_id").asc)
-    codes.join(broadcast(table), Seq("cell", "sub", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(round(sum(col("pd")), 4).as("adist"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "adist")
+    topK(adcScores(codes, residuals(embV.filter(queryPred)), col("vec_id").as("q_id"), cb, m,
+      carry = Seq("cell")), "adist", k)
   }
 
   /** ANN top-k: candidates restricted to the query's bucket
@@ -923,14 +856,6 @@ object Similarity {
     val queries = withBucket.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("vec").as("q_vec"),
         explode(array(probes: _*)).as("bucket"))
-    val sim = round(cosine(col("q_vec"), col("vec")), 4)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    withBucket.join(broadcast(queries), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "vec_id", "sim")
+    probeTopK(withBucket, queries, "bucket", k)
   }
 }

@@ -133,11 +133,11 @@ object DocIngest {
    *  materialized under `workDir` before the stream starts — at 100 TB
    *  the previous snapshot's band index is a stored artifact, not a
    *  per-batch recomputation. Each micro-batch then pays: signature
-   *  aggregation over ITSELF (batch-local, map-side combining), an
-   *  equi-join into the stored index, and the verify join over only
-   *  the colliding pairs — the batch operator's no-new×new /
-   *  no-ref×ref shape. Admitted docs are NOT near-deduped against each
-   *  other (within-crawl dedup is the batch pipeline's job), so
+   *  aggregation over ITSELF (batch-local, map-side combining), then
+   *  the batch operator's own new×reference join and verify
+   *  ([[Dedup.referencePairs]], uncapped) against the stored index —
+   *  no new×new, no ref×ref. Admitted docs are NOT near-deduped against
+   *  each other (within-crawl dedup is the batch pipeline's job), so
    *  admission is a pure per-document function of (doc, reference) and
    *  the streamed lake equals the batch restatement whatever the
    *  file/batch split — the property the declared query's oracle pins.
@@ -155,7 +155,6 @@ object DocIngest {
       .select(col("doc_id").as("ref_id"), col("band"), col("key"))
       .write.mode("overwrite").parquet(s"$workDir/ref_bands")
     val bandsRef = spark.read.parquet(s"$workDir/ref_bands")
-    val nPerms = graft.pipeline.HashConstants.NumPerms
     val reader0 = spark.readStream.schema(schema)
     val reader = maxFilesPerTrigger
       .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n))
@@ -164,18 +163,7 @@ object DocIngest {
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sigsNew = Dedup.signatures(batch).persist()
-        val pairs = Dedup.bands(sigsNew)
-          .select(col("doc_id").as("new_id"), col("band"), col("key"))
-          .join(bandsRef, Seq("band", "key"))
-          .select("new_id", "ref_id").distinct()
-        val eq = zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => when(x === y, 1).otherwise(0))
-        val dup = pairs
-          .join(sigsNew.select(col("doc_id").as("new_id"), col("sig").as("sig_a")), "new_id")
-          .join(sigsRef.select(col("doc_id").as("ref_id"), col("sig").as("sig_b")), "ref_id")
-          .withColumn("__ej",
-            aggregate(eq, lit(0), _ + _).cast("double") / lit(nPerms.toDouble))
-          .filter(col("__ej") >= threshold)
+        val dup = Dedup.referencePairs(sigsNew, sigsRef, bandsRef, threshold, Int.MaxValue)
           .select(col("new_id").as("doc_id")).distinct()
         batch.join(dup, Seq("doc_id"), "left_anti")
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")

@@ -309,10 +309,14 @@ object IngestJob {
    *  then the sketch folds. The points append goes through the sink
    *  strategy surface (P4) — default is the segment-partitioned parquet
    *  lake. Returns admission stats, computed via `observe()` on the
-   *  write pass (no dedicated count jobs). */
+   *  write pass (no dedicated count jobs). `batchId` is the micro-batch's
+   *  id (see [[batchBody]]): the CMS/DDS partials' partition and the
+   *  in-band `compactEvery` fold key on it. */
   def processBatch(batch: DataFrame, cfg: Config,
       sink: Option[graft.sinks.PointsSink] = None,
-      batchId: Long = -1L): BatchStats = {
+      batchId: Long): BatchStats = {
+    // batch_id=-1 is the count stores' snapshot partition
+    require(batchId >= 0, s"batchId must be a micro-batch id (>= 0), got $batchId")
     val now: Option[Long] = cfg.nowSec.map(_.apply()) // sample the clock once per batch
     // Admission bounds anchor on the wall clock when we have one (the
     // reference's isEarly/isDelayed), else on the robust high-water mark:
@@ -419,21 +423,17 @@ object IngestJob {
       // batch — the mergeable-summary contract; the read sums cells,
       // never rescans) and DDSketch quantile buckets. Counts are SUMS, so
       // unlike the fold-idempotent logs a blind append would
-      // double-count a foreachBatch REPLAY (at-least-once): with a real
-      // batchId each partial lands in its own partition via dynamic
-      // overwrite — replaying a batch rewrites the same partition,
-      // keeping merged counts == one-shot sketch exactly. A direct
-      // caller without a batchId (batchId < 0) appends and owns its own
-      // replay semantics.
+      // double-count a foreachBatch REPLAY (at-least-once): each partial
+      // lands in its own batch_id partition via dynamic overwrite —
+      // replaying a batch rewrites the same partition, keeping merged
+      // counts == one-shot sketch exactly.
       def partial(name: String, rows: DataFrame, dir: String): Unit =
         flushes += name -> (() =>
-          if (batchId >= 0)
-            rows.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(dir)
-          else rows.write.mode("append").parquet(dir))
+          rows.withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(dir))
       cfg.cms.foreach(c => partial("cms", graft.operators.CountMin
         .sketch(admitted, expr(c.keyExpr), c.depth, c.width), cmsPath(cfg)))
       cfg.dds.foreach(c => partial(s"dds_${c.name}", graft.operators.QuantileSketch

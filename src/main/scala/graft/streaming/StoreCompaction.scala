@@ -29,11 +29,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * snapshot says what it covers: it is one file under `batch_id=-1` named
  * `snapshot-<K>-<uuid>.parquet`, K the highest batch id folded into it
  * (a name without K, as older folds wrote, counts as K = −1). A store's
- * LIVE set is the snapshot with the largest K, the files of every batch
- * partition whose id is greater than K, and any files directly under the
- * store root (a direct `processBatch` without a batch id appends there;
- * like `spark.read.parquet` of the directory, the partitioned read skips
- * them once the store has a partition). Every other file is dead,
+ * LIVE set is the snapshot with the largest K and the files of every
+ * batch partition whose id is greater than K. Every other file is dead,
  * deleted yet or not: folded sources and superseded snapshots. [[read]]
  * reads the live set, and the fold commits through the one
  * planned-files rewrite every store shares
@@ -62,16 +59,16 @@ object StoreCompaction {
   }
 
   /** A store's files as listed: the batch partitions' files by id, then
-   *  the snapshots, then the files directly under the root. */
+   *  the snapshots. */
   private final case class Listing(batches: Seq[(Long, Seq[FileStatus])],
-      snapshots: Seq[FileStatus], rootFiles: Seq[FileStatus]) {
+      snapshots: Seq[FileStatus]) {
     /** The live snapshot: largest K (ties, left by a retention-only
      *  re-fold that covers the same batches, break by name). */
     val snapshot: Option[FileStatus] =
       snapshots.maxByOption(f => (covered(f), f.getPath.getName))
     val k: Long = snapshot.fold(-1L)(covered)
     val liveBatches: Seq[(Long, Seq[FileStatus])] = batches.filter(_._1 > k).sortBy(_._1)
-    def live: Seq[FileStatus] = snapshot.toSeq ++ liveBatches.flatMap(_._2) ++ rootFiles
+    def live: Seq[FileStatus] = snapshot.toSeq ++ liveBatches.flatMap(_._2)
   }
 
   // The batch partitions are listed BEFORE the snapshot partition: a fold
@@ -80,8 +77,7 @@ object StoreCompaction {
   private def list(conf: Configuration, dir: String): Listing = {
     val batches = Fs.partitions(conf, dir, "batch_id").map { case (p, id) => id.toLong -> p }
       .filter(_._1 >= 0).map { case (id, p) => id -> Fs.dataFileStatuses(conf, p.toString) }
-    Listing(batches, Fs.dataFileStatuses(conf, s"$dir/batch_id=$SnapshotBatchId"),
-      Fs.dataFileStatuses(conf, dir))
+    Listing(batches, Fs.dataFileStatuses(conf, s"$dir/batch_id=$SnapshotBatchId"))
   }
 
   /** Drop the batch partitions a snapshot covering batches up to `k`

@@ -78,8 +78,8 @@ class FsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft_fs_rewrite").toString
     val cfg = IngestJob.Config(s"$base/lake", s"$base/ckpt",
       retentionSec = Long.MaxValue / 4, maxFutureSec = Long.MaxValue / 4)
-    IngestJob.processBatch(batch("m.a", 0), cfg)
-    IngestJob.processBatch(batch("m.b", 100), cfg)
+    IngestJob.processBatch(batch("m.a", 0), cfg, batchId = 0L)
+    IngestJob.processBatch(batch("m.b", 100), cfg, batchId = 1L)
     cfg
   }
 
@@ -135,11 +135,11 @@ class FsSpec extends AnyFunSuite {
     }
 
     racing(IngestJob.pointsPath(cfg), pointFiles(conf, cfg), () => IngestJob.points(spark, cfg),
-      () => IngestJob.processBatch(batch("m.c", 200), cfg): Unit,
+      () => IngestJob.processBatch(batch("m.c", 200), cfg, batchId = 2L): Unit,
       col("metric") === "m.c", expectNew = 6, Some("segment_start"))
     racing(IngestJob.seriesLogPath(cfg), Fs.dataFileStatuses(conf, IngestJob.seriesLogPath(cfg)),
       () => spark.read.parquet(IngestJob.seriesLogPath(cfg)),
-      () => IngestJob.processBatch(batch("m.d", 300), cfg): Unit,
+      () => IngestJob.processBatch(batch("m.d", 300), cfg, batchId = 3L): Unit,
       col("metric") === "m.d", expectNew = 6, None)
     racing(eventsLog, eventFiles, () => EventsStore.log(spark, eventsDir),
       () => EventsStore.append(docs(8 until 12), eventsDir),

@@ -85,6 +85,31 @@ class PipelinePlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
   }
 
+  test("corpus_pipeline stages keep their exchange and join counts") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // every node of the planned (not yet run) physical plan, a persisted
+    // frame's cached plan included once per scan of it
+    def nodes(p: SparkPlan): Seq[SparkPlan] = Nodes.collect(p) { case n => n }.flatMap {
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    def counts(df: DataFrame): (Int, Int) = {
+      val ns = nodes(df.queryExecution.executedPlan)
+      (ns.count(_.isInstanceOf[Exchange]), ns.count(_.isInstanceOf[BaseJoinExec]))
+    }
+    // the near_dup and ann stages as the benchmark runs them; a shared
+    // ranker, probe or bucket-mate join that adds a shuffle or a join
+    // to either fails here
+    assert(counts(graft.pipeline.Dedup.nearDuplicates(docs, 0.5)) === ((8, 3)))
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    assert(counts(graft.pipeline.Similarity.ivfTopK(emb, col("vec_id") % 50 === 0, 10, 100))
+      === ((6, 3)))
+  }
+
   test("zipf-head join: explicit broadcast on the hot head survives planning") {
     val p = plan(graft.pipeline.TextAnalysis.corpusLogProb(docs))
     assert(p.contains("BroadcastHashJoin"), s"hot-head broadcast missing:\n$p")

@@ -97,5 +97,28 @@ class EmbedIngestSpec extends AnyFunSuite {
     assert(served.filter(_._1 != 1000L) === batch)
     val ext = served.filter(_._1 == 1000L)
     assert(ext.map(_._2) === Set(1, 2, 3) && ext.forall(_._3 != 1000L))
+
+    // multi-probe: each request scans its 3 nearest cells, and the corpus
+    // queries' answers stay bit-identical to the batch IVF's 3-cell probe
+    EmbedIngest.runQueryServe(spark, s"$base/src", assigned, cents,
+      s"$base/out3", s"$base/ckpt3", k = 3, nprobe = 3, maxFilesPerTrigger = Some(1))
+    val served3 = spark.read.parquet(s"$base/out3")
+      .select("q_id", "rank", "vec_id", "sim")
+      .as[(Long, Int, Long, Double)].collect().toSet
+    val batch3 = Similarity.ivfTopKWith(corpus, cents, col("vec_id") % 10 === 0, 3, nprobe = 3)
+      .as[(Long, Int, Long, Double)].collect().toSet
+    assert(served3.filter(_._1 != 1000L) === batch3)
+    assert(served3.count(_._1 == 1000L) === 3)
+    // the 3 probed cells include each query's own cell, so every rank
+    // scores at least what the single-cell probe found there
+    val sim1 = batch.map(r => (r._1, r._2) -> r._4).toMap
+    assert(batch3.forall(r => sim1.get((r._1, r._2)).forall(r._4 >= _)))
+    // probing all 8 cells scans the whole corpus: exactly brute force
+    val corpusQueries = corpus.filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding"))
+    assert(Similarity.ivfTopKQueries(assigned, cents, corpusQueries, 3, nprobe = 8)
+      .as[(Long, Int, Long, Double)].collect().toSet ===
+      Similarity.bruteForceTopK(corpus, col("vec_id") % 10 === 0, 3)
+        .as[(Long, Int, Long, Double)].collect().toSet)
   }
 }

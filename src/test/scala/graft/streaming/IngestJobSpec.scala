@@ -47,7 +47,7 @@ class IngestJobSpec extends AnyFunSuite {
     // robust hwm: median ts = 99950; the outlier at now+7200 is beyond
     // median+maxFutureSec so it neither becomes the mark nor evicts the
     // valid fresh points. hwm = 100000; retention floor 96400.
-    val stats = IngestJob.processBatch(batch, cfg)
+    val stats = IngestJob.processBatch(batch, cfg, batchId = 0L)
     assert(stats === IngestJob.BatchStats(4, 2, now))
     assert(stats.dropped === 2)
     val kept = IngestJob.points(TestSpark.spark, cfg).select("seq").collect()
@@ -61,7 +61,7 @@ class IngestJobSpec extends AnyFunSuite {
     // point at now+3000: ahead of the bulk but <= hwm+maxFutureSec — legal
     val batch = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (1L, now, "m", 1.0), (2L, now - 10, "m", 2.0), (3L, now + 3000, "m", 3.0)))
-    val stats = IngestJob.processBatch(batch, cfg)
+    val stats = IngestJob.processBatch(batch, cfg, batchId = 0L)
     assert(stats === IngestJob.BatchStats(3, 3, now + 3000))
   }
 
@@ -72,7 +72,7 @@ class IngestJobSpec extends AnyFunSuite {
       (1L, now - 10, "m", 1.0), // fresh
       (2L, now + 3599, "m", 2.0), // within tolerance of the clock
       (3L, now + 3601, "m", 3.0))) // early → dropped
-    val stats = IngestJob.processBatch(batch, cfg)
+    val stats = IngestJob.processBatch(batch, cfg, batchId = 0L)
     assert(stats === IngestJob.BatchStats(3, 2, now + 3599))
   }
 
@@ -82,7 +82,7 @@ class IngestJobSpec extends AnyFunSuite {
     val batch = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (1L, t0, "cpu", 1.0), (2L, t0 + 100, "cpu", 5.0),
       (3L, t0 + seg, "cpu", 7.0), (4L, t0 + seg + 50, "mem", 9.0)))
-    IngestJob.processBatch(batch, cfg)
+    IngestJob.processBatch(batch, cfg, batchId = 0L)
 
     val partDirs = new java.io.File(IngestJob.pointsPath(cfg)).listFiles()
       .filter(_.getName.startsWith("segment_start=")).map(_.getName).sorted
@@ -105,8 +105,8 @@ class IngestJobSpec extends AnyFunSuite {
     val t0 = 20 * seg
     val ev1 = graft.sources.TsdbViews.pointsFromEvents(eventsDf((150L, t0, "cpu", 1.0)))
     val ev2 = graft.sources.TsdbViews.pointsFromEvents(eventsDf((300L, t0 + 10, "cpu", 42.0)))
-    IngestJob.processBatch(ev1, cfg)
-    IngestJob.processBatch(ev2, cfg) // same user (both ids % 150 == 0) → same series
+    IngestJob.processBatch(ev1, cfg, batchId = 0L)
+    IngestJob.processBatch(ev2, cfg, batchId = 1L) // same user (both ids % 150 == 0) → same series
     val spark = TestSpark.spark
     val lat = IngestJob.latest(spark, cfg).collect()
     assert(lat.length === 1)
@@ -125,7 +125,7 @@ class IngestJobSpec extends AnyFunSuite {
     // 4 micro-batches into the same segment → ≥4 files in one partition
     for (i <- 0 until 4)
       IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(
-        eventsDf((i.toLong + 1, t0 + i * 10, "cpu", i.toDouble))), cfg)
+        eventsDf((i.toLong + 1, t0 + i * 10, "cpu", i.toDouble))), cfg, batchId = i.toLong)
     val before = IngestJob.points(spark, cfg)
       .select("seq", "ts", "value").collect().toSet
     def fileCount(): Int = {
@@ -148,16 +148,16 @@ class IngestJobSpec extends AnyFunSuite {
       retentionSec = Long.MaxValue / 4, rollupInterval = Some("1h"))
     val t0 = 50 * seg
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0, "cpu", 1.0), (300L, t0 + 60, "cpu", 5.0))), cfg)
+      (150L, t0, "cpu", 1.0), (300L, t0 + 60, "cpu", 5.0))), cfg, batchId = 0L)
     // second batch re-sends ts=t0 for the same series (user 0) with a
     // higher seq — LWW: the rollup must use 7.0, not 1.0 or 1.0+7.0
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (450L, t0, "cpu", 7.0), (600L, t0 + 3600, "cpu", 9.0))), cfg)
+      (450L, t0, "cpu", 7.0), (600L, t0 + 3600, "cpu", 9.0))), cfg, batchId = 1L)
     // segment t0 is still open (hwm inside it) → close-gated, no flush yet;
     // a later batch pushes the hwm past t0's end and triggers the flush
     assert(!new java.io.File(IngestJob.rollupPath(cfg)).exists())
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (750L, t0 + seg + 60, "mem", 3.0))), cfg)
+      (750L, t0 + seg + 60, "mem", 3.0))), cfg, batchId = 2L)
     val ru = IngestJob.rollup(spark, cfg)
       .filter(col("metric") === "cpu")
       .select(col("bucket_ts").cast("long"), col("sum"), col("cnt"), col("last"))
@@ -184,7 +184,7 @@ class IngestJobSpec extends AnyFunSuite {
     val t0 = 80 * seg
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (150L, t0 + 10, "cpu", 1.0), (300L, t0 + seg + 10, "cpu", 2.0),
-      (450L, t0 + 2 * seg + 10, "cpu", 4.0))), cfg)
+      (450L, t0 + 2 * seg + 10, "cpu", 4.0))), cfg, batchId = 0L)
     def rollupParts(): Map[String, Long] = {
       val d = new java.io.File(IngestJob.rollupPath(cfg))
       if (!d.exists()) Map.empty
@@ -199,11 +199,11 @@ class IngestJobSpec extends AnyFunSuite {
     assert(!after1.keys.exists(_.contains(s"segment_start=${t0 + 2 * seg}")))
     // a mid-segment batch into the open segment: NO rollup write at all
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (600L, t0 + 2 * seg + 200, "cpu", 8.0))), cfg)
+      (600L, t0 + 2 * seg + 200, "cpu", 8.0))), cfg, batchId = 1L)
     assert(rollupParts() === after1, "open-segment batch must not touch the rollup")
     // late data into a CLOSED segment: exactly that partition re-flushes
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (751L, t0 + 20, "cpu", 16.0))), cfg)
+      (751L, t0 + 20, "cpu", 16.0))), cfg, batchId = 2L)
     val after3 = rollupParts()
     assert(after3.keys.exists(_.contains(s"segment_start=$t0")))
     assert(after3.filter(_._1.contains(s"segment_start=${t0 + seg}")) ===
@@ -244,7 +244,7 @@ class IngestJobSpec extends AnyFunSuite {
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (150L, t0 + 10, "cpu", 1.0), (300L, t0 + 3600, "cpu", 2.0),
       (450L, t0 + day + 10, "cpu", 4.0),
-      (600L, t0 + day + 21600, "cpu", 8.0))), cfg)
+      (600L, t0 + day + 21600, "cpu", 8.0))), cfg, batchId = 0L)
     // the 1d rung holds exactly the closed day; the open day is absent
     val rungDir = new java.io.File(IngestJob.rungPath(cfg, "1d"))
     val parts = rungDir.listFiles().filter(_.getName.startsWith("segment_start="))
@@ -322,7 +322,7 @@ class IngestJobSpec extends AnyFunSuite {
       rollupInterval = Some("1h"), nowSec = Some(() => t0 + day + 6 * 3600 + 100))
     // a point every 30 min over two days: 24 segments
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (0 until 96).map(i => (i.toLong + 1, t0 + i * 1800L, "cpu", i.toDouble)): _*)), cfg)
+      (0 until 96).map(i => (i.toLong + 1, t0 + i * 1800L, "cpu", i.toDouble)): _*)), cfg, batchId = 0L)
     assert(IngestJob.rollupFrontier(spark, cfg) === t0 + day + 6 * 3600)
     val points = IngestJob.pointsPath(cfg)
     def pointFiles(df: org.apache.spark.sql.DataFrame): Long = {
@@ -372,7 +372,7 @@ class IngestJobSpec extends AnyFunSuite {
       nowSec = Some(() => t0 + 3 * day + 100))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (0 until 144).map(i => (i.toLong + 1, t0 + i * 1800L,
-        if (i % 3 == 0) "click" else "view", (i % 7).toDouble)): _*)), cfg)
+        if (i % 3 == 0) "click" else "view", (i % 7).toDouble)): _*)), cfg, batchId = 0L)
     def check(json: String, expect: Set[String]): Unit = {
       val q = graft.query.TsdbJson.parseQuery(json)
       val df = graft.Graft.queryRouted(spark, cfg, q)
@@ -409,7 +409,7 @@ class IngestJobSpec extends AnyFunSuite {
       rollupInterval = Some("1h"), rollupLadder = Seq("1d"),
       nowSec = Some(() => now))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg)
+      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg, batchId = 0L)
     assert(IngestJob.rungFrontier(spark, cfg, "1d") === t0 + day)
     // shutdown finalize flushes the open day on EVERY rung
     IngestJob.finalizeRollup(spark, cfg)
@@ -445,7 +445,7 @@ class IngestJobSpec extends AnyFunSuite {
       rollupInterval = None, rollupLadder = Seq("1h", "1d"),
       nowSec = Some(() => now))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg)
+      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg, batchId = 0L)
     // the primary frontier is the MINIMUM over all rungs' — under one
     // close-gated ingest that is the coarsest rung's (widest windows
     // close last), and min stays conservative even if a crash skewed
@@ -469,7 +469,7 @@ class IngestJobSpec extends AnyFunSuite {
       rollupInterval = None, rollupLadder = Seq("1h", "1d"),
       nowSec = Some(() => t0 + day + 3600))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg)
+      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + day + 10, "cpu", 2.0))), cfg, batchId = 0L)
     def perRungMin = cfg.rollupRungs.map(IngestJob.rungFrontier(spark, cfg, _)).min
     assert(IngestJob.rollupFrontier(spark, cfg) === perRungMin)
     // a crash lost the fine rung's first window: it now lags the 1d rung
@@ -494,7 +494,7 @@ class IngestJobSpec extends AnyFunSuite {
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (150L, t0 + 10, "cpu", 1.0),          // expires under the cutoff
       (300L, t0 + 5 * 3600, "cpu", 2.0),    // survives
-      (450L, t0 + 7 * 3600, "cpu", 4.0))), cfg)
+      (450L, t0 + 7 * 3600, "cpu", 4.0))), cfg, batchId = 0L)
     IngestJob.finalizeRollup(spark, cfg)
     assert(IngestJob.rungFrontier(spark, cfg, "1d") === Long.MaxValue)
     // retention cutoff 4 h into the day: the 1d window straddles it, so a
@@ -528,7 +528,7 @@ class IngestJobSpec extends AnyFunSuite {
       rollupInterval = Some("1h"), rollupLadder = Seq("1d"),
       nowSec = Some(() => now))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + 5 * 3600, "cpu", 2.0))), cfg)
+      (150L, t0 + 10, "cpu", 1.0), (300L, t0 + 5 * 3600, "cpu", 2.0))), cfg, batchId = 0L)
     // a quiesce-style finalize wrote the open day's partition; the purge
     // drops it (start < cutoff) and must NOT rewrite it while open
     IngestJob.finalizeRollup(spark, cfg)
@@ -543,7 +543,7 @@ class IngestJobSpec extends AnyFunSuite {
     // trigger re-flushes it from everything that survived or arrived
     now = t0 + 2 * day
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (450L, t0 + 23 * 3600, "cpu", 4.0))), cfg)
+      (450L, t0 + 23 * 3600, "cpu", 4.0))), cfg, batchId = 1L)
     assert(IngestJob.rungFrontier(spark, cfg, "1d") === Long.MaxValue)
     val rung = spark.read.parquet(IngestJob.rungPath(cfg, "1d"))
       .filter(col("segment_start") === t0)
@@ -564,7 +564,7 @@ class IngestJobSpec extends AnyFunSuite {
     val t0 = 60 * seg
     val batch = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (150L, t0 - seg, "cpu", 1.0), (300L, t0 + 60, "cpu", 5.0)))
-    IngestJob.processBatch(batch, cfg)
+    IngestJob.processBatch(batch, cfg, batchId = 0L)
     def snapshot() = (
       graft.query.QueryEngine.dedupe(IngestJob.points(spark, cfg))
         .select("ts", "value").collect().toSet,
@@ -572,7 +572,7 @@ class IngestJobSpec extends AnyFunSuite {
       IngestJob.seriesDim(spark, cfg).select("series_id", "first_seen", "last_seen").collect().toSet,
       IngestJob.rollup(spark, cfg).select("bucket_ts", "sum", "cnt").collect().toSet)
     val before = snapshot()
-    IngestJob.processBatch(batch, cfg) // the replay
+    IngestJob.processBatch(batch, cfg, batchId = 0L) // the replay of batch 0
     assert(snapshot() === before)
   }
 
@@ -582,7 +582,7 @@ class IngestJobSpec extends AnyFunSuite {
     val cfg = freshCfg(retention = Long.MaxValue / 4)
       .copy(nowSec = Some(() => t0 + 2 * seg))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (1L, t0, "cpu", 1.0), (2L, t0 + seg, "cpu", 2.0), (3L, t0 + 2 * seg, "cpu", 3.0))), cfg)
+      (1L, t0, "cpu", 1.0), (2L, t0 + seg, "cpu", 2.0), (3L, t0 + 2 * seg, "cpu", 3.0))), cfg, batchId = 0L)
     val dropped = IngestJob.purge(cfg, cutoffSec = t0 + seg)
     assert(dropped === Seq(t0))
     val remaining = IngestJob.points(TestSpark.spark, cfg)
@@ -596,7 +596,7 @@ class IngestJobSpec extends AnyFunSuite {
     val cfg = freshCfg(retention = Long.MaxValue / 4)
       .copy(nowSec = Some(() => t0 + seg))
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (1L, t0, "cpu", 1.0), (2L, t0 + seg, "cpu", 2.0))), cfg)
+      (1L, t0, "cpu", 1.0), (2L, t0 + seg, "cpu", 2.0))), cfg, batchId = 0L)
     // retention deletes segment dirs outside a Spark commit, so no
     // parquet footer is left to infer a schema from
     assert(IngestJob.purge(cfg, cutoffSec = t0 + 2 * seg) === Seq(t0, t0 + seg))
@@ -618,7 +618,7 @@ class IngestJobSpec extends AnyFunSuite {
       .copy(nowSec = Some(() => t0 + seg))
     // user 0 (event_id 150) goes idle at t0; user 1 (event_id 151) stays active
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (150L, t0, "cpu", 1.0), (151L, t0 + seg, "cpu", 2.0))), cfg)
+      (150L, t0, "cpu", 1.0), (151L, t0 + seg, "cpu", 2.0))), cfg, batchId = 0L)
     IngestJob.compact(spark, cfg, idleCutoffSec = Some(t0 + 1))
     def users() = IngestJob.seriesDim(spark, cfg)
       .select(col("tags")("user")).collect().map(_.getString(0)).toSet
@@ -626,7 +626,7 @@ class IngestJobSpec extends AnyFunSuite {
     assert(IngestJob.latest(spark, cfg).count() === 1)
     // the purged series writes again → re-created, first_seen restarts
     IngestJob.processBatch(graft.sources.TsdbViews.pointsFromEvents(eventsDf(
-      (300L, t0 + seg + 10, "cpu", 9.0))), cfg) // event 300 % 150 == user 0
+      (300L, t0 + seg + 10, "cpu", 9.0))), cfg, batchId = 1L) // event 300 % 150 == user 0
     assert(users() === Set("0", "1"))
     val reborn = IngestJob.seriesDim(spark, cfg)
       .filter(col("tags")("user") === "0").select("first_seen").head.getLong(0)
@@ -725,9 +725,11 @@ class IngestJobSpec extends AnyFunSuite {
     // name collisions are config errors: among sketches, and against
     // reserved lake stores
     assertThrows[IllegalArgumentException](IngestJob.processBatch(b1,
-      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig("metric")))))
+      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric"), IngestJob.DdsConfig("metric"))), batchId = 0L))
     assertThrows[IllegalArgumentException](IngestJob.processBatch(b1,
-      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric", name = "cms")))))
+      cfg.copy(dds = Seq(IngestJob.DdsConfig("metric", name = "cms"))), batchId = 1L))
+    // batch_id=-1 is the snapshot partition: a negative id would overwrite it
+    assertThrows[IllegalArgumentException](IngestJob.processBatch(b1, cfg, batchId = -1L))
   }
 
   test("building a Config refuses duplicate or reserved DdsConfig names") {
@@ -849,7 +851,7 @@ class IngestJobSpec extends AnyFunSuite {
       (3L, now - 3601, "m", 3.0), // too late → dropped
       (4L, now + 3000, "m", 4.0), // tolerated future: the high-water mark
       (5L, now + 7200, "m", 5.0))) // far future → dropped, and NOT the mark
-    val stats = jobs(IngestJob.processBatch(batch, cfg, sink = Some(sink)))
+    val stats = jobs(IngestJob.processBatch(batch, cfg, sink = Some(sink), batchId = 0L))
     assert(stats === IngestJob.BatchStats(5, 3, now + 3000))
     // no median pass and no second high-water-mark pass: one aggregate
     // (its shuffle-map job and its result job)
@@ -860,9 +862,9 @@ class IngestJobSpec extends AnyFunSuite {
     // a batch of future garbage only: counted, nothing admitted, no mark
     val allFuture = graft.sources.TsdbViews.pointsFromEvents(eventsDf(
       (6L, now + 7200, "m", 6.0), (7L, now + 9000, "m", 7.0)))
-    assert(IngestJob.processBatch(allFuture, cfg) === IngestJob.BatchStats(2, 0, Long.MinValue))
+    assert(IngestJob.processBatch(allFuture, cfg, batchId = 1L) === IngestJob.BatchStats(2, 0, Long.MinValue))
     val empty = graft.sources.TsdbViews.pointsFromEvents(eventsDf())
-    assert(IngestJob.processBatch(empty, cfg) === IngestJob.BatchStats(0, 0, Long.MinValue))
+    assert(IngestJob.processBatch(empty, cfg, batchId = 2L) === IngestJob.BatchStats(0, 0, Long.MinValue))
   }
 
   test("the flush pool runs at most FlushThreads flushes at once, across concurrent batches") {

@@ -61,7 +61,7 @@ class KafkaSourceSpec extends AnyFunSuite {
       Row("cpu".getBytes, payload(1000, 9.0), "t", 0, 11L, new java.sql.Timestamp(0), 0),
       Row("cpu".getBytes, payload(1060, 2.0), "t", 0, 12L, new java.sql.Timestamp(0), 0))
     val stats = IngestJob.processBatch(
-      KafkaSource.parse(spark.createDataFrame(rows, KafkaSource.WireSchema)), cfg)
+      KafkaSource.parse(spark.createDataFrame(rows, KafkaSource.WireSchema)), cfg, batchId = 0L)
     assert(stats.total === 3 && stats.admitted === 3)
     val deduped = graft.query.QueryEngine.dedupe(IngestJob.points(spark, cfg))
       .select("ts", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

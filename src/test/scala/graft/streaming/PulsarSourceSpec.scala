@@ -86,7 +86,7 @@ class PulsarSourceSpec extends AnyFunSuite {
       Row("cpu".getBytes, payload(1060, 2.0), "t", msgId(4, 1, 0), ts0, ts0,
         Map.empty[String, String]))
     val stats = IngestJob.processBatch(
-      PulsarSource.parse(spark.createDataFrame(rows, PulsarSource.WireSchema)), cfg)
+      PulsarSource.parse(spark.createDataFrame(rows, PulsarSource.WireSchema)), cfg, batchId = 0L)
     assert(stats.total === 3 && stats.admitted === 3)
     val deduped = graft.query.QueryEngine.dedupe(IngestJob.points(spark, cfg))
       .select("ts", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
